@@ -102,7 +102,8 @@ HEX = "0123456789abcdef"
 
 def _spread(df: DataFrame) -> DataFrame:
     """Repartition ahead of row-expanding work (shingle/token explode
-    multiplies rows ~50×) — but ONLY when the source can't parallelize on
+    multiplies rows ~50×; the corpus side of `similarity`'s O(Q·N)
+    scorers) — but ONLY when the source can't parallelize on
     its own. A small single-file source arrives as one or two splits,
     serializing the whole pipeline; spreading costs one small shuffle and
     buys full parallelism. A real partitioned table already yields many

@@ -19,108 +19,68 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from financedatabase_spark.operators.dedup_docs import _spread
+
 
 def _vec(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     return F.transform(c, lambda x: x.cast("double"))
 
 
-def _spread(df: DataFrame) -> DataFrame:
-    """Repartition the corpus side before O(Q·N) scoring — but ONLY when
-    the source can't parallelize on its own. A small single-file source
-    arrives as one split and would serialize the whole scan; spreading it
-    costs one tiny shuffle. A real partitioned table already yields many
-    splits, and an unconditional repartition there would be a full
-    shuffle of the corpus at 100 TB — so scan-backed frames with enough
-    input files skip the shuffle entirely (file count is metadata-only;
-    same guard as ``dedup_docs._spread``)."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    try:
-        if len(df.inputFiles()) >= target:
-            return df
-    except Exception:
-        pass  # non-scan-backed frames: fall through to the explicit spread
-    return df.repartition(target)
+# --- vector arithmetic as SQL text -------------------------------------------
+#
+# One builder per quantity, each over SQL-expression operands and rendered
+# as TEXT for `F.expr`/`selectExpr`: every Column-API operator is a Py4J
+# round-trip, and these expressions sit inside nested lambdas (the Column
+# form of ivf_pq_topk's plan BUILD alone was ~4200 gateway calls, r15).
+# Parsed once, the text is the same Add/Multiply/Get or ArrayAggregate
+# tree. ``n=None`` renders the dynamic-length left-fold
+# (aggregate(zip_with…)); ``n=k`` — a STATICALLY KNOWN length (PQ subspace
+# width, declared embedding dim) — unrolls the identical summation into
+# 0.0D + get(a,0)*get(b,0) + … The fold's lambda is evaluated interpreted
+# per element (higher-order function bodies don't codegen); the unrolled
+# chain is plain arithmetic inside WholeStageCodegen — measured 2-4x on
+# the PQ hot paths (r15). `get` (0-based, NULL out of bounds) keeps the
+# fold's NULL result for a short array, so callers must pass the true
+# fixed length. Both forms sum from 0.0D in index order — the oracle's
+# list_reduce order, so every double is bit-identical to DuckDB. Pinned
+# against a pure-Python IEEE replay by
+# tests/test_operators_misc.py::test_pq_sql_text_builders_exact.
 
 
-def dot(a: Column, b: Column) -> Column:
-    """Sequential left-fold dot product — deterministic summation order."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-
-
-def dot_n(a: Column, b: Column, n: int) -> Column:
-    """`dot` with a STATICALLY KNOWN length ``n``: the identical IEEE
-    summation (acc starts at 0.0, adds a[i]*b[i] in index order — the
-    exact left-fold `dot` performs), but unrolled into a flat expression
-    chain. The fold's lambda is evaluated interpreted per element
-    (HigherOrderFunction bodies don't codegen); the unrolled chain is
-    plain arithmetic inside WholeStageCodegen — measured 2-4x on the PQ
-    hot paths (r15). ``F.get`` (0-based, null out-of-bounds) keeps the
-    fold's null semantics for short arrays; callers must pass the true
-    fixed length (PQ subspace width, declared embedding dim)."""
-    acc: Column = F.lit(0.0)
-    for i in range(n):
-        acc = acc + F.get(a, i) * F.get(b, i)
-    return acc
-
-
-def _dot_n_sql(a: str, b: str, n: int) -> str:
-    """`dot_n` as SQL TEXT over SQL-expression operands: the identical
-    unrolled left-fold (0.0D + get(a,0)*get(b,0) + …), rendered as one
-    string for `F.expr`/`selectExpr`. Why text: each Column-API operator
-    is a Py4J round-trip, and the PQ builders instantiate `dot_n` inside
-    nested lambdas — `ivf_pq_topk`'s plan BUILD alone was ~4200 gateway
-    calls ≈ 1.8 s of driver wall time per query (r15 profile; guide §5,
-    the driver is doing data-free work). Parsed once, the expression
-    tree is the same Add/Multiply/Get chain (`0.0D` is a double literal,
-    `get` the 0-based null-OOB element access), so every double is
-    bit-identical to the Column form — pinned by
-    tests/test_operators_misc.py::test_pq_sql_text_builders_match_column_dsl."""
+def _dot_sql(a: str, b: str, n: int | None = None) -> str:
+    """<a, b> as a sequential left-fold from 0.0D."""
+    if n is None:
+        return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0.0D, (acc, x) -> acc + x)"
     terms = " + ".join(f"get({a}, {i}) * get({b}, {i})" for i in range(n))
     return f"(0.0D + {terms})" if n else "0.0D"
 
 
-def _fold_dot_sql(a: str, b: str) -> str:
-    """`dot` (the sequential left-fold over dynamic length) as SQL text —
-    same aggregate/zip_with shape, same 0.0D seed, same lambda body."""
-    return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0.0D, (acc, x) -> acc + x)"
+def _l2_sql(a: str, n: int | None = None) -> str:
+    """||a||: sqrt of the self-dot summed in `_dot_sql`'s order."""
+    if n is None:
+        return f"sqrt(aggregate(transform({a}, x -> x * x), 0.0D, (acc, x) -> acc + x))"
+    return f"sqrt({_dot_sql(a, a, n)})"
 
 
-def _fold_l2_sql(a: str) -> str:
-    """`l2_norm` as SQL text (sqrt over the same transform/aggregate fold)."""
-    return f"sqrt(aggregate(transform({a}, x -> x * x), 0.0D, (acc, x) -> acc + x))"
+def _cosine_sql(a: str, b: str, n: int | None = None) -> str:
+    """dot / (l2(a) * l2(b)), in that operand order."""
+    return f"({_dot_sql(a, b, n)} / ({_l2_sql(a, n)} * {_l2_sql(b, n)}))"
 
 
-def _fold_cosine_sql(a: str, b: str) -> str:
-    """`cosine` as SQL text: dot / (l2(a) * l2(b)), each piece the exact
-    fold form above — same operand order, same doubles."""
-    return f"({_fold_dot_sql(a, b)} / ({_fold_l2_sql(a)} * {_fold_l2_sql(b)}))"
-
-
-def l2_norm(a: Column) -> Column:
-    return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x))
-
-
-def l2_norm_n(a: Column, n: int) -> Column:
-    """`l2_norm` with a statically known length (see `dot_n`): same
-    summation order (0.0 + a0*a0 + a1*a1 + ...), codegen-friendly."""
-    acc: Column = F.lit(0.0)
-    for i in range(n):
-        acc = acc + F.get(a, i) * F.get(a, i)
-    return F.sqrt(acc)
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
-
-
-def cosine_n(a: Column, b: Column, n: int) -> Column:
-    """`cosine` with a statically known length (see `dot_n`): identical
-    doubles — dot / (norm_a * norm_b) with each term summed in the same
-    order as the fold form."""
-    return dot_n(a, b, n) / (l2_norm_n(a, n) * l2_norm_n(b, n))
+def _sq_l2_units_sql(
+    a: str, b: str, n: int | None = None, aa: str | None = None, bb: str | None = None
+) -> str:
+    """Squared L2 distance in exact 1e-6 integer units, via the
+    dot-product identity ||a-b||² = <a,a> + <b,b> - 2<a,b> — three
+    left-fold dots in a fixed combination order, so DuckDB reproduces
+    the double bit-for-bit before the single quantization
+    floor(d2 * 1e6 + 0.5). ``aa``/``bb``: SQL for an already-computed
+    <a,a>/<b,b> (hoisted per row or per codebook entry) in place of the
+    rendered self-dot."""
+    aa = aa if aa is not None else _dot_sql(a, a, n)
+    bb = bb if bb is not None else _dot_sql(b, b, n)
+    return f"CAST(floor(({aa} + {bb} - 2.0D * {_dot_sql(a, b, n)}) * 1E6 + 0.5D) AS BIGINT)"
 
 
 def cosine_topk(
@@ -150,30 +110,10 @@ def cosine_topk(
             F.col(corpus_id), F.lit(0).alias("_cell"), _vec(vec_col).alias("_cv")
         )
         cand = _blocked_candidates(q, c, int(k), query_id, corpus_id, round_digits, block_rows)
-        return _rank_topk(cand, int(k), query_id, corpus_id, round_digits)
-    # norms are per-ROW quantities: compute them once on each side before
-    # the join instead of per PAIR (identical IEEE result — the division
-    # still sees l2(q)*l2(c) in the same operand order — at a third of the
-    # per-pair array work)
-    q = queries.select(F.col(query_id), _vec(vec_col).alias("_qv")).withColumn(
-        "_qn", l2_norm(F.col("_qv"))
-    )
-    c = _spread(corpus).select(F.col(corpus_id), _vec(vec_col).alias("_cv")).withColumn(
-        "_cn", l2_norm(F.col("_cv"))
-    )
-    scored = q.crossJoin(c).select(
-        query_id,
-        corpus_id,
-        (dot(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_cn"))).alias("_raw"),
-    )
-    score = F.round(F.col("_raw"), round_digits) if round_digits else F.col("_raw")
-    scored = scored.select(query_id, corpus_id, score.alias("score"))
-    w = Window.partitionBy(query_id).orderBy(F.col("score").desc(), F.col(corpus_id).asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, corpus_id, "score", F.col("rank").cast("long").alias("rank"))
-    )
+    else:
+        q = queries.select(F.col(query_id), _vec(vec_col).alias("_qv"))
+        cand = _fold_candidates(q, corpus, query_id, corpus_id, vec_col)
+    return _rank_topk(cand, int(k), query_id, corpus_id, round_digits)
 
 
 def hard_negative_mining(
@@ -220,7 +160,7 @@ def hard_negative_mining(
         anchors.select(
             F.col(anchor_id), F.col(label_col).alias("_al"), _vec(vec_col).alias("_qv")
         )
-        .withColumn("_qn", l2_norm(F.col("_qv")))
+        .withColumn("_qn", F.expr(_l2_sql("_qv")))
         .filter(F.col("_qn") > 0)
     )
     c = (
@@ -228,7 +168,7 @@ def hard_negative_mining(
         .select(
             F.col(corpus_id), F.col(label_col).alias("neg_label"), _vec(vec_col).alias("_cv")
         )
-        .withColumn("_cn", l2_norm(F.col("_cv")))
+        .withColumn("_cn", F.expr(_l2_sql("_cv")))
         .filter(F.col("_cn") > 0)
     )
     scored = (
@@ -237,9 +177,8 @@ def hard_negative_mining(
             anchor_id,
             corpus_id,
             "neg_label",
-            F.round(
-                dot(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_cn")),
-                round_digits,
+            F.expr(
+                f"round({_dot_sql('_qv', '_cv')} / (_qn * _cn), {round_digits})"
             ).alias("score"),
         )
     )
@@ -311,7 +250,7 @@ def ivf_topk(
     broadcasts, per-task state is one block.
 
     ``vectorized=False`` keeps the pure-Catalyst equi-join + sequential
-    fold scoring (`dot`) whose summation order is bit-identical to the
+    fold scoring (`_dot_sql`) whose summation order is bit-identical to the
     DuckDB oracle — the correctness baseline. The vectorized path's raw
     scores can differ by ~1 ULP (pairwise vs sequential summation); the
     returned score is rounded (``round_digits``) on the Spark side so
@@ -323,18 +262,15 @@ def ivf_topk(
     decision.
     """
     vectorized = _resolve_vectorized(vectorized, corpus)
-    if not vectorized:
-        return _ivf_topk_fold(
-            queries, corpus, k, query_id, corpus_id, vec_col, cell_col, round_digits
-        )
     q = queries.select(F.col(query_id), F.col(cell_col).alias("_cell"), _vec(vec_col).alias("_qv"))
-    c = _spread(corpus).select(
-        F.col(corpus_id), F.col(cell_col).alias("_cell"), _vec(vec_col).alias("_cv")
-    )
-    candidates = _blocked_candidates(
-        q, c, int(k), query_id, corpus_id, round_digits, block_rows
-    )
-    return _rank_topk(candidates, int(k), query_id, corpus_id, round_digits)
+    if vectorized:
+        c = _spread(corpus).select(
+            F.col(corpus_id), F.col(cell_col).alias("_cell"), _vec(vec_col).alias("_cv")
+        )
+        cand = _blocked_candidates(q, c, int(k), query_id, corpus_id, round_digits, block_rows)
+    else:
+        cand = _fold_candidates(q, corpus, query_id, corpus_id, vec_col, cell_col)
+    return _rank_topk(cand, int(k), query_id, corpus_id, round_digits)
 
 
 def _blocked_candidates(
@@ -423,37 +359,36 @@ def _rank_topk(
     )
 
 
-def _ivf_topk_fold(
-    queries: DataFrame,
+def _fold_candidates(
+    q: DataFrame,
     corpus: DataFrame,
-    k: int,
     query_id: str,
     corpus_id: str,
     vec_col: str,
-    cell_col: str,
-    round_digits: int | None,
+    cell_col: str | None = None,
 ) -> DataFrame:
-    """Pure-Catalyst IVF scoring: cell equi-join + sequential-fold dot
-    product (bit-identical summation order to the oracle's list_reduce)."""
-    q = queries.select(
-        F.col(query_id), F.col(cell_col).alias("_cell"), _vec(vec_col).alias("_qv")
-    ).withColumn("_qn", l2_norm(F.col("_qv")))
+    """Pure-Catalyst scoring with the sequential-fold cosine (the
+    oracle's list_reduce summation order, bit-identical):
+    q(query_id, [_cell,] _qv) scores the corpus vectors of its own cell
+    (``_cell`` equi-join on ``cell_col``) or, with ``cell_col=None``,
+    the whole corpus. Emits (query_id, corpus_id, _raw) like
+    `_blocked_candidates`; callers rank with `_rank_topk`. Norms are
+    per-ROW quantities, computed once on each side ahead of the join
+    instead of per PAIR — identical IEEE result (the division still sees
+    l2(q)*l2(c) in the same operand order) at a third of the per-pair
+    array work."""
+    q = q.withColumn("_qn", F.expr(_l2_sql("_qv")))
+    cell = [] if cell_col is None else [F.col(cell_col).alias("_ccell")]
     c = _spread(corpus).select(
-        F.col(corpus_id), F.col(cell_col).alias("_ccell"), _vec(vec_col).alias("_cv")
-    ).withColumn("_cn", l2_norm(F.col("_cv")))
-    # per-row norms hoisted ahead of the join (see cosine_topk)
-    scored = q.join(c, F.col("_cell") == F.col("_ccell")).select(
+        F.col(corpus_id), *cell, _vec(vec_col).alias("_cv")
+    ).withColumn("_cn", F.expr(_l2_sql("_cv")))
+    pairs = (
+        q.crossJoin(c) if cell_col is None else q.join(c, F.col("_cell") == F.col("_ccell"))
+    )
+    return pairs.select(
         query_id,
         corpus_id,
-        (dot(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_cn"))).alias("_raw"),
-    )
-    score = F.round(F.col("_raw"), round_digits) if round_digits else F.col("_raw")
-    scored = scored.select(query_id, corpus_id, score.alias("score"))
-    w = Window.partitionBy(query_id).orderBy(F.col("score").desc(), F.col(corpus_id).asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, corpus_id, "score", F.col("rank").cast("long").alias("rank"))
+        F.expr(f"{_dot_sql('_qv', '_cv')} / (_qn * _cn)").alias("_raw"),
     )
 
 
@@ -551,11 +486,11 @@ def ivf_multiprobe_topk(
     cen = centroids.select(
         F.col(centroid_cell_col).alias("_cell"), F.col(centroid_vec_col).alias("_cvec")
     )
-    csim = cosine(F.col("_qv"), F.col("_cvec"))
+    csim = _cosine_sql("_qv", "_cvec")
     if round_digits:
-        csim = F.round(csim, round_digits)
+        csim = f"round({csim}, {round_digits})"
     probe_scored = q.crossJoin(F.broadcast(cen)).select(
-        query_id, "_qv", "_cell", csim.alias("_csim")
+        query_id, "_qv", "_cell", F.expr(csim).alias("_csim")
     )
     wp = Window.partitionBy(query_id).orderBy(
         F.col("_csim").desc(), F.col("_cell").asc()
@@ -570,21 +505,12 @@ def ivf_multiprobe_topk(
         c = _spread(corpus).select(
             F.col(corpus_id), F.col(cell_col).alias("_cell"), _vec(vec_col).alias("_cv")
         )
-        candidates = _blocked_candidates(
+        cand = _blocked_candidates(
             probes, c, int(k), query_id, corpus_id, round_digits, block_rows
         )
-        return _rank_topk(candidates, int(k), query_id, corpus_id, round_digits)
-    c = _spread(corpus).select(
-        F.col(corpus_id), F.col(cell_col).alias("_ccell"), _vec(vec_col).alias("_cv")
-    ).withColumn("_cn", l2_norm(F.col("_cv")))
-    probes = probes.withColumn("_qn", l2_norm(F.col("_qv")))
-    # per-row norms hoisted ahead of the join (see cosine_topk)
-    scored = probes.join(c, F.col("_cell") == F.col("_ccell")).select(
-        query_id,
-        corpus_id,
-        (dot(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_cn"))).alias("_raw"),
-    )
-    return _rank_topk(scored, int(k), query_id, corpus_id, round_digits)
+    else:
+        cand = _fold_candidates(probes, corpus, query_id, corpus_id, vec_col, cell_col)
+    return _rank_topk(cand, int(k), query_id, corpus_id, round_digits)
 
 
 def embedding_near_dups(
@@ -618,7 +544,7 @@ def embedding_near_dups(
         )
     v = _spread(df).select(
         F.col(id_col), F.col(cell_col).alias("_cell"), _vec(vec_col).alias("_v")
-    ).withColumn("_n", l2_norm(F.col("_v")))
+    ).withColumn("_n", F.expr(_l2_sql("_v")))
     a, b = v.alias("a"), v.alias("b")
     pairs = a.join(
         b,
@@ -626,7 +552,7 @@ def embedding_near_dups(
     ).select(
         F.col(f"a.{id_col}").alias("id1"),
         F.col(f"b.{id_col}").alias("id2"),
-        (dot(F.col("a._v"), F.col("b._v")) / (F.col("a._n") * F.col("b._n"))).alias("_raw"),
+        F.expr(f"{_dot_sql('a._v', 'b._v')} / (a._n * b._n)").alias("_raw"),
     )
     score = F.round(F.col("_raw"), round_digits) if round_digits else F.col("_raw")
     return pairs.select("id1", "id2", score.alias("cosine")).filter(
@@ -766,11 +692,9 @@ def _assign_to_codebook(
     every vector per iteration. Tie-break (max sim, then min cell) is
     encoded in the ordering struct as (sim, -cell)."""
     cen = centroids.select(
-        F.col("cell"), F.col("cvec"), l2_norm(F.col("cvec")).alias("_cn")
+        F.col("cell"), F.col("cvec"), F.expr(_l2_sql("cvec")).alias("_cn")
     )
-    sim = F.round(
-        dot(F.col("_v"), F.col("cvec")) / (F.col("_n") * F.col("_cn")), round_digits
-    )
+    sim = F.expr(f"round({_dot_sql('_v', 'cvec')} / (_n * _cn), {round_digits})")
     best = (
         v.crossJoin(F.broadcast(cen))
         .select(id_col, "_v", "_n", "cell", sim.alias("sim"))
@@ -830,7 +754,7 @@ def kmeans_refine(
     v = (
         _spread(df)
         .select(F.col(id_col), _vec(vec_col).alias("_v"))
-        .withColumn("_n", l2_norm(F.col("_v")))
+        .withColumn("_n", F.expr(_l2_sql("_v")))
     )
     cen = cell_centroids(df, cell_col, vec_col)
     assign = _assign_to_codebook(v, cen, id_col)
@@ -896,8 +820,8 @@ def _klit(v, sql_type: str) -> str:
 
 
 def _selfdot_sql(xs) -> str:
-    """<v,v> as a constant-foldable sum in `dot`'s exact fold order
-    (a NULL array folds to NULL, like the Column form's null-in)."""
+    """<v,v> as a constant-foldable sum in `_dot_sql`'s exact fold order
+    (a NULL array folds to NULL, as `_dot_sql` does)."""
     if xs is None:
         return "CAST(NULL AS DOUBLE)"
     acc = "0.0D"
@@ -919,7 +843,7 @@ def _cens_lit(
     array_min / array_sort downstream), or None when the cell dtype is
     not literal-renderable (caller falls back to the broadcast-packed
     frame). ``with_norm`` adds the centroid L2 norm as a constant-
-    foldable sqrt(sum-of-squares) expression in `l2_norm`'s exact fold
+    foldable sqrt(sum-of-squares) expression in `_l2_sql`'s exact fold
     order. ``rows``: pre-collected (cell, cvec) rows, so one caller's
     collect feeds several literal builders (one job, not one per)."""
     ctype = dict(centroids.dtypes).get("cell")
@@ -971,20 +895,6 @@ def _cb_map_lit(codebooks: DataFrame, rows: list | None = None) -> str | None:
 # --- IVF-PQ: product quantization with asymmetric-distance scoring ----------
 
 
-def _sq_l2_units(a: Column, b: Column, n: int | None = None) -> Column:
-    """Squared L2 distance in exact 1e-6 integer units, via the
-    dot-product identity ||a-b||² = <a,a> + <b,b> - 2<a,b> — three
-    sequential-fold dots in a fixed combination order, so DuckDB
-    reproduces the double bit-for-bit before the single quantization.
-    ``n`` (the statically known subspace width) switches the dots to the
-    unrolled codegen form — same doubles, see `dot_n`."""
-    if n is not None:
-        d2 = dot_n(a, a, n) + dot_n(b, b, n) - F.lit(2.0) * dot_n(a, b, n)
-    else:
-        d2 = dot(a, a) + dot(b, b) - F.lit(2.0) * dot(a, b)
-    return F.floor(d2 * F.lit(1e6) + F.lit(0.5)).cast("long")
-
-
 def pq_codebooks(centroids: DataFrame, m: int, dim: int) -> DataFrame:
     """Per-subspace PQ codebooks sliced out of the coarse k-means
     centroids (the standard cheap PQ train when cells already cluster
@@ -1005,42 +915,6 @@ def pq_codebooks(centroids: DataFrame, m: int, dim: int) -> DataFrame:
             )
         ).alias("_sc"),
     ).select(F.col("_sc.sub").alias("sub"), "cid", F.col("_sc.cvec_sub").alias("cvec_sub"))
-
-
-def residual_anchor_codebook_rows(
-    anchor_rows: list, centroid_rows: list, m: int, dim: int
-) -> list[dict]:
-    """(sub, cid, cvec_sub) codebook rows for residual-anchor PQ, computed
-    DRIVER-SIDE from already-collected raws — the composition of
-    `residual_vectors` + `pq_codebooks` + the collect inside `ivf_pq_topk`,
-    without the extra Spark job those cost when the anchors are a handful
-    of rows (r16). Bit-exact by construction: the residual is one IEEE-754
-    binary64 subtraction per element (identical in CPython and the JVM),
-    the slices copy values untouched, and the values flow into the same
-    literal renderers (`_darr` shortest-exact repr) the collected path
-    feeds. Pinned by test_residual_anchor_codebook_rows_match_frame.
-
-    ``anchor_rows``: (cid, cell, vec) per anchor (vec already double).
-    Raises on a missing centroid — the same loud contract as
-    `residual_vectors`' raise_error."""
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m {m}")
-    d = dim // m
-    cmap = {r["cell"]: r["cvec"] for r in centroid_rows}
-    out: list[dict] = []
-    for a in anchor_rows:
-        if a["cell"] is None or a["cell"] not in cmap:
-            raise ValueError(
-                f"residual_anchor_codebook_rows: no centroid for cell "
-                f"{a['cell']!r} — centroid frame does not cover the assignment"
-            )
-        cvec = cmap[a["cell"]]
-        remb = [x - c for x, c in zip(a["vec"], cvec)]
-        for s in range(m):
-            out.append(
-                {"sub": s, "cid": a["cid"], "cvec_sub": remb[s * d : s * d + d]}
-            )
-    return out
 
 
 def pq_encode(
@@ -1069,13 +943,13 @@ def pq_encode(
     d = dim // m
     # entries carry their precomputed self-dot (bb): inside the per-row
     # argmin only the cross term 2<a,b> remains per entry — <a,a> is
-    # hoisted to one evaluation per (row, subspace) below. The combined
-    # (aa + bb) - 2.0*ab reproduces _sq_l2_units' exact float op order,
-    # so the integer-unit distances (and the oracle) stay bit-identical.
+    # hoisted to one evaluation per (row, subspace) below, and both feed
+    # _sq_l2_units_sql's exact float op order ((aa + bb) - 2.0*ab), so
+    # the integer-unit distances (and the oracle) stay bit-identical.
     # The packed map is a collected LITERAL when the key types allow it
     # (see "literal packing" above): no crossJoin, no broadcast job, no
     # single-partition agg exchange; bb folds constant at optimize time
-    # in dot's exact order. Entry order inside each subspace matches the
+    # in _dot_sql's exact order. Entry order inside each subspace matches the
     # old array_sort(collect_list(struct(cid, ...))) — cid leads the
     # struct, and cids are unique per sub, so sort-by-cid is identical.
     dts = dict(codebooks.dtypes)
@@ -1089,8 +963,9 @@ def pq_encode(
         by_sub: dict = {}
         for r in rows:
             by_sub.setdefault(r["sub"], []).append(r)
-        # width-d entries only: dot_n nulls out a short entry via its
-        # out-of-bounds get()s, which a partial literal sum would not
+        # width-d entries only: the unrolled _dot_sql nulls out a short
+        # entry via its out-of-bounds get()s, which a partial literal sum
+        # would not
         if rows and all(
             r["cvec_sub"] is None or len(r["cvec_sub"]) == d for r in rows
         ):
@@ -1115,7 +990,7 @@ def pq_encode(
                 F.struct(
                     F.col("cid"),
                     F.col("cvec_sub"),
-                    dot_n(F.col("cvec_sub"), F.col("cvec_sub"), d).alias("bb"),
+                    F.expr(_dot_sql("cvec_sub", "cvec_sub", d)).alias("bb"),
                 ).alias("_ent"),
             )
             .groupBy("sub")
@@ -1126,11 +1001,10 @@ def pq_encode(
         staged = _spread(df).crossJoin(F.broadcast(packed))
     # The whole per-row encode is rendered as SQL TEXT and parsed once —
     # the nested-lambda Column form cost hundreds of Py4J round-trips of
-    # plan-BUILD per query (r15 profile; see _dot_n_sql). Expression
-    # trees after parsing are identical to the Column form (0.0D/2.0D/
-    # 1E6/0.5D are double literals, named_struct fields in the same
-    # order, CAST AS BIGINT = .cast("long")), so codes are bit-identical
-    # — pinned by test_pq_sql_text_builders_match_column_dsl.
+    # plan-BUILD per query (r15 profile; see the vector-arithmetic
+    # builders above). 0.0D/2.0D/1E6/0.5D are double literals, so codes
+    # are bit-identical to a pure-Python IEEE replay — pinned by
+    # test_pq_sql_text_builders_exact.
     enc = (
         staged
         .withColumn("_pv", _vec(vec_col))
@@ -1138,13 +1012,14 @@ def pq_encode(
             "_slices",
             F.expr(f"transform(sequence(0, {m - 1}), s -> slice(_pv, s * {d} + 1, {d}))"),
         )
-        .withColumn("_aas", F.expr(f"transform(_slices, sl -> {_dot_n_sql('sl', 'sl', d)})"))
+        .withColumn("_aas", F.expr(f"transform(_slices, sl -> {_dot_sql('sl', 'sl', d)})"))
+    )
+    d2 = _sq_l2_units_sql(
+        "element_at(_slices, s + 1)", "e.cvec_sub", d, aa="element_at(_aas, s + 1)", bb="e.bb"
     )
     codes = F.expr(
         f"transform(sequence(0, {m - 1}), s -> array_min(transform(element_at(_cb, s), "
-        f"e -> named_struct('_d', CAST(floor((element_at(_aas, s + 1) + e.bb - 2.0D * "
-        f"{_dot_n_sql('element_at(_slices, s + 1)', 'e.cvec_sub', d)}) * 1E6 + 0.5D) AS BIGINT), "
-        f"'cid', e.cid))).cid)"
+        f"e -> named_struct('_d', {d2}, 'cid', e.cid))).cid)"
     )
     return enc.select(F.col(id_col), *keep_cols, codes.alias("codes"))
 
@@ -1247,7 +1122,6 @@ def ivf_pq_topk(
     residuals: bool = False,
     rerank: int | None = None,
     centroid_rows: list | None = None,
-    codebook_rows: list | None = None,
 ) -> DataFrame:
     """IVF-PQ approximate nearest neighbors — the standard 100 TB ANN
     layout (Jégou et al. 2011): the corpus is stored as m-subspace PQ
@@ -1305,16 +1179,10 @@ def ivf_pq_topk(
     else:
         enc_corpus = corpus
     # one collect of the tiny codebook serves both literal builders
-    # (the encode map and the ADC map) — one job instead of two; callers
-    # that can derive the rows driver-side (residual_anchor_codebook_rows)
-    # pass them in and the job disappears entirely (r16)
+    # (the encode map and the ADC map) — one job instead of two
     _cb_dts = dict(cbs.dtypes)
-    cb_rows = codebook_rows
-    if (
-        cb_rows is None
-        and _cb_dts.get("sub") in _LIT_KEY_TYPES
-        and _cb_dts.get("cid") in _LIT_KEY_TYPES
-    ):
+    cb_rows = None
+    if _cb_dts.get("sub") in _LIT_KEY_TYPES and _cb_dts.get("cid") in _LIT_KEY_TYPES:
         cb_rows = cbs.select("sub", "cid", "cvec_sub").collect()
     codes = pq_encode(
         enc_corpus, cbs, m, dim, id_col=corpus_id, vec_col=vec_col,
@@ -1335,10 +1203,9 @@ def ivf_pq_topk(
             F.struct(F.col("cell"), F.col("cvec")).alias("_e")
         ).groupBy().agg(F.collect_list("_e").alias("_cens"))
         q_packed = q.crossJoin(F.broadcast(cen_packed))
-    # SQL text, parsed once (see _dot_n_sql): identical expression tree
-    # to the Column form — struct field order (_negsim, _cell, _cvec),
-    # the fold-form cosine, -round(..., 6) — so probe selection and its
-    # tie-break are bit-identical.
+    # SQL text, parsed once (see the vector-arithmetic builders): struct
+    # field order (_negsim, _cell, _cvec), the fold-form cosine and
+    # -round(..., 6) give the (sim desc, cell asc) tie-break.
     probes = (
         q_packed
         .select(
@@ -1346,7 +1213,7 @@ def ivf_pq_topk(
             "_qv",
             F.expr(
                 f"explode(slice(array_sort(transform(_cens, e -> named_struct("
-                f"'_negsim', -round({_fold_cosine_sql('_qv', 'e.cvec')}, 6), "
+                f"'_negsim', -round({_cosine_sql('_qv', 'e.cvec')}, 6), "
                 f"'_cell', e.cell, '_cvec', e.cvec))), 1, {n_probe}))"
             ).alias("_p"),
         )
@@ -1380,17 +1247,11 @@ def ivf_pq_topk(
     # array ordered by sub (outer), map keyed by cid (inner): the hot
     # per-candidate fold does one O(1) array index + one map lookup per
     # subspace instead of two map lookups
-    # SQL text, parsed once (see _dot_n_sql): _sq_l2_units' exact float
-    # op order ((aa + bb - 2.0D*ab) * 1E6 + 0.5D, floor, BIGINT) with
-    # the slice spelled out per dot, the same duplication the Column
-    # tree carried.
     _sl = f"slice(_rv, s * {d} + 1, {d})"
     tbl_expr = F.expr(
         f"transform(sequence(0, {m - 1}), s -> map_from_entries("
         f"transform(element_at(_cbm, s), e -> named_struct('cid', e.cid, "
-        f"'_d', CAST(floor(({_dot_n_sql(_sl, _sl, d)} + "
-        f"{_dot_n_sql('e.cvec_sub', 'e.cvec_sub', d)} - 2.0D * "
-        f"{_dot_n_sql(_sl, 'e.cvec_sub', d)}) * 1E6 + 0.5D) AS BIGINT)))))"
+        f"'_d', {_sq_l2_units_sql(_sl, 'e.cvec_sub', d)}))))"
     )
     if cbm_lit is not None:
         qtab = qbase.withColumn("_cbm", F.expr(cbm_lit)).select(
@@ -1408,7 +1269,7 @@ def ivf_pq_topk(
     cand = codes.join(
         F.broadcast(ptbl), F.col(cell_col) == F.col("_cell")
     )
-    # unrolled over the statically known m (see dot_n): integer adds in
+    # unrolled over the statically known m (see _dot_sql): integer adds in
     # the same left-fold order, but codegen'd instead of an interpreted
     # per-subspace lambda — this fold runs once per (candidate, probe);
     # SQL text, parsed once (CAST(0 AS BIGINT) = lit(0).cast("long"))
@@ -1441,18 +1302,9 @@ def ivf_pq_topk(
     fetched = raw.join(F.broadcast(cands), corpus_id)
     qv = queries.select(F.col(query_id), _vec(vec_col).alias("_qv2"))
     exact = fetched.join(F.broadcast(qv), query_id).select(
-        query_id,
-        corpus_id,
-        F.expr(f"round({_fold_cosine_sql('_qv2', '_cv')}, 6)").alias("score"),
+        query_id, corpus_id, F.expr(_cosine_sql("_qv2", "_cv")).alias("_raw")
     )
-    wf = Window.partitionBy(query_id).orderBy(
-        F.col("score").desc(), F.col(corpus_id).asc()
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(wf))
-        .filter(F.col("rank") <= k)
-        .select(query_id, corpus_id, "score", F.col("rank").cast("long").alias("rank"))
-    )
+    return _rank_topk(exact, k, query_id, corpus_id, 6)
 
 
 def pq_train_subspace(
@@ -1516,7 +1368,7 @@ def pq_train_subspace(
         cb = _seed_dim(seeds)
         far = (
             subs.join(F.broadcast(cb), "sub")
-            .select("sub", "_id", "v", _sq_l2_units(F.col("v"), F.col("cvec_sub")).alias("_d"))
+            .select("sub", "_id", "v", F.expr(_sq_l2_units_sql("v", "cvec_sub")).alias("_d"))
             .groupBy("sub", "_id", "v")
             .agg(F.min("_d").alias("_mind"))
             .groupBy("sub")
@@ -1536,7 +1388,7 @@ def pq_train_subspace(
         assign = (
             subs.join(F.broadcast(cb), "sub")
             .select(
-                "sub", "_id", "v", "cid", _sq_l2_units(F.col("v"), F.col("cvec_sub")).alias("_d")
+                "sub", "_id", "v", "cid", F.expr(_sq_l2_units_sql("v", "cvec_sub")).alias("_d")
             )
             .groupBy("sub", "_id")
             .agg(
@@ -1618,19 +1470,8 @@ def semdedup(
     the remedy is re-clustering with more centroids, not a bigger cap.
     ``dim`` (optional, the corpus's known embedding width) switches the
     cosine folds to the unrolled codegen form — same doubles, see
-    `dot_n`; leave None when the width is not statically known."""
+    `_dot_sql`; leave None when the width is not statically known."""
     from financedatabase_spark.operators.dedup_docs import grouped_components
-
-    if dim is not None:
-        _dot = lambda a, b: dot_n(a, b, dim)  # noqa: E731
-        _l2 = lambda a: l2_norm_n(a, dim)  # noqa: E731
-        # SQL-text twins (see _dot_n_sql): l2_norm_n(a, n) builds the
-        # same 0.0D + a_i*a_i chain dot_n(a, a, n) does, under one sqrt
-        _dot_txt = lambda a, b: _dot_n_sql(a, b, dim)  # noqa: E731
-        _l2_txt = lambda a: f"sqrt({_dot_n_sql(a, a, dim)})"  # noqa: E731
-    else:
-        _dot, _l2 = dot, l2_norm
-        _dot_txt, _l2_txt = _fold_dot_sql, _fold_l2_sql
 
     # nearest-centroid assignment IN-ROW against one packed broadcast
     # centroid row: per vector, argmin of (-sim, cell) over the array —
@@ -1639,8 +1480,8 @@ def semdedup(
     # of it (at 50x that intermediate is 3.2B rows; here it never exists)
     # both norms hoisted: centroid norms precomputed at pack time, the
     # vector norm once per row — the per-centroid term is one dot and a
-    # divide by the product of the SAME two norms cosine() would use, so
-    # every double is bit-identical to the windowed formulation
+    # divide by the product of the SAME two norms _cosine_sql would use,
+    # so every double is bit-identical to the windowed formulation
     v = _spread(emb).select(F.col(id_col), _vec(vec_col).alias("_e"))
     cen_lit = _cens_lit(centroids, cell_field="_cl", with_norm=True)
     if cen_lit is not None:
@@ -1650,20 +1491,21 @@ def semdedup(
             F.struct(
                 F.col("cell").alias("_cl"),
                 F.col("cvec"),
-                _l2(F.col("cvec")).alias("_cn"),
+                F.expr(_l2_sql("cvec", dim)).alias("_cn"),
             ).alias("_c0")
         ).groupBy().agg(F.collect_list("_c0").alias("_cens"))
         v_packed = v.crossJoin(F.broadcast(cen_packed))
-    # SQL text, parsed once (see _dot_n_sql): the dim=64 unrolled dot
-    # inside this lambda alone was ~256 Py4J round-trips of plan build
+    # SQL text, parsed once (see the vector-arithmetic builders): the
+    # dim=64 unrolled dot inside this lambda alone was ~256 Py4J
+    # round-trips of plan build as Column calls
     assign = (
         v_packed
-        .withColumn("_en", F.expr(_l2_txt("_e")))
+        .withColumn("_en", F.expr(_l2_sql("_e", dim)))
         .withColumn(
             "_best",
             F.expr(
                 f"array_min(transform(_cens, c -> named_struct("
-                f"'_negsim', -round({_dot_txt('_e', 'c.cvec')} / (_en * c._cn), {round_digits}), "
+                f"'_negsim', -round({_dot_sql('_e', 'c.cvec', dim)} / (_en * c._cn), {round_digits}), "
                 f"'_cl', c._cl)))"
             ),
         )
@@ -1674,8 +1516,8 @@ def semdedup(
             "_e",
             # the row's norm rides through the checkpoint so the pair
             # filter below divides by two HOISTED norms instead of
-            # re-folding l2_norm per PAIR — same doubles (dot / (na*nb)
-            # in cosine()'s operand order), a third of the per-pair
+            # re-folding the norm per PAIR — same doubles (dot / (na*nb)
+            # in _cosine_sql's operand order), a third of the per-pair
             # higher-order-function work
             "_en",
         )
@@ -1721,7 +1563,7 @@ def semdedup(
     edges = (
         a.join(b, (F.col("_ca") == F.col("_cb")) & (F.col("_i") < F.col("_j")))
         .filter(
-            F.expr(f"round({_dot_txt('_ea', '_eb')} / (_na * _nb), {round_digits})")
+            F.expr(f"round({_dot_sql('_ea', '_eb', dim)} / (_na * _nb), {round_digits})")
             >= F.lit(tau)
         )
         .select("_ca", "_i", "_j")

@@ -2816,7 +2816,7 @@ def ivf_build_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         "true_label",
         "c_label",
-        F.round(sim.cosine(F.col("emb"), F.col("cvec")), 6).alias("sim"),
+        F.expr(f"round({sim._cosine_sql('emb', 'cvec')}, 6)").alias("sim"),
     )
     from pyspark.sql import Window
 

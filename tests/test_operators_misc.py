@@ -1955,19 +1955,20 @@ def test_fill_bucket_gaps_single_pass_matches_grid_join(spark):
     assert a[1].mark == 7.5  # ffill carried through the gap
 
 
-def test_pq_sql_text_builders_match_column_dsl(spark):
-    """r15: the SQL-TEXT expression builders (parsed once — see
-    similarity._dot_n_sql; the Column-DSL nested lambdas cost ~4200
-    Py4J round-trips of plan build per ivf_pq query) must be
-    BIT-identical to the forms they replaced. Two pins:
+def test_pq_sql_text_builders_exact(spark):
+    """The SQL-TEXT vector builders (similarity._dot_sql, _l2_sql,
+    _cosine_sql, _sq_l2_units_sql — parsed once; the Column-DSL nested
+    lambdas they replaced cost ~4200 Py4J round-trips of plan build per
+    ivf_pq query) must be BIT-identical to the oracle's sequential
+    left-fold. Both pins replay the exact op order in pure Python —
+    Python floats are the same IEEE doubles, so any drift in literal
+    typing (decimal vs double) or fold order fails exact equality:
 
-    1. the text fold helpers vs the live Column helpers on real data
-       (same 0.0D seed, same left-fold order);
-    2. `pq_encode` codes vs an independent pure-Python IEEE reference
-       that replays the exact op order ((aa + bb - 2.0*ab)*1e6 + 0.5,
-       floor) — Python floats are the same IEEE doubles, so any drift
-       in literal typing (decimal vs double) or fold order fails exact
-       equality."""
+    1. each builder, unrolled (n=8) and fold (n=None), on real data,
+       plus the NULL contract: a short array or a NULL element gives
+       NULL (the single-operand fold norm has no length to fall short
+       of, so it is the short array's own norm);
+    2. `pq_encode` codes ((aa + bb - 2.0*ab)*1e6 + 0.5, floor)."""
     import math
     import random
 
@@ -1977,19 +1978,66 @@ def test_pq_sql_text_builders_match_column_dsl(spark):
     rows = [(i, i % 4, [rnd.uniform(-1, 1) for _ in range(8)]) for i in range(50)]
     df = spark.createDataFrame(rows, "vec_id long, label int, embedding array<double>")
 
-    # 1. fold helpers: text == Column, exact doubles
-    two = df.select(F.col("embedding").alias("a"), F.reverse("embedding").alias("b"))
-    dsl = two.select(
-        sim.dot(F.col("a"), F.col("b")).alias("d"),
-        sim.cosine(F.col("a"), F.col("b")).alias("c"),
-        sim.dot_n(F.col("a"), F.col("b"), 8).alias("dn"),
-    ).collect()
-    txt = two.selectExpr(
-        f"{sim._fold_dot_sql('a', 'b')} AS d",
-        f"{sim._fold_cosine_sql('a', 'b')} AS c",
-        f"{sim._dot_n_sql('a', 'b', 8)} AS dn",
-    ).collect()
-    assert [tuple(r) for r in dsl] == [tuple(r) for r in txt]
+    # 1. vector builders vs the pure-Python replay, exact doubles
+    def rdot(a, b, n):
+        if n is None:
+            if len(a) != len(b):
+                return None  # zip_with pads the shorter side with NULL
+        elif len(a) < n or len(b) < n:
+            return None  # get() is NULL out of bounds
+        acc = 0.0
+        for x, y in zip(a, b):
+            if x is None or y is None:
+                return None
+            acc = acc + x * y
+        return acc
+
+    def rl2(a, n):
+        aa = rdot(a, a, n)
+        return None if aa is None else math.sqrt(aa)
+
+    def rcos(a, b, n):
+        parts = (rdot(a, b, n), rl2(a, n), rl2(b, n))
+        return None if None in parts else parts[0] / (parts[1] * parts[2])
+
+    def runits(a, b, n):
+        aa, bb, ab = rdot(a, a, n), rdot(b, b, n), rdot(a, b, n)
+        if None in (aa, bb, ab):
+            return None
+        return math.floor((aa + bb - 2.0 * ab) * 1e6 + 0.5)
+
+    v0 = rows[0][2]
+    odd = [
+        (v0, v0[:7]),  # short b
+        (v0[:7], v0),  # short a
+        (v0[:3] + [None] + v0[4:], v0),  # NULL element in a
+        (v0, v0[:5] + [None] + v0[6:]),  # NULL element in b
+    ]
+    pairs = [(r[2], r[2][::-1]) for r in rows] + odd
+    two = spark.createDataFrame(pairs, "a array<double>, b array<double>")
+    exprs, replays = [], []
+    for n in (8, None):
+        exprs += [
+            sim._dot_sql("a", "b", n),
+            sim._l2_sql("a", n),
+            sim._cosine_sql("a", "b", n),
+            sim._sq_l2_units_sql("a", "b", n),
+        ]
+        replays += [
+            lambda a, b, n=n: rdot(a, b, n),
+            lambda a, b, n=n: rl2(a, n),
+            lambda a, b, n=n: rcos(a, b, n),
+            lambda a, b, n=n: runits(a, b, n),
+        ]
+    got = [tuple(r) for r in two.selectExpr("a", "b", *exprs).collect()]
+    want = [(a, b, *(f(a, b) for f in replays)) for a, b in pairs]
+    assert sorted(got, key=repr) == sorted(want, key=repr)
+    assert all(None not in w for w in want[: len(rows)])
+    short_b, short_a, null_a, null_b = (w[2:] for w in want[len(rows):])
+    assert short_a == (None,) * 4 + (None, rl2(v0[:7], None), None, None)
+    assert short_b[0::4] == short_b[2::4] == short_b[3::4] == (None, None)
+    assert null_a == (None,) * 8
+    assert null_b[0::4] == null_b[2::4] == null_b[3::4] == (None, None)
 
     # 2. pq_encode codes vs the pure-Python replay
     m, d = 4, 2
