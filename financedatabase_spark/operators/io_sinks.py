@@ -14,6 +14,16 @@ file-backed lakehouse those become:
   rewrite; the reference's match-count guard (A5) is preserved in the
   returned report.
 
+Job budget per statement, once the table has been read in this process
+(the first `ParquetTable.read` of a version infers its schema with one
+job): UPDATE and DELETE run ONE Spark job, the rewrite's write; dedup runs
+TWO, the shuffle-map stage of its aggregate and the write. The guard counts
+are not jobs of their own: they are `DataFrame.observe` metrics computed by
+the write job and read after `rewrite` returns. Each is observed in the
+write's RESULT stage, whose accumulator updates Spark applies once per
+partition, so a shuffle-map stage that is re-run after a lost executor
+cannot count a row twice.
+
 At scale: appends write partitioned files without touching existing data;
 rewrites are partition-overwrite (`partitionOverwriteMode=dynamic`) so an
 UPDATE touching one date rewrites one partition, not the table.
@@ -28,8 +38,9 @@ from dataclasses import dataclass
 from functools import reduce
 from typing import Protocol
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 @dataclass
@@ -193,10 +204,7 @@ class DirectoryLease:
     def release(self, token: object) -> None:
         import shutil as _sh
 
-        try:
-            _sh.rmtree(str(token), ignore_errors=True)
-        except OSError:
-            pass
+        _sh.rmtree(str(token), ignore_errors=True)
 
 
 class ParquetTable:
@@ -231,6 +239,19 @@ class ParquetTable:
     'append')` is append-only file creation and safe alongside readers,
     but racing it against a `rewrite` can strand the appended files in a
     superseded snapshot; route mixed workloads through `rewrite`.
+
+    **Schema memo.** Inferring a parquet schema is a Spark job, so the
+    table remembers the schema it read for the committed directory and
+    `read()` passes it to ``spark.read.schema(...)``; it infers only when
+    the pointer names another directory than the memo's. A `rewrite`
+    carries the memo over to the version it commits when the written
+    frame's fields equal it by name and type (nullability aside: file
+    reads are always nullable), as every DML statement's frame does; any
+    other rewrite leaves the next read to infer. `write()` clears it. A
+    rewrite by another process moves the pointer to a new directory, so
+    this process's next read infers again; an append by another process
+    that changes the column set of the current directory is not seen
+    until then. `read(version=N)` always infers.
     """
 
     POINTER = "_CURRENT"
@@ -250,6 +271,8 @@ class ParquetTable:
         # local/NFS paths; object-store deployments inject a conditional-
         # put / catalog-service implementation (see TableLease)
         self.lease: TableLease = lease or DirectoryLease(path, self.LOCK)
+        # (directory, schema) of the last read or carried-over commit
+        self._schema_memo: tuple[str, StructType] | None = None
 
     # -- versioned-layout plumbing ------------------------------------
     def _pointer(self) -> str:
@@ -321,7 +344,13 @@ class ParquetTable:
             if not os.path.isdir(vdir):
                 raise FileNotFoundError(f"version {version} not retained at {self.path}")
             return self.spark.read.parquet(vdir)
-        return self.spark.read.parquet(self._current_dir())
+        cur = self._current_dir()
+        memo = self._schema_memo
+        if memo is not None and memo[0] == cur:
+            return self.spark.read.schema(memo[1]).parquet(cur)
+        df = self.spark.read.parquet(cur)
+        self._schema_memo = (cur, df.schema)
+        return df
 
     def versions(self) -> list[int]:
         """Retained COMMITTED version numbers, ascending (0 = flat
@@ -346,7 +375,10 @@ class ParquetTable:
         w = df.write.mode(mode)
         if self.partition_by:
             w = w.partitionBy(*self.partition_by)
-        w.parquet(self._current_dir())
+        try:
+            w.parquet(self._current_dir())
+        finally:
+            self._schema_memo = None  # the write may change the schema
 
     def rewrite(
         self, df: DataFrame, retain: int = 1,
@@ -425,6 +457,11 @@ class ParquetTable:
             n = int(base[2:]) if base.startswith("_v") and base[2:].isdigit() else 0
             new_name = f"_v{n + 1:08d}"
             new_dir = os.path.join(self.path, new_name)
+            memo = self._schema_memo
+            if memo is not None and (
+                memo[0] != cur or df.schema.simpleString() != memo[1].simpleString()
+            ):
+                memo = None  # simpleString drops nullability at every level
             w = df.write.mode("overwrite")
             if self.partition_by:
                 # version snapshots keep the table's partition layout so
@@ -463,6 +500,7 @@ class ParquetTable:
                 f.flush()
                 os.fsync(f.fileno())
             os.replace(tmp, self._pointer())  # <- the commit point
+            self._schema_memo = None if memo is None else (new_dir, memo[1])
 
             # post-commit prune of stale data: best-effort, never part of
             # the transaction (a failure here leaves invisible garbage,
@@ -577,14 +615,27 @@ def delete_rewrite(
     return df.filter(~F.coalesce(pred, F.lit(False))), pred
 
 
+def _observe_matches(df: DataFrame, filters: dict[str, object]) -> tuple[DataFrame, Observation]:
+    """``df`` with the statement's match count observed on it, read as
+    ``obs.get["matched"]`` after the frame's first action. A NULL
+    predicate is no match, as in the reference's ``WHERE``."""
+    obs = Observation()
+    matched = F.count_if(F.coalesce(eq_predicate(filters), F.lit(False)))
+    return df.observe(obs, matched.alias("matched")), obs
+
+
 def run_update(
     table: ParquetTable, filters: dict[str, object], updates: dict[str, object]
 ) -> DmlReport:
-    """M1 end-to-end against a ParquetTable, with the count guard."""
-    df = table.read()
-    out, pred = update_rewrite(df, filters, updates)
-    matched = df.filter(pred).count()
+    """M1 end-to-end against a ParquetTable, with the count guard.
+
+    One Spark job once the table's schema is known: the match count is
+    observed on the frame the statement read and computed by the
+    rewrite's write job (see the module docstring)."""
+    df, obs = _observe_matches(table.read(), filters)
+    out, _ = update_rewrite(df, filters, updates)
     table.rewrite(out)
+    matched = obs.get["matched"]
     return DmlReport(True, rows_matched=matched, rows_affected=matched)
 
 
@@ -592,13 +643,20 @@ def run_delete(
     table: ParquetTable, filters: dict[str, object], dry_run: bool = False
 ) -> DmlReport:
     """M2 end-to-end; ``dry_run`` reports the match count without writing
-    (reference: delete_from_table dry-run mode)."""
+    (reference: delete_from_table dry-run mode).
+
+    One Spark job: the dry run's count, or the rewrite's write job with
+    the match count observed on the frame the statement read (see the
+    module docstring)."""
     df = table.read()
-    out, pred = delete_rewrite(df, filters)
-    matched = df.filter(F.coalesce(pred, F.lit(False))).count()
-    if not dry_run:
-        table.rewrite(out)
-    return DmlReport(True, rows_matched=matched, rows_affected=0 if dry_run else matched)
+    if dry_run:
+        matched = df.filter(F.coalesce(eq_predicate(filters), F.lit(False))).count()
+        return DmlReport(True, rows_matched=matched, rows_affected=0)
+    df, obs = _observe_matches(df, filters)
+    out, _ = delete_rewrite(df, filters)
+    table.rewrite(out)
+    matched = obs.get["matched"]
+    return DmlReport(True, rows_matched=matched, rows_affected=matched)
 
 
 def clear_table(table: ParquetTable) -> DmlReport:
@@ -611,13 +669,32 @@ def clear_table(table: ParquetTable) -> DmlReport:
 def dedup_rewrite(table: ParquetTable) -> DmlReport:
     """M4 — whole-table duplicate removal rewrite
     (reference: drop_SQL_Table_Duplicates, SQLHelpers.py:370-405 — read,
-    drop_duplicates, batched replace; here a single overwrite)."""
+    drop_duplicates, batched replace; here a single overwrite).
+
+    Two Spark jobs once the table's schema is known. One aggregate
+    groups by every column and counts each group's rows; the write job
+    observes the row count before (the sum of the group counts) and
+    after (the number of groups) on the aggregate's output, which is its
+    result stage (see the module docstring)."""
     df = table.read()
-    before = df.count()
-    out = df.dropDuplicates()
-    after = out.count()
-    table.rewrite(out)
-    return DmlReport(True, rows_matched=before, rows_affected=before - after)
+    n = "_n"
+    while n in df.columns:
+        n = "_" + n
+    obs = Observation()
+    groups = (
+        df.groupBy(*df.columns)
+        .agg(F.count(F.lit(1)).alias(n))
+        .observe(
+            obs,
+            F.coalesce(F.sum(n), F.lit(0)).alias("before"),
+            F.count(F.lit(1)).alias("after"),
+        )
+    )
+    table.rewrite(groups.drop(n))
+    counts = obs.get
+    return DmlReport(
+        True, rows_matched=counts["before"], rows_affected=counts["before"] - counts["after"]
+    )
 
 
 def export_jsonl_shards(

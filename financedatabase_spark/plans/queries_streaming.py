@@ -97,7 +97,13 @@ def _run(spark: SparkSession, sdf, mode: str) -> DataFrame:
         q.awaitTermination(300)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.table(name)
+    # The memory sink registers its rows as a temp view named after the
+    # query. The resolved frame's analyzed plan holds the sink itself, so
+    # the view can go: left registered, every build would pin its rows in
+    # the driver for the life of the session.
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out
 
 
 _BARS_ORACLE = """

@@ -1,13 +1,17 @@
 """Stateful sink + catalog operators (not expressible as SELECT oracles):
 ParquetTable DML round-trips and environment lifecycle over spark.catalog."""
 
+import uuid
+
 import pytest
 from pyspark.sql import functions as F
 
 from financedatabase_spark.operators.io_sinks import (
+    DmlReport,
     ParquetTable,
     clear_table,
     dedup_rewrite,
+    eq_predicate,
     run_delete,
     run_update,
 )
@@ -52,6 +56,111 @@ def test_clear_and_dedup(table):
     assert table.read().count() == 3
     clear_table(table)
     assert table.read().count() == 0
+
+
+def _job_count(spark, fn):
+    """(number of Spark jobs ``fn`` ran, its result)."""
+    sc = spark.sparkContext
+    group = f"job-count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+def test_dml_guard_counts_equal_separate_counts(spark, tmp_path):
+    """On a table with duplicate rows, a NULL filter key and duplicates
+    that hold NULLs, the observed guard counts equal separate count jobs,
+    a NULL predicate counting as no match; an empty table reports zeros."""
+    t = ParquetTable(spark, str(tmp_path / "n"))
+    t.write(
+        spark.createDataFrame(
+            [(1, "O", 10.0), (2, None, 20.0), (3, "O", None), (3, "O", None),
+             (4, "F", 40.0), (4, "F", 40.0), (5, None, 20.0), (5, None, 20.0)],
+            "id long, status string, price double",
+        ),
+        mode="overwrite",
+    )
+
+    def matched(filters):
+        return t.read().filter(eq_predicate(filters)).count()
+
+    want = matched({"status": ["O", "F"]})
+    rep = run_update(t, {"status": ["O", "F"]}, {"price": 1.0})
+    assert (rep.rows_matched, rep.rows_affected) == (want, want) == (5, 5)
+
+    want = matched({"status": "F"})
+    rep = run_delete(t, {"status": "F"})
+    assert (rep.rows_matched, rep.rows_affected) == (want, want) == (2, 2)
+
+    before = t.read().count()
+    after = t.read().dropDuplicates().count()
+    rep = dedup_rewrite(t)
+    assert (rep.rows_matched, rep.rows_affected) == (before, before - after) == (6, 2)
+    assert t.read().count() == after
+
+    clear_table(t)
+    assert run_update(t, {"status": "O"}, {"price": 2.0}) == DmlReport(True, 0, 0)
+    assert run_delete(t, {"status": "O"}) == DmlReport(True, 0, 0)
+    assert dedup_rewrite(t) == DmlReport(True, 0, 0)
+
+
+def test_dml_statement_job_budget(spark, table):
+    """Once the table has been read, UPDATE and DELETE each run one
+    Spark job (the write, guard count included) and dedup runs two."""
+    table.read()
+    jobs, rep = _job_count(spark, lambda: run_update(table, {"status": "O"}, {"price": 1.0}))
+    assert (jobs, rep.rows_matched) == (1, 3)
+    jobs, rep = _job_count(spark, lambda: run_delete(table, {"status": "F"}))
+    assert (jobs, rep.rows_matched) == (1, 1)
+    jobs, rep = _job_count(spark, lambda: dedup_rewrite(table))
+    assert (jobs, rep.rows_affected) == (2, 1)
+    assert sorted((r.id, r.price) for r in table.read().collect()) == [(1, 1.0), (3, 1.0)]
+
+
+@pytest.mark.parametrize("partition_by", [None, ["status"]])
+def test_read_after_rewrite_reuses_schema(spark, tmp_path, partition_by):
+    """A read after a DML rewrite runs no job, and its schema is the one
+    a fresh inference of the committed directory finds."""
+    t = ParquetTable(spark, str(tmp_path / "s"), partition_by=partition_by)
+    t.write(
+        spark.createDataFrame(
+            [(1, "O", 10.0), (2, "F", 20.0), (3, "O", 30.0)],
+            "id long, status string, price double",
+        ),
+        mode="overwrite",
+    )
+    t.read()
+    run_update(t, {"id": 1}, {"price": 99.0})
+    jobs, df = _job_count(spark, t.read)
+    assert jobs == 0
+    assert df.schema == spark.read.parquet(t._current_dir()).schema
+    assert sorted((r.id, r.price) for r in df.collect()) == [(1, 99.0), (2, 20.0), (3, 30.0)]
+
+
+def test_schema_memo_invalidation(spark, table):
+    """The remembered schema never hides a schema change: not after a
+    rewrite of another shape, a plain write, or a rewrite by another
+    writer of the same path."""
+    table.read()
+    table.rewrite(table.read().drop("price"))
+    assert table.read().columns == ["id", "status"]
+
+    table.write(
+        spark.createDataFrame([(7, "X", 1.5)], "id long, status string, qty double"),
+        mode="overwrite",
+    )
+    assert table.read().columns == ["id", "status", "qty"]
+
+    other = ParquetTable(spark, table.path)
+    other.rewrite(other.read().withColumn("flag", F.lit(True)))
+    jobs, df = _job_count(spark, table.read)
+    assert jobs == 1  # the pointer moved: infer again
+    assert df.columns == ["id", "status", "qty", "flag"]
+    assert df.collect()[0].flag is True
 
 
 def test_resolution_rules():
@@ -118,9 +227,17 @@ def test_rewrite_crash_before_commit_preserves_table(table, monkeypatch):
 def test_rewrite_crash_during_prune_is_harmless(table, monkeypatch):
     """After the pointer swap the transaction is committed; a crash in the
     best-effort prune leaves stale-but-invisible version dirs only."""
+    import os as _os
     import shutil as _shutil
 
-    monkeypatch.setattr(_shutil, "rmtree", lambda *a, **k: (_ for _ in ()).throw(OSError()))
+    real_rmtree = _shutil.rmtree
+
+    def failing_rmtree(path, *a, **k):
+        if _os.path.basename(str(path)) == table.LOCK:  # the lease release
+            return real_rmtree(path, *a, **k)
+        raise OSError("simulated prune failure")
+
+    monkeypatch.setattr(_shutil, "rmtree", failing_rmtree)
     try:
         report = run_delete(table, {"id": 1})
     finally:

@@ -85,6 +85,24 @@ def test_latest_state_stream(spark, event_stream):
     assert (got["value"] == want["value"]).all()
 
 
+def test_registered_stream_query_leaves_no_memory_view(spark, sf_dir):
+    """A registered streaming build drops the memory sink's temp view once
+    its frame has resolved it; the frame still reads the sink's rows."""
+    from financedatabase_spark.plans.queries_streaming import streaming_latest_state
+
+    def sink_views():
+        return {
+            t.name for t in spark.catalog.listTables()
+            if t.isTemporary and t.name.startswith("q_")
+        }
+
+    before = sink_views()
+    frames = [streaming_latest_state(spark, sf_dir) for _ in range(2)]
+    assert sink_views() == before
+    rows = [sorted(map(tuple, df.collect())) for df in frames]
+    assert rows[0] and rows[0] == rows[1]
+
+
 def test_dedup_stream_drops_replayed_rows(spark, sf_dir, tmp_path):
     from financedatabase_spark.sources.readers import load_table
 
