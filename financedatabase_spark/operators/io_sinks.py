@@ -24,9 +24,14 @@ write's RESULT stage, whose accumulator updates Spark applies once per
 partition, so a shuffle-map stage that is re-run after a lost executor
 cannot count a row twice.
 
-At scale: appends write partitioned files without touching existing data;
-rewrites are partition-overwrite (`partitionOverwriteMode=dynamic`) so an
-UPDATE touching one date rewrites one partition, not the table.
+At scale: appends write partitioned files without touching existing data.
+Rewrites are whole-table copy-on-write: `ParquetTable.rewrite` writes the
+complete rewritten frame into a fresh `_vN` directory and swaps the
+`_CURRENT` pointer to it, so an UPDATE that changes a few rows still
+writes every row of the table: on perfbench's market_etl DML table the
+bytes written are about 285x the stored bytes of the rows the statements
+change. Partition-scoped overwrite would bound that cost; it is not
+implemented.
 """
 
 from __future__ import annotations
@@ -567,8 +572,13 @@ def insert_ignore(
     pk_cols: list[str],
 ) -> DataFrame:
     """S8 — INSERT IGNORE: rows of ``incoming`` whose PK is absent from
-    ``target`` are appended; PK-duplicates inside ``incoming`` keep the
-    first occurrence (MySQL insert order ⇒ arrival order).
+    ``target`` are appended; PK-duplicates inside ``incoming`` collapse
+    to ONE row, and which of them survives is unspecified:
+    ``dropDuplicates(pk_cols)`` keeps whichever row its aggregation sees
+    first, which depends on partitioning and task scheduling once
+    ``incoming`` spans more than one partition (MySQL would keep the
+    first in arrival order). Callers needing a deterministic winner
+    deduplicate ``incoming`` themselves first.
 
     Reference: temp table + ``INSERT IGNORE INTO t SELECT * FROM temp``
     (SQLHelpers.py:651-686). Returns target ∪ surviving-incoming; callers

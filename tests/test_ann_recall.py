@@ -1,6 +1,7 @@
 """ANN recall gates at scale (r10): ivf_topk / ivf_multiprobe_topk /
 ivf_pq_topk against EXACT brute-force cosine top-k ground truth on a
-100k-vector clustered corpus with 5k queries.
+100k-vector clustered corpus with 5k queries (opt-in, ``heavy``), plus
+one small default-gate smoke check of ivf_topk on the same geometry.
 
 The replicated /tmp/sf5x fixture is the wrong testbed for recall — 50
 identical copies of every vector make the exact top-k a pure id-tiebreak
@@ -24,43 +25,42 @@ K = 10
 N_QUERIES = 5_000
 
 
-def _build_corpus() -> None:
+def _build_corpus(path: str = CORPUS, n: int = N, cells: int = CELLS) -> None:
     # realistic embedding geometry: L2-normalized vectors (cosine and L2
     # rank identically, like production sentence embeddings) around
     # well-separated centers, with a DECAYING noise spectrum (real
     # embeddings have low intrinsic dimension; isotropic 64-dim noise
     # makes neighbors near-equidistant, which no quantizer can rank)
     rng = np.random.RandomState(20260815)
-    centers = rng.randn(CELLS, DIM) * 4.0
-    labels = rng.randint(0, CELLS, N)
+    centers = rng.randn(cells, DIM) * 4.0
+    labels = rng.randint(0, cells, n)
     spectrum = np.exp(-np.arange(DIM) / 10.0)
-    vecs = centers[labels] + rng.randn(N, DIM) * spectrum
+    vecs = centers[labels] + rng.randn(n, DIM) * spectrum
     vecs = vecs / np.linalg.norm(vecs, axis=1, keepdims=True)
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     t = pa.table(
         {
-            "vec_id": np.arange(N, dtype=np.int64),
+            "vec_id": np.arange(n, dtype=np.int64),
             "label": labels.astype(np.int32),
             "embedding": [row for row in vecs],
         }
     )
-    pq.write_table(t, CORPUS)
+    pq.write_table(t, path)
 
 
-@pytest.fixture(scope="module")
-def ann_fixture(spark):
-    if not os.path.exists(CORPUS):
-        _build_corpus()
-    emb = spark.read.parquet(CORPUS)
+def _load(spark, path: str, n: int, n_queries: int):
+    """(vectors, every (n // n_queries)-th vector as a query, the corpus,
+    exact cosine top-K ids per query)."""
+    emb = spark.read.parquet(path)
     import pyarrow.parquet as pq
 
-    tbl = pq.read_table(CORPUS)
+    tbl = pq.read_table(path)
     vec_ids = tbl["vec_id"].to_numpy()
     vecs = np.vstack(tbl["embedding"].to_numpy())
     # exact ground truth: chunked cosine matmul, top-K ids per query
-    qmask = vec_ids % (N // N_QUERIES) == 0
+    qmask = vec_ids % (n // n_queries) == 0
     qidx = np.nonzero(qmask)[0]
     norms = vecs / np.linalg.norm(vecs, axis=1, keepdims=True)
     qn = norms[qidx]
@@ -70,11 +70,18 @@ def ann_fixture(spark):
         top = np.argpartition(block, -K, axis=1)[:, -K:]
         for r, qi in enumerate(qidx[s : s + 512]):
             exact[int(vec_ids[qi])] = set(vec_ids[top[r]].tolist())
-    queries = emb.filter(F.col("vec_id") % (N // N_QUERIES) == 0).select(
+    queries = emb.filter(F.col("vec_id") % (n // n_queries) == 0).select(
         F.col("vec_id").alias("query_id"), "label", "embedding"
     )
     corpus = emb.select(F.col("vec_id").alias("corpus_id"), "label", "embedding")
     return emb, queries, corpus, exact
+
+
+@pytest.fixture(scope="module")
+def ann_fixture(spark):
+    if not os.path.exists(CORPUS):
+        _build_corpus()
+    return _load(spark, CORPUS, N, N_QUERIES)
 
 
 def _recall(rows, exact) -> float:
@@ -83,6 +90,19 @@ def _recall(rows, exact) -> float:
         got.setdefault(int(r.query_id), set()).add(int(r.corpus_id))
     hits = sum(len(got.get(q, set()) & e) for q, e in exact.items())
     return hits / (len(exact) * K)
+
+
+def test_ivf_topk_recall_smoke(spark, tmp_path):
+    """Default-gate recall check: 5k vectors of the at-scale geometry in
+    50 cells, 200 queries, ivf_topk recall@10 against exact cosine."""
+    from financedatabase_spark.operators import similarity as sim
+
+    path = str(tmp_path / "ann_small.parquet")
+    _build_corpus(path, n=5_000, cells=50)
+    _, queries, corpus, exact = _load(spark, path, 5_000, 200)
+    assert len(exact) == 200
+    r = _recall(sim.ivf_topk(queries, corpus, k=K).collect(), exact)
+    assert r >= 0.9, f"ivf_topk recall@{K} = {r:.4f} (need >= 0.9)"
 
 
 @pytest.mark.heavy

@@ -2304,6 +2304,155 @@ def test_jpeg_exotic_sampling_round_trip():
         jpeg_planes(synth_jpeg_color(3, (4, 4), multiscan=False))
 
 
+def _idct_block_reference(coef, prec=8, shift=True):
+    """The plain separable IDCT `jpeg._idct_block` must equal bit for
+    bit: every product recomputed inside the output loops."""
+    from financedatabase_spark.operators.jpeg import _C, _COS
+
+    tmp = [[0.0] * 8 for _ in range(8)]
+    for v in range(8):
+        row = coef[v * 8:(v + 1) * 8]
+        if not any(row):
+            continue
+        for x in range(8):
+            s = 0.0
+            for u in range(8):
+                if row[u]:
+                    s += _C[u] * row[u] * _COS[u][x]
+            tmp[v][x] = s
+    out = [0] * 64
+    lvl = (1 << (prec - 1)) if shift else 0
+    bot = 0 if shift else -(1 << prec)
+    top = (1 << prec) - 1
+    for y in range(8):
+        for x in range(8):
+            s = 0.0
+            for v in range(8):
+                if tmp[v][x]:
+                    s += _C[v] * tmp[v][x] * _COS[v][y]
+            p = round(s / 4) + lvl
+            out[y * 8 + x] = bot if p < bot else (top if p > top else p)
+    return out
+
+
+def _crop_planes_reference(planes_raw, samplings, w, h, hmax, vmax):
+    """Per-pixel A.1.1 sample-grid map that `jpeg._crop_planes` must equal."""
+    out = []
+    for ci, (hs, vs) in enumerate(samplings):
+        plane = planes_raw[ci]
+        flat = []
+        for y in range(h):
+            src = plane[y * vs // vmax]
+            flat.extend(src[x * hs // hmax] for x in range(w))
+        out.append(flat)
+    return out
+
+
+def test_idct_kernel_matches_reference_bit_for_bit():
+    """The hoisted, row-sparse IDCT is the reference IDCT to the last
+    pixel on every block shape it special-cases (all-zero, DC-only,
+    row-0-only), on blocks with one or two nonzero rows anywhere (the
+    row-0 shortcut must fire for row 0 alone and only then) and on the general low-frequency and dense
+    paths, at both precisions, with and without the level shift.
+    Magnitudes reach past the clamp on both sides."""
+    import random
+
+    from financedatabase_spark.operators.jpeg import _idct_block
+
+    def block(shape, rnd, m):
+        b = [0] * 64
+        if shape == "zero":
+            return b
+        if shape == "rows":
+            for v in rnd.sample(range(8), rnd.randint(1, 2)):
+                for u in rnd.sample(range(8), rnd.randint(1, 8)):
+                    b[v * 8 + u] = rnd.randint(-m // 4, m // 4)
+            return b
+        b[0] = rnd.randint(-m, m)
+        if shape == "row0":
+            for u in rnd.sample(range(1, 8), rnd.randint(1, 7)):
+                b[u] = rnd.randint(-m // 4, m // 4)
+        elif shape == "low":
+            for i in (1, 2, 8, 9, 10, 16, 17, 18):
+                if rnd.random() < 0.7:
+                    b[i] = rnd.randint(-m // 4, m // 4)
+        elif shape == "dense":
+            for i in range(1, 64):
+                if rnd.random() < 0.8:
+                    b[i] = rnd.randint(-m // 8, m // 8)
+        return b
+
+    rnd = random.Random(20240)
+    for shape in ("zero", "dc", "row0", "rows", "low", "dense"):
+        for prec in (8, 12):
+            m = 1 << (prec + 3)
+            for shift in (True, False):
+                for _ in range(60 if shape == "zero" else 150):
+                    b = block(shape, rnd, m)
+                    assert _idct_block(b, prec, shift) == _idct_block_reference(
+                        b, prec, shift
+                    ), (shape, prec, shift, b)
+
+
+def test_crop_planes_matches_reference():
+    """Crop + replication upsample equals the per-pixel sample-grid map
+    for full-width components (sliced rows) and subsampled ones (column
+    map), at integer ratios and the fractional 3x1-vs-2x1 ratio, on a
+    geometry that crops a padded MCU in both directions."""
+    import random
+
+    from financedatabase_spark.operators.jpeg import _crop_planes
+
+    rnd = random.Random(7)
+    w, h = 21, 13
+    for samplings in (
+        [(1, 1)],
+        [(1, 1), (1, 1), (1, 1)],
+        [(2, 1), (1, 1), (1, 1)],
+        [(2, 2), (1, 1), (1, 1)],
+        [(1, 2), (1, 1), (1, 1)],
+        [(3, 1), (2, 1), (2, 1)],
+    ):
+        hmax = max(hs for hs, _ in samplings)
+        vmax = max(vs for _, vs in samplings)
+        mcus_x = -(-w // (8 * hmax))
+        mcus_y = -(-h // (8 * vmax))
+        planes_raw = [
+            [[rnd.randrange(256) for _ in range(mcus_x * hs * 8)]
+             for _ in range(mcus_y * vs * 8)]
+            for hs, vs in samplings
+        ]
+        args = (planes_raw, samplings, w, h, hmax, vmax)
+        assert _crop_planes(*args) == _crop_planes_reference(*args), samplings
+
+
+def test_jpeg_decode_unchanged_under_reference_kernels(monkeypatch):
+    """Every JPEG process decodes to the same frame with the reference
+    IDCT and crop patched in: baseline, progressive, 4:2:0 / 4:2:2 /
+    4:4:4 and exotic samplings in all three scan layouts, arithmetic
+    (sequential and progressive), 12-bit, hierarchical/differential and
+    lossless."""
+    from financedatabase_spark.operators import jpeg
+
+    cases = (
+        [jpeg.synth_jpeg(d) for d in range(32)]
+        + [jpeg.synth_jpeg_color(d, s) for d, s in
+           [(1, (2, 2)), (5, (2, 1)), (7, (1, 1)), (9, (1, 2)), (4, (2, 2))]]
+        + [jpeg.synth_jpeg_exotic(d) for d in range(20)]
+        + [jpeg.synth_jpeg_arith(d) for d in range(16)]
+        + [jpeg.synth_jpeg12(d) for d in range(4)]
+        + [jpeg.synth_jpeg_hier(d) for d in range(8)]
+        + [jpeg.synth_jpeg_lossless(d) for d in range(4)]
+        + [jpeg.synth_jpeg_lossless_arith(d) for d in range(4)]
+        + [jpeg.synth_jpeg_lossless_rgb(d) for d in range(2)]
+    )
+    got = [jpeg.jpeg_frame(p) for p in cases]
+    monkeypatch.setattr(jpeg, "_idct_block", _idct_block_reference)
+    monkeypatch.setattr(jpeg, "_crop_planes", _crop_planes_reference)
+    for i, p in enumerate(cases):
+        assert jpeg.jpeg_frame(p) == got[i], i
+
+
 def test_jpeg_lossless_multicomponent_round_trip():
     """3-component lossless with a point transform must round-trip: one
     sequential single-component scan per plane, decoded planes equal

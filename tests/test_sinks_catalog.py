@@ -12,6 +12,7 @@ from financedatabase_spark.operators.io_sinks import (
     clear_table,
     dedup_rewrite,
     eq_predicate,
+    insert_ignore,
     run_delete,
     run_update,
 )
@@ -119,6 +120,33 @@ def test_dml_statement_job_budget(spark, table):
     jobs, rep = _job_count(spark, lambda: dedup_rewrite(table))
     assert (jobs, rep.rows_affected) == (2, 1)
     assert sorted((r.id, r.price) for r in table.read().collect()) == [(1, 1.0), (3, 1.0)]
+
+
+def test_insert_ignore_keeps_one_unspecified_duplicate(spark, table):
+    """A PK duplicated across two partitions of ``incoming`` collapses to
+    exactly one row taken from that key's incoming rows (which one is
+    unspecified); keys already in the target are ignored and the
+    target's rows come through unchanged, duplicates included."""
+    schema = "id long, status string, price double"
+    rows = [(10, "N", 1.0), (11, "N", 2.0), (1, "N", 9.0), (10, "X", 5.0), (12, "N", 3.0)]
+    incoming = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+    parts = {r.p for r in incoming.filter("id = 10")
+             .select(F.spark_partition_id().alias("p")).collect()}
+    assert len(parts) == 2
+
+    target = table.read()
+    want_target = sorted(target.collect())
+    got = insert_ignore(target, incoming, ["id"]).collect()
+    old_ids = {r.id for r in want_target}
+    assert sorted(r for r in got if r.id in old_ids) == want_target
+    new_rows = {}
+    for r in got:
+        if r.id not in old_ids:
+            new_rows.setdefault(r.id, []).append(tuple(r))
+    assert sorted(new_rows) == [10, 11, 12]
+    assert all(len(v) == 1 for v in new_rows.values())
+    assert new_rows[10][0] in {(10, "N", 1.0), (10, "X", 5.0)}
+    assert new_rows[11] == [(11, "N", 2.0)] and new_rows[12] == [(12, "N", 3.0)]
 
 
 @pytest.mark.parametrize("partition_by", [None, ["status"]])
