@@ -110,8 +110,16 @@ takes about 17 %, the frame parse and MCU walk in `jpeg_frame` about
 15 % and the histogram about 8 %. In `multimodal_jpeg_features` the
 Python workers' CPU per call fell from 8.6 to 5.0 s (perfbench
 corpus_curation, traced, median of three runs each); besides decode it
-holds fixture encoding (`synth_jpeg`, about 0.6 s) and the Arrow/pandas
-hand-off of `mapInPandas`.
+holds fixture encoding (`synth_jpeg`, about 0.6 s) and a fixed cost per
+Python task. The op runs 8 tasks per call on 4 cores (two chained
+`mapInPandas` over 4 partitions), and each task cost ~0.25 CPU-s,
+most of it `importlib.invalidate_caches()` re-reading the zip
+directories on the worker path. The engine's worker daemon
+(`financedatabase_spark/pydaemon.py`) skips that re-read (~0.04 CPU-s
+per task), and the op's worker CPU per call fell from 5.3 to 3.4 s
+(traced, two runs each) and its whole CPU per call from 5.7 to 4.1 s
+(untraced, medians of ten runs each). Encoding and decoding the same
+5000 documents in one process takes 3.2-3.3 CPU-s.
 
 Reference parity: the reference has no media path at all — nothing
 under /root/reference parses image bytes; this is the brief's

@@ -12,12 +12,18 @@ timestamps round-trip unchanged (SURVEY.md §7.4 risk 3).
 
 from __future__ import annotations
 
+import logging
 import math
 import os
 import threading
 from typing import Callable, Hashable
 
 from pyspark.sql import DataFrame, SparkSession
+
+_log = logging.getLogger(__name__)
+
+# the directory that holds the package, for the Python workers' path
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _is_active(spark: SparkSession) -> bool:
@@ -80,7 +86,9 @@ def release_build_checkpoints(spark: SparkSession, name: str) -> int:
             h.unpersist(False)
             n += 1
         except Exception:
-            pass
+            _log.warning(
+                "could not release a checkpoint of query %r", name, exc_info=True
+            )
     return n
 
 
@@ -248,7 +256,7 @@ def release_barrier(df: DataFrame) -> None:
         try:
             handle.unpersist(False)
         except Exception:
-            pass
+            _log.warning("could not release checkpoint handle %r", handle, exc_info=True)
 
 
 def session_memo(
@@ -358,6 +366,13 @@ def get_spark(app_name: str = "financedatabase_spark", cpus: int | None = None) 
     ``cpus`` defaults to $SPARK_GRAFT_CPUS or all local cores. On a real
     cluster the master/size come from spark-submit; every .config here is
     still correct at 1000 executors.
+
+    Python workers are forked from the engine's daemon module
+    (`financedatabase_spark.pydaemon`), which keeps each task from
+    re-reading the directories of pyspark.zip, the py4j zip and the
+    spark-core jar; the directory that holds the package goes on the
+    workers' PYTHONPATH, so they import it (and the engine's UDFs) from
+    any working directory.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
@@ -370,6 +385,8 @@ def get_spark(app_name: str = "financedatabase_spark", cpus: int | None = None) 
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.python.daemon.module", "financedatabase_spark.pydaemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
         # Split small files down to ~cores scan partitions: staging tables
         # compress to a few MB, and the default byte-based planner gives
         # such files ONE split, serializing CPU-heavy scan work (regex

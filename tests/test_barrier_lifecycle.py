@@ -169,3 +169,41 @@ def test_scaled_partitions_bounded_by_real_input_bytes(spark, sf_dir):
     n = scaled_partitions(joined)
     # tiny fixture inputs: the count must stay at local-parallelism scale
     assert 1 <= n <= 4 * par, n
+
+
+class _Handle:
+    def __init__(self, fail):
+        self.fail, self.released = fail, False
+
+    def unpersist(self, blocking):
+        if self.fail:
+            raise RuntimeError("block manager gone")
+        self.released = True
+
+
+def test_failed_release_is_logged_and_not_counted(caplog):
+    """A handle whose unpersist raises is named in a warning and is not
+    counted; the other handles of the query are still released."""
+    from types import SimpleNamespace
+
+    from financedatabase_spark.session import (
+        _barrier_registry,
+        release_barrier,
+        release_build_checkpoints,
+    )
+
+    session = SimpleNamespace()
+    good, bad = _Handle(False), _Handle(True)
+    _barrier_registry(session)["q_release"] = [bad, good]
+    with caplog.at_level("WARNING", logger="financedatabase_spark.session"):
+        assert release_build_checkpoints(session, "q_release") == 1
+    assert good.released
+    assert [r.levelname for r in caplog.records] == ["WARNING"]
+    assert "q_release" in caplog.records[0].getMessage()
+    assert caplog.records[0].exc_info is not None
+
+    caplog.clear()
+    frame = SimpleNamespace(_fdspark_ckpt_rdd=_Handle(True))
+    with caplog.at_level("WARNING", logger="financedatabase_spark.session"):
+        release_barrier(frame)
+    assert len(caplog.records) == 1 and "_Handle" in caplog.records[0].getMessage()
