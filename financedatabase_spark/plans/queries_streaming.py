@@ -24,6 +24,20 @@ The staged replay is written as ONE time-sorted file: the stateful
 operators' documented contract is that micro-batches arrive in event
 -time order (see ``streaming/sessions.py``), and a single sorted file
 makes the availableNow replay honor it deterministically.
+
+Staged-replay memo: every replay of a source table goes through
+``_staged_replay``, which stages the sorted copy once per live session
+and source version, keyed on the source file's (path, st_mtime_ns,
+st_size, st_ino) plus the columns and sort key (the pattern of
+``load_table``'s schema memo). A rebuild streams the copy already on
+disk instead of re-writing it (for ``events`` at sf0.1 that write job
+was ~1 CPU-s per build); a rewritten source, or a staged copy that has
+disappeared, re-stages and removes the superseded copy. Frames derived
+per build get their own stage directories, and each is bounded:
+``history_union_today`` removes its directory as soon as the drain
+has landed in the memory sink, and ``streaming_curation_refresh``
+hands its source and work directories to the build scope, which
+removes them when the same query is next built.
 """
 
 from __future__ import annotations
@@ -32,24 +46,28 @@ import atexit
 import os
 import shutil
 import tempfile
+import threading
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from financedatabase_spark.session import release_on_rebuild, stream_state_partitions
 from financedatabase_spark.sources.readers import load_table
 from financedatabase_spark.streaming.snapshots import latest_state_stream, streaming_bars
 from financedatabase_spark.plans.registry import register
 
 _STAGING_ROOT: list[str] = []
+_STAGE_LOCK = threading.Lock()
+_EVENT_COLS = ["event_id", "ts", "user_id", "event_type", "value"]
 
 
 def _stage_dir() -> str:
     """A fresh staging subdirectory under ONE process-scoped root that is
-    rmtree'd at interpreter exit — repeated registry sweeps no longer
-    accumulate staged parquet copies in /tmp (each process cleans up its
-    own root; subdirs stay distinct so concurrent queries in one session
-    never collide)."""
+    rmtree'd at interpreter exit (each process cleans up its own root;
+    subdirs stay distinct so concurrent queries in one session never
+    collide). Callers bound their own directories: see the module
+    docstring."""
     if not _STAGING_ROOT:
         root = tempfile.mkdtemp(prefix="fdb_stream_root_")
         atexit.register(shutil.rmtree, root, ignore_errors=True)
@@ -59,15 +77,61 @@ def _stage_dir() -> str:
     return d
 
 
-def _staged_stream(spark: SparkSession, sf_dir: str, cols: list[str] | None = None):
-    batch = load_table(spark, sf_dir, "events").select(
-        *(cols or ["event_id", "ts", "user_id", "event_type", "value"])
-    )
-    stage = _stage_dir()
-    # One time-sorted file: the replay honors the stateful operators'
+def _write_sorted(df: DataFrame, stage: str, sort_col: str) -> None:
+    # One sorted file: the replay honors the stateful operators'
     # in-event-time-order micro-batch contract.
-    batch.repartition(1).sortWithinPartitions("ts").write.mode("overwrite").parquet(stage)
-    return spark.readStream.schema(batch.schema).parquet(stage)
+    df.repartition(1).sortWithinPartitions(sort_col).write.mode("overwrite").parquet(stage)
+
+
+def _staged_replay(
+    spark: SparkSession, sf_dir: str, table: str, cols: list[str], sort_col: str
+) -> DataFrame:
+    """A stream replaying ``cols`` of source ``table`` from one
+    ``sort_col``-sorted parquet file, staged once per live session and
+    source version (the staged-replay memo, see the module docstring).
+
+    A source that cannot be stat'ed locally is re-staged on every call.
+    A re-stage removes the superseded copy, so a drain still reading it
+    on another thread fails instead of replaying a stale version."""
+    path = os.path.join(sf_dir, f"{table}.parquet")
+    try:
+        st = os.stat(path)
+        version = (st.st_mtime_ns, st.st_size, st.st_ino)
+    except OSError:
+        version = None
+    memo = spark.__dict__.setdefault("_fdspark_stage_memo", {})
+    key = (path, tuple(cols), sort_col)
+    with _STAGE_LOCK:
+        hit = memo.get(key)
+        if (
+            hit is None
+            or version is None
+            or hit[0] != version
+            or not os.path.exists(os.path.join(hit[1], "_SUCCESS"))
+        ):
+            if hit is not None:
+                shutil.rmtree(hit[1], ignore_errors=True)
+            batch = load_table(spark, sf_dir, table).select(*cols)
+            stage = _stage_dir()
+            _write_sorted(batch, stage, sort_col)
+            hit = memo[key] = (version, stage, batch.schema)
+    return spark.readStream.schema(hit[2]).parquet(hit[1])
+
+
+class _StageRelease:
+    """Build-scope handle for a build's stage directories: the next build
+    of the same query calls ``unpersist``, which removes them."""
+
+    def __init__(self, *dirs: str):
+        self.dirs = dirs
+
+    def unpersist(self, blocking: bool = False) -> None:
+        for d in self.dirs:
+            if os.path.isdir(d):
+                shutil.rmtree(d)
+
+
+_DRAIN_TIMEOUT_S = 300
 
 
 def _run(spark: SparkSession, sdf, mode: str) -> DataFrame:
@@ -81,9 +145,9 @@ def _run(spark: SparkSession, sdf, mode: str) -> DataFrame:
     # sf0.01: drain 8.8 s → 2.4 s at 8 partitions, identical output (a
     # single sorted staging file means per-key arrival order is
     # preserved for ANY reducer count). Production sizing is state
-    # volume per executor wave, so the count is env-parameterised
-    # rather than derived from the local core count.
-    parts = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8")
+    # volume per executor wave; `session.stream_state_partitions` caps
+    # the env bound at the task slots.
+    parts = str(stream_state_partitions(spark))
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", parts)
     try:
@@ -94,7 +158,14 @@ def _run(spark: SparkSession, sdf, mode: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
+        if not q.awaitTermination(_DRAIN_TIMEOUT_S):
+            # a truncated sink must not pass for the drained stream
+            q.stop()
+            spark.catalog.dropTempView(name)
+            raise TimeoutError(
+                f"streaming drain {name} exceeded {_DRAIN_TIMEOUT_S}s; "
+                f"refusing to return a truncated sink"
+            )
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     # The memory sink registers its rows as a temp view named after the
@@ -128,7 +199,8 @@ def streaming_bars_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     each bar exactly once when the watermark passes its window end, so
     the final sink is the batch bar agg minus the still-open tail."""
     sdf = streaming_bars(
-        _staged_stream(spark, sf_dir), "1h", key_cols=["event_type"],
+        _staged_replay(spark, sf_dir, "events", _EVENT_COLS, "ts"), "1h",
+        key_cols=["event_type"],
         ts_col="ts", price_col="value", origin_minutes=None,
     )
     out = _run(spark, sdf, "append")
@@ -150,7 +222,8 @@ def streaming_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     endpoints replaced by one continuous query (v2.py:456-524). Complete
     mode emits every group, so the sink equals the batch keep-last."""
     sdf = latest_state_stream(
-        _staged_stream(spark, sf_dir), ["user_id"], "ts", ["event_type", "value"]
+        _staged_replay(spark, sf_dir, "events", _EVENT_COLS, "ts"),
+        ["user_id"], "ts", ["event_type", "value"],
     )
     out = _run(spark, sdf, "complete")
     return out.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
@@ -198,7 +271,7 @@ def streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_streaming.py."""
     from financedatabase_spark.streaming.sessions import sessionize_stream
 
-    stream = _staged_stream(spark, sf_dir, cols=["event_type", "ts", "value"])
+    stream = _staged_replay(spark, sf_dir, "events", ["event_type", "ts", "value"], "ts")
     sdf = sessionize_stream(stream, 120.0, ["event_type"], "ts", "value")
     out = _run(spark, sdf, "append")
     return out.withColumn(
@@ -238,11 +311,13 @@ def history_union_today_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     today_batch = ev2.filter(F.col("ts") > cut - F.expr("INTERVAL 2 HOURS")).drop("_mx")
 
     stage = _stage_dir()
-    today_batch.repartition(1).sortWithinPartitions("ts").write.mode(
-        "overwrite"
-    ).parquet(stage)
-    stream = spark.readStream.schema(today_batch.schema).parquet(stage)
-    drained = _run(spark, dedup_stream(stream, ["event_id"], "ts"), "append")
+    try:
+        _write_sorted(today_batch, stage, "ts")
+        stream = spark.readStream.schema(today_batch.schema).parquet(stage)
+        drained = _run(spark, dedup_stream(stream, ["event_id"], "ts"), "append")
+    finally:
+        # the memory sink holds the drained rows; nothing reads the stage
+        shutil.rmtree(stage, ignore_errors=True)
 
     merged = history_union_today(
         history, drained.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
@@ -302,10 +377,7 @@ def streaming_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     are commutative, so the sink equals the batch GROUP BY exactly."""
     from financedatabase_spark.operators.text import gopher_quality
 
-    batch = load_table(spark, sf_dir, "documents").select("doc_id", "source", "text")
-    stage = _stage_dir()
-    batch.repartition(1).sortWithinPartitions("doc_id").write.mode("overwrite").parquet(stage)
-    stream = spark.readStream.schema(batch.schema).parquet(stage)
+    stream = _staged_replay(spark, sf_dir, "documents", ["doc_id", "source", "text"], "doc_id")
     flags = gopher_quality(stream, keep_cols=["source"])
     agg = flags.groupBy("source", "pass").agg(
         F.count("*").alias("n_docs"), F.sum("n_words").alias("n_words")
@@ -346,10 +418,7 @@ def streaming_cms_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from financedatabase_spark.operators.sketch import portable_hash28
     from financedatabase_spark.operators.text import normalized_text
 
-    batch = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    stage = _stage_dir()
-    batch.repartition(1).sortWithinPartitions("doc_id").write.mode("overwrite").parquet(stage)
-    stream = spark.readStream.schema(batch.schema).parquet(stage)
+    stream = _staged_replay(spark, sf_dir, "documents", ["doc_id", "text"], "doc_id")
 
     toks = stream.select(
         F.explode_outer(F.split(normalized_text("text"), " ")).alias("token")
@@ -445,14 +514,9 @@ def streaming_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from financedatabase_spark.operators.text import gopher_quality
 
-    batch = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text", "lang", "source"
+    stream = _staged_replay(
+        spark, sf_dir, "documents", ["doc_id", "text", "lang", "source"], "doc_id"
     )
-    stage = _stage_dir()
-    batch.repartition(1).sortWithinPartitions("doc_id").write.mode(
-        "overwrite"
-    ).parquet(stage)
-    stream = spark.readStream.schema(batch.schema).parquet(stage)
 
     urls = stream.withColumn(
         "url",
@@ -524,10 +588,7 @@ def streaming_bloom_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     from financedatabase_spark.operators.sketch import bloom_build
     from financedatabase_spark.operators.text import normalized_text
 
-    batch = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    stage = _stage_dir()
-    batch.repartition(1).sortWithinPartitions("doc_id").write.mode("overwrite").parquet(stage)
-    stream = spark.readStream.schema(batch.schema).parquet(stage)
+    stream = _staged_replay(spark, sf_dir, "documents", ["doc_id", "text"], "doc_id")
 
     bench = stream.filter(F.col("doc_id") % 97 == 0).select(
         F.md5(normalized_text("text")).alias("h")
@@ -575,10 +636,7 @@ def streaming_hll_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
     from financedatabase_spark.operators.sketch import hll_registers
     from financedatabase_spark.operators.text import normalized_text
 
-    batch = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
-    stage = _stage_dir()
-    batch.repartition(1).sortWithinPartitions("doc_id").write.mode("overwrite").parquet(stage)
-    stream = spark.readStream.schema(batch.schema).parquet(stage)
+    stream = _staged_replay(spark, sf_dir, "documents", ["doc_id", "lang", "text"], "doc_id")
 
     toks = stream.select(
         "lang", F.explode_outer(F.split(normalized_text("text"), " ")).alias("token")
@@ -694,7 +752,10 @@ def streaming_curation_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source"
     )
-    src = _stage_dir()
+    src, work = _stage_dir(), _stage_dir()
+    # the returned frame reads the admitted snapshot under `work`: both
+    # directories live until the same query is next built
+    release_on_rebuild(spark, _StageRelease(src, work))
     # Distinct, increasing mtimes -> deterministic batch order. Stamped
     # explicitly with utime (FileStreamSource orders by modification
     # time in ms) instead of the former sleep(1.05) per file — 3.15 s of
@@ -746,7 +807,6 @@ def streaming_curation_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         keep = ccnet_tertiles(acc).filter(F.col("bucket") != "tail").select("doc_id")
         return acc.join(keep, "doc_id")
 
-    work = _stage_dir()
     stats = run_admission_with_refresh(
         spark, stream, front, refit, work,
         refresh_every=1, checkpoint=_os.path.join(work, "ckpt"),

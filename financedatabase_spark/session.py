@@ -177,6 +177,18 @@ def scaled_partitions(
     return max(at_least, math.ceil(size / target_bytes), parallel_floor)
 
 
+def stream_state_partitions(spark: SparkSession) -> int:
+    """Shuffle-partition count for a bounded streaming drain (stateful
+    operators pin it into the query's checkpoint at the first batch).
+    Every state partition pays a state-store commit, its state files and,
+    on the local filesystem, a ``chmod`` fork per file per batch, so a
+    count above the task slots only adds a wave of near-empty tasks.
+    ``$SPARK_GRAFT_STREAM_STATE_PARTITIONS`` (default 8) is an upper
+    bound; the count is capped at ``defaultParallelism``."""
+    cap = int(os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8"))
+    return max(1, min(cap, spark.sparkContext.defaultParallelism))
+
+
 def _local_input_bytes(df: DataFrame) -> int:
     """Total on-disk bytes of the frame's input files, when every input is
     a local file we can stat (the bench/test layout); 0 = unknown."""
@@ -239,12 +251,20 @@ def barrier(df: DataFrame, preserve_partitioning: bool = False) -> DataFrame:
         handle = None
     if handle is not None:
         out._fdspark_ckpt_rdd = handle
-        stack = getattr(_BUILD_CTX, "stack", None)
-        if stack:
-            scope_spark, handles = stack[-1]
-            if scope_spark is spark:
-                handles.append(handle)
+        release_on_rebuild(spark, handle)
     return out
+
+
+def release_on_rebuild(spark: SparkSession, handle) -> None:
+    """Hand ``handle`` to the active build scope of ``spark``: the next
+    build of the same registered query calls ``handle.unpersist(False)``.
+    Outside a registered build (or in a scope of another session) this
+    is a no-op."""
+    stack = getattr(_BUILD_CTX, "stack", None)
+    if stack:
+        scope_spark, handles = stack[-1]
+        if scope_spark is spark:
+            handles.append(handle)
 
 
 def release_barrier(df: DataFrame) -> None:
@@ -373,6 +393,23 @@ def get_spark(app_name: str = "financedatabase_spark", cpus: int | None = None) 
     spark-core jar; the directory that holds the package goes on the
     workers' PYTHONPATH, so they import it (and the engine's UDFs) from
     any working directory.
+
+    Streaming checkpoints (offsets, commits, state files) go through
+    Spark's ``FileSystemBasedCheckpointFileManager``. The default
+    FileContext-based manager resolves paths with Hadoop's
+    ``FileUtil.readLink``, which forks a ``readlink`` process per
+    checkpoint file on the local filesystem (176 per
+    ``streaming_latest_state`` build at local[4]). The FileSystem-based manager
+    writes a temp file and renames it, which is atomic on a local
+    filesystem; this factory only builds ``local[N]`` sessions, so that
+    holds for every session it makes. A cluster session (HDFS, object
+    stores) is not built here and keeps its own manager.
+
+    The ``chmod`` forks remain: Hadoop 3.4's
+    ``RawLocalFileSystem.setPermission`` forks ``chmod`` on every file
+    it creates unless libhadoop is loaded, and pyspark's jars ship no
+    libhadoop. No configuration removes them, including the 8-12 per
+    DML statement of ``io_sinks``.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
@@ -387,6 +424,12 @@ def get_spark(app_name: str = "financedatabase_spark", cpus: int | None = None) 
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.python.daemon.module", "financedatabase_spark.pydaemon")
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
+        # local rename is atomic; see the docstring
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
         # Split small files down to ~cores scan partitions: staging tables
         # compress to a few MB, and the default byte-based planner gives
         # such files ONE split, serializing CPU-heavy scan work (regex

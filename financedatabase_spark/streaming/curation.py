@@ -49,6 +49,8 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from financedatabase_spark.session import stream_state_partitions
+
 
 def write_front_epoch(survivors: DataFrame, front: str, epoch_id: int) -> str:
     """Idempotent per-epoch front write. foreachBatch is AT-LEAST-ONCE:
@@ -163,10 +165,11 @@ def run_admission_with_refresh(
     # The per-batch front writes and refits are micro-batch-sized jobs:
     # at the session default (cores) shuffle-partition count they pay
     # dozens of near-empty tasks per aggregation per batch. Scope the
-    # drain to the bounded-replay partition count (same knob as the
-    # memory-sink drains; env-parameterised, results are partition-
-    # invariant — exact aggregates and a deterministic top-k vocab).
-    parts = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8")
+    # drain to the bounded-replay partition count (the same count as the
+    # memory-sink drains, `session.stream_state_partitions`; results are
+    # partition-invariant — exact aggregates and a deterministic top-k
+    # vocab).
+    parts = str(stream_state_partitions(spark))
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", parts)
     try:

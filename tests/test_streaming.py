@@ -1,6 +1,8 @@
 """Structured Streaming operators: file-source streams with
 availableNow triggers; streaming results must equal the batch analog."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -771,3 +773,201 @@ def test_curation_zero_batch_drain(spark, sf_dir, tmp_path):
     assert len(
         set(r.doc_id for r in current_admitted(spark, work).select("doc_id").collect())
     ) == 75
+
+
+def test_run_raises_on_timed_out_drain(spark, sf_dir, monkeypatch):
+    """A drain that does not finish in time is stopped and raises: a
+    truncated memory sink must not pass for the drained stream."""
+    from pyspark.sql.streaming.query import StreamingQuery
+
+    from financedatabase_spark.plans.queries_streaming import streaming_latest_state
+
+    parts = spark.conf.get("spark.sql.shuffle.partitions")
+    monkeypatch.setattr(StreamingQuery, "awaitTermination", lambda self, timeout=None: False)
+    with pytest.raises(TimeoutError, match="truncated sink"):
+        streaming_latest_state(spark, sf_dir)
+    monkeypatch.undo()
+    assert spark.streams.active == []
+    assert not [
+        t for t in spark.catalog.listTables()
+        if t.isTemporary and t.name.startswith("q_")
+    ]
+    assert spark.conf.get("spark.sql.shuffle.partitions") == parts
+
+
+def test_stream_state_partitions_capped_at_task_slots(spark, monkeypatch):
+    from financedatabase_spark.session import stream_state_partitions
+
+    slots = spark.sparkContext.defaultParallelism
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", str(slots + 5))
+    assert stream_state_partitions(spark) == slots
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "1")
+    assert stream_state_partitions(spark) == 1
+
+
+def test_stage_dirs_do_not_accumulate_across_rebuilds(spark, sf_dir):
+    """Rebuilding a registered streaming query leaves a constant number of
+    directories under the staging root: the staged replay of a source is
+    reused, a per-build stage is removed once drained, and a stage the
+    returned frame still reads is removed at the next build."""
+    from financedatabase_spark.plans import queries_streaming as qs
+    from financedatabase_spark.plans.registry import QUERIES
+
+    for name, builds in (
+        ("streaming_latest_state", 5),
+        ("history_union_today", 5),
+        ("streaming_curation_refresh", 3),
+    ):
+        counts = []
+        for _ in range(builds):
+            assert QUERIES[name](spark, sf_dir).count() > 0
+            counts.append(len(os.listdir(qs._STAGING_ROOT[0])))
+        assert len(set(counts)) == 1, (name, counts)
+
+
+def test_rewritten_source_is_restaged(spark, sf_dir, tmp_path):
+    """A rewrite of the source (new mtime and size) makes the next build
+    stage a fresh copy and drop the superseded one; the result matches
+    the oracle over the rewritten file."""
+    import shutil
+
+    import duckdb
+    import pyarrow.parquet as pq
+
+    from financedatabase_spark.plans import queries_streaming as qs
+    from financedatabase_spark.plans.registry import ORACLE_SQL, QUERIES
+    from tests.conftest import assert_frames_match
+
+    src = str(tmp_path / "events.parquet")
+    shutil.copy(os.path.join(sf_dir, "events.parquet"), src)
+    name = "streaming_latest_state"
+
+    def build_matches():
+        con = duckdb.connect()
+        con.execute(f"CREATE VIEW events AS SELECT * FROM '{src}'")
+        want = con.execute(ORACLE_SQL[name]).fetchdf()
+        con.close()
+        assert_frames_match(QUERIES[name](spark, str(tmp_path)).toPandas(), want)
+
+    def stages():
+        return {
+            v[1] for k, v in spark.__dict__["_fdspark_stage_memo"].items()
+            if k[0] == src
+        }
+
+    build_matches()
+    first = stages()
+    build_matches()
+    assert stages() == first  # unchanged source: the staged copy is reused
+
+    events = pq.read_table(src)
+    pq.write_table(events.slice(0, events.num_rows // 2), src)
+    build_matches()
+    second = stages()
+    assert len(second) == 1 and second != first
+    assert not any(os.path.exists(d) for d in first)
+
+    shutil.rmtree(next(iter(second)))  # a vanished staged copy re-stages
+    build_matches()
+    assert stages() != second
+
+
+def test_concurrent_replays_stage_one_copy(spark, sf_dir, tmp_path):
+    """Threads asking for the same staged replay at once share one staged
+    copy: the memo's check-and-stage is atomic."""
+    import shutil
+    import sys
+    import threading
+
+    from financedatabase_spark.plans import queries_streaming as qs
+
+    shutil.copy(os.path.join(sf_dir, "events.parquet"), tmp_path / "events.parquet")
+    os.rmdir(qs._stage_dir())  # the staging root exists before the count
+    before = set(os.listdir(qs._STAGING_ROOT[0]))
+    errors: list[BaseException] = []
+
+    def replay():
+        try:
+            qs._staged_replay(spark, str(tmp_path), "events", ["user_id", "ts"], "ts")
+        except BaseException as e:  # noqa: BLE001 - re-raised by the assert below
+            errors.append(e)
+
+    threads = [threading.Thread(target=replay) for _ in range(8)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert len(set(os.listdir(qs._STAGING_ROOT[0])) - before) == 1
+
+
+def test_streaming_build_spawns_no_readlink(sf_dir, tmp_path):
+    """Checkpoint files go through the FileSystem-based checkpoint manager,
+    so a warm streaming build forks no ``readlink``; ``chmod`` forks (one
+    per created file, see `get_spark`) stay bounded. The JVM finds both
+    tools through PATH, so wrappers first on PATH log every fork."""
+    import shutil
+    import subprocess
+    import sys
+    import textwrap
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    bin_dir, log = tmp_path / "bin", tmp_path / "spawns.log"
+    bin_dir.mkdir()
+    for tool in ("readlink", "chmod"):
+        real = shutil.which(tool)
+        wrapper = bin_dir / tool
+        wrapper.write_text(f'#!/bin/sh\necho {tool} >> "{log}"\nexec {real} "$@"\n')
+        wrapper.chmod(0o755)
+    script = textwrap.dedent(
+        f"""
+        import os, sys
+        sys.path.insert(0, {repo!r})
+        from financedatabase_spark.plans.registry import QUERIES
+        from financedatabase_spark.session import get_spark
+
+        spark = get_spark("spawn-count", cpus=4)
+
+        def spawns():
+            try:
+                with open({str(log)!r}) as fh:
+                    return fh.read().split()
+            except FileNotFoundError:
+                return []
+
+        build = QUERIES["streaming_latest_state"]
+        build(spark, {os.path.abspath(sf_dir)!r}).count()  # warm: stages the replay once
+        before = len(spawns())
+        build(spark, {os.path.abspath(sf_dir)!r}).count()
+        new = spawns()[before:]
+        jvm = spark._jvm
+        mgr = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+            jvm.org.apache.hadoop.fs.Path({str(tmp_path / "ckpt")!r}),
+            spark._jsparkSession.sessionState().newHadoopConf(),
+        )
+        print("MANAGER", mgr.getClass().getName())
+        print("SPAWNS", new.count("readlink"), len(new))
+        spark.stop()
+        """
+    )
+    env = dict(os.environ, PATH=f"{bin_dir}{os.pathsep}{os.environ['PATH']}")
+    env.pop("SPARK_GRAFT_STREAM_STATE_PARTITIONS", None)
+    proc = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    out = dict(
+        line.split(" ", 1) for line in proc.stdout.splitlines()
+        if line.startswith(("MANAGER", "SPAWNS"))
+    )
+    assert out["MANAGER"].endswith(".FileSystemBasedCheckpointFileManager")
+    readlinks, total = map(int, out["SPAWNS"].split())
+    assert readlinks == 0
+    assert total <= 80, total
