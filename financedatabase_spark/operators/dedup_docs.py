@@ -7,10 +7,12 @@ Four tiers, each the standard large-corpus technique:
 - **n-gram Jaccard (exact)**: shingle-set similarity via explode +
   equi-join + group count. Quadratic in the worst case — the CORRECTNESS
   baseline the sketch methods are verified against, not the scale path.
-- **MinHash + LSH**: k min-wise hashes per doc (min over md5(seed‖shingle)
-  — md5 so the SQL oracle reproduces the signature exactly), banded into
-  b groups; docs sharing a band key become candidates (equi-join on the
-  band key — linear-ish), then candidates are verified with exact Jaccard.
+- **MinHash + LSH**: each shingle is hashed ONCE (the first 28 bits of
+  its md5 — md5 so the SQL oracle reproduces the value exactly); the k
+  min-wise hashes per doc are the minima of the integer permutations
+  ``(a_i·v + b_i) mod P`` over those values, banded into b groups; docs
+  sharing a band key become candidates (equi-join on the band key —
+  linear-ish), then candidates are verified with exact Jaccard.
   This is the 100 TB path: no all-pairs comparison ever materializes.
 - **SimHash**: 32-bit majority-of-token-hash-bits signature; near-dups =
   pairs within Hamming distance d, found by banding the 32 bits into 4
@@ -24,7 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from financedatabase_spark.operators.text import doc_hash, normalized_text, word_shingles
+from financedatabase_spark.operators.text import doc_hash, normalized_text
 
 #: Band buckets larger than this pair docs against the bucket's min-doc_id
 #: representative (star) instead of all-pairs. A hot band key — typically
@@ -96,8 +98,6 @@ def _capped_band_pairs(
         *[F.col(f"a.{src}").alias(f"{dst}1") for src, dst in payload.items()],
         *[F.col(f"b.{src}").alias(f"{dst}2") for src, dst in payload.items()],
     )
-
-HEX = "0123456789abcdef"
 
 
 def _spread(df: DataFrame) -> DataFrame:
@@ -192,103 +192,6 @@ def jaccard_pairs(
     return out.filter(F.col("jaccard") >= threshold)
 
 
-def minhash_signatures(
-    shingles: DataFrame, num_hashes: int = 16
-) -> DataFrame:
-    """MinHash signature per doc from the exploded shingle table:
-    h_i = min(md5(i ‖ ':' ‖ shingle)).
-
-    Lexicographic min over a cryptographic hash is a valid min-wise family
-    and — unlike murmur/xxhash — is bit-identical in every engine, so the
-    oracle can recompute signatures. One shuffle on doc_id."""
-    aggs = [
-        F.min(F.md5(F.concat(F.lit(f"{i}:"), F.col("shingle")))).alias(f"h{i}")
-        for i in range(num_hashes)
-    ]
-    return shingles.groupBy("doc_id").agg(*aggs)
-
-
-def minhash_signatures_arrays(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k_shingle: int = 3,
-    num_hashes: int = 16,
-) -> DataFrame:
-    """MinHash signatures computed per-ROW from the shingle array
-    (`array_min` over a transformed array) — same values as
-    `minhash_signatures`, but zero shuffles: the whole signature stage is
-    map-side. Docs too short for any shingle get null signatures and are
-    verified away downstream."""
-    # materialize the shingle array ONCE (staged: one split per row) — 16
-    # per-column transforms over a shared column; inlining word_shingles()
-    # into each h_i would re-run the normalize+split 16× per row, and the
-    # one-expression form re-splits per gram on top of that
-    base = _shingle_frame(df, text_col, id_col, k_shingle, "_sh")
-    cols = [
-        F.array_min(
-            F.transform(F.col("_sh"), lambda s, i=i: F.md5(F.concat(F.lit(f"{i}:"), s)))
-        ).alias(f"h{i}")
-        for i in range(num_hashes)
-    ]
-    return base.select("doc_id", *cols)
-
-
-def minhash_band_candidates(
-    signatures: DataFrame, num_hashes: int = 16, bands: int = 4
-) -> DataFrame:
-    """LSH banding: docs sharing any band key become candidate pairs.
-
-    The band table is (docs × bands) rows; the self-join keys on the band
-    hash, so only genuine collisions pair up — never all-pairs."""
-    rows_per_band = num_hashes // bands
-    band_structs = []
-    for b in range(bands):
-        cols = [F.col(f"h{b * rows_per_band + r}") for r in range(rows_per_band)]
-        band_structs.append(
-            F.struct(F.lit(b).alias("band"), F.md5(F.concat_ws("|", *cols)).alias("key"))
-        )
-    banded = signatures.select(
-        "doc_id", F.explode(F.array(*band_structs)).alias("bk")
-    ).select("doc_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    a, b2 = banded.alias("a"), banded.alias("b")
-    return (
-        a.join(
-            b2,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc1"), F.col("b.doc_id").alias("doc2"))
-        .distinct()
-    )
-
-
-def jaccard_verify_pairs(
-    df: DataFrame,
-    candidates: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k_shingle: int = 3,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """Exact Jaccard for an explicit candidate-pair list WITHOUT the
-    shingle-equality join: each side's shingle set rides along as an array
-    and the intersection is `array_intersect` per pair. Cost is
-    O(pairs × set-size) — immune to hot-shingle join explosion (a tiny
-    vocabulary makes the equality join quadratic; arrays don't care)."""
-    sets_ = _shingle_frame(df, text_col, id_col, k_shingle, "sh")
-    a = sets_.select(F.col("doc_id").alias("doc1"), F.col("sh").alias("sh1"))
-    b = sets_.select(F.col("doc_id").alias("doc2"), F.col("sh").alias("sh2"))
-    paired = candidates.select("doc1", "doc2").distinct().join(a, "doc1").join(b, "doc2")
-    inter = F.size(F.array_intersect("sh1", "sh2"))
-    return paired.select(
-        "doc1",
-        "doc2",
-        (inter / (F.size("sh1") + F.size("sh2") - inter)).alias("jaccard"),
-    ).filter(F.col("jaccard") >= threshold)
-
-
 def minhash_lsh_dedup(
     df: DataFrame,
     text_col: str = "text",
@@ -360,11 +263,6 @@ def minhash_lsh_dedup(
     )
 
 
-def _hex_nibble(h: F.Column, pos: int) -> F.Column:
-    """0-15 value of hex char at 1-based ``pos`` (engine-portable)."""
-    return F.position(F.substring(h, pos, 1), F.lit(HEX)) - 1
-
-
 #: Mersenne prime 2^31-1 — universe for the one-hash MinHash permutations.
 MINHASH_P = 2147483647
 
@@ -374,22 +272,6 @@ def _minhash_coeffs(i: int) -> tuple[int, int]:
     multiplicative constants; any fixed pairwise-independent-ish family
     works — the oracle recomputes the same values)."""
     return (2654435761 * (i + 1)) % MINHASH_P | 1, (40503 * (i + 7)) % MINHASH_P
-
-
-def _hex28(h: F.Column) -> F.Column:
-    """28-bit int from the first 7 hex chars of an md5 string.
-
-    Spark-side uses the native `conv` (single codegen'd call); the DuckDB
-    oracle reproduces the same VALUE with per-nibble strpos math — the
-    contract is value equality, not implementation equality."""
-    return F.conv(F.substring(h, 1, 7), 16, 10).cast("long")
-
-
-def token_hash32(token: F.Column, hex_chars: int = 8) -> F.Column:
-    """Integer from the first ``hex_chars`` hex chars of md5(token)
-    (8 chars → 32 bits; 12 → 48 bits, still long-safe). Native `conv`
-    on the Spark side; the oracle's nibble math yields the same value."""
-    return F.conv(F.substring(F.md5(token), 1, hex_chars), 16, 10).cast("long")
 
 
 def simhash_signatures(

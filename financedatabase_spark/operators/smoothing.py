@@ -35,6 +35,29 @@ def _sorted_vals(order_col: str, value_col: str):
     return F.transform(arr, lambda s: s.getField(value_col).cast("double"))
 
 
+#: ``_vals`` after its head: the series a first chunk (or a whole series)
+#: folds once its first value has seeded the level.
+_TAIL = "slice(_vals, 2, size(_vals) - 1)"
+
+
+def _fold_expr(a: float, vals: str, init: str) -> str:
+    """The EWMA left fold over ``vals`` starting from level ``init`` —
+    the exact operand sequence of the whole-series recursion."""
+    return f"aggregate({vals}, {init}, (acc, x) -> {a} * x + {1.0 - a} * acc)"
+
+
+def _scan_expr(a: float, vals: str, level: str, outs: str) -> str:
+    """The scanl form of `_fold_expr`: fold to struct(level, outs),
+    appending every new level to ``outs``, and return the outputs."""
+    return (
+        f"aggregate({vals}, "
+        f"struct({level} as level, {outs} as outs), "
+        f"(acc, x) -> struct({a} * x + {1.0 - a} * acc.level as level, "
+        f"array_append(acc.outs, {a} * x + {1.0 - a} * acc.level) as outs), "
+        f"acc -> acc.outs)"
+    )
+
+
 def ewma_last(
     df: DataFrame,
     alpha: float,
@@ -51,10 +74,7 @@ def ewma_last(
         vals.alias("_vals"), F.count("*").cast("long").alias("n")
     ).select(
         *key_cols,
-        F.expr(
-            f"aggregate(slice(_vals, 2, size(_vals) - 1), _vals[0], "
-            f"(acc, x) -> {a} * x + {1.0 - a} * acc)"
-        ).alias("ewma_value"),
+        F.expr(_fold_expr(a, _TAIL, "_vals[0]")).alias("ewma_value"),
         "n",
     )
 
@@ -74,13 +94,7 @@ def ewma_series(
     arr = F.array_sort(F.collect_list(F.struct(F.col(order_col), F.col(value_col))))
     grouped = df.groupBy(*key_cols).agg(arr.alias("_pairs"))
     # scanl: fold to struct(level, outs); emit outs zipped back to order keys
-    scan = (
-        f"aggregate(slice(_vals, 2, size(_vals) - 1), "
-        f"struct(_vals[0] as level, array(_vals[0]) as outs), "
-        f"(acc, x) -> struct({a} * x + {1.0 - a} * acc.level as level, "
-        f"array_append(acc.outs, {a} * x + {1.0 - a} * acc.level) as outs), "
-        f"acc -> acc.outs)"
-    )
+    scan = _scan_expr(a, _TAIL, "_vals[0]", "array(_vals[0])")
     exploded = (
         grouped.withColumn(
             "_vals", F.transform(F.col("_pairs"), lambda s: s.getField(value_col).cast("double"))
@@ -99,10 +113,16 @@ def ewma_series(
     )
 
 
-def _fold_expr(a: float, vals: str, init: str) -> str:
-    """The EWMA left fold over ``vals`` starting from level ``init`` —
-    the exact operand sequence of the whole-series recursion."""
-    return f"aggregate({vals}, double({init}), (acc, x) -> {a} * x + {1.0 - a} * acc)"
+def _chunk_col(chunk_expr) -> F.Column:
+    """The chunk-id Column of the chunked variants (a column name is
+    accepted); a missing ``chunk_expr`` is an error, not a default."""
+    if chunk_expr is None:
+        raise ValueError(
+            "chunk_expr is required: pass a Column (or column name) that buckets "
+            "rows into spans monotone in the order column, e.g. "
+            "F.date_trunc('month', ts) or F.floor(F.col('seq') / 100000)"
+        )
+    return F.col(chunk_expr) if isinstance(chunk_expr, str) else chunk_expr
 
 
 def _chunk_frames(
@@ -122,12 +142,6 @@ def _chunk_frames(
     NULLS FIRST) — but chunk ids should be non-null and monotone in the
     order column; a null chunk has no defined position in the
     recursion."""
-    if chunk_expr is None:
-        raise ValueError(
-            "chunk_expr is required: pass a Column (or column name) that buckets "
-            "rows into spans monotone in the order column, e.g. "
-            "F.date_trunc('month', ts) or F.floor(F.col('seq') / 100000)"
-        )
     agg = [
         _sorted_vals(order_col, value_col).alias("_vals"),
         F.count("*").cast("long").alias("_n"),
@@ -136,7 +150,7 @@ def _chunk_frames(
         arr = F.array_sort(F.collect_list(F.struct(F.col(order_col), F.col(value_col))))
         agg.append(F.transform(arr, lambda s: s.getField(order_col)).alias("_ords"))
     chunks = (
-        df.withColumn("_chunk", chunk_expr if not isinstance(chunk_expr, str) else F.col(chunk_expr))
+        df.withColumn("_chunk", _chunk_col(chunk_expr))
         .groupBy(*key_cols, "_chunk")
         .agg(*agg)
     )
@@ -180,11 +194,8 @@ def ewma_last_chunked(
     """
     a = float(alpha)
     chunks, epochs = _chunk_frames(df, key_cols, order_col, value_col, chunk_expr)
-    first = (
-        f"aggregate(slice(_vals, 2, size(_vals) - 1), _vals[0], "
-        f"(acc, x) -> {a} * x + {1.0 - a} * acc)"
-    )
-    cont = _fold_expr(a, "_vals", "ewma_value")
+    first = _fold_expr(a, _TAIL, "_vals[0]")
+    cont = _fold_expr(a, "_vals", "double(ewma_value)")
     levels: DataFrame | None = None
     _prev_lv = None
     for i, ep in enumerate(epochs):
@@ -240,11 +251,8 @@ def ewma_series_chunked(
     chunks, epochs = _chunk_frames(
         df, key_cols, order_col, value_col, chunk_expr, keep_order=True
     )
-    first = (
-        f"aggregate(slice(_vals, 2, size(_vals) - 1), _vals[0], "
-        f"(acc, x) -> {a} * x + {1.0 - a} * acc)"
-    )
-    cont = _fold_expr(a, "_vals", "ewma_value")
+    first = _fold_expr(a, _TAIL, "_vals[0]")
+    cont = _fold_expr(a, "_vals", "double(ewma_value)")
     chunk_t = chunks.schema["_chunk"].dataType
     levels: DataFrame | None = None
     incoming: list[DataFrame] = []
@@ -295,20 +303,10 @@ def ewma_series_chunked(
     cond = F.col("_chunk").eqNullSafe(F.col("_li_chunk"))
     for k in key_cols:
         cond = cond & F.col(k).eqNullSafe(F.col(f"_li_{k}"))
-    seeded_scan = (
-        f"aggregate(_vals, "
-        f"struct(double(_level_in) as level, cast(array() as array<double>) as outs), "
-        f"(acc, x) -> struct({a} * x + {1.0 - a} * acc.level as level, "
-        f"array_append(acc.outs, {a} * x + {1.0 - a} * acc.level) as outs), "
-        f"acc -> acc.outs)"
+    seeded_scan = _scan_expr(
+        a, "_vals", "double(_level_in)", "cast(array() as array<double>)"
     )
-    head_scan = (
-        f"aggregate(slice(_vals, 2, size(_vals) - 1), "
-        f"struct(_vals[0] as level, array(_vals[0]) as outs), "
-        f"(acc, x) -> struct({a} * x + {1.0 - a} * acc.level as level, "
-        f"array_append(acc.outs, {a} * x + {1.0 - a} * acc.level) as outs), "
-        f"acc -> acc.outs)"
-    )
+    head_scan = _scan_expr(a, _TAIL, "_vals[0]", "array(_vals[0])")
     exploded = (
         chunks.join(li, cond, "inner")
         .withColumn(
@@ -327,6 +325,68 @@ def ewma_series_chunked(
         F.col("_z._ords").alias(order_col),
         F.col("_z._ewma").alias("ewma_value"),
     )
+
+
+def _tick_sign(key_cols: list[str], order_col: str, price_col: str):
+    """The tick rule over the per-key order: the sign of the price
+    change as a long, a zero change carrying the previous nonzero sign
+    (0 until the first one). Returns the key window, its running frame
+    and the sign Column, so the prefix sums share one partitioning."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy(*key_cols).orderBy(order_col)
+    wcum = w.rowsBetween(Window.unboundedPreceding, 0)
+    sgn_raw = F.signum(F.col(price_col) - F.lag(price_col).over(w))
+    carried = F.last(F.when(sgn_raw != 0, sgn_raw), ignorenulls=True).over(wcum)
+    return w, wcum, F.coalesce(carried, F.lit(0.0)).cast("long")
+
+
+def _imbalance_rows(
+    df: DataFrame, key_cols: list[str], order_col: str, price_col: str, size_col: str
+) -> DataFrame:
+    """(key..., _row) for the imbalance-bar folds: _row is struct(_i tick
+    number, _ord, _cum running signed size)."""
+    w, wcum, sgn = _tick_sign(key_cols, order_col, price_col)
+    return (
+        df.withColumn("_sv", sgn * F.col(size_col))
+        .withColumn("_i", F.row_number().over(w))
+        .withColumn("_cum", F.sum("_sv").over(wcum))
+        .select(*key_cols, F.struct("_i", F.col(order_col).alias("_ord"), "_cum").alias("_row"))
+    )
+
+
+def _run_rows(
+    df: DataFrame, key_cols: list[str], order_col: str, price_col: str, size_col: str
+) -> DataFrame:
+    """(key..., _row) for the run-bar folds: _row is struct(_i tick
+    number, _ord, _cb running buy size, _cs running sell size)."""
+    w, wcum, sgn = _tick_sign(key_cols, order_col, price_col)
+    return (
+        df.withColumn("_b", F.when(sgn > 0, F.col(size_col)).otherwise(F.lit(0)).cast("long"))
+        .withColumn("_s", F.when(sgn < 0, F.col(size_col)).otherwise(F.lit(0)).cast("long"))
+        .withColumn("_i", F.row_number().over(w))
+        .withColumn("_cb", F.sum("_b").over(wcum))
+        .withColumn("_cs", F.sum("_s").over(wcum))
+        .select(
+            *key_cols,
+            F.struct("_i", F.col(order_col).alias("_ord"), "_cb", "_cs").alias("_row"),
+        )
+    )
+
+
+def _fold_bars(pref: DataFrame, key_cols: list[str], fold: str):
+    """Run the boundary ``fold`` over each key's sorted ``_arr`` of
+    ``_row`` structs: one (key..., _b bar number, _e closing row) per
+    bar, plus ``prev(c)`` — the previous bar's ``c``, 0 for the first."""
+    from pyspark.sql import Window
+
+    ends = (
+        pref.groupBy(*key_cols)
+        .agg(F.array_sort(F.collect_list("_row")).alias("_arr"))
+        .select(*key_cols, F.posexplode(F.expr(fold)).alias("_b", "_e"))
+    )
+    wb = Window.partitionBy(*key_cols).orderBy("_b")
+    return ends, lambda c: F.coalesce(F.lag(c).over(wb), F.lit(0))
 
 
 def tick_imbalance_bars(
@@ -358,20 +418,7 @@ def tick_imbalance_bars(
 
     Output: (key..., bar_idx, end_<order_col>, n_ticks, imbalance).
     """
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(*key_cols).orderBy(order_col)
-    wcum = w.rowsBetween(Window.unboundedPreceding, 0)
-    sgn_raw = F.signum(F.col(price_col) - F.lag(price_col).over(w))
-    carried = F.last(
-        F.when(sgn_raw != 0, sgn_raw), ignorenulls=True
-    ).over(wcum)
-    pref = (
-        df.withColumn("_sv", F.coalesce(carried, F.lit(0.0)).cast("long") * F.col(size_col))
-        .withColumn("_i", F.row_number().over(w))
-        .withColumn("_cum", F.sum("_sv").over(wcum))
-        .select(*key_cols, F.struct("_i", F.col(order_col).alias("_ord"), "_cum").alias("_row"))
-    )
+    pref = _imbalance_rows(df, key_cols, order_col, price_col, size_col)
     t = int(threshold)
     fold = (
         "aggregate(_arr, "
@@ -380,18 +427,13 @@ def tick_imbalance_bars(
         "named_struct('bcum', x._cum, 'ends', array_append(acc.ends, x)), acc), "
         "acc -> acc.ends)"
     )
-    ends = (
-        pref.groupBy(*key_cols)
-        .agg(F.array_sort(F.collect_list("_row")).alias("_arr"))
-        .select(*key_cols, F.posexplode(F.expr(fold)).alias("_b", "_e"))
-    )
-    wb = Window.partitionBy(*key_cols).orderBy("_b")
+    ends, prev = _fold_bars(pref, key_cols, fold)
     return ends.select(
         *key_cols,
         F.col("_b").cast("long").alias("bar_idx"),
         F.col("_e._ord").alias(f"end_{order_col}"),
-        (F.col("_e._i") - F.coalesce(F.lag("_e._i").over(wb), F.lit(0))).cast("long").alias("n_ticks"),
-        (F.col("_e._cum") - F.coalesce(F.lag("_e._cum").over(wb), F.lit(0))).cast("long").alias("imbalance"),
+        (F.col("_e._i") - prev("_e._i")).cast("long").alias("n_ticks"),
+        (F.col("_e._cum") - prev("_e._cum")).cast("long").alias("imbalance"),
     )
 
 
@@ -423,19 +465,8 @@ def tick_imbalance_bars_adaptive(
     oracle: the doubly-recursive boundary condition has no tractable
     recursive-CTE form.
     """
-    from pyspark.sql import Window
-
     a = float(alpha)
-    w = Window.partitionBy(*key_cols).orderBy(order_col)
-    wcum = w.rowsBetween(Window.unboundedPreceding, 0)
-    sgn_raw = F.signum(F.col(price_col) - F.lag(price_col).over(w))
-    carried = F.last(F.when(sgn_raw != 0, sgn_raw), ignorenulls=True).over(wcum)
-    pref = (
-        df.withColumn("_sv", F.coalesce(carried, F.lit(0.0)).cast("long") * F.col(size_col))
-        .withColumn("_i", F.row_number().over(w))
-        .withColumn("_cum", F.sum("_sv").over(wcum))
-        .select(*key_cols, F.struct("_i", F.col(order_col).alias("_ord"), "_cum").alias("_row"))
-    )
+    pref = _imbalance_rows(df, key_cols, order_col, price_col, size_col)
     t0 = float(initial_threshold)
     ord_t = dict(df.dtypes)[order_col]
     fold = (
@@ -452,13 +483,7 @@ def tick_imbalance_bars_adaptive(
         "acc), "
         "acc -> acc.ends)"
     )
-    ends = (
-        pref.groupBy(*key_cols)
-        .agg(F.array_sort(F.collect_list("_row")).alias("_arr"))
-        .select(*key_cols, F.posexplode(F.expr(fold)).alias("_b", "_e"))
-    )
-    wb = Window.partitionBy(*key_cols).orderBy("_b")
-    prev = lambda c: F.coalesce(F.lag(c).over(wb), F.lit(0))  # noqa: E731
+    ends, prev = _fold_bars(pref, key_cols, fold)
     return ends.select(
         *key_cols,
         F.col("_b").cast("long").alias("bar_idx"),
@@ -484,12 +509,6 @@ def _chunked_tick_frames(
     list. Null-epoch semantics as in `_chunk_frames`."""
     from pyspark.sql import Window
 
-    if chunk_expr is None:
-        raise ValueError(
-            "chunk_expr is required: pass a Column (or column name) that buckets "
-            "rows into spans monotone in the order column, e.g. "
-            "F.date_trunc('month', ts) or F.floor(F.col('seq') / 100000)"
-        )
     rows_arr = F.array_sort(
         F.collect_list(
             F.struct(
@@ -500,7 +519,7 @@ def _chunked_tick_frames(
         )
     )
     chunks = (
-        df.withColumn("_chunk", chunk_expr if not isinstance(chunk_expr, str) else F.col(chunk_expr))
+        df.withColumn("_chunk", _chunk_col(chunk_expr))
         .groupBy(*key_cols, "_chunk")
         .agg(rows_arr.alias("_rows"), F.count("*").cast("long").alias("_n"))
     )
@@ -515,6 +534,15 @@ def _chunked_tick_frames(
     )
     epochs = [r[0] for r in chunks.select("_chunk").distinct().orderBy("_chunk").collect()]
     return chunks, epochs
+
+
+#: The tick rule as one fold step of the chunked bar walks: the sign of
+#: the change from the carried last price ``acc.pp``, a zero change (or
+#: the first tick) keeping the carried sign ``acc.sg``.
+_STEP_SIGN = (
+    "if(acc.pp is not null and bigint(sign(x.price - acc.pp)) != 0, "
+    "bigint(sign(x.price - acc.pp)), acc.sg)"
+)
 
 
 def _chunked_state_walk(
@@ -611,12 +639,11 @@ def tick_imbalance_bars_chunked(
         df, key_cols, order_col, price_col, size_col, chunk_expr
     )
     end_t = f"struct<pos:bigint,ord:{ord_t},cum:bigint>"
-    sg = "if(acc.pp is not null and bigint(sign(x.price - acc.pp)) != 0, bigint(sign(x.price - acc.pp)), acc.sg)"
-    cum = f"acc.cum + ({sg}) * x.size"
+    cum = f"acc.cum + ({_STEP_SIGN}) * x.size"
     closed = f"abs(({cum}) - acc.bcum) >= {t}"
     step = (
         f"(acc, x) -> named_struct("
-        f"'pp', x.price, 'sg', {sg}, 'cum', {cum}, "
+        f"'pp', x.price, 'sg', {_STEP_SIGN}, 'cum', {cum}, "
         f"'bcum', if({closed}, {cum}, acc.bcum), 'pos', acc.pos + 1L, "
         f"'ends', if({closed}, array_append(acc.ends, "
         f"named_struct('pos', acc.pos + 1L, 'ord', x.ord, 'cum', {cum})), acc.ends))"
@@ -669,13 +696,12 @@ def tick_run_bars_chunked(
         df, key_cols, order_col, price_col, size_col, chunk_expr
     )
     end_t = f"struct<pos:bigint,ord:{ord_t},cb:bigint,cs:bigint>"
-    sg = "if(acc.pp is not null and bigint(sign(x.price - acc.pp)) != 0, bigint(sign(x.price - acc.pp)), acc.sg)"
-    cb = f"acc.cb + if(({sg}) > 0, x.size, 0L)"
-    cs = f"acc.cs + if(({sg}) < 0, x.size, 0L)"
+    cb = f"acc.cb + if(({_STEP_SIGN}) > 0, x.size, 0L)"
+    cs = f"acc.cs + if(({_STEP_SIGN}) < 0, x.size, 0L)"
     closed = f"greatest(({cb}) - acc.bb, ({cs}) - acc.bs) >= {t}"
     step = (
         f"(acc, x) -> named_struct("
-        f"'pp', x.price, 'sg', {sg}, 'cb', {cb}, 'cs', {cs}, "
+        f"'pp', x.price, 'sg', {_STEP_SIGN}, 'cb', {cb}, 'cs', {cs}, "
         f"'bb', if({closed}, {cb}, acc.bb), 'bs', if({closed}, {cs}, acc.bs), "
         f"'pos', acc.pos + 1L, "
         f"'ends', if({closed}, array_append(acc.ends, "
@@ -728,24 +754,7 @@ def tick_run_bars(
     at each close) is the per-key higher-order fold. Output:
     (key..., bar_idx, end_<order_col>, n_ticks, buy_size, sell_size).
     """
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(*key_cols).orderBy(order_col)
-    wcum = w.rowsBetween(Window.unboundedPreceding, 0)
-    sgn_raw = F.signum(F.col(price_col) - F.lag(price_col).over(w))
-    carried = F.last(F.when(sgn_raw != 0, sgn_raw), ignorenulls=True).over(wcum)
-    sgn = F.coalesce(carried, F.lit(0.0)).cast("long")
-    pref = (
-        df.withColumn("_b", F.when(sgn > 0, F.col(size_col)).otherwise(F.lit(0)).cast("long"))
-        .withColumn("_s", F.when(sgn < 0, F.col(size_col)).otherwise(F.lit(0)).cast("long"))
-        .withColumn("_i", F.row_number().over(w))
-        .withColumn("_cb", F.sum("_b").over(wcum))
-        .withColumn("_cs", F.sum("_s").over(wcum))
-        .select(
-            *key_cols,
-            F.struct("_i", F.col(order_col).alias("_ord"), "_cb", "_cs").alias("_row"),
-        )
-    )
+    pref = _run_rows(df, key_cols, order_col, price_col, size_col)
     t = int(threshold)
     fold = (
         "aggregate(_arr, "
@@ -754,13 +763,7 @@ def tick_run_bars(
         "named_struct('bb', x._cb, 'bs', x._cs, 'ends', array_append(acc.ends, x)), acc), "
         "acc -> acc.ends)"
     )
-    ends = (
-        pref.groupBy(*key_cols)
-        .agg(F.array_sort(F.collect_list("_row")).alias("_arr"))
-        .select(*key_cols, F.posexplode(F.expr(fold)).alias("_b", "_e"))
-    )
-    wb = Window.partitionBy(*key_cols).orderBy("_b")
-    prev = lambda c: F.coalesce(F.lag(c).over(wb), F.lit(0))  # noqa: E731
+    ends, prev = _fold_bars(pref, key_cols, fold)
     return ends.select(
         *key_cols,
         F.col("_b").cast("long").alias("bar_idx"),
@@ -799,25 +802,8 @@ def tick_run_bars_adaptive(
     like the adaptive imbalance bars, the recursion has no tractable
     recursive-CTE form.
     """
-    from pyspark.sql import Window
-
     a = float(alpha)
-    w = Window.partitionBy(*key_cols).orderBy(order_col)
-    wcum = w.rowsBetween(Window.unboundedPreceding, 0)
-    sgn_raw = F.signum(F.col(price_col) - F.lag(price_col).over(w))
-    carried = F.last(F.when(sgn_raw != 0, sgn_raw), ignorenulls=True).over(wcum)
-    sgn = F.coalesce(carried, F.lit(0.0)).cast("long")
-    pref = (
-        df.withColumn("_b", F.when(sgn > 0, F.col(size_col)).otherwise(F.lit(0)).cast("long"))
-        .withColumn("_s", F.when(sgn < 0, F.col(size_col)).otherwise(F.lit(0)).cast("long"))
-        .withColumn("_i", F.row_number().over(w))
-        .withColumn("_cb", F.sum("_b").over(wcum))
-        .withColumn("_cs", F.sum("_s").over(wcum))
-        .select(
-            *key_cols,
-            F.struct("_i", F.col(order_col).alias("_ord"), "_cb", "_cs").alias("_row"),
-        )
-    )
+    pref = _run_rows(df, key_cols, order_col, price_col, size_col)
     t0 = float(initial_threshold)
     ord_t = dict(df.dtypes)[order_col]
     run = "double(greatest(x._cb - acc.bb, x._cs - acc.bs))"
@@ -835,13 +821,7 @@ def tick_run_bars_adaptive(
         "acc), "
         "acc -> acc.ends)"
     )
-    ends = (
-        pref.groupBy(*key_cols)
-        .agg(F.array_sort(F.collect_list("_row")).alias("_arr"))
-        .select(*key_cols, F.posexplode(F.expr(fold)).alias("_b", "_e"))
-    )
-    wb = Window.partitionBy(*key_cols).orderBy("_b")
-    prev = lambda c: F.coalesce(F.lag(c).over(wb), F.lit(0))  # noqa: E731
+    ends, prev = _fold_bars(pref, key_cols, fold)
     return ends.select(
         *key_cols,
         F.col("_b").cast("long").alias("bar_idx"),

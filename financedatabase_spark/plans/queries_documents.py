@@ -8,7 +8,9 @@ bit math uses div/mod; regex classes are the RE2∩Java common subset.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from financedatabase_spark.operators import dedup_docs as dd
@@ -667,6 +669,36 @@ def multimodal_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _media_features(
+    spark: SparkSession, sf_dir: str, synth: Callable[[int], bytes], media_type: str
+) -> DataFrame:
+    """`decode_features` rows (doc_id, media_type, n_bytes, feature) of
+    one synthesized ``media_type`` payload per document,
+    ``synth(doc_id)``, decoded per row by `dispatch_decode`. Each media
+    query selects its own output columns from it.
+
+    Scale shape: scan → mapInPandas synth → mapInPandas decode →
+    posexplode; one id-only shuffle (spread_ids) before synth so decode
+    parallelizes — payloads themselves never shuffle."""
+    import pandas as _pd
+
+    docs = spread_ids(load_table(spark, sf_dir, "documents").select("doc_id"))
+
+    # the MapInPandas node of every media plan prints this name
+    def gen(batches):
+        for pdf in batches:
+            yield _pd.DataFrame(
+                {
+                    "doc_id": pdf["doc_id"],
+                    "payload": pdf["doc_id"].map(lambda i: synth(int(i))),
+                    "media_type": media_type,
+                }
+            )
+
+    payloads = docs.mapInPandas(gen, "doc_id long, payload binary, media_type string")
+    return decode_features(payloads, decode_fn=dispatch_decode, pass_media_type=True)
+
+
 @register(
     "multimodal_audio_features",
     oracle="""
@@ -727,27 +759,8 @@ def multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     frames at the declared width, and emit 8 windowed |amplitude| sums.
     The oracle recomputes the features from doc_id by the per-variant
     formula — and checks the container round-trip via n_bytes = header
-    + frame bytes (2n / 4n / n / 3n / 4n / 4n / n by variant).
-
-    Scale shape: scan → mapInPandas synth → mapInPandas decode →
-    posexplode; one id-only shuffle (spread_ids) before synth so decode
-    parallelizes — payloads themselves never shuffle."""
-    import pandas as _pd
-
-    docs = spread_ids(load_table(spark, sf_dir, "documents").select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": pdf["doc_id"].map(lambda i: synth_wav(int(i))),
-                    "media_type": "audio/wav",
-                }
-            )
-
-    wavs = docs.mapInPandas(gen, "doc_id long, payload binary, media_type string")
-    feats = decode_features(wavs, decode_fn=dispatch_decode, pass_media_type=True)
+    + frame bytes (2n / 4n / n / 3n / 4n / 4n / n by variant)."""
+    feats = _media_features(spark, sf_dir, synth_wav, "audio/wav")
     return feats.select(
         "doc_id", "n_bytes", F.posexplode("feature").alias("win", "abs_sum")
     )
@@ -824,33 +837,15 @@ def multimodal_video_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     variants from doc_id by integer formula (the MJPEG fixtures' u=4
     ripple sums to zero per block row, leaving the DC base values) — and
     checks both container round-trips via n_bytes: 224 + 776/frame for
-    DIB, 224 + 520/frame for MJPEG (frames padded to MJPEG_FRAME_CAP).
-
-    Scale shape: scan → mapInPandas synth → mapInPandas decode →
-    posexplode; one id-only shuffle (spread_ids) before synth so decode
-    parallelizes — payloads themselves never shuffle."""
-    import pandas as _pd
-
+    DIB, 224 + 520/frame for MJPEG (frames padded to MJPEG_FRAME_CAP)."""
     from financedatabase_spark.operators.multimodal import synth_avi_mjpeg
 
-    docs = spread_ids(load_table(spark, sf_dir, "documents").select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": pdf["doc_id"].map(
-                        lambda i: synth_avi(int(i))
-                        if int(i) % 2 == 0
-                        else synth_avi_mjpeg(int(i))
-                    ),
-                    "media_type": "video/avi",
-                }
-            )
-
-    avis = docs.mapInPandas(gen, "doc_id long, payload binary, media_type string")
-    feats = decode_features(avis, decode_fn=dispatch_decode, pass_media_type=True)
+    feats = _media_features(
+        spark,
+        sf_dir,
+        lambda i: synth_avi(i) if i % 2 == 0 else synth_avi_mjpeg(i),
+        "video/avi",
+    )
     return feats.select(
         "doc_id", "n_bytes", F.posexplode("feature").alias("win", "lum_sum")
     )
@@ -910,29 +905,10 @@ def multimodal_video_dib_features(spark: SparkSession, sf_dir: str) -> DataFrame
     0 (see `_decode_rle8`/`_decode_rle4`). The oracle recomputes every
     per-frame palette-expanded pixel sum from the fixture formulas, so
     wrong palette routing, reserved-byte leakage, or any RLE walk error
-    (run placement, absolute-mode padding, delta zero-fill) mismatches.
-
-    Scale shape: scan → mapInPandas synth → mapInPandas decode →
-    posexplode; one id-only shuffle (spread_ids) before synth so decode
-    parallelizes — payloads themselves never shuffle."""
-    import pandas as _pd
-
+    (run placement, absolute-mode padding, delta zero-fill) mismatches."""
     from financedatabase_spark.operators.multimodal import synth_avi_dib
 
-    docs = spread_ids(load_table(spark, sf_dir, "documents").select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": pdf["doc_id"].map(lambda i: synth_avi_dib(int(i))),
-                    "media_type": "video/avi",
-                }
-            )
-
-    avis = docs.mapInPandas(gen, "doc_id long, payload binary, media_type string")
-    feats = decode_features(avis, decode_fn=dispatch_decode, pass_media_type=True)
+    feats = _media_features(spark, sf_dir, synth_avi_dib, "video/avi")
     return feats.select(
         "doc_id",
         (F.col("doc_id") % 4).cast("int").alias("variant"),
@@ -972,27 +948,8 @@ def multimodal_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     must parse the chunk stream, inflate IDAT, invert the filters, and
     emit the 8-bin normalized luminance histogram. The oracle recomputes
     the histogram from the pixel-synthesis formula — a decoder that
-    mis-parses geometry or shortcuts the un-filter step cannot match.
-
-    Scale shape: scan → mapInPandas synth → mapInPandas decode →
-    posexplode; one id-only shuffle (spread_ids) before synth so decode
-    parallelizes — payloads themselves never shuffle."""
-    import pandas as _pd
-
-    docs = spread_ids(load_table(spark, sf_dir, "documents").select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": pdf["doc_id"].map(lambda i: synth_png(int(i))),
-                    "media_type": "image/png",
-                }
-            )
-
-    pngs = docs.mapInPandas(gen, "doc_id long, payload binary, media_type string")
-    feats = decode_features(pngs, decode_fn=dispatch_decode, pass_media_type=True)
+    mis-parses geometry or shortcuts the un-filter step cannot match."""
+    feats = _media_features(spark, sf_dir, synth_png, "image/png")
     return feats.select(
         "doc_id",
         (F.col("doc_id") % 3 * 4 + 8).cast("long").alias("width"),
@@ -1087,27 +1044,8 @@ def multimodal_jpeg_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     luminance histogram — and, for the color docs, the mean-Cb/mean-Cr
     features at pos 8/9 — from the synthesis formula. A decoder that
     mis-parses Huffman tables, the zigzag, the MCU interleave, or either
-    quant table cannot match.
-
-    Scale shape: scan → mapInPandas synth → mapInPandas decode →
-    posexplode; one id-only shuffle (spread_ids) before synth so decode
-    parallelizes — payloads themselves never shuffle."""
-    import pandas as _pd
-
-    docs = spread_ids(load_table(spark, sf_dir, "documents").select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": pdf["doc_id"].map(lambda i: synth_jpeg(int(i))),
-                    "media_type": "image/jpeg",
-                }
-            )
-
-    jpgs = docs.mapInPandas(gen, "doc_id long, payload binary, media_type string")
-    feats = decode_features(jpgs, decode_fn=dispatch_decode, pass_media_type=True)
+    quant table cannot match."""
+    feats = _media_features(spark, sf_dir, synth_jpeg, "image/jpeg")
     return feats.select(
         "doc_id",
         (F.col("doc_id") % 3 * 8 + 16).cast("long").alias("width"),
@@ -1148,29 +1086,10 @@ def multimodal_jpeg_lossless_features(spark: SparkSession, sf_dir: str) -> DataF
     recomputes the 8-bin luminance histogram straight from that formula
     — no quantization model. A decoder that mis-parses any predictor,
     the boundary prediction rules (first line Ra, first column Rb,
-    first sample 2^(P-1)), or the difference coding cannot match.
-
-    Scale shape: scan → mapInPandas synth → mapInPandas decode →
-    posexplode; one id-only shuffle (spread_ids) before synth so decode
-    parallelizes — payloads themselves never shuffle."""
-    import pandas as _pd
-
+    first sample 2^(P-1)), or the difference coding cannot match."""
     from financedatabase_spark.operators.jpeg import synth_jpeg_lossless
 
-    docs = spread_ids(load_table(spark, sf_dir, "documents").select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": pdf["doc_id"].map(lambda i: synth_jpeg_lossless(int(i))),
-                    "media_type": "image/jpeg",
-                }
-            )
-
-    jpgs = docs.mapInPandas(gen, "doc_id long, payload binary, media_type string")
-    feats = decode_features(jpgs, decode_fn=dispatch_decode, pass_media_type=True)
+    feats = _media_features(spark, sf_dir, synth_jpeg_lossless, "image/jpeg")
     return feats.select(
         "doc_id",
         (F.col("doc_id") % 3 * 8 + 16).cast("long").alias("width"),
@@ -1303,29 +1222,10 @@ def multimodal_jpeg_exotic_features(spark: SparkSession, sf_dir: str) -> DataFra
     walking the wrong MCU shape cannot match. The scan layout cycles
     (doc%20//5) over all THREE sequential layouts of the same pixels —
     fully interleaved, non-interleaved, and PARTIALLY interleaved
-    (Y-only scan + one Cb+Cr subset scan, T.81 A.2.3).
-
-    Scale shape: scan → mapInPandas synth → mapInPandas decode →
-    posexplode; one id-only shuffle (spread_ids) before synth so decode
-    parallelizes — payloads themselves never shuffle."""
-    import pandas as _pd
-
+    (Y-only scan + one Cb+Cr subset scan, T.81 A.2.3)."""
     from financedatabase_spark.operators.jpeg import synth_jpeg_exotic
 
-    docs = spread_ids(load_table(spark, sf_dir, "documents").select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": pdf["doc_id"].map(lambda i: synth_jpeg_exotic(int(i))),
-                    "media_type": "image/jpeg",
-                }
-            )
-
-    jpgs = docs.mapInPandas(gen, "doc_id long, payload binary, media_type string")
-    feats = decode_features(jpgs, decode_fn=dispatch_decode, pass_media_type=True)
+    feats = _media_features(spark, sf_dir, synth_jpeg_exotic, "image/jpeg")
     return feats.select(
         "doc_id",
         (F.col("doc_id") % 3 * 8 + 16).cast("long").alias("width"),
@@ -1382,31 +1282,10 @@ def multimodal_jpeg_lossless_rgb_features(spark: SparkSession, sf_dir: str) -> D
     recomputes the luma histogram (12-bit binning, v*8 >> 12) and the
     two chroma means from the formula exactly; a decoder that ignored
     the point transform, mixed up scan-to-component routing, or
-    returned after the first scan cannot match.
-
-    Scale shape: scan → mapInPandas synth → mapInPandas decode →
-    posexplode; one id-only shuffle (spread_ids) before synth so decode
-    parallelizes — payloads themselves never shuffle."""
-    import pandas as _pd
-
+    returned after the first scan cannot match."""
     from financedatabase_spark.operators.jpeg import synth_jpeg_lossless_rgb
 
-    docs = spread_ids(load_table(spark, sf_dir, "documents").select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": pdf["doc_id"].map(
-                        lambda i: synth_jpeg_lossless_rgb(int(i))
-                    ),
-                    "media_type": "image/jpeg",
-                }
-            )
-
-    jpgs = docs.mapInPandas(gen, "doc_id long, payload binary, media_type string")
-    feats = decode_features(jpgs, decode_fn=dispatch_decode, pass_media_type=True)
+    feats = _media_features(spark, sf_dir, synth_jpeg_lossless_rgb, "image/jpeg")
     return feats.select(
         "doc_id",
         (F.col("doc_id") % 3).cast("int").alias("al"),
@@ -1466,31 +1345,10 @@ def multimodal_jpeg_lossless_arith_features(spark: SparkSession, sf_dir: str) ->
     plane equals the synthesis formula shifted by Al — so the oracle
     recomputes the luma histogram and chroma means exactly; a decoder
     with a wrong context mapping, a missed statistics reset at a
-    restart, or a broken point transform cannot match.
-
-    Scale shape: scan → mapInPandas synth → mapInPandas decode →
-    posexplode; one id-only shuffle (spread_ids) before synth so decode
-    parallelizes — payloads themselves never shuffle."""
-    import pandas as _pd
-
+    restart, or a broken point transform cannot match."""
     from financedatabase_spark.operators.jpeg import synth_jpeg_lossless_arith
 
-    docs = spread_ids(load_table(spark, sf_dir, "documents").select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": pdf["doc_id"].map(
-                        lambda i: synth_jpeg_lossless_arith(int(i))
-                    ),
-                    "media_type": "image/jpeg",
-                }
-            )
-
-    jpgs = docs.mapInPandas(gen, "doc_id long, payload binary, media_type string")
-    feats = decode_features(jpgs, decode_fn=dispatch_decode, pass_media_type=True)
+    feats = _media_features(spark, sf_dir, synth_jpeg_lossless_arith, "image/jpeg")
     return feats.select(
         "doc_id",
         (F.col("doc_id") % 3).cast("int").alias("al"),
@@ -1568,29 +1426,10 @@ def multimodal_jpeg_hier_features(spark: SparkSession, sf_dir: str) -> DataFrame
     reconstruction equals the target formula exactly). The oracle
     recomputes the final plane per variant and histograms it; a decoder
     with a wrong expansion rounding, a level-shifted differential IDCT,
-    or broken mod-2^16 refinement arithmetic cannot match.
-
-    Scale shape: scan → mapInPandas synth → mapInPandas decode →
-    posexplode; one id-only shuffle (spread_ids) before synth so decode
-    parallelizes — payloads themselves never shuffle."""
-    import pandas as _pd
-
+    or broken mod-2^16 refinement arithmetic cannot match."""
     from financedatabase_spark.operators.jpeg import synth_jpeg_hier
 
-    docs = spread_ids(load_table(spark, sf_dir, "documents").select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": pdf["doc_id"].map(lambda i: synth_jpeg_hier(int(i))),
-                    "media_type": "image/jpeg",
-                }
-            )
-
-    jpgs = docs.mapInPandas(gen, "doc_id long, payload binary, media_type string")
-    feats = decode_features(jpgs, decode_fn=dispatch_decode, pass_media_type=True)
+    feats = _media_features(spark, sf_dir, synth_jpeg_hier, "image/jpeg")
     return feats.select(
         "doc_id",
         (F.col("doc_id") % 4).cast("int").alias("variant"),
@@ -1653,29 +1492,10 @@ def multimodal_gif_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     composited canvas per variant from the palette/index formulas and
     histograms the Rec.601 integer luma — a decoder with a broken LZW
     width bump, interlace order, transparency skip, or disposal
-    restore cannot match.
-
-    Scale shape: scan → mapInPandas synth → mapInPandas decode →
-    posexplode; one id-only shuffle (spread_ids) before synth so decode
-    parallelizes — payloads themselves never shuffle."""
-    import pandas as _pd
-
+    restore cannot match."""
     from financedatabase_spark.operators.gif import synth_gif
 
-    docs = spread_ids(load_table(spark, sf_dir, "documents").select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": pdf["doc_id"].map(lambda i: synth_gif(int(i))),
-                    "media_type": "image/gif",
-                }
-            )
-
-    gifs = docs.mapInPandas(gen, "doc_id long, payload binary, media_type string")
-    feats = decode_features(gifs, decode_fn=dispatch_decode, pass_media_type=True)
+    feats = _media_features(spark, sf_dir, synth_gif, "image/gif")
     return feats.select(
         "doc_id",
         (F.col("doc_id") % 4).cast("int").alias("variant"),
@@ -1743,29 +1563,10 @@ def multimodal_tiff_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes the per-variant RGB from the fixture formulas and
     histograms the Rec.601 integer luma — a decoder with the GIF-style
     late width change, a missed predictor accumulation, a strip-state
-    leak, or an un-inverted WhiteIsZero cannot match.
-
-    Scale shape: scan → mapInPandas synth → mapInPandas decode →
-    posexplode; one id-only shuffle (spread_ids) before synth so decode
-    parallelizes — payloads themselves never shuffle."""
-    import pandas as _pd
-
+    leak, or an un-inverted WhiteIsZero cannot match."""
     from financedatabase_spark.operators.tiff import synth_tiff
 
-    docs = spread_ids(load_table(spark, sf_dir, "documents").select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": pdf["doc_id"].map(lambda i: synth_tiff(int(i))),
-                    "media_type": "image/tiff",
-                }
-            )
-
-    tifs = docs.mapInPandas(gen, "doc_id long, payload binary, media_type string")
-    feats = decode_features(tifs, decode_fn=dispatch_decode, pass_media_type=True)
+    feats = _media_features(spark, sf_dir, synth_tiff, "image/tiff")
     return feats.select(
         "doc_id",
         (F.col("doc_id") % 4).cast("int").alias("variant"),
@@ -1828,29 +1629,10 @@ def multimodal_webp_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     inverse transforms, and per-block code-group selection sit on the
     oracle path: the complete VP8L bitstream. Decode is lossless, so
     the oracle recomputes each variant's RGB from the fixture formulas
-    and histograms the Rec.601 integer luma.
-
-    Scale shape: scan → mapInPandas synth → mapInPandas decode →
-    posexplode; one id-only shuffle (spread_ids) before synth so decode
-    parallelizes — payloads themselves never shuffle."""
-    import pandas as _pd
-
+    and histograms the Rec.601 integer luma."""
     from financedatabase_spark.operators.webp import synth_webp
 
-    docs = spread_ids(load_table(spark, sf_dir, "documents").select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": pdf["doc_id"].map(lambda i: synth_webp(int(i))),
-                    "media_type": "image/webp",
-                }
-            )
-
-    webps = docs.mapInPandas(gen, "doc_id long, payload binary, media_type string")
-    feats = decode_features(webps, decode_fn=dispatch_decode, pass_media_type=True)
+    feats = _media_features(spark, sf_dir, synth_webp, "image/webp")
     return feats.select(
         "doc_id",
         (F.col("doc_id") % 9).cast("int").alias("variant"),
@@ -1913,29 +1695,10 @@ def multimodal_bmp_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     coordinate formulas and histograms the Rec.601 integer luma (a
     histogram is orientation-invariant, so the bottom-up/top-down row
     order is pinned by the exact-pixel unit test, not here; palette
-    routing, RLE walks, and the reserved-byte skip are oracle-visible).
-
-    Scale shape: scan → mapInPandas synth → mapInPandas decode →
-    posexplode; one id-only shuffle (spread_ids) before synth so decode
-    parallelizes — payloads themselves never shuffle."""
-    import pandas as _pd
-
+    routing, RLE walks, and the reserved-byte skip are oracle-visible)."""
     from financedatabase_spark.operators.multimodal import synth_bmp_file
 
-    docs = spread_ids(load_table(spark, sf_dir, "documents").select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": pdf["doc_id"].map(lambda i: synth_bmp_file(int(i))),
-                    "media_type": "image/bmp",
-                }
-            )
-
-    bmps = docs.mapInPandas(gen, "doc_id long, payload binary, media_type string")
-    feats = decode_features(bmps, decode_fn=dispatch_decode, pass_media_type=True)
+    feats = _media_features(spark, sf_dir, synth_bmp_file, "image/bmp")
     return feats.select(
         "doc_id",
         (F.col("doc_id") % 4).cast("int").alias("variant"),
@@ -1995,29 +1758,10 @@ def multimodal_ico_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     with 0xAA reserved bytes and a clear mask. The oracle recomputes
     each variant's luma — PNG luma is the synth_png formula directly —
     so wrong mask bit order, palette routing, or doubled-height parsing
-    mismatches.
-
-    Scale shape: scan → mapInPandas synth → mapInPandas decode →
-    posexplode; one id-only shuffle (spread_ids) before synth so decode
-    parallelizes — payloads themselves never shuffle."""
-    import pandas as _pd
-
+    mismatches."""
     from financedatabase_spark.operators.multimodal import synth_ico
 
-    docs = spread_ids(load_table(spark, sf_dir, "documents").select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": pdf["doc_id"].map(lambda i: synth_ico(int(i))),
-                    "media_type": "image/x-icon",
-                }
-            )
-
-    icos = docs.mapInPandas(gen, "doc_id long, payload binary, media_type string")
-    feats = decode_features(icos, decode_fn=dispatch_decode, pass_media_type=True)
+    feats = _media_features(spark, sf_dir, synth_ico, "image/x-icon")
     return feats.select(
         "doc_id",
         (F.col("doc_id") % 3).cast("int").alias("variant"),
@@ -2081,29 +1825,10 @@ def multimodal_adpcm_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     verified, not just the container shape. The recursion is
     per-sample, so like the tick-bar oracles this baseline is excluded
     from the 50x sweeps — the Spark side stays linear (one mapInPandas
-    decode).
-
-    Scale shape: scan → mapInPandas synth → mapInPandas decode →
-    posexplode; one id-only shuffle (spread_ids) before synth so decode
-    parallelizes — payloads themselves never shuffle."""
-    import pandas as _pd
-
+    decode)."""
     from financedatabase_spark.operators.multimodal import synth_wav_adpcm
 
-    docs = spread_ids(load_table(spark, sf_dir, "documents").select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": pdf["doc_id"].map(lambda i: synth_wav_adpcm(int(i))),
-                    "media_type": "audio/wav",
-                }
-            )
-
-    wavs = docs.mapInPandas(gen, "doc_id long, payload binary, media_type string")
-    feats = decode_features(wavs, decode_fn=dispatch_decode, pass_media_type=True)
+    feats = _media_features(spark, sf_dir, synth_wav_adpcm, "audio/wav")
     return feats.select(
         "doc_id", "n_bytes", F.posexplode("feature").alias("win", "abs_sum")
     )
@@ -2183,29 +1908,10 @@ def multimodal_msadpcm_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps the delta recurrence bounded so the oracle's BIGINT
     arithmetic cannot overflow. Like the IMA and tick-bar oracles the
     per-sample recursion is the BASELINE's cost — excluded from the 50x
-    sweeps — while the Spark side stays linear (one mapInPandas decode).
-
-    Scale shape: scan → mapInPandas synth → mapInPandas decode →
-    posexplode; one id-only shuffle (spread_ids) before synth so decode
-    parallelizes — payloads themselves never shuffle."""
-    import pandas as _pd
-
+    sweeps — while the Spark side stays linear (one mapInPandas decode)."""
     from financedatabase_spark.operators.multimodal import synth_wav_msadpcm
 
-    docs = spread_ids(load_table(spark, sf_dir, "documents").select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": pdf["doc_id"].map(lambda i: synth_wav_msadpcm(int(i))),
-                    "media_type": "audio/wav",
-                }
-            )
-
-    wavs = docs.mapInPandas(gen, "doc_id long, payload binary, media_type string")
-    feats = decode_features(wavs, decode_fn=dispatch_decode, pass_media_type=True)
+    feats = _media_features(spark, sf_dir, synth_wav_msadpcm, "audio/wav")
     return feats.select(
         "doc_id", "n_bytes", F.posexplode("feature").alias("win", "abs_sum")
     )
@@ -2285,29 +1991,10 @@ def multimodal_jpeg_arith_features(spark: SparkSession, sf_dir: str) -> DataFram
     histogram — and mean-Cb/mean-Cr at pos 8/9 for color docs — in
     closed form; only the entropy layer differs. A decoder with a
     wrong Table D.3 entry, broken conditional exchange, bad byte
-    stuffing, or unreset restart statistics cannot match.
-
-    Scale shape: scan → mapInPandas synth → mapInPandas decode →
-    posexplode; one id-only shuffle (spread_ids) before synth so decode
-    parallelizes — payloads themselves never shuffle."""
-    import pandas as _pd
-
+    stuffing, or unreset restart statistics cannot match."""
     from financedatabase_spark.operators.jpeg import synth_jpeg_arith
 
-    docs = spread_ids(load_table(spark, sf_dir, "documents").select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": pdf["doc_id"].map(lambda i: synth_jpeg_arith(int(i))),
-                    "media_type": "image/jpeg",
-                }
-            )
-
-    jpgs = docs.mapInPandas(gen, "doc_id long, payload binary, media_type string")
-    feats = decode_features(jpgs, decode_fn=dispatch_decode, pass_media_type=True)
+    feats = _media_features(spark, sf_dir, synth_jpeg_arith, "image/jpeg")
     return feats.select(
         "doc_id",
         (F.col("doc_id") % 3 * 8 + 16).cast("long").alias("width"),
@@ -2374,31 +2061,10 @@ def multimodal_adpcm_stereo_features(spark: SparkSession, sf_dir: str) -> DataFr
     by frame, and mirrors the truncating mix — a decoder with swapped
     word order, shared channel state, or a floor-division mix cannot
     match. Per-sample recursion, so 50x sweeps SKIP-list this baseline
-    like the other ADPCM oracles.
-
-    Scale shape: scan → mapInPandas synth → mapInPandas decode →
-    posexplode; one id-only shuffle (spread_ids) before synth so decode
-    parallelizes — payloads themselves never shuffle."""
-    import pandas as _pd
-
+    like the other ADPCM oracles."""
     from financedatabase_spark.operators.multimodal import synth_wav_adpcm_stereo
 
-    docs = spread_ids(load_table(spark, sf_dir, "documents").select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": pdf["doc_id"].map(
-                        lambda i: synth_wav_adpcm_stereo(int(i))
-                    ),
-                    "media_type": "audio/wav",
-                }
-            )
-
-    wavs = docs.mapInPandas(gen, "doc_id long, payload binary, media_type string")
-    feats = decode_features(wavs, decode_fn=dispatch_decode, pass_media_type=True)
+    feats = _media_features(spark, sf_dir, synth_wav_adpcm_stereo, "audio/wav")
     return feats.select(
         "doc_id", "n_bytes", F.posexplode("feature").alias("win", "abs_sum")
     )
@@ -2477,31 +2143,10 @@ def multimodal_msadpcm_stereo_features(spark: SparkSession, sf_dir: str) -> Data
     mono mix. A decoder with swapped nibble-to-channel routing, shared
     delta state, or field-sequential header parsing cannot match.
     Per-sample recursion, so 50x sweeps SKIP-list this baseline like
-    the other ADPCM oracles.
-
-    Scale shape: scan → mapInPandas synth → mapInPandas decode →
-    posexplode; one id-only shuffle (spread_ids) before synth so decode
-    parallelizes — payloads themselves never shuffle."""
-    import pandas as _pd
-
+    the other ADPCM oracles."""
     from financedatabase_spark.operators.multimodal import synth_wav_msadpcm_stereo
 
-    docs = spread_ids(load_table(spark, sf_dir, "documents").select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": pdf["doc_id"].map(
-                        lambda i: synth_wav_msadpcm_stereo(int(i))
-                    ),
-                    "media_type": "audio/wav",
-                }
-            )
-
-    wavs = docs.mapInPandas(gen, "doc_id long, payload binary, media_type string")
-    feats = decode_features(wavs, decode_fn=dispatch_decode, pass_media_type=True)
+    feats = _media_features(spark, sf_dir, synth_wav_msadpcm_stereo, "audio/wav")
     return feats.select(
         "doc_id", "n_bytes", F.posexplode("feature").alias("win", "abs_sum")
     )
@@ -2668,29 +2313,10 @@ def multimodal_gsm_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     decoded samples per doc verified bit-exact. Like the ADPCM and
     tick-bar oracles the per-sample recursion is the BASELINE's cost —
     SKIP-listed at 50x — while the Spark side stays linear (one
-    mapInPandas decode).
-
-    Scale shape: scan → mapInPandas synth → mapInPandas decode →
-    posexplode; one id-only shuffle (spread_ids) before synth so decode
-    parallelizes — payloads themselves never shuffle."""
-    import pandas as _pd
-
+    mapInPandas decode)."""
     from financedatabase_spark.operators.multimodal import synth_wav_gsm
 
-    docs = spread_ids(load_table(spark, sf_dir, "documents").select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": pdf["doc_id"].map(lambda i: synth_wav_gsm(int(i))),
-                    "media_type": "audio/wav",
-                }
-            )
-
-    wavs = docs.mapInPandas(gen, "doc_id long, payload binary, media_type string")
-    feats = decode_features(wavs, decode_fn=dispatch_decode, pass_media_type=True)
+    feats = _media_features(spark, sf_dir, synth_wav_gsm, "audio/wav")
     return feats.select(
         "doc_id", "n_bytes", F.posexplode("feature").alias("win", "abs_sum")
     )
@@ -3814,6 +3440,29 @@ def tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tk(docs, k=5, min_df=2)
 
 
+#: The blocklist of the synthetic-URL curation queries: an apex domain
+#: (blocks every subdomain), a source-level apex and one exact host.
+BLOCKED_DOMAINS = ["spamfarm.example", "src1.example.org", "www.src2.example.org"]
+
+
+def synthetic_url() -> Column:
+    """The URL of a document, derived from (doc_id, source) because the
+    synthetic corpus has no URL column:
+    ``https://{cdn.|www.}{source}{.spamfarm.example|.example.org}/d/{doc_id}``
+    with ``cdn.`` when doc_id % 11 = 0 and ``.spamfarm.example`` when
+    doc_id % 7 = 0. The curation oracles restate it in SQL."""
+    return F.concat(
+        F.lit("https://"),
+        F.when(F.col("doc_id") % 11 == 0, F.lit("cdn.")).otherwise(F.lit("www.")),
+        F.col("source"),
+        F.when(F.col("doc_id") % 7 == 0, F.lit(".spamfarm.example")).otherwise(
+            F.lit(".example.org")
+        ),
+        F.lit("/d/"),
+        F.col("doc_id").cast("string"),
+    )
+
+
 @register(
     "domain_blocklist_filter",
     oracle=r"""
@@ -3859,22 +3508,8 @@ def domain_blocklist_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "source")
-    urls = docs.withColumn(
-        "url",
-        F.concat(
-            F.lit("https://"),
-            F.when(F.col("doc_id") % 11 == 0, F.lit("cdn.")).otherwise(F.lit("www.")),
-            F.col("source"),
-            F.when(F.col("doc_id") % 7 == 0, F.lit(".spamfarm.example")).otherwise(
-                F.lit(".example.org")
-            ),
-            F.lit("/d/"),
-            F.col("doc_id").cast("string"),
-        ),
-    )
-    bl = domain_blocklist_dim(
-        spark, ["spamfarm.example", "src1.example.org", "www.src2.example.org"]
-    )
+    urls = docs.withColumn("url", synthetic_url())
+    bl = domain_blocklist_dim(spark, BLOCKED_DOMAINS)
     from financedatabase_spark.operators.corrections import registrable_host
 
     # extract the host ONCE and hand it to the filter via host_col — the
@@ -4745,22 +4380,10 @@ def corpus_curation_pipeline_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source"
     )
-    urls = docs.withColumn(
-        "url",
-        F.concat(
-            F.lit("https://"),
-            F.when(F.col("doc_id") % 11 == 0, F.lit("cdn.")).otherwise(F.lit("www.")),
-            F.col("source"),
-            F.when(F.col("doc_id") % 7 == 0, F.lit(".spamfarm.example")).otherwise(
-                F.lit(".example.org")
-            ),
-            F.lit("/d/"),
-            F.col("doc_id").cast("string"),
-        ),
-    ).withColumn("host", registrable_host(F.col("url")))
-    bl = domain_blocklist_dim(
-        spark, ["spamfarm.example", "src1.example.org", "www.src2.example.org"]
+    urls = docs.withColumn("url", synthetic_url()).withColumn(
+        "host", registrable_host(F.col("url"))
     )
+    bl = domain_blocklist_dim(spark, BLOCKED_DOMAINS)
     s1 = filter_blocked_domains(urls, bl, url_col="url", host_col="host").select(
         "doc_id", "text", "lang"
     )

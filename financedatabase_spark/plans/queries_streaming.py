@@ -513,27 +513,16 @@ def streaming_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
         registrable_host,
     )
     from financedatabase_spark.operators.text import gopher_quality
+    from financedatabase_spark.plans.queries_documents import BLOCKED_DOMAINS, synthetic_url
 
     stream = _staged_replay(
         spark, sf_dir, "documents", ["doc_id", "text", "lang", "source"], "doc_id"
     )
 
-    urls = stream.withColumn(
-        "url",
-        F.concat(
-            F.lit("https://"),
-            F.when(F.col("doc_id") % 11 == 0, F.lit("cdn.")).otherwise(F.lit("www.")),
-            F.col("source"),
-            F.when(F.col("doc_id") % 7 == 0, F.lit(".spamfarm.example")).otherwise(
-                F.lit(".example.org")
-            ),
-            F.lit("/d/"),
-            F.col("doc_id").cast("string"),
-        ),
-    ).withColumn("_chain", host_suffix_chain(registrable_host(F.col("url"))))
-    bl = domain_blocklist_dim(
-        spark, ["spamfarm.example", "src1.example.org", "www.src2.example.org"]
+    urls = stream.withColumn("url", synthetic_url()).withColumn(
+        "_chain", host_suffix_chain(registrable_host(F.col("url")))
     )
+    bl = domain_blocklist_dim(spark, BLOCKED_DOMAINS)
     kept = urls.join(
         F.broadcast(bl), F.expr("array_contains(_chain, domain)"), "left_anti"
     ).select("doc_id", "text", "lang")
@@ -747,6 +736,7 @@ def streaming_curation_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from financedatabase_spark.operators.lm import ccnet_tertiles
     from financedatabase_spark.operators.text import gopher_quality
+    from financedatabase_spark.plans.queries_documents import BLOCKED_DOMAINS, synthetic_url
     from financedatabase_spark.streaming.curation import run_admission_with_refresh
 
     docs = load_table(spark, sf_dir, "documents").select(
@@ -774,24 +764,12 @@ def streaming_curation_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    bl = domain_blocklist_dim(
-        spark, ["spamfarm.example", "src1.example.org", "www.src2.example.org"]
-    )
+    bl = domain_blocklist_dim(spark, BLOCKED_DOMAINS)
 
     def front(df: DataFrame) -> DataFrame:
-        urls = df.withColumn(
-            "url",
-            F.concat(
-                F.lit("https://"),
-                F.when(F.col("doc_id") % 11 == 0, F.lit("cdn.")).otherwise(F.lit("www.")),
-                F.col("source"),
-                F.when(F.col("doc_id") % 7 == 0, F.lit(".spamfarm.example")).otherwise(
-                    F.lit(".example.org")
-                ),
-                F.lit("/d/"),
-                F.col("doc_id").cast("string"),
-            ),
-        ).withColumn("host", registrable_host(F.col("url")))
+        urls = df.withColumn("url", synthetic_url()).withColumn(
+            "host", registrable_host(F.col("url"))
+        )
         s1 = filter_blocked_domains(urls, bl, url_col="url", host_col="host").select(
             "doc_id", "text", "lang"
         )

@@ -410,6 +410,11 @@ def get_spark(app_name: str = "financedatabase_spark", cpus: int | None = None) 
     it creates unless libhadoop is loaded, and pyspark's jars ship no
     libhadoop. No configuration removes them, including the 8-12 per
     DML statement of ``io_sinks``.
+
+    The join settings are constants: sort-merge is not preferred, and
+    AQE may hash-build a shuffled join side of up to 64 MB per
+    partition. They were tuned for these ``local[N]`` sessions; a
+    cluster session tunes its own from spark-submit.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
@@ -448,16 +453,10 @@ def get_spark(app_name: str = "financedatabase_spark", cpus: int | None = None) 
         # on the composite pipelines' doc-id equi-joins (measured -6..-10%
         # on curation/minhash/simhash at sf0.1, plan: SortMergeJoin →
         # ShuffledHashJoin). Scale-safe: the AQE threshold bounds the
-        # build-side partition that may be hash-built (OOM guard), and
-        # both knobs are env-overridable for cluster tuning.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "false"),
-        )
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_LOCALMAP_THRESHOLD", "64m"),
-        )
+        # build-side partition that may be hash-built (OOM guard). Both
+        # are constants: see the docstring.
+        .config("spark.sql.join.preferSortMergeJoin", "false")
+        .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
         .config("spark.ui.enabled", "false")
         # managed tables (bucketed joins, env catalogs) land outside the repo
         .config(

@@ -18,12 +18,15 @@ as a normal Spark table (`LatencyLog.read`).
 
 from __future__ import annotations
 
+import logging
 import os
 import threading
 import time
 from contextlib import contextmanager
 
 import pandas as pd
+
+_log = logging.getLogger(__name__)
 
 LOG_COLUMNS = ["query_name", "func_name", "duration_s", "rows", "logged_at"]
 
@@ -34,7 +37,8 @@ _ARCHIVE_DIR = "archive"
 class _Py4JQueryExecutionListener:
     """py4j-callback implementation of the JVM listener interface.
     Callbacks run on the JVM listener-bus thread — they must never
-    raise, and only append to the owner's in-memory bucket."""
+    raise, and only append to the owner's in-memory bucket. A failure
+    is logged instead of raised."""
 
     def __init__(self, owner: "LatencyLog"):
         self._owner = owner
@@ -50,10 +54,10 @@ class _Py4JQueryExecutionListener:
                 if opt.isDefined():
                     rows = int(opt.get().value())
             except Exception:
-                pass
+                _log.debug("no numOutputRows for %s", funcName, exc_info=True)
             self._owner._record(str(funcName), int(durationNs) / 1e9, rows)
         except Exception:
-            pass
+            _log.warning("could not record query %s", funcName, exc_info=True)
 
     def onFailure(self, funcName, qe, exception):  # noqa: N802
         if not self.active:
@@ -61,7 +65,7 @@ class _Py4JQueryExecutionListener:
         try:
             self._owner._record(f"FAILED:{funcName}", 0.0, -1)
         except Exception:
-            pass
+            _log.warning("could not record failed query %s", funcName, exc_info=True)
 
     class Java:
         implements = ["org.apache.spark.sql.util.QueryExecutionListener"]
@@ -141,7 +145,7 @@ class LatencyLog:
             try:
                 spark._jsparkSession.listenerManager().unregister(self._listener)
             except Exception:
-                pass
+                _log.warning("could not unregister the latency listener", exc_info=True)
             self._listener = None
 
     def wait_for(self, n: int, timeout_s: float = 10.0) -> int:

@@ -53,3 +53,31 @@ def test_flush_empty_and_read_empty(spark, tmp_path):
     log = LatencyLog(str(tmp_path / "empty"))
     assert log.flush() == 0
     assert log.read(spark).count() == 0
+
+
+def test_listener_callbacks_log_record_failures(tmp_path, caplog, monkeypatch):
+    # the callbacks run on the JVM listener-bus thread: a failing record
+    # must not raise out of them, and must not vanish silently either
+    import logging
+
+    from financedatabase_spark.sources.latency_log import _Py4JQueryExecutionListener
+
+    log = LatencyLog(str(tmp_path / "broken"))
+
+    def boom(*args):
+        raise RuntimeError("bucket unavailable")
+
+    monkeypatch.setattr(log, "_record", boom)
+    listener = _Py4JQueryExecutionListener(log)
+    logger = "financedatabase_spark.sources.latency_log"
+    with caplog.at_level(logging.DEBUG, logger=logger):
+        assert listener.onSuccess("collect", None, 1_000_000) is None
+        assert listener.onFailure("count", None, None) is None
+
+    warnings = [r for r in caplog.records if r.levelno == logging.WARNING]
+    assert len(warnings) == 2
+    assert all(r.exc_info and r.exc_info[0] is RuntimeError for r in warnings)
+    assert "collect" in warnings[0].getMessage()
+    assert "count" in warnings[1].getMessage()
+    # the row-count lookup on a plan-less callback is best-effort: debug only
+    assert any(r.levelno == logging.DEBUG for r in caplog.records)

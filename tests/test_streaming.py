@@ -557,6 +557,7 @@ def test_curation_stream_static_refresh_matches_batch(spark, sf_dir, tmp_path):
     )
     from financedatabase_spark.operators.lm import ccnet_tertiles
     from financedatabase_spark.operators.text import gopher_quality
+    from financedatabase_spark.plans.queries_documents import BLOCKED_DOMAINS, synthetic_url
     from financedatabase_spark.sources.readers import load_table
     from financedatabase_spark.streaming.curation import (
         current_admitted,
@@ -578,25 +579,13 @@ def test_curation_stream_static_refresh_matches_batch(spark, sf_dir, tmp_path):
         .parquet(src)
     )
 
-    bl = domain_blocklist_dim(
-        spark, ["spamfarm.example", "src1.example.org", "www.src2.example.org"]
-    )
+    bl = domain_blocklist_dim(spark, BLOCKED_DOMAINS)
 
     def front(df):
         # the composite's map-side stages 1-2 (same URL fixture derivation)
-        urls = df.withColumn(
-            "url",
-            F.concat(
-                F.lit("https://"),
-                F.when(F.col("doc_id") % 11 == 0, F.lit("cdn.")).otherwise(F.lit("www.")),
-                F.col("source"),
-                F.when(F.col("doc_id") % 7 == 0, F.lit(".spamfarm.example")).otherwise(
-                    F.lit(".example.org")
-                ),
-                F.lit("/d/"),
-                F.col("doc_id").cast("string"),
-            ),
-        ).withColumn("host", registrable_host(F.col("url")))
+        urls = df.withColumn("url", synthetic_url()).withColumn(
+            "host", registrable_host(F.col("url"))
+        )
         s1 = filter_blocked_domains(urls, bl, url_col="url", host_col="host").select(
             "doc_id", "text", "lang"
         )
