@@ -110,13 +110,13 @@ def _spread(df: DataFrame) -> DataFrame:
     splits, and an unconditional repartition there would be a full shuffle
     of the corpus at 100 TB — so scan-backed frames with enough input
     files skip the shuffle entirely (file count is metadata-only; a 100 TB
-    table has thousands of files, comfortably past any core count)."""
+    table has thousands of files, comfortably past any core count).
+    Frames with no file scan (Python RDD, range, VALUES, checkpoint)
+    list no input files; `inputFiles()` raises only on a streaming
+    frame, which always spreads."""
     target = df.sparkSession.sparkContext.defaultParallelism
-    try:
-        if len(df.inputFiles()) >= target:
-            return df
-    except Exception:
-        pass  # non-scan-backed frames: fall through to the explicit spread
+    if not df.isStreaming and len(df.inputFiles()) >= target:
+        return df
     return df.repartition(target)
 
 

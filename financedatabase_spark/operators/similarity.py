@@ -766,25 +766,33 @@ def kmeans_refine(
     )
 
 
-# --- literal packing for tiny broadcast codebooks ---------------------------
+# --- literal packing for tiny centroid and codebook frames ------------------
 #
-# The packed-codebook frames (one row holding the whole codebook as an
-# array/map) used to be built as groupBy().agg(collect_list) + broadcast
-# crossJoin. Each such frame cost one single-partition Exchange plus one
-# BroadcastExchange job PER RUN — pure scheduling overhead for a frame
-# of a few hundred values. r15: the codebook rows are collected once
-# (bounded: the SAME cells × dim payload the broadcast shipped) and
-# inlined as ONE literal SQL expression; Catalyst constant-folds it to a
-# single Literal, the downstream lambdas are untouched, and the
-# crossJoin + both exchanges disappear from the plan. Exactness: values
-# round-trip driver-side as Python floats (IEEE doubles) rendered with
-# repr() — the shortest string that reparses to the same double — and
-# every DERIVED number (entry self-dots, centroid norms) is rendered as
-# a constant-foldable arithmetic EXPRESSION in the original fold order,
-# so it is still the JVM computing each double, never Python.
+# A centroid frame (n_cells rows) or PQ codebook frame (m × k_sub rows)
+# reaches every row as ONE literal SQL expression: the frame is collected
+# once (`_rows`, kept on the frame object) and rendered as an array/map
+# literal that Catalyst constant-folds to a single Literal. The plan has
+# no crossJoin, no BroadcastExchange job and no single-partition agg
+# exchange for it, and the corpus side stays a pure projection (REPOSE's
+# point: the tiny index side reaches every partition without a
+# re-shuffle). Every key dtype with an exact literal form renders
+# (`_klit`); any other raises TypeError, and an empty frame gives a typed
+# empty array/map. Exactness: values round-trip driver-side as Python
+# floats (IEEE doubles) rendered with repr() — the shortest string that
+# reparses to the same double — and every DERIVED number (entry
+# self-dots, centroid norms) is rendered as a constant-foldable
+# arithmetic EXPRESSION in the original fold order, so it is still the
+# JVM computing each double, never Python.
 
-#: key dtypes renderable as typed SQL literals (fallback: broadcast path)
-_LIT_KEY_TYPES = {"tinyint", "smallint", "int", "bigint", "string"}
+
+def _rows(df: DataFrame, *cols: str) -> list:
+    """``df.select(*cols).collect()``, once per frame object: the rows
+    stay on the frame (as `session.values_dim` keeps `_literal_rows`), so
+    every literal builder over the same tiny frame shares one job."""
+    memo = df.__dict__.setdefault("_collected_rows", {})
+    if cols not in memo:
+        memo[cols] = df.select(*cols).collect()
+    return memo[cols]
 
 
 def _dlit(x) -> str:
@@ -808,7 +816,16 @@ def _darr(xs) -> str:
 
 
 def _klit(v, sql_type: str) -> str:
-    """Typed SQL literal for a collected key (cell / cid) value."""
+    """Exact typed SQL literal for a collected key (cell / sub / cid)
+    value. TypeError for a dtype without one — checked before the NULL
+    case, so an empty or all-NULL frame fails the same way."""
+    if sql_type not in (
+        "tinyint", "smallint", "int", "bigint", "string", "double", "float", "boolean", "date"
+    ) and not sql_type.startswith("decimal("):
+        raise TypeError(
+            f"key dtype {sql_type!r} has no exact SQL literal (supported: integer "
+            "types, string, double, float, boolean, date, decimal)"
+        )
     if v is None:
         return f"CAST(NULL AS {sql_type})"
     if sql_type == "string":
@@ -816,7 +833,27 @@ def _klit(v, sql_type: str) -> str:
         if "'" in s or "\\" in s:
             return f"CAST(X'{s.encode('utf-8').hex()}' AS STRING)"
         return f"'{s}'"
+    if sql_type in ("double", "float"):
+        return f"CAST({_dlit(v)} AS {sql_type})"
+    if sql_type == "boolean":
+        return "true" if v else "false"
+    if sql_type == "date":
+        return f"DATE '{v.isoformat()}'"
+    if sql_type.startswith("decimal("):
+        return f"CAST('{v:f}' AS {sql_type})"
     return f"CAST({v} AS {sql_type})"
+
+
+def _key_type(df: DataFrame, col: str) -> str:
+    """dtype of key column ``col``, TypeError unless `_klit` renders it."""
+    t = dict(df.dtypes)[col]
+    _klit(None, t)
+    return t
+
+
+def _by_key(rows, key: str) -> list:
+    """Rows sorted by ``key``, NULL keys last."""
+    return sorted(rows, key=lambda r: (r[key] is None, r[key]))
 
 
 def _selfdot_sql(xs) -> str:
@@ -831,64 +868,58 @@ def _selfdot_sql(xs) -> str:
     return f"({acc})"
 
 
-def _cens_lit(
-    centroids: DataFrame,
-    cell_field: str = "cell",
-    with_norm: bool = False,
-    rows: list | None = None,
-) -> str | None:
-    """The packed-centroid array as one literal SQL expression:
+def _cens_lit(centroids: DataFrame, cell_field: str = "cell", with_norm: bool = False) -> str:
+    """The centroid frame (cell, cvec) as one literal SQL expression:
     array(named_struct('<cell_field>', …, 'cvec', array(…)[, '_cn',
     sqrt(…)])) sorted by cell (every consumer is order-insensitive —
-    array_min / array_sort downstream), or None when the cell dtype is
-    not literal-renderable (caller falls back to the broadcast-packed
-    frame). ``with_norm`` adds the centroid L2 norm as a constant-
-    foldable sqrt(sum-of-squares) expression in `_l2_sql`'s exact fold
-    order. ``rows``: pre-collected (cell, cvec) rows, so one caller's
-    collect feeds several literal builders (one job, not one per)."""
-    ctype = dict(centroids.dtypes).get("cell")
-    if ctype not in _LIT_KEY_TYPES:
-        return None
-    if rows is None:
-        rows = centroids.select("cell", "cvec").collect()
-    if not rows:
-        return None
+    array_min / array_sort downstream). ``with_norm`` adds the centroid
+    L2 norm as a constant-foldable sqrt(sum-of-squares) expression in
+    `_l2_sql`'s exact fold order."""
+    ctype = _key_type(centroids, "cell")
     parts = []
-    for r in sorted(rows, key=lambda r: (r["cell"] is None, r["cell"])):
+    for r in _by_key(_rows(centroids, "cell", "cvec"), "cell"):
         fields = f"'{cell_field}', {_klit(r['cell'], ctype)}, 'cvec', {_darr(r['cvec'])}"
         if with_norm:
             fields += f", '_cn', sqrt({_selfdot_sql(r['cvec'])})"
         parts.append(f"named_struct({fields})")
+    if not parts:
+        norm = ", _cn: double" if with_norm else ""
+        return f"CAST(array() AS array<struct<{cell_field}: {ctype}, cvec: array<double>{norm}>>)"
     return "array(" + ", ".join(parts) + ")"
 
 
-def _cb_map_lit(codebooks: DataFrame, rows: list | None = None) -> str | None:
-    """The packed-codebook map as one literal SQL expression:
-    map(sub, array(named_struct('cid', …, 'cvec_sub', array(…))) sorted
-    by cid) — the same shape as the broadcast-packed
-    map<sub → array_sort(collect_list(struct(cid, cvec_sub)))> (cid
-    leads the struct and is unique per sub, so sort-by-cid is the
-    identical order). None when key dtypes are not literal-renderable.
-    ``rows``: pre-collected (sub, cid, cvec_sub) rows, so one caller's
-    collect feeds several literal builders (one job, not one per)."""
-    dts = dict(codebooks.dtypes)
-    if dts.get("sub") not in _LIT_KEY_TYPES or dts.get("cid") not in _LIT_KEY_TYPES:
-        return None
-    if rows is None:
-        rows = codebooks.select("sub", "cid", "cvec_sub").collect()
-    if not rows:
-        return None
+def _cb_map_lit(codebooks: DataFrame, bb_width: int | None = None) -> str:
+    """The codebook frame (sub, cid, cvec_sub) as one literal SQL map:
+    sub → array(named_struct('cid', …, 'cvec_sub', array(…))) sorted by
+    cid — the order array_sort(collect_list(struct(cid, …))) gives, as
+    cid leads the struct and is unique per sub. ``bb_width=d`` adds each
+    entry's self-dot ``bb`` with `_dot_sql(v, v, d)` semantics: the first
+    d elements, NULL for a shorter or NULL entry. NULL subs are left out:
+    a map cannot hold a NULL key, and no lookup could reach one."""
+    stype, ctype = _key_type(codebooks, "sub"), _key_type(codebooks, "cid")
     by_sub: dict = {}
-    for r in rows:
-        by_sub.setdefault(r["sub"], []).append(r)
+    for r in _rows(codebooks, "sub", "cid", "cvec_sub"):
+        if r["sub"] is not None:
+            by_sub.setdefault(r["sub"], []).append(r)
     parts = []
     for sub in sorted(by_sub):
-        ents = ", ".join(
-            f"named_struct('cid', {_klit(r['cid'], dts['cid'])},"
-            f" 'cvec_sub', {_darr(r['cvec_sub'])})"
-            for r in sorted(by_sub[sub], key=lambda r: r["cid"])
+        ents = []
+        for r in _by_key(by_sub[sub], "cid"):
+            v = r["cvec_sub"]
+            ent = f"named_struct('cid', {_klit(r['cid'], ctype)}, 'cvec_sub', {_darr(v)}"
+            if bb_width is not None:
+                short = v is None or len(v) < bb_width
+                ent += ", 'bb', " + (
+                    "CAST(NULL AS DOUBLE)" if short else _selfdot_sql(v[:bb_width])
+                )
+            ents.append(ent + ")")
+        parts.append(f"{_klit(sub, stype)}, array({', '.join(ents)})")
+    if not parts:
+        bb = ", bb: double" if bb_width is not None else ""
+        return (
+            f"CAST(map() AS map<{stype}, array<struct<cid: {ctype}, "
+            f"cvec_sub: array<double>{bb}>>>)"
         )
-        parts.append(f"{_klit(sub, dts['sub'])}, array({ents})")
     return "map(" + ", ".join(parts) + ")"
 
 
@@ -900,7 +931,7 @@ def pq_codebooks(centroids: DataFrame, m: int, dim: int) -> DataFrame:
     centroids (the standard cheap PQ train when cells already cluster
     the corpus — each cell centroid's m-th slice is one reproduction
     value for subspace m). Output (sub, cid, cvec_sub); tiny
-    (m × n_cells rows), always broadcast."""
+    (m × n_cells rows), inlined as one literal by its consumers."""
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m {m}")
     d = dim // m
@@ -925,80 +956,28 @@ def pq_encode(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     keep_cols: tuple[str, ...] = ("label",),
-    codebook_rows: list | None = None,
 ) -> DataFrame:
     """PQ-encode every vector: per subspace, the id of the nearest
     codebook entry by squared L2 (integer-unit, ties cid asc). Output
     one row per vector: (id, *keep_cols, codes array<int> by subspace) —
     the 4-byte-per-subspace compressed corpus an IVF-PQ index stores.
 
-    Scale shape: the codebook (m × k rows) packs into ONE broadcast row
-    of map<sub → sorted entries>, and every vector computes its m codes
-    IN-ROW — an argmin by (d², cid) over the subspace's entries — so
-    the corpus is touched strictly map-side with ZERO shuffles, the same
-    reason FAISS encodes map-side. (The pre-r11 shape exploded the
-    corpus m-fold and shuffled it twice; at 100 TB those are two corpus
-    shuffles this broadcast removes — measured 15.6 s → 10.3 s on the
+    Scale shape: the codebook (m × k rows) inlines as ONE literal map
+    <sub → sorted entries> (see "literal packing" above), and every
+    vector computes its m codes IN-ROW — an argmin by (d², cid) over the
+    subspace's entries — so the corpus is touched strictly map-side with
+    ZERO shuffles, the same reason FAISS encodes map-side. (The pre-r11
+    shape exploded the corpus m-fold and shuffled it twice; at 100 TB
+    those are two corpus shuffles — measured 15.6 s → 10.3 s on the
     50x encode, SCALE.md "r11: map-side PQ encode".)"""
     d = dim // m
-    # entries carry their precomputed self-dot (bb): inside the per-row
-    # argmin only the cross term 2<a,b> remains per entry — <a,a> is
-    # hoisted to one evaluation per (row, subspace) below, and both feed
+    # entries carry their self-dot (bb), folded constant at optimize
+    # time in _dot_sql's exact order: inside the per-row argmin only the
+    # cross term 2<a,b> remains per entry — <a,a> is hoisted to one
+    # evaluation per (row, subspace) below, and both feed
     # _sq_l2_units_sql's exact float op order ((aa + bb) - 2.0*ab), so
     # the integer-unit distances (and the oracle) stay bit-identical.
-    # The packed map is a collected LITERAL when the key types allow it
-    # (see "literal packing" above): no crossJoin, no broadcast job, no
-    # single-partition agg exchange; bb folds constant at optimize time
-    # in _dot_sql's exact order. Entry order inside each subspace matches the
-    # old array_sort(collect_list(struct(cid, ...))) — cid leads the
-    # struct, and cids are unique per sub, so sort-by-cid is identical.
-    dts = dict(codebooks.dtypes)
-    cb_lit = None
-    if dts.get("sub") in _LIT_KEY_TYPES and dts.get("cid") in _LIT_KEY_TYPES:
-        rows = (
-            codebook_rows
-            if codebook_rows is not None
-            else codebooks.select("sub", "cid", "cvec_sub").collect()
-        )
-        by_sub: dict = {}
-        for r in rows:
-            by_sub.setdefault(r["sub"], []).append(r)
-        # width-d entries only: the unrolled _dot_sql nulls out a short
-        # entry via its out-of-bounds get()s, which a partial literal sum
-        # would not
-        if rows and all(
-            r["cvec_sub"] is None or len(r["cvec_sub"]) == d for r in rows
-        ):
-            parts = []
-            for sub in sorted(by_sub):
-                ents = ", ".join(
-                    "named_struct('cid', {c}, 'cvec_sub', {a}, 'bb', {b})".format(
-                        c=_klit(r["cid"], dts["cid"]),
-                        a=_darr(r["cvec_sub"]),
-                        b=_selfdot_sql(r["cvec_sub"]),
-                    )
-                    for r in sorted(by_sub[sub], key=lambda r: r["cid"])
-                )
-                parts.append(f"{_klit(sub, dts['sub'])}, array({ents})")
-            cb_lit = "map(" + ", ".join(parts) + ")"
-    if cb_lit is not None:
-        staged = _spread(df).withColumn("_cb", F.expr(cb_lit))
-    else:
-        packed = (
-            codebooks.select(
-                "sub",
-                F.struct(
-                    F.col("cid"),
-                    F.col("cvec_sub"),
-                    F.expr(_dot_sql("cvec_sub", "cvec_sub", d)).alias("bb"),
-                ).alias("_ent"),
-            )
-            .groupBy("sub")
-            .agg(F.array_sort(F.collect_list("_ent")).alias("_ents"))
-            .groupBy()
-            .agg(F.map_from_entries(F.collect_list(F.struct("sub", "_ents"))).alias("_cb"))
-        )
-        staged = _spread(df).crossJoin(F.broadcast(packed))
+    staged = _spread(df).withColumn("_cb", F.expr(_cb_map_lit(codebooks, bb_width=d)))
     # The whole per-row encode is rendered as SQL TEXT and parsed once —
     # the nested-lambda Column form cost hundreds of Py4J round-trips of
     # plan-BUILD per query (r15 profile; see the vector-arithmetic
@@ -1029,69 +1008,30 @@ def residual_vectors(
     centroids: DataFrame,
     cell_col: str = "label",
     vec_col: str = "embedding",
-    centroid_rows: list | None = None,
 ) -> DataFrame:
     """Replace ``vec_col`` with the residual against the row's cell
     centroid (x - centroid(cell)) — the vectors FAISS IVF-PQ actually
     quantizes. Train subspace codebooks on THIS frame's output when
-    using ``ivf_pq_topk(residuals=True)``. Broadcast centroid join,
-    map-side zip_with subtraction.
+    using ``ivf_pq_topk(residuals=True)``. The row's centroid comes from
+    an in-row lookup in one literal map (see "literal packing" above):
+    no join in the plan, the corpus stays a pure projection.
 
     A row whose cell has no centroid is a centroid/assignment mismatch
-    (stale codebook, truncated centroid frame): the lookup keeps the
-    row and ``raise_error`` fails the job loudly instead of silently
-    shrinking the residual-mode corpus.
-
-    r15: with a literal-renderable cell dtype the (tiny) centroid frame
-    is collected once and the row's centroid comes from an in-row
-    LITERAL map lookup — no BroadcastExchange, no join in the plan, the
-    corpus stays a pure projection (see "literal packing" below). The
-    missing-cell error fires on `NOT map_contains_key` (plus a null
-    cell), exactly the rows the left join left unmatched. Fallback:
-    the broadcast left join. ``centroid_rows``: pre-collected
-    (cell, cvec) rows shared across callers (one collect job, not one
-    per literal builder)."""
-    ctype = dict(centroids.dtypes).get("cell")
-    if ctype in _LIT_KEY_TYPES:
-        rows = (
-            centroid_rows
-            if centroid_rows is not None
-            else centroids.select("cell", "cvec").collect()
-        )
-        if rows:
-            m_lit = "map(" + ", ".join(
-                f"{_klit(r['cell'], ctype)}, {_darr(r['cvec'])}"
-                for r in sorted(rows, key=lambda r: (r["cell"] is None, r["cell"]))
-            ) + ")"
-            cmap = F.expr(m_lit)
-            return df.withColumn(
-                vec_col,
-                F.when(
-                    F.col(cell_col).isNull() | ~F.map_contains_key(cmap, F.col(cell_col)),
-                    F.raise_error(
-                        F.concat(
-                            F.lit("residual_vectors: no centroid for cell "),
-                            F.col(cell_col).cast("string"),
-                            F.lit(" — centroid frame does not cover the assignment"),
-                        )
-                    ),
-                ).otherwise(
-                    F.zip_with(
-                        _vec(vec_col),
-                        F.element_at(cmap, F.col(cell_col)),
-                        lambda a, b: a - b,
-                    )
-                ),
-            )
-    cen = centroids.select(
-        F.col("cell").alias("_rc_cell"), F.col("cvec").alias("_rc_cvec")
+    (stale codebook, truncated centroid frame): ``raise_error`` fails
+    the job loudly on a NULL cell or `NOT map_contains_key` instead of
+    silently shrinking the residual-mode corpus. A NULL-cell centroid
+    matches no row, so the map leaves it out."""
+    ctype = _key_type(centroids, "cell")
+    ents = ", ".join(
+        f"{_klit(r['cell'], ctype)}, {_darr(r['cvec'])}"
+        for r in _by_key(_rows(centroids, "cell", "cvec"), "cell")
+        if r["cell"] is not None
     )
-    out = df.join(
-        F.broadcast(cen), F.col(cell_col) == F.col("_rc_cell"), "left"
-    ).withColumn(
+    cmap = F.expr(f"map({ents})" if ents else f"CAST(map() AS map<{ctype}, array<double>>)")
+    return df.withColumn(
         vec_col,
         F.when(
-            F.col("_rc_cell").isNull(),
+            F.col(cell_col).isNull() | ~F.map_contains_key(cmap, F.col(cell_col)),
             F.raise_error(
                 F.concat(
                     F.lit("residual_vectors: no centroid for cell "),
@@ -1100,10 +1040,9 @@ def residual_vectors(
                 )
             ),
         ).otherwise(
-            F.zip_with(_vec(vec_col), F.col("_rc_cvec"), lambda a, b: a - b)
+            F.zip_with(_vec(vec_col), F.element_at(cmap, F.col(cell_col)), lambda a, b: a - b)
         ),
     )
-    return out.drop("_rc_cell", "_rc_cvec")
 
 
 def ivf_pq_topk(
@@ -1121,7 +1060,6 @@ def ivf_pq_topk(
     codebooks: DataFrame | None = None,
     residuals: bool = False,
     rerank: int | None = None,
-    centroid_rows: list | None = None,
 ) -> DataFrame:
     """IVF-PQ approximate nearest neighbors — the standard 100 TB ANN
     layout (Jégou et al. 2011): the corpus is stored as m-subspace PQ
@@ -1130,8 +1068,9 @@ def ivf_pq_topk(
     exact query subvector against each candidate's reproduction values,
     via a per-query lookup table — never touching raw corpus vectors.
 
-    Scale shape: codebooks and the per-query distance tables are tiny
-    and broadcast; the encoded corpus (4 bytes × m per vector instead of
+    Scale shape: centroids and codebooks inline as literals (each frame
+    collected once), the per-query distance tables are tiny and
+    broadcast; the encoded corpus (4 bytes × m per vector instead of
     4 × dim floats — 8× smaller at the defaults) joins the probe set on
     its cell key, so a cell-partitioned store gives partition-pruned
     scans; scoring is an in-row m-term fold over the broadcast table.
@@ -1161,48 +1100,26 @@ def ivf_pq_topk(
     # oracle-parity); pass pq_train_subspace(...) output for FAISS-grade
     # recall (resolves structure WITHIN coarse cells)
     cbs = codebooks if codebooks is not None else pq_codebooks(centroids, m, dim)
-    # one collect of the tiny centroid frame serves every literal builder
-    # below (the residual map and the packed probe array) — one job, not
-    # one per builder (callers may pass pre-collected rows to share
-    # further, e.g. with their own residual_vectors call)
-    if centroid_rows is None and dict(centroids.dtypes).get("cell") in _LIT_KEY_TYPES:
-        centroid_rows = centroids.select("cell", "cvec").collect()
     if residuals:
         # FAISS IVFPQ proper: quantize x - centroid(cell). Raw-vector PQ
         # collapses inside well-separated cells (every member shares the
         # cell's code); residual codes resolve the within-cell geometry
         # that top-k actually ranks on. Codebooks must be trained on
         # residual_vectors(...) output.
-        enc_corpus = residual_vectors(
-            corpus, centroids, cell_col, vec_col, centroid_rows=centroid_rows
-        )
+        enc_corpus = residual_vectors(corpus, centroids, cell_col, vec_col)
     else:
         enc_corpus = corpus
-    # one collect of the tiny codebook serves both literal builders
-    # (the encode map and the ADC map) — one job instead of two
-    _cb_dts = dict(cbs.dtypes)
-    cb_rows = None
-    if _cb_dts.get("sub") in _LIT_KEY_TYPES and _cb_dts.get("cid") in _LIT_KEY_TYPES:
-        cb_rows = cbs.select("sub", "cid", "cvec_sub").collect()
     codes = pq_encode(
-        enc_corpus, cbs, m, dim, id_col=corpus_id, vec_col=vec_col,
-        keep_cols=(cell_col,), codebook_rows=cb_rows,
+        enc_corpus, cbs, m, dim, id_col=corpus_id, vec_col=vec_col, keep_cols=(cell_col,)
     )
 
     q = queries.select(F.col(query_id), _vec(vec_col).alias("_qv"))
     # probe selection: nearest coarse cells by cosine (same knob as
-    # ivf_multiprobe_topk), computed IN-ROW against one packed broadcast
-    # centroid row — per query, sort (−sim, cell) and slice n_probe.
-    # This replaces the r10 crossJoin + row_number window: no shuffle of
-    # the query set, and the tie-break (sim desc, cell asc) is identical.
-    cen_lit = _cens_lit(centroids, rows=centroid_rows)
-    if cen_lit is not None:
-        q_packed = q.withColumn("_cens", F.expr(cen_lit))
-    else:
-        cen_packed = centroids.select(
-            F.struct(F.col("cell"), F.col("cvec")).alias("_e")
-        ).groupBy().agg(F.collect_list("_e").alias("_cens"))
-        q_packed = q.crossJoin(F.broadcast(cen_packed))
+    # ivf_multiprobe_topk), computed IN-ROW against the literal centroid
+    # array — per query, sort (−sim, cell) and slice n_probe. This
+    # replaces the r10 crossJoin + row_number window: no shuffle of the
+    # query set, and the tie-break (sim desc, cell asc) is identical.
+    q_packed = q.withColumn("_cens", F.expr(_cens_lit(centroids)))
     # SQL text, parsed once (see the vector-arithmetic builders): struct
     # field order (_negsim, _cell, _cvec), the fold-form cosine and
     # -round(..., 6) give the (sim desc, cell asc) tie-break.
@@ -1224,16 +1141,8 @@ def ivf_pq_topk(
     # folded to map<sub -> map<cid -> d2_units>>. Residual mode builds
     # one table per (query, probed cell) — the query residual differs
     # per cell — still tiny (queries × n_probe × m × k_sub). Built
-    # IN-ROW against the packed broadcast codebook (no explode, no
-    # groupBy — the r10 shape shuffled the exploded query set twice).
-    cbm_lit = _cb_map_lit(cbs, rows=cb_rows)
-    if cbm_lit is None:
-        cb_packed = (
-            cbs.groupBy("sub")
-            .agg(F.array_sort(F.collect_list(F.struct("cid", "cvec_sub"))).alias("_ents"))
-            .groupBy()
-            .agg(F.map_from_entries(F.collect_list(F.struct("sub", "_ents"))).alias("_cbm"))
-        )
+    # IN-ROW against the literal codebook map (no explode, no groupBy —
+    # the r10 shape shuffled the exploded query set twice).
     if residuals:
         qbase = probes.select(
             query_id,
@@ -1253,14 +1162,9 @@ def ivf_pq_topk(
         f"transform(element_at(_cbm, s), e -> named_struct('cid', e.cid, "
         f"'_d', {_sq_l2_units_sql(_sl, 'e.cvec_sub', d)}))))"
     )
-    if cbm_lit is not None:
-        qtab = qbase.withColumn("_cbm", F.expr(cbm_lit)).select(
-            *tab_keys, tbl_expr.alias("tbl")
-        )
-    else:
-        qtab = qbase.crossJoin(F.broadcast(cb_packed)).select(
-            *tab_keys, tbl_expr.alias("tbl")
-        )
+    qtab = qbase.withColumn("_cbm", F.expr(_cb_map_lit(cbs))).select(
+        *tab_keys, tbl_expr.alias("tbl")
+    )
 
     if residuals:
         ptbl = qtab  # already keyed (query, cell)
@@ -1456,7 +1360,8 @@ def semdedup(
 
     Scale shape — the clustering exists precisely to bound the
     quadratic: pairwise cosine runs per-cluster (shuffle on cluster,
-    sort-merge self-join), never corpus x corpus; centroids broadcast;
+    sort-merge self-join), never corpus x corpus; centroids inline as
+    one literal array;
     components resolve exactly in one per-cluster union-find pass
     (operators/dedup_docs.grouped_components — edges cannot cross
     clusters, so no global iterative loop is needed).
@@ -1473,8 +1378,8 @@ def semdedup(
     `_dot_sql`; leave None when the width is not statically known."""
     from financedatabase_spark.operators.dedup_docs import grouped_components
 
-    # nearest-centroid assignment IN-ROW against one packed broadcast
-    # centroid row: per vector, argmin of (-sim, cell) over the array —
+    # nearest-centroid assignment IN-ROW against the literal centroid
+    # array: per vector, argmin of (-sim, cell) over the array —
     # the same tie-break (sim desc rounded, cell asc) as a row_number
     # window, but with NO |V| x |C| exploded intermediate and NO shuffle
     # of it (at 50x that intermediate is 3.2B rows; here it never exists)
@@ -1484,17 +1389,7 @@ def semdedup(
     # so every double is bit-identical to the windowed formulation
     v = _spread(emb).select(F.col(id_col), _vec(vec_col).alias("_e"))
     cen_lit = _cens_lit(centroids, cell_field="_cl", with_norm=True)
-    if cen_lit is not None:
-        v_packed = v.withColumn("_cens", F.expr(cen_lit))
-    else:
-        cen_packed = centroids.select(
-            F.struct(
-                F.col("cell").alias("_cl"),
-                F.col("cvec"),
-                F.expr(_l2_sql("cvec", dim)).alias("_cn"),
-            ).alias("_c0")
-        ).groupBy().agg(F.collect_list("_c0").alias("_cens"))
-        v_packed = v.crossJoin(F.broadcast(cen_packed))
+    v_packed = v.withColumn("_cens", F.expr(cen_lit))
     # SQL text, parsed once (see the vector-arithmetic builders): the
     # dim=64 unrolled dot inside this lambda alone was ~256 Py4J
     # round-trips of plan build as Column calls

@@ -4577,27 +4577,19 @@ def ivf_pq_residual_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     random-sample PQ baseline, chosen because every stage of the
     machinery then has an exact SQL twin); tests/test_ann_recall.py
     separately gates recall >= 0.9 with k-means-trained codebooks at
-    100k vectors. Scale shape: codebooks/ADC tables broadcast, the
-    encoded corpus joins probes on its cell key, the rerank fetch
-    broadcasts the (queries x 20) candidate list into a map-side probe
-    of the raw corpus — nothing rescans per query."""
+    100k vectors. Scale shape: centroids and codebooks inline as
+    literals, ADC tables broadcast, the encoded corpus joins probes on
+    its cell key, the rerank fetch broadcasts the (queries x 20)
+    candidate list into a map-side probe of the raw corpus — nothing
+    rescans per query."""
     emb = load_table(spark, sf_dir, "embeddings")
-    # the centroid frame is tiny (n_cells rows) and — with the r15
-    # literal-pack paths — is never executed as a FRAME at all: every
-    # consumer reads the pre-collected rows below and touches the frame
-    # only for its dtypes. The former localCheckpoint here was a whole
-    # extra Spark job per run (materialize, then collect from the
-    # cache); collecting straight off the lazy aggregate runs the same
-    # wide agg exactly once (r15)
+    # the centroid frame is tiny (n_cells rows) and is never executed as
+    # a FRAME: its one collect (kept on the frame object) feeds every
+    # literal builder — anchor residual map, corpus residual map, probe
+    # array. Collecting straight off the lazy aggregate runs the wide
+    # agg exactly once; a localCheckpoint here would add a job (r15)
     cen = sim.cell_centroids(emb, dim=64)
-    # one collect of the 8-row centroid table feeds EVERY literal builder
-    # (anchor residual map, corpus residual map, packed probe array) —
-    # one driver job instead of three (r15; the literal-pack rewrite left
-    # each builder collecting its own copy of the same checkpoint)
-    cen_rows = cen.select("cell", "cvec").collect()
-    anchors = sim.residual_vectors(
-        emb.filter(F.col("vec_id") < 8), cen, centroid_rows=cen_rows
-    )
+    anchors = sim.residual_vectors(emb.filter(F.col("vec_id") < 8), cen)
     # no checkpoint on the codebooks: their ONLY consumer is the one-time
     # 64-row collect inside ivf_pq_topk (the literal pack), so an eager
     # materialization job here bought nothing (r15; saved one Spark job)
@@ -4612,5 +4604,5 @@ def ivf_pq_residual_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = emb.select(F.col("vec_id").alias("corpus_id"), "label", "embedding")
     return sim.ivf_pq_topk(
         queries, corpus, cen, m=8, dim=64, k=5, n_probe=2,
-        codebooks=cbs, residuals=True, rerank=20, centroid_rows=cen_rows,
+        codebooks=cbs, residuals=True, rerank=20,
     )

@@ -191,13 +191,12 @@ def stream_state_partitions(spark: SparkSession) -> int:
 
 def _local_input_bytes(df: DataFrame) -> int:
     """Total on-disk bytes of the frame's input files, when every input is
-    a local file we can stat (the bench/test layout); 0 = unknown."""
-    try:
-        files = df.inputFiles()
-    except Exception:
+    a local file we can stat (the bench/test layout); 0 = unknown.
+    `inputFiles()` raises only on a streaming frame."""
+    if df.isStreaming:
         return 0
     total = 0
-    for p in files:
+    for p in df.inputFiles():
         if p.startswith("file:"):
             local = "/" + p[5:].lstrip("/")
         elif p.startswith("/"):

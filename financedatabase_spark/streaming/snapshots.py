@@ -57,11 +57,12 @@ def latest_state_stream(
     key_cols: list[str],
     ts_col: str = "ts",
     value_cols: list[str] | None = None,
-    watermark_delay: str = "10 minutes",
 ) -> DataFrame:
     """R1 — per-key latest-state view: max_by over the stream keyed on the
     snapshot keys; emit with outputMode('update') for a live quote board
-    (reference polling snapshots: v2.py:456-524)."""
+    (reference polling snapshots: v2.py:456-524). No watermark: the
+    group-by has no event-time key, so one would never evict state in
+    update or complete mode — every key's latest row is kept."""
     value_cols = value_cols or [
         c for c in stream.columns if c not in key_cols and c != ts_col
     ]
@@ -70,7 +71,6 @@ def latest_state_stream(
     ]
     return (
         _watermarkable(stream, ts_col)
-        .withWatermark(ts_col, watermark_delay)
         .groupBy(*key_cols)
         .agg(*aggs)
     )

@@ -1473,9 +1473,9 @@ def test_cell_centroids_wide_agg_matches_explode(spark):
 
 
 def test_semdedup_literal_pack_matches_broadcast(spark):
-    """r15: the literal-packed centroid array (int-typed cells) must
-    produce the same verdicts as the broadcast-packed fallback, which a
-    string-typed cell column still exercises."""
+    """The literal centroid array renders int-typed and double-typed
+    cells alike: both packs give the same verdicts (double-typed cells
+    once took a broadcast-packed crossJoin instead)."""
     from financedatabase_spark.operators.similarity import cell_centroids, semdedup
 
     def vec(*xs):
@@ -1497,8 +1497,6 @@ def test_semdedup_literal_pack_matches_broadcast(spark):
         .select("vec_id", "cluster", "cosine_to_centroid", "group_rep", "keep")
         .collect()
     }
-    # a double-typed cell column is outside _LIT_KEY_TYPES, forcing the
-    # broadcast-packed fallback branch
     df_s = df.withColumn("label", F.col("label").cast("double"))
     cen_s = cell_centroids(df_s)
     fb = {
@@ -1511,9 +1509,9 @@ def test_semdedup_literal_pack_matches_broadcast(spark):
 
 
 def test_ivf_pq_literal_pack_matches_broadcast(spark):
-    """r15: ivf_pq_topk with literal-packed centroid/codebook frames
-    (int cells) equals the broadcast-packed fallback (double cells are
-    outside _LIT_KEY_TYPES, so both packed frames take the old path)."""
+    """ivf_pq_topk over int-keyed and double-keyed centroid/codebook
+    frames: two literal packs, one result (double keys once took a
+    broadcast-packed crossJoin path)."""
     from financedatabase_spark.operators.similarity import ivf_pq_topk
 
     import random
@@ -1542,6 +1540,164 @@ def test_ivf_pq_literal_pack_matches_broadcast(spark):
         for r in ivf_pq_topk(q, c_s, cen_s, m=4, dim=8, k=3, n_probe=2).collect()
     }
     assert lit == fb
+
+
+def _packed_frame_fixture(spark):
+    """Two clusters of 8-d vectors (vec_id, label int, embedding)."""
+    import random
+
+    rnd = random.Random(17)
+    rows = [
+        (i, i % 2, [rnd.uniform(-1, 1) + 2 * (i % 2) for _ in range(8)])
+        for i in range(40)
+    ]
+    # three near-copies in each cluster, so semdedup has groups to prune
+    rows += [(100 + i, i % 2, [x + 1e-4 for x in rows[i][2]]) for i in range(6)]
+    return spark.createDataFrame(rows, "vec_id long, label int, embedding array<double>")
+
+
+def _broadcast_nodes(plan: str) -> tuple[int, int, int]:
+    return (
+        plan.count("BroadcastExchange"),
+        plan.count("CartesianProduct"),
+        plan.count("BroadcastNestedLoopJoin"),
+    )
+
+
+@pytest.mark.parametrize(
+    "sql_type, keys",
+    [
+        ("double", {0: 0.5, 1: 1.5}),
+        ("string", {0: "cell'0", 1: "cell'1"}),
+        ("date", {0: "2024-01-01", 1: "2024-01-02"}),
+        ("decimal(10,2)", {0: "0.50", 1: "1.50"}),
+        ("boolean", {0: False, 1: True}),
+    ],
+)
+def test_literal_pack_key_types_match_int_keys(spark, monkeypatch, sql_type, keys):
+    """Every key dtype with an exact literal renders into the one literal
+    pack: ivf_pq_topk and semdedup over typed cell keys equal the
+    int-keyed results, and neither plan gains a broadcast, cartesian or
+    nested-loop node for the packed centroid/codebook frame (the
+    semdedup assignment is read off the plan its barrier checkpoints)."""
+    import financedatabase_spark.session as session
+    from financedatabase_spark.operators.similarity import (
+        cell_centroids,
+        ivf_pq_topk,
+        semdedup,
+    )
+
+    barrier_plans = []
+    real_barrier = session.barrier
+
+    def spy(df, *a, **kw):
+        barrier_plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return real_barrier(df, *a, **kw)
+
+    monkeypatch.setattr(session, "barrier", spy)
+
+    df = _packed_frame_fixture(spark)
+    key = F.create_map(*[x for k, v in keys.items() for x in (F.lit(k), F.lit(v))])
+    df_t = df.withColumn("label", key[F.col("label")].cast(sql_type))
+    back = {str(v): k for k, v in keys.items()}  # str of the collected key
+
+    def run(frame):
+        cen = cell_centroids(frame)
+        q = frame.filter(F.col("vec_id") % 10 == 0).select(
+            F.col("vec_id").alias("query_id"), "embedding"
+        )
+        c = frame.select(F.col("vec_id").alias("corpus_id"), "label", "embedding")
+        topk = ivf_pq_topk(q, c, cen, m=4, dim=8, k=3, n_probe=1)
+        pq = {tuple(r) for r in topk.collect()}
+        pq_plan = topk._jdf.queryExecution().executedPlan().toString()
+        sd = semdedup(frame, cen, tau=0.99)
+        dd = {
+            (r["vec_id"], str(r["cluster"]), r["cosine_to_centroid"], r["group_rep"], r["keep"])
+            for r in sd.collect()
+        }
+        sd_plan = barrier_plans[-1] + sd._jdf.queryExecution().executedPlan().toString()
+        return pq, dd, pq_plan, sd_plan
+
+    pq_i, sd_i, pq_plan_i, sd_plan_i = run(df)
+    pq_t, sd_t, pq_plan_t, sd_plan_t = run(df_t)
+    assert pq_t == pq_i and len(pq_i) == 15
+    assert {(i, str(back[c]), s, g, k) for i, c, s, g, k in sd_t} == sd_i
+    assert not all(k for *_, k in sd_i)  # some near-copy was pruned
+    for typed, plain in ((pq_plan_t, pq_plan_i), (sd_plan_t, sd_plan_i)):
+        assert _broadcast_nodes(typed) == _broadcast_nodes(plain)
+        assert _broadcast_nodes(typed)[1:] == (0, 0)
+
+
+def test_literal_pack_rejects_key_type_without_literal(spark):
+    """A key dtype with no exact SQL literal fails at build time with a
+    TypeError that names it, never silently."""
+    from financedatabase_spark.operators.similarity import ivf_pq_topk, semdedup
+
+    df = _packed_frame_fixture(spark)
+    cen = spark.createDataFrame(
+        [(b"\x00", [0.0] * 8)], "cell binary, cvec array<double>"
+    )
+    q = df.select(F.col("vec_id").alias("query_id"), "embedding")
+    c = df.select(F.col("vec_id").alias("corpus_id"), "label", "embedding")
+    with pytest.raises(TypeError, match="'binary'"):
+        ivf_pq_topk(q, c, cen, m=4, dim=8)
+    with pytest.raises(TypeError, match="'binary'"):
+        semdedup(df, cen.limit(0))
+
+
+def test_literal_pack_empty_frames(spark):
+    """Empty centroid / codebook frames render as typed empty literals:
+    no probe cell (an empty top-k), no cluster (every vector keeps
+    itself), NULL codes, and residuals fail loudly for every row."""
+    from financedatabase_spark.operators.similarity import (
+        ivf_pq_topk,
+        pq_encode,
+        residual_vectors,
+        semdedup,
+    )
+
+    df = _packed_frame_fixture(spark)
+    cen = spark.createDataFrame([], "cell int, cvec array<double>")
+    cbs = spark.createDataFrame([], "sub int, cid bigint, cvec_sub array<double>")
+    q = df.select(F.col("vec_id").alias("query_id"), "embedding")
+    c = df.select(F.col("vec_id").alias("corpus_id"), "label", "embedding")
+    assert ivf_pq_topk(q, c, cen, m=4, dim=8).collect() == []
+    assert ivf_pq_topk(q, c, cen, m=4, dim=8, codebooks=cbs).collect() == []
+    out = semdedup(df, cen).collect()
+    assert len(out) == df.count()
+    assert all(
+        r["cluster"] is None and r["cosine_to_centroid"] is None
+        and r["group_rep"] == r["vec_id"] and r["keep"]
+        for r in out
+    )
+    codes = pq_encode(df, cbs, 4, 8).collect()
+    assert len(codes) == df.count()
+    assert all(list(r["codes"]) == [None] * 4 for r in codes)
+    with pytest.raises(Exception, match="no centroid for cell"):
+        residual_vectors(df, cen).collect()
+
+
+@pytest.mark.parametrize("name, budget", [("ivf_pq_topk", 1), ("ivf_pq_residual_rerank_topk", 3)])
+def test_ivf_pq_build_job_budget(spark, sf_dir, name, budget):
+    """A warm build of the IVF-PQ queries collects each tiny centroid /
+    codebook frame once and runs no other job. ivf_pq_topk's
+    session-memoized centroid frame keeps its collected rows, so a
+    rebuild collects only its fresh codebook frame (one job). The
+    residual rerank query collects its centroid aggregate once for both
+    residual maps and the probe array (a shuffle-map job and a result
+    job), then its codebook frame (one job)."""
+    from financedatabase_spark.plans.registry import QUERIES
+
+    sc = spark.sparkContext
+    QUERIES[name](spark, sf_dir)
+    group = f"build-budget-{name}"
+    sc.setJobGroup(group, "build")
+    try:
+        QUERIES[name](spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= budget
 
 
 def test_scd2_build_hand_computed(spark):
@@ -1801,8 +1957,8 @@ def test_semdedup_mega_cluster_guard(spark):
 def test_residual_vectors_missing_centroid_raises(spark):
     """A row whose cell is absent from the centroid frame is a
     centroid/assignment mismatch: residual_vectors must fail loudly
-    (raise_error through the left join), never silently drop the row the
-    way an inner join would shrink the residual-mode corpus."""
+    (raise_error on the literal map lookup), never silently drop the
+    row the way an inner join would shrink the residual-mode corpus."""
     from py4j.protocol import Py4JJavaError
 
     from financedatabase_spark.operators.similarity import residual_vectors
@@ -1968,7 +2124,8 @@ def test_pq_sql_text_builders_exact(spark):
        plus the NULL contract: a short array or a NULL element gives
        NULL (the single-operand fold norm has no length to fall short
        of, so it is the short array's own norm);
-    2. `pq_encode` codes ((aa + bb - 2.0*ab)*1e6 + 0.5, floor)."""
+    2. `pq_encode` codes ((aa + bb - 2.0*ab)*1e6 + 0.5, floor);
+    3. the same over a codebook with short, long and NULL entries."""
     import math
     import random
 
@@ -1986,7 +2143,7 @@ def test_pq_sql_text_builders_exact(spark):
         elif len(a) < n or len(b) < n:
             return None  # get() is NULL out of bounds
         acc = 0.0
-        for x, y in zip(a, b):
+        for x, y in zip(a[:n], b[:n]):
             if x is None or y is None:
                 return None
             acc = acc + x * y
@@ -2039,52 +2196,64 @@ def test_pq_sql_text_builders_exact(spark):
     assert null_a == (None,) * 8
     assert null_b[0::4] == null_b[2::4] == null_b[3::4] == (None, None)
 
-    # 2. pq_encode codes vs the pure-Python replay
+    # 2. pq_encode codes vs the pure-Python replay: per subspace the
+    # argmin of (d2, cid), where a NULL d2 sorts first, as Spark orders
+    # a struct's NULL field
     m, d = 4, 2
     cen = sim.cell_centroids(df)
-    cen_rows = cen.select("cell", "cvec").collect()
-    anchors = sim.residual_vectors(
-        df.filter(F.col("vec_id") < 4), cen, centroid_rows=cen_rows
-    )
+    anchors = sim.residual_vectors(df.filter(F.col("vec_id") < 4), cen)
     cbs = sim.pq_codebooks(
         anchors.select(F.col("vec_id").alias("cell"), F.col("embedding").alias("cvec")),
         m=m, dim=8,
     )
-    cb_rows = cbs.select("sub", "cid", "cvec_sub").collect()
     enc = sim.residual_vectors(
-        df.select(F.col("vec_id").alias("corpus_id"), "label", "embedding"),
-        cen, centroid_rows=cen_rows,
+        df.select(F.col("vec_id").alias("corpus_id"), "label", "embedding"), cen
     )
-    got = {
-        r["corpus_id"]: list(r["codes"])
-        for r in sim.pq_encode(
-            enc, cbs, m, 8, id_col="corpus_id", codebook_rows=cb_rows
-        ).collect()
-    }
+    enc_rows = enc.collect()
 
-    by_sub = {}
-    for e in cb_rows:
-        by_sub.setdefault(e["sub"], []).append(e)
-    want = {}
-    for r in enc.collect():
-        v = list(r["embedding"])
-        codes = []
-        for s in range(m):
-            sl = v[s * d:(s + 1) * d]
-            aa = 0.0
-            for x in sl:
-                aa = aa + x * x
-            best = None
-            for e in sorted(by_sub[s], key=lambda e: e["cid"]):
-                bb = 0.0
-                for x in e["cvec_sub"]:
-                    bb = bb + x * x
-                ab = 0.0
-                for x, y in zip(sl, e["cvec_sub"]):
-                    ab = ab + x * y
-                key = (math.floor((aa + bb - 2.0 * ab) * 1e6 + 0.5), e["cid"])
-                if best is None or key < best:
-                    best = key
-            codes.append(best[1])
-        want[r["corpus_id"]] = codes
+    def replay(codebooks):
+        by_sub = {}
+        for e in codebooks.collect():
+            by_sub.setdefault(e["sub"], []).append(e)
+        want = {}
+        for r in enc_rows:
+            v = list(r["embedding"])
+            codes = []
+            for s in range(m):
+                sl = v[s * d:(s + 1) * d]
+                best = None
+                for e in by_sub[s]:
+                    d2 = None if e["cvec_sub"] is None else runits(sl, e["cvec_sub"], d)
+                    key = (d2 is not None, d2 or 0, e["cid"])
+                    if best is None or key < best:
+                        best = key
+                codes.append(best[2])
+            want[r["corpus_id"]] = codes
+        return want
+
+    def encode(codebooks):
+        return {
+            r["corpus_id"]: list(r["codes"])
+            for r in sim.pq_encode(enc, codebooks, m, 8, id_col="corpus_id").collect()
+        }
+
+    got, want = encode(cbs), replay(cbs)
     assert got == want
+
+    # 3. a mixed-width codebook: the entry self-dot keeps _dot_sql(v, v, d)
+    # semantics — the first d elements; NULL for a short or NULL entry
+    # or a NULL element
+    e10 = next(list(r["embedding"]) for r in enc_rows if r["corpus_id"] == 10)
+    mixed = spark.createDataFrame(
+        [tuple(r) for r in cbs.collect()] + [
+            (0, 100, None),
+            (1, 101, e10[2:3]),
+            (2, 102, e10[4:6] + [5.0]),
+            (3, 103, [e10[6], None]),
+        ],
+        "sub int, cid bigint, cvec_sub array<double>",
+    )
+    got, want = encode(mixed), replay(mixed)
+    assert got == want
+    assert want[10][2] == 102  # the long entry's first d elements match row 10
+    assert {w[0] for w in want.values()} == {100}  # NULL d2 sorts first

@@ -151,6 +151,36 @@ def test_spread_skips_shuffle_for_multifile_scans(spark, sf_dir, tmp_path):
     assert "roundrobin" not in buf.getvalue().lower()
 
 
+def test_input_files_guard_over_frame_kinds(spark, sf_dir):
+    """`_spread` and `session._local_input_bytes` read `inputFiles()`
+    without catching: it lists the files of a scan, lists none for a
+    Python-RDD, range, VALUES or checkpointed frame, and raises only on a
+    streaming frame, which both check for first."""
+    import os
+
+    from financedatabase_spark.operators.dedup_docs import _spread
+    from financedatabase_spark.session import _local_input_bytes
+
+    path = os.path.join(sf_dir, "region.parquet")
+    scan = spark.read.parquet(path)
+    files = scan.inputFiles()
+    assert files
+    assert _local_input_bytes(scan) == sum(os.path.getsize(f.removeprefix("file:")) for f in files)
+    kinds = {
+        "python_rdd": spark.createDataFrame(spark.sparkContext.parallelize([(1,)]), "x int"),
+        "range": spark.range(4),
+        "values": spark.sql("SELECT * FROM VALUES (1), (2) AS t(x)"),
+        "checkpoint": spark.range(4).localCheckpoint(),
+        "stream": spark.readStream.format("rate").load(),
+    }
+    for name, df in kinds.items():
+        if not df.isStreaming:
+            assert df.inputFiles() == [], name
+        assert _local_input_bytes(df) == 0, name
+        assert _spread(df) is not df, name  # no files: spread explicitly
+    assert _spread(scan).rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+
+
 def test_hard_negative_anchors_broadcast(spark, sf_dir):
     # the anchor set must broadcast into the label-mismatch join so the
     # corpus is scored map-side in one pass (BroadcastNestedLoopJoin IS

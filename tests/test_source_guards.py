@@ -1,0 +1,62 @@
+"""Source-level guards over the package, run without Spark."""
+
+import ast
+import os
+import subprocess
+import sys
+
+PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "financedatabase_spark")
+
+
+def _is_broad(handler_type) -> bool:
+    if handler_type is None:
+        return True  # bare except
+    names = handler_type.elts if isinstance(handler_type, ast.Tuple) else [handler_type]
+    return any(
+        isinstance(n, ast.Name) and n.id in ("Exception", "BaseException") for n in names
+    )
+
+
+def test_no_silently_swallowed_broad_exceptions():
+    """No handler for Exception, BaseException or a bare except may have
+    a body of only `pass`: a failure on a hot path must surface, be
+    logged, or be caught by its specific type."""
+    found = []
+    for root, _, files in os.walk(PKG):
+        for f in files:
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(root, f)
+            with open(path) as fh:
+                tree = ast.parse(fh.read(), path)
+            for node in ast.walk(tree):
+                if (
+                    isinstance(node, ast.ExceptHandler)
+                    and _is_broad(node.type)
+                    and all(isinstance(st, ast.Pass) for st in node.body)
+                ):
+                    found.append(f"{os.path.relpath(path, PKG)}:{node.lineno}")
+    assert not found, f"silently swallowed broad exceptions at {found}"
+
+
+def test_registry_order_independent_of_import_order():
+    """QUERIES and ORACLE_SQL come out in one order whether a query
+    module or the registry is imported first."""
+    probe = (
+        "{first}\n"
+        "from financedatabase_spark.plans.registry import ORACLE_SQL, QUERIES\n"
+        "print(len(QUERIES), list(QUERIES), list(ORACLE_SQL))\n"
+    )
+    outs = [
+        subprocess.run(
+            [sys.executable, "-c", probe.format(first=first)],
+            cwd=os.path.dirname(PKG), capture_output=True, text=True, check=True,
+        ).stdout
+        for first in (
+            "import financedatabase_spark.plans.queries_documents",
+            "import financedatabase_spark.plans.queries_streaming",
+            "import financedatabase_spark.plans.registry",
+        )
+    ]
+    assert outs[0] == outs[1] == outs[2]
+    assert int(outs[0].split()[0]) >= 165
