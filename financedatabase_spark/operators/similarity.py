@@ -16,6 +16,8 @@ At 100 TB the corpus side is hash-partitioned by cell id; probes broadcast.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -465,16 +467,15 @@ def ivf_multiprobe_topk(
     corpus_id: str = "corpus_id",
     vec_col: str = "embedding",
     cell_col: str = "label",
-    centroid_cell_col: str = "cell",
-    centroid_vec_col: str = "cvec",
     round_digits: int | None = 6,
     vectorized: bool | str = "auto",
     block_rows: int = 200_000,
 ) -> DataFrame:
     """Multi-probe IVF ANN: each query visits its ``n_probe`` nearest
     coarse-quantizer cells instead of one — the FAISS nprobe recall knob.
-    The codebook is broadcast (it is tiny: n_cells x dim), probe selection
-    is a map-side top-n over the broadcast, and the corpus join stays a
+    The codebook (``centroids``: cell, cvec — tiny, n_cells x dim) is
+    collected once and inlined as one literal, probe selection is an
+    in-row top-n over it (`_nearest_cells`), and the corpus join stays a
     cell equi-join, so scanned volume grows linearly in n_probe while the
     plan shape — partition-prunable on a cell-partitioned corpus — is
     unchanged from single-probe `ivf_topk`. Scoring itself runs on the
@@ -483,22 +484,8 @@ def ivf_multiprobe_topk(
     corpus plan-stats size like `ivf_topk`)."""
     vectorized = _resolve_vectorized(vectorized, corpus)
     q = queries.select(F.col(query_id), _vec(vec_col).alias("_qv"))
-    cen = centroids.select(
-        F.col(centroid_cell_col).alias("_cell"), F.col(centroid_vec_col).alias("_cvec")
-    )
-    csim = _cosine_sql("_qv", "_cvec")
-    if round_digits:
-        csim = f"round({csim}, {round_digits})"
-    probe_scored = q.crossJoin(F.broadcast(cen)).select(
-        query_id, "_qv", "_cell", F.expr(csim).alias("_csim")
-    )
-    wp = Window.partitionBy(query_id).orderBy(
-        F.col("_csim").desc(), F.col("_cell").asc()
-    )
-    probes = (
-        probe_scored.withColumn("_pn", F.row_number().over(wp))
-        .filter(F.col("_pn") <= n_probe)
-        .select(query_id, "_qv", "_cell")
+    probes = _nearest_cells(q, "_qv", centroids, n_probe, round_digits=round_digits).select(
+        query_id, "_qv", "_cell"
     )
     # cells partition the corpus, so no (query, doc) pair repeats across probes
     if vectorized:
@@ -674,61 +661,6 @@ def dequantize_int8(codes: DataFrame, rng: DataFrame) -> DataFrame:
     )
 
 
-def _assign_to_codebook(
-    v: DataFrame,
-    centroids: DataFrame,
-    id_col: str,
-    round_digits: int = 6,
-) -> DataFrame:
-    """Nearest-centroid assignment under cosine: broadcast the codebook,
-    score map-side, keep each vector's argmax (ties break on cell asc).
-    ``v`` carries (id, _v, _n).
-
-    The argmax is a ``max_by`` aggregation, not a window: the partial
-    aggregate collapses each vector's k candidate rows to one inside the
-    map task (the broadcast join never reshuffles the corpus), so the
-    only exchange is one row per vector — a window over
-    ``partitionBy(id)`` would instead shuffle all k scored copies of
-    every vector per iteration. Tie-break (max sim, then min cell) is
-    encoded in the ordering struct as (sim, -cell)."""
-    cen = centroids.select(
-        F.col("cell"), F.col("cvec"), F.expr(_l2_sql("cvec")).alias("_cn")
-    )
-    sim = F.expr(f"round({_dot_sql('_v', 'cvec')} / (_n * _cn), {round_digits})")
-    best = (
-        v.crossJoin(F.broadcast(cen))
-        .select(id_col, "_v", "_n", "cell", sim.alias("sim"))
-        .groupBy(id_col)
-        .agg(
-            F.max_by(
-                F.struct("_v", "_n", "cell", "sim"),
-                F.struct(F.col("sim"), (-F.col("cell")).alias("_negcell")),
-            ).alias("_best")
-        )
-    )
-    return best.select(
-        id_col,
-        F.col("_best._v").alias("_v"),
-        F.col("_best._n").alias("_n"),
-        F.col("_best.cell").alias("cell"),
-        F.col("_best.sim").alias("sim"),
-    )
-
-
-def _centroids_of_assignment(assign: DataFrame) -> DataFrame:
-    """Recompute the codebook from an assignment — exact integer-unit
-    element-wise means, identical math to `cell_centroids`."""
-    flat = assign.select("cell", F.posexplode(F.col("_v")).alias("pos", "x"))
-    cmeans = flat.groupBy("cell", "pos").agg(
-        (F.sum(F.floor(F.col("x") * F.lit(1e6) + F.lit(0.5)).cast("long")).cast("double") / F.lit(1e6) / F.count("*")).alias("m")
-    )
-    return (
-        cmeans.groupBy("cell")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("_pm"))
-        .select("cell", F.transform(F.col("_pm"), lambda s: s.getField("m")).alias("cvec"))
-    )
-
-
 def kmeans_refine(
     df: DataFrame,
     iters: int = 2,
@@ -741,28 +673,23 @@ def kmeans_refine(
     chained DataFrame stages (spherical variant: cosine assignment,
     mean-vector update).
 
-    Every iteration is one broadcast of the tiny codebook, a map-side
-    partial argmax over the corpus (``max_by`` — the k candidate rows
-    per vector collapse inside the map task), one exchange of a single
-    row per vector, and one (cell, pos) shuffle of exploded dims — the
+    Every iteration collects the tiny codebook once and inlines it as one
+    literal (see "literal packing" below), assigns each vector to its
+    nearest centroid in-row (`_nearest_cells`: no join, no exchange of
+    the corpus), and recomputes the codebook with `cell_centroids` over
+    the assignment — one (cell, pos) shuffle of exploded dims. The
     corpus is never shuffled k-fold, so the loop scales to 100 TB with
     per-iteration cost linear in corpus bytes.
     Fully deterministic across engines: decimal-exact centroid means,
     1e-6-rounded similarities, cell-asc tie-break. Empty cells drop out
     of the codebook (standard Lloyd behavior). Returns the final
     assignment (id, assigned_label, sim)."""
-    v = (
-        _spread(df)
-        .select(F.col(id_col), _vec(vec_col).alias("_v"))
-        .withColumn("_n", F.expr(_l2_sql("_v")))
-    )
-    cen = cell_centroids(df, cell_col, vec_col)
-    assign = _assign_to_codebook(v, cen, id_col)
+    v = _spread(df).select(F.col(id_col), _vec(vec_col).alias("_v"))
+    assign = _nearest_cells(v, "_v", cell_centroids(df, cell_col, vec_col), 1)
     for _ in range(iters - 1):
-        cen = _centroids_of_assignment(assign)
-        assign = _assign_to_codebook(v, cen, id_col)
+        assign = _nearest_cells(v, "_v", cell_centroids(assign, "_cell", "_v"), 1)
     return assign.select(
-        id_col, F.col("cell").alias("assigned_label"), F.col("sim")
+        id_col, F.col("_cell").alias("assigned_label"), F.col("_csim").alias("sim")
     )
 
 
@@ -779,10 +706,17 @@ def kmeans_refine(
 # (`_klit`); any other raises TypeError, and an empty frame gives a typed
 # empty array/map. Exactness: values round-trip driver-side as Python
 # floats (IEEE doubles) rendered with repr() — the shortest string that
-# reparses to the same double — and every DERIVED number (entry
-# self-dots, centroid norms) is rendered as a constant-foldable
-# arithmetic EXPRESSION in the original fold order, so it is still the
-# JVM computing each double, never Python.
+# reparses to the same double. PQ entry self-dots are rendered as
+# constant-foldable arithmetic EXPRESSIONS in the original fold order;
+# centroid norms are folded driver-side in the same order (`_norm`),
+# because their unfolded expressions (dim terms per centroid) held
+# enough plan memory at 500 cells x 64 dims to fail a later broadcast
+# on a default 1 GB driver. Ranking over a packed frame
+# (`_nearest_cells`, `pq_encode`'s argmin) leads every ordering struct
+# with a `_nul` flag — the score IS NULL — because array_min/array_sort
+# order a struct's NULL field FIRST: a NULL score (a NULL, NULL-element
+# or short centroid or entry) ranks LAST, after every real one, as the
+# oracle's ORDER BY … DESC / ASC NULLS LAST does.
 
 
 def _rows(df: DataFrame, *cols: str) -> list:
@@ -868,24 +802,83 @@ def _selfdot_sql(xs) -> str:
     return f"({acc})"
 
 
-def _cens_lit(centroids: DataFrame, cell_field: str = "cell", with_norm: bool = False) -> str:
+def _norm(xs) -> float | None:
+    """‖xs‖ driver-side in `_l2_sql`'s fold order: sqrt(0.0 + x0*x0 +
+    x1*x1 + …), None for a NULL array or element. Python floats are IEEE
+    doubles and both sides round sqrt correctly, so this is the double
+    the JVM fold gives."""
+    if xs is None or any(x is None for x in xs):
+        return None
+    acc = 0.0
+    for x in xs:
+        acc = acc + x * x
+    return math.sqrt(acc)
+
+
+def _cens_lit(centroids: DataFrame) -> str:
     """The centroid frame (cell, cvec) as one literal SQL expression:
-    array(named_struct('<cell_field>', …, 'cvec', array(…)[, '_cn',
-    sqrt(…)])) sorted by cell (every consumer is order-insensitive —
-    array_min / array_sort downstream). ``with_norm`` adds the centroid
-    L2 norm as a constant-foldable sqrt(sum-of-squares) expression in
-    `_l2_sql`'s exact fold order."""
+    array(named_struct('cell', …, 'cvec', array(…), '_cn', …)) sorted by
+    cell (every consumer is order-insensitive — array_min / array_sort
+    downstream). ``_cn`` is the centroid's L2 norm (`_norm`)."""
     ctype = _key_type(centroids, "cell")
-    parts = []
-    for r in _by_key(_rows(centroids, "cell", "cvec"), "cell"):
-        fields = f"'{cell_field}', {_klit(r['cell'], ctype)}, 'cvec', {_darr(r['cvec'])}"
-        if with_norm:
-            fields += f", '_cn', sqrt({_selfdot_sql(r['cvec'])})"
-        parts.append(f"named_struct({fields})")
+    parts = [
+        f"named_struct('cell', {_klit(r['cell'], ctype)}, 'cvec', {_darr(r['cvec'])}, "
+        f"'_cn', {_dlit(_norm(r['cvec']))})"
+        for r in _by_key(_rows(centroids, "cell", "cvec"), "cell")
+    ]
     if not parts:
-        norm = ", _cn: double" if with_norm else ""
-        return f"CAST(array() AS array<struct<{cell_field}: {ctype}, cvec: array<double>{norm}>>)"
+        return f"CAST(array() AS array<struct<cell: {ctype}, cvec: array<double>, _cn: double>>)"
     return "array(" + ", ".join(parts) + ")"
+
+
+def _nearest_cells(
+    df: DataFrame,
+    vec_sql: str,
+    centroids: DataFrame,
+    n: int,
+    dim: int | None = None,
+    round_digits: int | None = 6,
+) -> DataFrame:
+    """Each row's ``n`` nearest centroids by cosine, ranked IN-ROW over
+    the literal centroid array — the one nearest-centroid assignment
+    behind IVF probing, k-means and SemDeDup. Per centroid the
+    similarity s = round(<v, c> / (‖v‖ · ‖c‖), round_digits) (unrounded
+    for ``round_digits=None``) keys the struct (s IS NULL, -s, cell,
+    cvec), so the order is NULL similarity last, then similarity desc,
+    then cell asc — the oracle's ORDER BY sim DESC, cell ASC, whose
+    DESC puts NULLs last. ``n == 1`` takes the array_min (one row per
+    input row; NULL cell and similarity when there is no centroid);
+    ``n > 1`` explodes the first n of the sorted keys. No |V| × |C|
+    intermediate exists and the input is never shuffled.
+
+    Both norms are hoisted: ‖c‖ is folded into the literal, ‖v‖ is
+    computed once per row as ``_vn``, and the quotient has
+    `_cosine_sql`'s operands in its order, so every double matches the
+    un-hoisted cosine. ``dim`` (the vectors' known width) selects the
+    unrolled dot (see `_dot_sql`). Adds ``_vn``, ``_cell``, ``_cvec``
+    and ``_csim`` to ``df``'s columns."""
+    sim = f"{_dot_sql(vec_sql, 'c.cvec', dim)} / (_vn * c._cn)"
+    if round_digits is not None:
+        sim = f"round({sim}, {round_digits})"
+    # s is computed once per centroid in the inner transform: lambda
+    # bodies get no common-subexpression elimination
+    keys = (
+        f"transform(transform({_cens_lit(centroids)}, c -> named_struct("
+        f"'s', {sim}, 'cell', c.cell, 'cvec', c.cvec)), e -> named_struct("
+        f"'_nul', e.s IS NULL, '_negsim', -e.s, 'cell', e.cell, 'cvec', e.cvec))"
+    )
+    pick = f"array_min({keys})" if n == 1 else f"explode(slice(array_sort({keys}), 1, {n}))"
+    return (
+        df.withColumn("_vn", F.expr(_l2_sql(vec_sql, dim)))
+        .select("*", F.expr(pick).alias("_nc"))
+        .select(
+            *df.columns,
+            "_vn",
+            F.col("_nc.cell").alias("_cell"),
+            F.col("_nc.cvec").alias("_cvec"),
+            F.expr("-_nc._negsim").alias("_csim"),
+        )
+    )
 
 
 def _cb_map_lit(codebooks: DataFrame, bb_width: int | None = None) -> str:
@@ -931,21 +924,29 @@ def pq_codebooks(centroids: DataFrame, m: int, dim: int) -> DataFrame:
     centroids (the standard cheap PQ train when cells already cluster
     the corpus — each cell centroid's m-th slice is one reproduction
     value for subspace m). Output (sub, cid, cvec_sub); tiny
-    (m × n_cells rows), inlined as one literal by its consumers."""
+    (m × n_cells rows), inlined as one literal by its consumers.
+
+    The slices are cut from the centroid frame's collected rows (`_rows`:
+    a memoized centroid frame is collected once for its own literal and
+    for its codebook) into a VALUES relation of exact literals, so the
+    codebook's own collect runs no Spark job."""
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m {m}")
     d = dim // m
-    return centroids.select(
-        F.col("cell").alias("cid"),
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(m - 1)),
-                lambda s: F.struct(
-                    s.alias("sub"), F.slice("cvec", s * d + 1, d).alias("cvec_sub")
-                ),
-            )
-        ).alias("_sc"),
-    ).select(F.col("_sc.sub").alias("sub"), "cid", F.col("_sc.cvec_sub").alias("cvec_sub"))
+    ctype = _key_type(centroids, "cell")
+    spark = centroids.sparkSession
+    vals = ", ".join(
+        f"({s}, {_klit(r['cell'], ctype)}, "
+        f"{_darr(None if r['cvec'] is None else r['cvec'][s * d:(s + 1) * d])})"
+        for r in _rows(centroids, "cell", "cvec")
+        for s in range(m)
+    )
+    if not vals:
+        return spark.sql(
+            f"SELECT CAST(NULL AS INT) AS sub, CAST(NULL AS {ctype}) AS cid, "
+            "CAST(NULL AS ARRAY<DOUBLE>) AS cvec_sub WHERE FALSE"
+        )
+    return spark.sql(f"SELECT * FROM VALUES {vals} AS t(sub, cid, cvec_sub)")
 
 
 def pq_encode(
@@ -965,7 +966,8 @@ def pq_encode(
     Scale shape: the codebook (m × k rows) inlines as ONE literal map
     <sub → sorted entries> (see "literal packing" above), and every
     vector computes its m codes IN-ROW — an argmin by (d², cid) over the
-    subspace's entries — so the corpus is touched strictly map-side with
+    subspace's entries, a NULL d² (short, NULL or NULL-element entry)
+    last — so the corpus is touched strictly map-side with
     ZERO shuffles, the same reason FAISS encodes map-side. (The pre-r11
     shape exploded the corpus m-fold and shuffled it twice; at 100 TB
     those are two corpus shuffles — measured 15.6 s → 10.3 s on the
@@ -996,9 +998,11 @@ def pq_encode(
     d2 = _sq_l2_units_sql(
         "element_at(_slices, s + 1)", "e.cvec_sub", d, aa="element_at(_aas, s + 1)", bb="e.bb"
     )
+    # inner transform: d2 once per entry; outer: NULL d2 last (`_nul`)
     codes = F.expr(
-        f"transform(sequence(0, {m - 1}), s -> array_min(transform(element_at(_cb, s), "
-        f"e -> named_struct('_d', {d2}, 'cid', e.cid))).cid)"
+        f"transform(sequence(0, {m - 1}), s -> array_min(transform(transform("
+        f"element_at(_cb, s), e -> named_struct('_d', {d2}, 'cid', e.cid)), "
+        f"e -> named_struct('_nul', e._d IS NULL, '_d', e._d, 'cid', e.cid))).cid)"
     )
     return enc.select(F.col(id_col), *keep_cols, codes.alias("codes"))
 
@@ -1114,27 +1118,11 @@ def ivf_pq_topk(
     )
 
     q = queries.select(F.col(query_id), _vec(vec_col).alias("_qv"))
-    # probe selection: nearest coarse cells by cosine (same knob as
-    # ivf_multiprobe_topk), computed IN-ROW against the literal centroid
-    # array — per query, sort (−sim, cell) and slice n_probe. This
-    # replaces the r10 crossJoin + row_number window: no shuffle of the
-    # query set, and the tie-break (sim desc, cell asc) is identical.
-    q_packed = q.withColumn("_cens", F.expr(_cens_lit(centroids)))
-    # SQL text, parsed once (see the vector-arithmetic builders): struct
-    # field order (_negsim, _cell, _cvec), the fold-form cosine and
-    # -round(..., 6) give the (sim desc, cell asc) tie-break.
-    probes = (
-        q_packed
-        .select(
-            query_id,
-            "_qv",
-            F.expr(
-                f"explode(slice(array_sort(transform(_cens, e -> named_struct("
-                f"'_negsim', -round({_cosine_sql('_qv', 'e.cvec')}, 6), "
-                f"'_cell', e.cell, '_cvec', e.cvec))), 1, {n_probe}))"
-            ).alias("_p"),
-        )
-        .select(query_id, "_qv", F.col("_p._cell").alias("_cell"), F.col("_p._cvec").alias("_cvec"))
+    # probe selection: the n_probe nearest coarse cells by cosine (same
+    # knob as ivf_multiprobe_topk), ranked in-row over the literal
+    # centroid array — no crossJoin, no shuffle of the query set
+    probes = _nearest_cells(q, "_qv", centroids, n_probe).select(
+        query_id, "_qv", "_cell", "_cvec"
     )
 
     # ADC lookup table: exact query subvector vs every codebook entry,
@@ -1378,44 +1366,21 @@ def semdedup(
     `_dot_sql`; leave None when the width is not statically known."""
     from financedatabase_spark.operators.dedup_docs import grouped_components
 
-    # nearest-centroid assignment IN-ROW against the literal centroid
-    # array: per vector, argmin of (-sim, cell) over the array —
-    # the same tie-break (sim desc rounded, cell asc) as a row_number
-    # window, but with NO |V| x |C| exploded intermediate and NO shuffle
-    # of it (at 50x that intermediate is 3.2B rows; here it never exists)
-    # both norms hoisted: centroid norms precomputed at pack time, the
-    # vector norm once per row — the per-centroid term is one dot and a
-    # divide by the product of the SAME two norms _cosine_sql would use,
-    # so every double is bit-identical to the windowed formulation
+    # nearest-centroid assignment in-row over the literal centroid array
+    # (`_nearest_cells`): no |V| x |C| exploded intermediate and no
+    # shuffle of it (at 50x that intermediate is 3.2B rows)
     v = _spread(emb).select(F.col(id_col), _vec(vec_col).alias("_e"))
-    cen_lit = _cens_lit(centroids, cell_field="_cl", with_norm=True)
-    v_packed = v.withColumn("_cens", F.expr(cen_lit))
-    # SQL text, parsed once (see the vector-arithmetic builders): the
-    # dim=64 unrolled dot inside this lambda alone was ~256 Py4J
-    # round-trips of plan build as Column calls
-    assign = (
-        v_packed
-        .withColumn("_en", F.expr(_l2_sql("_e", dim)))
-        .withColumn(
-            "_best",
-            F.expr(
-                f"array_min(transform(_cens, c -> named_struct("
-                f"'_negsim', -round({_dot_sql('_e', 'c.cvec', dim)} / (_en * c._cn), {round_digits}), "
-                f"'_cl', c._cl)))"
-            ),
-        )
-        .select(
-            id_col,
-            F.col("_best._cl").alias("cluster"),
-            (-F.col("_best._negsim")).alias("csim"),
-            "_e",
-            # the row's norm rides through the checkpoint so the pair
-            # filter below divides by two HOISTED norms instead of
-            # re-folding the norm per PAIR — same doubles (dot / (na*nb)
-            # in _cosine_sql's operand order), a third of the per-pair
-            # higher-order-function work
-            "_en",
-        )
+    assign = _nearest_cells(v, "_e", centroids, 1, dim, round_digits).select(
+        id_col,
+        F.col("_cell").alias("cluster"),
+        F.col("_csim").alias("csim"),
+        "_e",
+        # the row's norm rides through the checkpoint so the pair
+        # filter below divides by two HOISTED norms instead of
+        # re-folding the norm per PAIR — same doubles (dot / (na*nb)
+        # in _cosine_sql's operand order), a third of the per-pair
+        # higher-order-function work
+        F.col("_vn").alias("_en"),
     )
     from financedatabase_spark.session import barrier, scaled_partitions
 

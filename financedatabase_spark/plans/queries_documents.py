@@ -2419,54 +2419,34 @@ def multimodal_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ivf_build_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF index BUILD path: construct the coarse quantizer in-engine
-    (per-cell element-wise centroid via posexplode + exact integer-unit means)
-    and assign probe vectors to their nearest centroid by cosine. With the
-    assignment written back as a partition column, probes become
-    partition-pruned scans (the ivf_topk query's precondition)."""
+    (per-cell element-wise centroids, exact integer-unit means) and
+    assign probe vectors to their nearest centroid by cosine, in-row
+    over the collected centroid literal. With the assignment written
+    back as a partition column, probes become partition-pruned scans
+    (the ivf_topk query's precondition)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    flat = sim._spread(emb).select(
-        "vec_id", "label", F.posexplode(sim._vec("embedding")).alias("pos", "x")
-    )
-    cmeans = flat.groupBy("label", "pos").agg(
-        (F.sum(F.floor(F.col("x") * F.lit(1e6) + F.lit(0.5)).cast("long")).cast("double") / F.lit(1e6) / F.count("*")).alias("m")
-    )
-    centroids = cmeans.groupBy(F.col("label").alias("c_label")).agg(
-        F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("_pm")
-    ).select(
-        "c_label", F.transform(F.col("_pm"), lambda s: s.getField("m")).alias("cvec")
-    )
     probes = emb.filter(F.col("vec_id") % 25 == 0).select(
         "vec_id", F.col("label").alias("true_label"), sim._vec("embedding").alias("emb")
     )
-    scored = probes.crossJoin(F.broadcast(centroids)).select(
-        "vec_id",
-        "true_label",
-        "c_label",
-        F.expr(f"round({sim._cosine_sql('emb', 'cvec')}, 6)").alias("sim"),
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("vec_id").orderBy(F.col("sim").desc(), F.col("c_label").asc())
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "true_label", F.col("c_label").alias("assigned_label"), "sim")
+    return sim._nearest_cells(probes, "emb", sim.cell_centroids(emb, dim=64), 1, dim=64).select(
+        "vec_id", "true_label", F.col("_cell").alias("assigned_label"), F.col("_csim").alias("sim")
     )
 
 
 #: The IVF codebook is an index artifact: built once per corpus, reused by
 #: every search (FAISS trains centroids offline; a production deployment
-#: would persist them as a parquet table). Memoize + cache per
-#: (session, corpus) so repeated searches don't rebuild it.
+#: would persist them as a parquet table). Memoized per (session, corpus):
+#: every consumer inlines it as one literal, and the rows it collects
+#: stay on the memoized frame, so a rebuild of any search runs no job
+#: for it.
 def _codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
     from financedatabase_spark.session import session_memo
 
-    def build() -> DataFrame:
-        cen = sim.cell_centroids(load_table(spark, sf_dir, "embeddings"), dim=64).cache()
-        cen.count()  # materialize now: searches pay a broadcast, not a rebuild
-        return cen
-
-    return session_memo(spark, ("codebook", sf_dir), build)
+    return session_memo(
+        spark,
+        ("codebook", sf_dir),
+        lambda: sim.cell_centroids(load_table(spark, sf_dir, "embeddings"), dim=64),
+    )
 
 
 @register(
@@ -2521,8 +2501,9 @@ def _codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ivf_multiprobe_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-probe IVF ANN — each query visits its 2 nearest codebook
     cells (operators/similarity.ivf_multiprobe_topk over in-engine
-    centroids from cell_centroids): the FAISS nprobe recall knob with the
-    same partition-prunable cell equi-join shape as single-probe IVF."""
+    centroids from cell_centroids, inlined as one collected literal and
+    ranked in-row): the FAISS nprobe recall knob with the same
+    partition-prunable cell equi-join shape as single-probe IVF."""
     emb = load_table(spark, sf_dir, "embeddings")
     centroids = _codebook(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") % 100 == 0).select(
@@ -3112,9 +3093,9 @@ def kmeans_lloyd_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF quantizer TRAINING: two Lloyd iterations refining the label-
     seeded codebook (operators/similarity.kmeans_refine) — the iterative
     k-means loop FAISS runs before IVF search, as chained DataFrame
-    stages: broadcast codebook -> map-side cosine argmax -> decimal-exact
-    centroid update. The corpus is never shuffled whole; per-iteration
-    cost is linear in corpus bytes."""
+    stages: codebook collected and inlined as one literal -> in-row
+    cosine argmax -> decimal-exact centroid update. The corpus is never
+    shuffled whole; per-iteration cost is linear in corpus bytes."""
     emb = load_table(spark, sf_dir, "embeddings")
     return sim.kmeans_refine(emb, iters=2)
 
@@ -3884,8 +3865,7 @@ def semdedup_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     failed at 10x: identical copies chain the groups into longer
     diameters)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    centroids = sim.cell_centroids(emb, dim=64)
-    return sim.semdedup(emb, centroids, tau=0.4)
+    return sim.semdedup(emb, _codebook(spark, sf_dir), tau=0.4)
 
 
 @register(
@@ -4583,16 +4563,14 @@ def ivf_pq_residual_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate list into a map-side probe of the raw corpus — nothing
     rescans per query."""
     emb = load_table(spark, sf_dir, "embeddings")
-    # the centroid frame is tiny (n_cells rows) and is never executed as
-    # a FRAME: its one collect (kept on the frame object) feeds every
-    # literal builder — anchor residual map, corpus residual map, probe
-    # array. Collecting straight off the lazy aggregate runs the wide
-    # agg exactly once; a localCheckpoint here would add a job (r15)
-    cen = sim.cell_centroids(emb, dim=64)
+    # the memoized centroid frame is never executed as a FRAME: its one
+    # collect (kept on the frame object) feeds every literal builder —
+    # anchor residual map, corpus residual map, probe array — so a
+    # rebuild runs no job for it
+    cen = _codebook(spark, sf_dir)
     anchors = sim.residual_vectors(emb.filter(F.col("vec_id") < 8), cen)
-    # no checkpoint on the codebooks: their ONLY consumer is the one-time
-    # 64-row collect inside ivf_pq_topk (the literal pack), so an eager
-    # materialization job here bought nothing (r15; saved one Spark job)
+    # the 8 anchor rows are collected once (the build's only job) and
+    # sliced into a VALUES codebook frame, which every consumer inlines
     cbs = sim.pq_codebooks(
         anchors.select(F.col("vec_id").alias("cell"), F.col("embedding").alias("cvec")),
         m=8,

@@ -94,15 +94,22 @@ def _recall(rows, exact) -> float:
 
 def test_ivf_topk_recall_smoke(spark, tmp_path):
     """Default-gate recall check: 5k vectors of the at-scale geometry in
-    50 cells, 200 queries, ivf_topk recall@10 against exact cosine."""
+    50 cells, 200 queries, recall@10 against exact cosine of ivf_topk
+    and of ivf_multiprobe_topk (n_probe=2 over the cells' centroids),
+    which must be at least ivf_topk's."""
     from financedatabase_spark.operators import similarity as sim
 
     path = str(tmp_path / "ann_small.parquet")
     _build_corpus(path, n=5_000, cells=50)
-    _, queries, corpus, exact = _load(spark, path, 5_000, 200)
+    emb, queries, corpus, exact = _load(spark, path, 5_000, 200)
     assert len(exact) == 200
     r = _recall(sim.ivf_topk(queries, corpus, k=K).collect(), exact)
     assert r >= 0.9, f"ivf_topk recall@{K} = {r:.4f} (need >= 0.9)"
+    cen = sim.cell_centroids(emb)
+    rows = sim.ivf_multiprobe_topk(queries, corpus, cen, k=K, n_probe=2).collect()
+    rm = _recall(rows, exact)
+    assert rm >= 0.9, f"ivf_multiprobe recall@{K} = {rm:.4f} (need >= 0.9)"
+    assert rm >= r, f"ivf_multiprobe recall@{K} {rm:.4f} < ivf_topk {r:.4f}"
 
 
 @pytest.mark.heavy

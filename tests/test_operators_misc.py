@@ -1576,14 +1576,17 @@ def _broadcast_nodes(plan: str) -> tuple[int, int, int]:
 )
 def test_literal_pack_key_types_match_int_keys(spark, monkeypatch, sql_type, keys):
     """Every key dtype with an exact literal renders into the one literal
-    pack: ivf_pq_topk and semdedup over typed cell keys equal the
-    int-keyed results, and neither plan gains a broadcast, cartesian or
-    nested-loop node for the packed centroid/codebook frame (the
-    semdedup assignment is read off the plan its barrier checkpoints)."""
+    pack: ivf_pq_topk, semdedup, ivf_multiprobe_topk and kmeans_refine
+    over typed cell keys equal the int-keyed results, and no plan gains
+    a broadcast, cartesian or nested-loop node for the packed
+    centroid/codebook frame (the semdedup assignment is read off the
+    plan its barrier checkpoints)."""
     import financedatabase_spark.session as session
     from financedatabase_spark.operators.similarity import (
         cell_centroids,
+        ivf_multiprobe_topk,
         ivf_pq_topk,
+        kmeans_refine,
         semdedup,
     )
 
@@ -1616,14 +1619,26 @@ def test_literal_pack_key_types_match_int_keys(spark, monkeypatch, sql_type, key
             for r in sd.collect()
         }
         sd_plan = barrier_plans[-1] + sd._jdf.queryExecution().executedPlan().toString()
-        return pq, dd, pq_plan, sd_plan
+        mp = ivf_multiprobe_topk(q, c, cen, k=3, n_probe=1)
+        mp_rows = {tuple(r) for r in mp.collect()}
+        km = kmeans_refine(frame, iters=2)
+        km_rows = {(r["vec_id"], str(r["assigned_label"]), r["sim"]) for r in km.collect()}
+        plans = [
+            pq_plan,
+            sd_plan,
+            mp._jdf.queryExecution().executedPlan().toString(),
+            km._jdf.queryExecution().executedPlan().toString(),
+        ]
+        return pq, dd, mp_rows, km_rows, plans
 
-    pq_i, sd_i, pq_plan_i, sd_plan_i = run(df)
-    pq_t, sd_t, pq_plan_t, sd_plan_t = run(df_t)
+    pq_i, sd_i, mp_i, km_i, plans_i = run(df)
+    pq_t, sd_t, mp_t, km_t, plans_t = run(df_t)
     assert pq_t == pq_i and len(pq_i) == 15
     assert {(i, str(back[c]), s, g, k) for i, c, s, g, k in sd_t} == sd_i
     assert not all(k for *_, k in sd_i)  # some near-copy was pruned
-    for typed, plain in ((pq_plan_t, pq_plan_i), (sd_plan_t, sd_plan_i)):
+    assert mp_t == mp_i and len(mp_i) == 15
+    assert {(i, str(back[c]), s) for i, c, s in km_t} == km_i and len(km_i) == 46
+    for typed, plain in zip(plans_t, plans_i):
         assert _broadcast_nodes(typed) == _broadcast_nodes(plain)
         assert _broadcast_nodes(typed)[1:] == (0, 0)
 
@@ -1677,15 +1692,57 @@ def test_literal_pack_empty_frames(spark):
         residual_vectors(df, cen).collect()
 
 
-@pytest.mark.parametrize("name, budget", [("ivf_pq_topk", 1), ("ivf_pq_residual_rerank_topk", 3)])
+def test_null_element_centroid_ranks_last(spark):
+    """A centroid with a NULL element scores a NULL similarity against
+    every vector; every nearest-centroid assignment ranks it LAST, as the
+    oracle's ORDER BY sim DESC does, so no probe or assignment picks it
+    while a non-NULL centroid exists. (Array sorts order a struct's NULL
+    field first: without the NULL-last key, ivf_pq_topk probed and
+    semdedup assigned every row to the NULL cell.)"""
+    from financedatabase_spark.operators.similarity import (
+        cell_centroids,
+        ivf_multiprobe_topk,
+        ivf_pq_topk,
+        kmeans_refine,
+        semdedup,
+    )
+
+    base = _packed_frame_fixture(spark)
+    odd = spark.createDataFrame(
+        [(999, 2, [None] + [1.0] * 7)], "vec_id long, label int, embedding array<double>"
+    )
+    df = base.unionByName(odd)  # label 2's centroid is [NULL, 1.0, ...]
+    cen = cell_centroids(df)
+    assert [r["cvec"][0] for r in cen.filter("cell = 2").collect()] == [None]
+    label = {r["vec_id"]: r["label"] for r in df.collect()}
+    q = base.filter(F.col("vec_id") % 10 == 0).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    c = df.select(F.col("vec_id").alias("corpus_id"), "label", "embedding")
+
+    for found in (
+        ivf_pq_topk(q, c, cen, m=4, dim=8, k=3, n_probe=1).collect(),
+        ivf_multiprobe_topk(q, c, cen, k=3, n_probe=1).collect(),
+    ):
+        assert len(found) == 15  # 5 queries x k=3 from a populated cell
+        assert all(label[r["corpus_id"]] != 2 for r in found)
+    sd = semdedup(df, cen, tau=0.99).collect()
+    assert len(sd) == 47 and all(r["cluster"] != 2 for r in sd)
+    assert all(r["cosine_to_centroid"] is not None for r in sd if r["vec_id"] != 999)
+    km = kmeans_refine(df, iters=2).collect()
+    assert len(km) == 47 and all(r["assigned_label"] != 2 for r in km)
+
+
+@pytest.mark.parametrize(
+    "name, budget", [("ivf_pq_topk", 1), ("ivf_pq_residual_rerank_topk", 1)]
+)
 def test_ivf_pq_build_job_budget(spark, sf_dir, name, budget):
     """A warm build of the IVF-PQ queries collects each tiny centroid /
-    codebook frame once and runs no other job. ivf_pq_topk's
-    session-memoized centroid frame keeps its collected rows, so a
-    rebuild collects only its fresh codebook frame (one job). The
-    residual rerank query collects its centroid aggregate once for both
-    residual maps and the probe array (a shuffle-map job and a result
-    job), then its codebook frame (one job)."""
+    codebook frame once and runs no other job. Both share the
+    session-memoized centroid frame, which keeps its collected rows, and
+    `pq_codebooks` slices those rows into a VALUES frame, so an
+    ivf_pq_topk rebuild runs no job. The residual rerank query collects
+    only its anchor-residual codebook frame (one job)."""
     from financedatabase_spark.plans.registry import QUERIES
 
     sc = spark.sparkContext
@@ -2197,8 +2254,8 @@ def test_pq_sql_text_builders_exact(spark):
     assert null_b[0::4] == null_b[2::4] == null_b[3::4] == (None, None)
 
     # 2. pq_encode codes vs the pure-Python replay: per subspace the
-    # argmin of (d2, cid), where a NULL d2 sorts first, as Spark orders
-    # a struct's NULL field
+    # argmin of (d2, cid), where a NULL d2 sorts last, so a malformed
+    # entry never wins over a real one
     m, d = 4, 2
     cen = sim.cell_centroids(df)
     anchors = sim.residual_vectors(df.filter(F.col("vec_id") < 4), cen)
@@ -2224,7 +2281,7 @@ def test_pq_sql_text_builders_exact(spark):
                 best = None
                 for e in by_sub[s]:
                     d2 = None if e["cvec_sub"] is None else runits(sl, e["cvec_sub"], d)
-                    key = (d2 is not None, d2 or 0, e["cid"])
+                    key = (d2 is None, d2 or 0, e["cid"])
                     if best is None or key < best:
                         best = key
                 codes.append(best[2])
@@ -2242,7 +2299,7 @@ def test_pq_sql_text_builders_exact(spark):
 
     # 3. a mixed-width codebook: the entry self-dot keeps _dot_sql(v, v, d)
     # semantics — the first d elements; NULL for a short or NULL entry
-    # or a NULL element
+    # or a NULL element, whose NULL d2 then ranks after every real entry
     e10 = next(list(r["embedding"]) for r in enc_rows if r["corpus_id"] == 10)
     mixed = spark.createDataFrame(
         [tuple(r) for r in cbs.collect()] + [
@@ -2256,4 +2313,4 @@ def test_pq_sql_text_builders_exact(spark):
     got, want = encode(mixed), replay(mixed)
     assert got == want
     assert want[10][2] == 102  # the long entry's first d elements match row 10
-    assert {w[0] for w in want.values()} == {100}  # NULL d2 sorts first
+    assert 100 not in {w[0] for w in want.values()}  # NULL d2 sorts last

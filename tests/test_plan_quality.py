@@ -104,12 +104,18 @@ def test_stratified_sample_stays_map_side(spark, sf_dir):
 
 
 def test_multiprobe_corpus_join_is_hash_join(spark, sf_dir):
-    # probe selection may nested-loop over the tiny broadcast codebook,
-    # but the corpus-side join must stay a cell equi-join (hash join),
-    # never a cartesian against the corpus
+    # probe selection ranks the collected centroid literal in-row, and
+    # the corpus-side join must stay a cell equi-join (hash join), never
+    # a cartesian against the corpus; neither the probe nor the k-means
+    # / index-build assignments join the centroid frame at all
     p = plan_of(spark, sf_dir, "ivf_multiprobe_topk")
     assert "CartesianProduct" not in p
+    assert "BroadcastNestedLoopJoin" not in p
     assert p.count("BroadcastHashJoin") + p.count("SortMergeJoin") >= 1
+    for name in ("ivf_build_assign", "kmeans_lloyd_refine"):
+        p = plan_of(spark, sf_dir, name)
+        assert "CartesianProduct" not in p, name
+        assert "BroadcastNestedLoopJoin" not in p, name
 
 
 def test_spread_skips_shuffle_for_multifile_scans(spark, sf_dir, tmp_path):

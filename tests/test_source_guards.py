@@ -39,6 +39,28 @@ def test_no_silently_swallowed_broad_exceptions():
     assert not found, f"silently swallowed broad exceptions at {found}"
 
 
+def test_barrier_is_the_only_materialization():
+    """`session.barrier` is the package's one materialization primitive:
+    no `.cache()`, `.persist(...)`, `.localCheckpoint(...)` or
+    `.checkpoint(...)` call appears outside `session.py`."""
+    found = []
+    for root, _, files in os.walk(PKG):
+        for f in files:
+            path = os.path.join(root, f)
+            if not f.endswith(".py") or path == os.path.join(PKG, "session.py"):
+                continue
+            with open(path) as fh:
+                tree = ast.parse(fh.read(), path)
+            for node in ast.walk(tree):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr in ("cache", "persist", "localCheckpoint", "checkpoint")
+                ):
+                    found.append(f"{os.path.relpath(path, PKG)}:{node.lineno} .{node.func.attr}")
+    assert not found, f"materialization outside session.barrier at {found}"
+
+
 def test_registry_order_independent_of_import_order():
     """QUERIES and ORACLE_SQL come out in one order whether a query
     module or the registry is imported first."""
