@@ -21,8 +21,21 @@ transform + AC magnitude-plane ladders), DC first/refinement scans
 (interleaved or single-component), AC first scans with cross-block
 EOBRUN (EOBn) coding, AC refinement scans with correction bits, and
 restart markers inside progressive scans (predictors AND EOB run
-reset). Coefficients accumulate across scans in quantized form and are
-dequantized + IDCT'd once at EOI.
+reset).
+
+Decode structure: every DCT frame decodes in two phases, whatever its
+process. Phase one (`jpeg_coefficients`) entropy-decodes each scan —
+sequential or progressive, Huffman or arithmetic, interleaved,
+partially interleaved or one-component — into ONE per-component store
+of quantized zigzag coefficients over the frame's MCU block grid. One
+SOS-header parser (`_parse_dct_sos`) validates every DCT scan, one
+block walker (`JpegCoefficients.walk`) visits its blocks in T.81 A.2 order and
+calls the coder's restart step every Ri MCUs, and the coder
+(`_HuffScan` / `_ArithScan`) supplies the one entropy step the scan
+kind needs. Each component latches its quant table at its first scan,
+as libjpeg does, so a DQT that later redefines the slot does not
+change it. Phase two (`_reconstruct`) runs once at EOI: dequantize,
+IDCT at the frame precision, crop and upsample.
 
 Color layouts: every T.81-legal YCbCr sampling grid with integer
 replication ratios decodes — the standard 4:4:4 / 4:2:2 / 4:4:0 /
@@ -33,8 +46,8 @@ sampling-generic). Quant tables parse in both DQT precisions (8-bit
 Pq=0 and 16-bit big-endian Pq=1).
 
 Non-interleaved SEQUENTIAL multi-scan streams decode too (one
-full-band scan per component over its ceil(comp_size/8) grid, pixels
-accumulated to EOI, a missing component scan failing loudly), and so
+full-band scan per component over its ceil(comp_size/8) grid, a
+missing component scan failing loudly at EOI), and so
 does the LOSSLESS Huffman process (SOF3, T.81 Annex H): all seven
 Annex H predictors, DC-category-coded differences, modulo-2^16
 reconstruction — precision-generic (2-16 bits per sample), so deep
@@ -44,7 +57,8 @@ and the POINT TRANSFORM (Al > 0: samples coded at P-Al bits, output
 shifted back up). Extended-sequential SOF1 decodes at
 both of its legal precisions: 8-bit (bitstream-identical to baseline)
 and 12-bit (precision-generic level shift/clamp, Annex F extended
-coefficient categories). Sequential subset scans decode in BOTH
+coefficient categories); the arithmetic SOF9 and SOF10 frames take
+12-bit samples too. Sequential subset scans decode in BOTH
 layouts: non-interleaved (one component per scan, A.2.2 grid) and
 PARTIALLY interleaved (2-3 components per scan interleaving inside the
 frame MCU grid, A.2.3). ARITHMETIC-coded extended sequential frames
@@ -106,10 +120,10 @@ per plane. On a 4-vCPU x86 VM under CPython 3.11, decoding the 5000
 (median of nine timings each), and the IDCT's share of decode time
 under cProfile from 51 % to about 18 %. Of what is left, the
 bit-at-a-time Huffman reader (`_BitReader.bit`, `_HuffDec.decode`)
-takes about 17 %, the frame parse and MCU walk in `jpeg_frame` about
-15 % and the histogram about 8 %. In `multimodal_jpeg_features` the
-Python workers' CPU per call fell from 8.6 to 5.0 s (perfbench
-corpus_curation, traced, median of three runs each); besides decode it
+takes about 17 %, the frame parse and block walk about 15 % and the
+histogram about 8 %. In `multimodal_jpeg_features` the Python workers'
+CPU per call fell from 8.6 to 5.0 s (perfbench corpus_curation,
+traced, median of three runs each); besides decode it
 holds fixture encoding (`synth_jpeg`, about 0.6 s) and a fixed cost per
 Python task. The op runs 8 tasks per call on 4 cores (two chained
 `mapInPandas` over 4 partitions), and each task cost ~0.25 CPU-s,
@@ -130,6 +144,25 @@ from __future__ import annotations
 
 import math
 import struct
+from typing import Callable
+
+from financedatabase_spark.operators.jpeg_arith import (
+    LL_STAT_BINS,
+    ArithDecoder,
+    ArithEncoder,
+    ArithStats,
+    decode_ac_first_arith,
+    decode_ac_refine_arith,
+    decode_block_arith,
+    decode_dc_arith,
+    decode_lossless_diff_arith,
+    encode_ac_first_arith,
+    encode_ac_refine_arith,
+    encode_block_arith,
+    encode_dc_arith,
+    encode_lossless_diff_arith,
+    ll_classify,
+)
 
 # -- constants (ITU-T T.81 Annex K: public spec tables) ----------------------
 
@@ -146,6 +179,8 @@ ZIGZAG = [
 ]
 #: raster index -> zigzag index, so de-zigzag is one gather
 _UNZIGZAG = sorted(range(64), key=ZIGZAG.__getitem__)
+#: the 63 AC coefficients of a DC-only block (never mutated)
+_AC_ZERO = [0] * 63
 
 #: Annex K luminance DC table: (#codes per length 1..16, symbol list)
 DC_BITS = [0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0]
@@ -367,12 +402,6 @@ def _encode_arith_scan_mcus(
     segment the assemblers emit declares). A restart boundary flushes
     the coder (D.1.8), emits the cycling RSTn marker, and restarts with
     fresh registers and statistics (F.1.4.4)."""
-    from financedatabase_spark.operators.jpeg_arith import (
-        ArithEncoder,
-        ArithStats,
-        encode_block_arith,
-    )
-
     chunks: list[bytes] = []
     enc, stats = ArithEncoder(), ArithStats(ncomp)
     rst = 0
@@ -652,13 +681,6 @@ def assemble_jpeg_lossless(
         return bytes(out)
 
     def _encode_scan_arith(scan_planes: list[list[int]]) -> bytes:
-        from financedatabase_spark.operators.jpeg_arith import (
-            LL_STAT_BINS,
-            ArithEncoder,
-            encode_lossless_diff_arith,
-            ll_classify,
-        )
-
         low, up = cond
         out = bytearray()
         enc = ArithEncoder()
@@ -795,13 +817,6 @@ def assemble_jpeg_hierarchical(
         # SAMPLES are ``diffs`` (then coded against the predictor).
         sof = struct.pack(">BHHB", 8, fh, fw, 1) + bytes([1, 0x11, 0])
         if ar:
-            from financedatabase_spark.operators.jpeg_arith import (
-                LL_STAT_BINS,
-                ArithEncoder,
-                encode_lossless_diff_arith,
-                ll_classify,
-            )
-
             enc = ArithEncoder()
             bank = bytearray(LL_STAT_BINS)
             prev_d = [0] * fw
@@ -933,13 +948,6 @@ def synth_jpeg12(doc_id: int) -> bytes:
         dc = (doc_id * 29) % 3000 - 1500 + (b * 37 + doc_id) % 500
         blocks.append([dc] + [0] * 63)
     return assemble_jpeg(w, JPEG_H, qt, blocks, sof1=True, prec=12)
-
-
-def jpeg_decode_deep(payload: bytes, dim: int = 8) -> list[float]:
-    """Deprecated alias: `jpeg_decode` is precision-aware now (it reads
-    the frame precision from `jpeg_frame`), so deep frames bin
-    correctly through the main entry point."""
-    return jpeg_decode(payload, dim)
 
 
 def synth_jpeg_lossless(doc_id: int, prec: int = 8) -> bytes:
@@ -1681,12 +1689,6 @@ def _encode_dc_first_scan_arith(
     """Arithmetic twin of `_encode_dc_first_scan`: the sequential DC
     model (statistics bank 0) over point-transformed values, restart
     boundaries flushing the coder and resetting statistics."""
-    from financedatabase_spark.operators.jpeg_arith import (
-        ArithEncoder,
-        ArithStats,
-        encode_dc_arith,
-    )
-
     chunks: list[bytes] = []
     enc, stats = ArithEncoder(), ArithStats(ncomp)
     rst = 0
@@ -1707,8 +1709,6 @@ def _encode_dc_refine_scan_arith(
 ) -> bytes:
     """Arithmetic DC refinement: one FIXED-state bit per block — bit Al
     of the DC coefficient (G.1.2.1 / the decoder's fixed-bin read)."""
-    from financedatabase_spark.operators.jpeg_arith import ArithEncoder, ArithStats
-
     enc, stats = ArithEncoder(), ArithStats(ncomp)
     for mcu in mcus:
         for _comp, dc in mcu:
@@ -1721,13 +1721,6 @@ def _encode_ac_scan_arith(
 ) -> bytes:
     """Arithmetic AC band scan (first or refinement), statistics bank 0,
     fresh coder + statistics per scan (F.1.4.4)."""
-    from financedatabase_spark.operators.jpeg_arith import (
-        ArithEncoder,
-        ArithStats,
-        encode_ac_first_arith,
-        encode_ac_refine_arith,
-    )
-
     enc, stats = ArithEncoder(), ArithStats(1)
     for bz in blocks:
         if refine:
@@ -2017,15 +2010,15 @@ def _idct_block(coef: list[int], prec: int = 8, shift: bool = True) -> list[int]
 
 
 def _decode_block(
-    r: _BitReader, dec_dc: _HuffDec, dec_ac: _HuffDec, qt: list[int], pred: int,
-    prec: int = 8, shift: bool = True,
-) -> tuple[list[int], int]:
-    """Decode one entropy-coded block: DC diff + AC run-lengths, dequant,
-    de-zigzag, IDCT. Returns (64 pixels, new DC predictor)."""
+    r: _BitReader, dec_dc: _HuffDec, dec_ac: _HuffDec, blk: list[int], pred: int,
+) -> int:
+    """Sequential Huffman decode of one block (T.81 F.2.2): the DC
+    difference onto the predictor, then AC run-lengths with ZRL/EOB,
+    into ``blk``'s zigzag quantized coefficients. Returns the new DC
+    predictor."""
     size = dec_dc.decode(r)
     pred += _extend(r.bits(size), size)
-    zz = [0] * 64
-    zz[0] = pred * qt[0]
+    blk[0] = pred
     k = 1
     while k < 64:
         rs = dec_ac.decode(r)
@@ -2037,9 +2030,9 @@ def _decode_block(
         k += rs >> 4
         if k > 63:
             raise ValueError("JPEG AC coefficient overrun")
-        zz[k] = _extend(r.bits(rs & 0xF), rs & 0xF) * qt[k]
+        blk[k] = _extend(r.bits(rs & 0xF), rs & 0xF)
         k += 1
-    return _idct_block([zz[zi] for zi in _UNZIGZAG], prec, shift), pred
+    return pred
 
 
 def _ac_first_decode(
@@ -2157,328 +2150,403 @@ def _crop_planes(
     return out
 
 
-def _nonint_grid(
-    w: int, h: int, hs: int, vs: int, hmax: int, vmax: int
-) -> tuple[int, int]:
-    """Block columns/rows of a component in a NON-interleaved scan:
-    ceil(ceil(dim * sampling / max_sampling) / 8) — T.81 A.2.2. Smaller
-    than the interleaved padded grid when the geometry pads an MCU."""
-    cw = (w * hs + hmax - 1) // hmax
-    ch = (h * vs + vmax - 1) // vmax
-    return (cw + 7) // 8, (ch + 7) // 8
-
-
-def _decode_progressive_arith_scan(
-    raw: bytes,
-    pos: int,
-    seglen: int,
-    body: bytes,
-    w: int,
-    h: int,
-    comps: list[tuple[int, int, int, int]],
-    arith_cond: dict,
-    restart_interval: int,
-    prog_grid: tuple[int, int, int, int],
-    prog_coefs: list[list[list[int]]],
-    prec: int,
-) -> int:
-    """Decode ONE progressive ARITHMETIC scan (T.81 Annex G over the
-    Annex D QM-coder — SOF10) into the quantized-coefficient store and
-    return the position of the next marker. Same scan taxonomy as the
-    Huffman twin `_decode_progressive_scan`: interleaved or
-    single-component DC scans (first pass = the sequential DC model
-    point-transformed by Al, refinement = one fixed-state bit per
-    block), single-component AC band scans (first pass = the sequential
-    AC model scaled by 2^Al, refinement = the G.2.2 correction pass).
-    Registers AND statistics re-initialize per scan and per restart."""
-    from financedatabase_spark.operators.jpeg_arith import (
-        ArithDecoder,
-        ArithStats,
-        decode_ac_first_arith,
-        decode_ac_refine_arith,
-        decode_dc_arith,
-    )
-
-    hmax, vmax, mcus_x, mcus_y = prog_grid
-    ns = body[0]
-    if len(body) < 1 + 2 * ns + 3:
-        raise ValueError("JPEG SOS truncated (component specs short)")
-    scan: list[tuple[int, int, int]] = []  # (comp index, td, ta)
-    for si in range(ns):
-        cs = body[1 + 2 * si]
-        td, ta = body[2 + 2 * si] >> 4, body[2 + 2 * si] & 0xF
-        match = [i for i, c in enumerate(comps) if c[0] == cs]
-        if not match:
-            raise ValueError("JPEG SOS references unknown component id")
-        if td > 3 or ta > 3:
-            raise ValueError(
-                f"JPEG arithmetic SOS table ids ({td},{ta}) outside the "
-                f"0-3 statistics-bank range"
-            )
-        scan.append((match[0], td, ta))
-    ss, se = body[1 + 2 * ns], body[2 + 2 * ns]
-    ahal = body[3 + 2 * ns]
-    ah, al = ahal >> 4, ahal & 0xF
-    dec = ArithDecoder(raw, pos + 2 + seglen)
-    stats = ArithStats(len(comps))
-
-    def _restart(rst: int) -> None:
-        p = dec.marker_start()
-        if not (
-            p + 1 < len(raw) and raw[p] == 0xFF and raw[p + 1] == 0xD0 + rst
-        ):
-            raise ValueError(
-                f"JPEG expected restart marker RST{rst} at a restart "
-                f"boundary (corrupt stream or interleave mismatch)"
-            )
-        dec.pos = p + 2
-        dec.restart()
-        stats.reset()
-
-    if ss == 0:
-        if se != 0:
-            raise ValueError("JPEG progressive DC scan must have Se=0")
-        if ns == len(comps):
-            rst = 0
-            mcu_idx = 0
-            for my in range(mcus_y):
-                for mx in range(mcus_x):
-                    if restart_interval and mcu_idx and mcu_idx % restart_interval == 0:
-                        _restart(rst)
-                        rst = (rst + 1) % 8
-                    mcu_idx += 1
-                    for ci, td, _ta in scan:
-                        _, hs, vs, _ = comps[ci]
-                        stride = mcus_x * hs
-                        for byy in range(vs):
-                            for bxx in range(hs):
-                                blk = prog_coefs[ci][
-                                    (my * vs + byy) * stride + (mx * hs + bxx)
-                                ]
-                                if ah == 0:
-                                    blk[0] = decode_dc_arith(
-                                        dec, stats, ci, td, arith_cond, prec
-                                    ) << al
-                                else:
-                                    if dec.decode(stats.fixed, 0):
-                                        blk[0] |= 1 << al
-        elif ns == 1:
-            ci, td, _ta = scan[0]
-            _, hs, vs, _ = comps[ci]
-            bw_n, bh_n = _nonint_grid(w, h, hs, vs, hmax, vmax)
-            stride = mcus_x * hs
-            rst = 0
-            idx = 0
-            for by in range(bh_n):
-                for bx in range(bw_n):
-                    if restart_interval and idx and idx % restart_interval == 0:
-                        _restart(rst)
-                        rst = (rst + 1) % 8
-                    idx += 1
-                    blk = prog_coefs[ci][by * stride + bx]
-                    if ah == 0:
-                        blk[0] = decode_dc_arith(
-                            dec, stats, ci, td, arith_cond, prec
-                        ) << al
-                    else:
-                        if dec.decode(stats.fixed, 0):
-                            blk[0] |= 1 << al
-        else:
-            raise NotImplementedError(
-                "partially interleaved progressive DC scan not supported"
-            )
-    else:
-        if ns != 1:
-            raise ValueError("JPEG progressive AC scan must be single-component")
-        if se > 63 or ss > se:
-            raise ValueError("JPEG progressive scan has invalid spectral band")
-        ci, _td, ta = scan[0]
-        _, hs, vs, _ = comps[ci]
-        bw_n, bh_n = _nonint_grid(w, h, hs, vs, hmax, vmax)
-        stride = mcus_x * hs
-        rst = 0
-        idx = 0
-        for by in range(bh_n):
-            for bx in range(bw_n):
-                if restart_interval and idx and idx % restart_interval == 0:
-                    _restart(rst)
-                    rst = (rst + 1) % 8
-                idx += 1
-                blk = prog_coefs[ci][by * stride + bx]
-                if ah == 0:
-                    decode_ac_first_arith(
-                        dec, stats, ta, arith_cond, blk, ss, se, al
-                    )
-                else:
-                    decode_ac_refine_arith(dec, stats, ta, blk, ss, se, al)
-    p = dec.marker_start()
+def _next_marker(raw: bytes, p: int) -> int:
+    """Resync after entropy-coded data: the position of the first marker
+    at or after ``p`` that ends a scan, skipping pad bits, stuffed
+    0xFF00 bytes, RSTn markers and the 0xFF fill bytes a marker may
+    follow (T.81 B.1.1.2)."""
     while p + 1 < len(raw) and not (
-        raw[p] == 0xFF and raw[p + 1] != 0x00 and not (0xD0 <= raw[p + 1] <= 0xD7)
+        raw[p] == 0xFF
+        and raw[p + 1] not in (0x00, 0xFF)
+        and not (0xD0 <= raw[p + 1] <= 0xD7)
     ):
         p += 1
     return p
 
 
-def _decode_progressive_scan(
-    raw: bytes,
-    pos: int,
-    seglen: int,
+def _arith_restart(dec: ArithDecoder, raw: bytes, rst: int) -> None:
+    """Arithmetic restart boundary (T.81 E.2.4 / F.1.4.4): the decoder
+    stops at the marker; require the cycling RSTn there and re-init the
+    registers. The caller resets its statistics."""
+    p = dec.marker_start()
+    if not (p + 1 < len(raw) and raw[p] == 0xFF and raw[p + 1] == 0xD0 + rst):
+        raise ValueError(
+            f"JPEG expected restart marker RST{rst} at a restart boundary "
+            f"(corrupt stream or interleave mismatch)"
+        )
+    dec.pos = p + 2
+    dec.restart()
+
+
+class _HuffScan:
+    """Huffman entropy state of one DCT scan (T.81 Annex F/G): the bit
+    reader, one DC predictor per scan component and the progressive EOB
+    run. Each step method decodes a run of (scan component index, store
+    block) pairs — the blocks between two restart markers, in scan
+    order — into the blocks' zigzag quantized coefficients."""
+
+    def __init__(
+        self, raw: bytes, pos: int, dcs: list, acs: list, ss: int, se: int, al: int,
+    ) -> None:
+        self.r = _BitReader(raw, pos)
+        self.dcs, self.acs = dcs, acs  # per scan component
+        self.ss, self.se, self.al = ss, se, al
+        self.preds = [0] * len(dcs)
+        self.eobrun = 0
+
+    def restart(self, rst: int) -> None:
+        self.r.restart(rst)
+        self.preds = [0] * len(self.preds)
+        self.eobrun = 0
+
+    def end(self) -> int:
+        return self.r.pos
+
+    def sequential(self, run: list[tuple[int, list[int]]]) -> None:
+        r, dcs, acs, preds = self.r, self.dcs, self.acs, self.preds
+        for si, blk in run:
+            preds[si] = _decode_block(r, dcs[si], acs[si], blk, preds[si])
+
+    def dc_first(self, run: list[tuple[int, list[int]]]) -> None:
+        r, dcs, preds, al = self.r, self.dcs, self.preds, self.al
+        for si, blk in run:
+            s = dcs[si].decode(r)
+            preds[si] += _extend(r.bits(s), s)
+            blk[0] = preds[si] << al
+
+    def dc_refine(self, run: list[tuple[int, list[int]]]) -> None:
+        r, al = self.r, self.al
+        for _si, blk in run:
+            blk[0] |= r.bit() << al
+
+    def ac_first(self, run: list[tuple[int, list[int]]]) -> None:
+        r, ac, ss, se, al = self.r, self.acs[0], self.ss, self.se, self.al
+        eobrun = self.eobrun
+        for _si, blk in run:
+            eobrun = _ac_first_decode(r, ac, blk, ss, se, al, eobrun)
+        self.eobrun = eobrun
+
+    def ac_refine(self, run: list[tuple[int, list[int]]]) -> None:
+        r, ac, ss, se, al = self.r, self.acs[0], self.ss, self.se, self.al
+        eobrun = self.eobrun
+        for _si, blk in run:
+            eobrun = _ac_refine_decode(r, ac, blk, ss, se, al, eobrun)
+        self.eobrun = eobrun
+
+
+class _ArithScan:
+    """Arithmetic twin of `_HuffScan` (T.81 Annex D QM-coder under the
+    Annex F/G models): a fresh decoder and statistics area per scan,
+    both re-initialized at every restart boundary. DC/AC table ids name
+    statistics banks; the DAC conditioning comes from ``cond``."""
+
+    def __init__(
+        self, raw: bytes, pos: int, tds: list[int], tas: list[int], cond: dict,
+        prec: int, ss: int, se: int, al: int,
+    ) -> None:
+        self.raw = raw
+        self.dec = ArithDecoder(raw, pos)
+        self.stats = ArithStats(len(tds))
+        self.tds, self.tas, self.cond, self.prec = tds, tas, cond, prec
+        self.ss, self.se, self.al = ss, se, al
+
+    def restart(self, rst: int) -> None:
+        _arith_restart(self.dec, self.raw, rst)
+        self.stats.reset()
+
+    def end(self) -> int:
+        return self.dec.marker_start()
+
+    def sequential(self, run: list[tuple[int, list[int]]]) -> None:
+        dec, stats, tds, tas = self.dec, self.stats, self.tds, self.tas
+        for si, blk in run:
+            blk[:] = decode_block_arith(
+                dec, stats, si, tds[si], tas[si], self.cond, self.prec
+            )
+
+    def dc_first(self, run: list[tuple[int, list[int]]]) -> None:
+        dec, stats, tds, al = self.dec, self.stats, self.tds, self.al
+        for si, blk in run:
+            dc = decode_dc_arith(dec, stats, si, tds[si], self.cond, self.prec)
+            blk[0] = dc << al
+
+    def dc_refine(self, run: list[tuple[int, list[int]]]) -> None:
+        dec, fixed, bit = self.dec, self.stats.fixed, 1 << self.al
+        for _si, blk in run:
+            if dec.decode(fixed, 0):
+                blk[0] |= bit
+
+    def ac_first(self, run: list[tuple[int, list[int]]]) -> None:
+        dec, stats, ta, ss, se, al = (
+            self.dec, self.stats, self.tas[0], self.ss, self.se, self.al
+        )
+        for _si, blk in run:
+            decode_ac_first_arith(dec, stats, ta, self.cond, blk, ss, se, al)
+
+    def ac_refine(self, run: list[tuple[int, list[int]]]) -> None:
+        dec, stats, ta, ss, se, al = (
+            self.dec, self.stats, self.tas[0], self.ss, self.se, self.al
+        )
+        for _si, blk in run:
+            decode_ac_refine_arith(dec, stats, ta, blk, ss, se, al)
+
+
+def _parse_dct_sos(
     body: bytes,
-    w: int,
-    h: int,
     comps: list[tuple[int, int, int, int]],
+    quant: list[list[int] | None],
+    qts: dict[int, list[int]],
     dcs: dict[int, _HuffDec],
     acs: dict[int, _HuffDec],
-    restart_interval: int,
-    prog_grid: tuple[int, int, int, int],
-    prog_coefs: list[list[list[int]]],
-) -> int:
-    """Decode ONE progressive scan (T.81 Annex G) into the quantized-
-    coefficient store and return the stream position of the next marker.
-    DC scans (Ss=0) may be interleaved over the MCU grid or single-
-    component; AC scans are single-component over the component's
-    NON-interleaved ceil(comp_size/8) block grid — strictly smaller than
-    the interleaved padded grid when the geometry pads an MCU column.
-    Restart markers reset the DC predictors and the EOB run."""
-    hmax, vmax, mcus_x, mcus_y = prog_grid
+    progressive: bool,
+    arith: bool,
+) -> tuple[list[int], list[int], list[int], int, int, int, int]:
+    """Validate one DCT scan header (T.81 B.2.3) and return (component
+    indices, DC table ids, AC table ids, Ss, Se, Ah, Al). ``quant``
+    holds the table latched at each component's first scan (None before
+    it), so a component without one needs its DQT now, and a sequential
+    component with one is being scanned twice."""
     ns = body[0]
     if len(body) < 1 + 2 * ns + 3:
         raise ValueError("JPEG SOS truncated (component specs short)")
-    scan: list[tuple[int, int, int]] = []  # (comp index, td, ta)
+    ss, se, ahal = body[1 + 2 * ns], body[2 + 2 * ns], body[3 + 2 * ns]
+    ah, al = ahal >> 4, ahal & 0xF
+    scan: list[int] = []
+    tds: list[int] = []
+    tas: list[int] = []
     for si in range(ns):
         cs = body[1 + 2 * si]
         td, ta = body[2 + 2 * si] >> 4, body[2 + 2 * si] & 0xF
         match = [i for i, c in enumerate(comps) if c[0] == cs]
         if not match:
             raise ValueError("JPEG SOS references unknown component id")
-        scan.append((match[0], td, ta))
-    ss, se = body[1 + 2 * ns], body[2 + 2 * ns]
-    ahal = body[3 + 2 * ns]
-    ah, al = ahal >> 4, ahal & 0xF
-    r = _BitReader(raw, pos + 2 + seglen)
-    if ss == 0:
-        # DC scan (first pass when Ah=0, refinement bits when Ah>0)
-        if se != 0:
-            raise ValueError("JPEG progressive DC scan must have Se=0")
-        if ah == 0 and any(td not in dcs for _, td, _ in scan):
-            raise ValueError("JPEG SOS references undefined quant/Huffman table")
-        if ns == len(comps):
-            preds = [0] * ns
-            rst = 0
-            mcu_idx = 0
-            for my in range(mcus_y):
-                for mx in range(mcus_x):
-                    if restart_interval and mcu_idx and mcu_idx % restart_interval == 0:
-                        r.restart(rst)
-                        rst = (rst + 1) % 8
-                        preds = [0] * ns
-                    mcu_idx += 1
-                    for si, (ci, td, _ta) in enumerate(scan):
-                        _, hs, vs, _ = comps[ci]
-                        stride = mcus_x * hs
-                        for byy in range(vs):
-                            for bxx in range(hs):
-                                blk = prog_coefs[ci][
-                                    (my * vs + byy) * stride + (mx * hs + bxx)
-                                ]
-                                if ah == 0:
-                                    s = dcs[td].decode(r)
-                                    preds[si] += _extend(r.bits(s), s)
-                                    blk[0] = preds[si] << al
-                                else:
-                                    blk[0] |= r.bit() << al
-        elif ns == 1:
-            ci, td, _ta = scan[0]
-            _, hs, vs, _ = comps[ci]
-            bw_n, bh_n = _nonint_grid(w, h, hs, vs, hmax, vmax)
-            stride = mcus_x * hs
-            pred = 0
-            rst = 0
-            idx = 0
-            for by in range(bh_n):
-                for bx in range(bw_n):
-                    if restart_interval and idx and idx % restart_interval == 0:
-                        r.restart(rst)
-                        rst = (rst + 1) % 8
-                        pred = 0
-                    idx += 1
-                    blk = prog_coefs[ci][by * stride + bx]
-                    if ah == 0:
-                        s = dcs[td].decode(r)
-                        pred += _extend(r.bits(s), s)
-                        blk[0] = pred << al
-                    else:
-                        blk[0] |= r.bit() << al
-        else:
-            raise NotImplementedError(
-                "partially interleaved progressive DC scan not supported"
+        ci = match[0]
+        if arith:
+            # statistics-bank ids (0-3), not DHT ids: banks start at the
+            # uniform state, so no DAC/DHT prerequisite exists
+            if td > 3 or ta > 3:
+                raise ValueError(
+                    f"JPEG arithmetic SOS table ids ({td},{ta}) outside the "
+                    f"0-3 statistics-bank range"
+                )
+            missing_table = False
+        elif progressive:  # only the tables this scan's kind reads
+            missing_table = (ss == 0 and ah == 0 and td not in dcs) or (
+                ss != 0 and ta not in acs
             )
-    else:
-        # AC scan: spec mandates a single component
-        if ns != 1:
-            raise ValueError("JPEG progressive AC scan must be single-component")
-        if se > 63 or ss > se:
-            raise ValueError("JPEG progressive scan has invalid spectral band")
-        ci, _td, ta = scan[0]
-        if ta not in acs:
+        else:
+            missing_table = td not in dcs or ta not in acs
+        if missing_table or (quant[ci] is None and comps[ci][3] not in qts):
             raise ValueError("JPEG SOS references undefined quant/Huffman table")
-        ac = acs[ta]
-        _, hs, vs, _ = comps[ci]
-        bw_n, bh_n = _nonint_grid(w, h, hs, vs, hmax, vmax)
+        if ci in scan:
+            raise ValueError(
+                f"JPEG SOS lists component id {cs} twice in one scan (T.81 "
+                f"B.2.3 requires distinct Csj)"
+            )
+        if not progressive and quant[ci] is not None:
+            # sequential DCT codes each component in exactly one scan
+            raise ValueError(
+                f"JPEG SOS re-scans component id {cs} already decoded by an "
+                f"earlier sequential scan"
+            )
+        scan.append(ci)
+        tds.append(td)
+        tas.append(ta)
+    # B.2.3: an INTERLEAVED scan's MCU holds at most 10 data units — a
+    # scan-level limit (frames summing past 10 are legal when delivered
+    # as non-interleaved scans)
+    if ns > 1 and sum(comps[ci][1] * comps[ci][2] for ci in scan) > 10:
+        raise ValueError(
+            f"interleaved JPEG scan exceeds the T.81 limit of 10 blocks per "
+            f"MCU: {[(comps[ci][1], comps[ci][2]) for ci in scan]}"
+        )
+    if progressive:
+        if ss == 0:
+            if se != 0:
+                raise ValueError("JPEG progressive DC scan must have Se=0")
+            if 1 < ns < len(comps):
+                raise NotImplementedError(
+                    "partially interleaved progressive DC scan not supported"
+                )
+        elif ns != 1:
+            raise ValueError("JPEG progressive AC scan must be single-component")
+        elif se > 63 or ss > se:
+            raise ValueError("JPEG progressive scan has invalid spectral band")
+    return scan, tds, tas, ss, se, ah, al
+
+
+class JpegCoefficients:
+    """The first decode phase of a DCT frame: every scan's entropy
+    decode accumulated into one store. ``blocks[c]`` is component c's
+    block grid over the frame's MCU layout (``grid`` = hmax, vmax,
+    mcus_x, mcus_y; mcus_x * hs blocks per row, padding blocks
+    included), 64 zigzag quantized coefficients per block. ``quant[c]``
+    is the zigzag quant table latched at c's first scan (None before
+    it), as libjpeg latches in `latch_quant_tables`, so a later DQT
+    redefining the slot does not touch c."""
+
+    def __init__(
+        self, w: int, h: int, prec: int, comps: list[tuple[int, int, int, int]],
+    ) -> None:
+        hmax = max(hs for _, hs, _, _ in comps)
+        vmax = max(vs for _, _, vs, _ in comps)
+        mcus_x = (w + 8 * hmax - 1) // (8 * hmax)
+        mcus_y = (h + 8 * vmax - 1) // (8 * vmax)
+        self.width, self.height, self.precision = w, h, prec
+        self.comps = comps  # (cid, hs, vs, tq) in SOF order
+        self.grid = (hmax, vmax, mcus_x, mcus_y)
+        self.blocks = [
+            [[0] * 64 for _ in range(mcus_x * hs * mcus_y * vs)]
+            for _, hs, vs, _ in comps
+        ]
+        self.quant: list[list[int] | None] = [None] * len(comps)
+        # scan order per component set: progressive scripts repeat them
+        self._orders: dict[tuple[int, ...], tuple[list, int]] = {}
+
+    def walk(
+        self,
+        scan: list[int],
+        coder: _HuffScan | _ArithScan,
+        step: Callable[[list[tuple[int, list[int]]]], None],
+        restart_interval: int,
+    ) -> None:
+        """The block walker of every DCT scan: hand ``step`` the scan's
+        (scan component index, block) pairs in T.81 A.2 order, one
+        restart interval of ``restart_interval`` MCUs at a time, the
+        coder consuming the next RSTn between intervals."""
+        key = tuple(scan)
+        if key not in self._orders:
+            self._orders[key] = self._scan_order(scan)
+        order, per_mcu = self._orders[key]
+        span = restart_interval * per_mcu or len(order)
+        for n, start in enumerate(range(0, len(order), span)):
+            if n:
+                coder.restart((n - 1) % 8)
+            step(order[start:start + span])
+
+    def _scan_order(self, scan: list[int]) -> tuple[list, int]:
+        """(blocks in scan order, blocks per MCU). An interleaved scan
+        (ns > 1, full or partial) walks the frame MCU grid, each MCU
+        holding hs x vs blocks per scan component (A.2.3); a
+        one-component scan's MCU is one block over the component's
+        ceil(ceil(dim * sampling / max sampling) / 8) grid (A.2.2),
+        smaller than the padded MCU grid when the geometry pads an
+        MCU."""
+        hmax, vmax, mcus_x, mcus_y = self.grid
+        if len(scan) > 1:
+            n_x, n_y = mcus_x, mcus_y
+            members = []  # (scan index, blocks, offset in MCU, hs, MCU row stride)
+            for si, ci in enumerate(scan):
+                _, hs, vs, _ = self.comps[ci]
+                stride = mcus_x * hs
+                members += [
+                    (si, self.blocks[ci], byy * stride + bxx, hs, vs * stride)
+                    for byy in range(vs)
+                    for bxx in range(hs)
+                ]
+        else:
+            _, hs, vs, _ = self.comps[scan[0]]
+            n_x = ((self.width * hs + hmax - 1) // hmax + 7) // 8
+            n_y = ((self.height * vs + vmax - 1) // vmax + 7) // 8
+            members = [(0, self.blocks[scan[0]], 0, 1, mcus_x * hs)]
+        order = [
+            (si, comp_blocks[my * row_stride + mx * hs + off])
+            for my in range(n_y)
+            for mx in range(n_x)
+            for si, comp_blocks, off, hs, row_stride in members
+        ]
+        return order, len(members)
+
+
+def _reconstruct(
+    c: JpegCoefficients, differential: bool,
+) -> tuple[int, int, list[list[int]], int]:
+    """The second decode phase, once per frame at EOI: dequantize each
+    block with its component's latched table, IDCT it at the frame
+    precision (no level shift for a DIFFERENTIAL frame) and crop /
+    upsample the block grids to the SOF geometry. A component the
+    stream never scanned has all-zero blocks and decodes flat, as in
+    libjpeg."""
+    hmax, vmax, mcus_x, mcus_y = c.grid
+    shift = not differential
+    planes_raw = []
+    for (_cid, hs, vs, _tq), blocks, qt in zip(c.comps, c.blocks, c.quant):
+        qt = qt or [0] * 64
         stride = mcus_x * hs
-        eobrun = 0
-        rst = 0
-        idx = 0
-        for by in range(bh_n):
-            for bx in range(bw_n):
-                if restart_interval and idx and idx % restart_interval == 0:
-                    r.restart(rst)
-                    rst = (rst + 1) % 8
-                    eobrun = 0
-                idx += 1
-                blk = prog_coefs[ci][by * stride + bx]
-                if ah == 0:
-                    eobrun = _ac_first_decode(r, ac, blk, ss, se, al, eobrun)
-                else:
-                    eobrun = _ac_refine_decode(r, ac, blk, ss, se, al, eobrun)
-    # resync: skip any pad bits / stuffed bytes to the next true marker
-    p = r.pos
-    while p + 1 < len(raw) and not (
-        raw[p] == 0xFF and raw[p + 1] != 0x00 and not (0xD0 <= raw[p + 1] <= 0xD7)
-    ):
-        p += 1
-    return p
+        plane = [[0] * (stride * 8) for _ in range(mcus_y * vs * 8)]
+        for bi, zz in enumerate(blocks):
+            by, bx = divmod(bi, stride)
+            if zz[1:] == _AC_ZERO:  # DC-only, the commonest block: one product
+                coef = [zz[0] * qt[0]] + _AC_ZERO
+            else:
+                coef = [zz[zi] * qt[zi] for zi in _UNZIGZAG]
+            px = _idct_block(coef, c.precision, shift)
+            py0, px0 = by * 8, bx * 8
+            for y in range(8):
+                plane[py0 + y][px0:px0 + 8] = px[y * 8:y * 8 + 8]
+        planes_raw.append(plane)
+    samplings = [(hs, vs) for _, hs, vs, _ in c.comps]
+    return c.width, c.height, _crop_planes(
+        planes_raw, samplings, c.width, c.height, hmax, vmax
+    ), c.precision
+
+
+def jpeg_coefficients(payload: bytes) -> JpegCoefficients:
+    """Entropy-decode a DCT JPEG to its quantized coefficient store
+    without any IDCT: the phase `jpeg_frame` reconstructs from. Raises
+    ValueError for a lossless or hierarchical stream (no single DCT
+    frame) and otherwise the error contract of `jpeg_frame`."""
+    got = _read_frame(bytes(payload), False)
+    if not isinstance(got, JpegCoefficients):
+        raise ValueError("JPEG is lossless or hierarchical: no DCT coefficients")
+    return got
 
 
 def jpeg_frame(
     payload: bytes, differential: bool = False,
 ) -> tuple[int, int, list[list[int]], int]:
-    """Decode a JPEG to (width, height, planes, sample_precision): one full-resolution row-major plane per component —
-    [Y] for grayscale, [Y, Cb, Cr] for 4:2:0 color (chroma upsampled by
-    2x2 replication, the standard nearest-neighbor reconstruction).
-    Baseline streams decode the interleaved-MCU scan with per-component
-    DC predictors; progressive streams accumulate quantized coefficients
-    across their scan script — DC first/refinement (interleaved or
-    single-component, point transform Al), single-component AC first
-    scans per spectral band with cross-block EOBn runs, AC refinement
-    scans with correction bits — and dequantize + IDCT once at EOI.
-    Both paths crop the padded MCU grid to the SOF geometry.
+    """Decode a JPEG to (width, height, planes, sample_precision): one
+    full-resolution row-major plane per component in SOF order — [Y]
+    for grayscale, [Y, Cb, Cr] for color (subsampled chroma upsampled by
+    replication over the A.1.1 sample-grid map).
 
-    Restart intervals (DRI/RSTn) are fully supported in both modes:
-    predictors (and the progressive EOB run) reset and the bit reader
-    re-aligns at every marker, honoring mid-stream DRI rebinding. Both
-    DQT precisions parse (8-bit and 16-bit entries), and color streams
-    decode at every T.81-legal sampling grid (standard 4:4:4 / 4:2:2 /
-    4:4:0 / 4:2:0, exotic 3x1 / 4x1 / 1x3 / 4x2, and NON-INTEGER
-    ratios like 3x1 Y against 2x1 chroma via the A.1.1 sample-grid
-    map), in interleaved, non-interleaved (scan-per-component), or
-    PARTIALLY interleaved (subset-scan) layouts. Raises
-    NotImplementedError on the documented seams (remaining SOF
-    processes) and
-    ValueError on malformed streams (including a SOS that references an
-    undefined quant/Huffman table).
+    A DCT frame decodes in two phases. Every scan — sequential or
+    progressive, Huffman or arithmetic, interleaved, partially
+    interleaved or one-component — entropy-decodes into ONE
+    per-component store of quantized zigzag coefficients
+    (`jpeg_coefficients`): sequential scans fill whole blocks;
+    progressive scans add DC first/refinement passes (interleaved or
+    single-component, point transform Al) and single-component AC band
+    first/refinement passes with cross-block EOBn runs. Each component
+    latches its quant table at its first scan. At EOI one pass
+    dequantizes, IDCTs at the frame precision and crops the padded MCU
+    grid to the SOF geometry. Lossless frames (Annex H) predict samples
+    directly, and a DHP segment hands the stream to the hierarchical
+    driver, which decodes each of its frames through this function
+    (``differential=True`` drops the level shift / prediction).
+
+    Restart intervals (DRI/RSTn) reset predictors (and the progressive
+    EOB run) and re-align the entropy decoder at every marker, honoring
+    mid-stream DRI rebinding. Both DQT precisions parse (8-bit and
+    16-bit entries), and color streams decode at every T.81-legal
+    sampling grid, including NON-INTEGER ratios like 3x1 Y against 2x1
+    chroma. Raises NotImplementedError on the documented seams
+    (parameter gates such as component counts) and ValueError on
+    malformed streams (including a SOS that references an undefined
+    quant/Huffman table, a sequential stream missing a component's
+    scan, or one scanning a component twice).
     """
-    raw = bytes(payload)
+    got = _read_frame(bytes(payload), differential)
+    if isinstance(got, JpegCoefficients):
+        return _reconstruct(got, differential)
+    return got
+
+
+def _read_frame(
+    raw: bytes, differential: bool,
+) -> JpegCoefficients | tuple[int, int, list[list[int]], int]:
+    """Walk the marker stream: a DCT frame comes back as its coefficient
+    store, a lossless or hierarchical one already decoded."""
     if raw[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG (missing SOI)")
     pos = 2
@@ -2490,12 +2558,10 @@ def jpeg_frame(
     progressive = False
     lossless = False
     prec = 8
-    arith = False  # SOF9: extended sequential DCT, arithmetic coding
+    arith = False  # SOF9/10/11: arithmetic entropy coding
     arith_cond: dict = {}  # DAC conditioning: ("dc",Tb)->(L,U), ("ac",Tb)->Kx
     comps: list[tuple[int, int, int, int]] = []  # (cid, hs, vs, tq)
-    prog_coefs: list[list[list[int]]] | None = None  # [comp][block][64] zigzag
-    prog_grid: tuple[int, int, int, int] | None = None  # hmax, vmax, mcus_x, mcus_y
-    seq_state: tuple[int, int, list, set] | None = None  # hmax, vmax, planes, seen
+    store: JpegCoefficients | None = None
     ll_planes: list[list[int] | None] | None = None  # lossless: one per component
     while pos + 2 <= len(raw):
         if raw[pos] != 0xFF:
@@ -2591,6 +2657,8 @@ def jpeg_frame(
             # (T.81 Annex H): no DCT/quantization, predictor-coded
             # sample differences — and precision-generic, so deep
             # (12/16-bit) images are in scope there.
+            if store is not None or ll_planes is not None:
+                raise ValueError("JPEG has a second SOF after its scans")
             progressive = marker in (0xC2, 0xCA)
             lossless = marker in (0xC3, 0xCB)  # SOF11 = lossless, arithmetic
             arith = marker in (0xC9, 0xCA, 0xCB)  # ARITHMETIC entropy coding
@@ -2601,12 +2669,12 @@ def jpeg_frame(
                 if not 2 <= prec <= 16:
                     raise ValueError(f"bad lossless JPEG precision {prec}")
             elif marker in (0xC1, 0xC9, 0xCA) and prec == 12:
-                pass  # extended/progressive admit 12-bit (T.81 Table B.2)
+                pass  # extended sequential / arithmetic progressive at 12-bit
             elif prec != 8:
                 raise NotImplementedError(
-                    "only 8-bit JPEG samples supported here (12-bit needs "
-                    "the extended-sequential SOF1 marker; progressive and "
-                    "baseline are 8-bit)"
+                    f"only 8-bit JPEG samples supported under SOF marker "
+                    f"0xFF{marker:02X} here; this decoder admits 12-bit "
+                    f"samples under SOF1, SOF9 and SOF10 only"
                 )
             if len(body) < 6 + 3 * ncomp:
                 raise ValueError("JPEG SOF0 truncated (component specs short)")
@@ -2749,13 +2817,6 @@ def jpeg_frame(
                     # prediction and conditioning state. Restart
                     # intervals re-init the coder, zero every bank, and
                     # restart conditioning like a first line (H.1.1).
-                    from financedatabase_spark.operators.jpeg_arith import (
-                        LL_STAT_BINS,
-                        ArithDecoder,
-                        decode_lossless_diff_arith,
-                        ll_classify,
-                    )
-
                     adec = ArithDecoder(raw, pos + 2 + seglen)
                     banks = {td: bytearray(LL_STAT_BINS) for _, td in lscan}
                     bounds = {
@@ -2765,18 +2826,7 @@ def jpeg_frame(
                     cur_d = {ci: [0] * w for ci, _ in lscan}
                     for y in range(h):
                         if restart_rows and y and y % restart_rows == 0:
-                            p = adec.marker_start()
-                            if not (
-                                p + 1 < len(raw)
-                                and raw[p] == 0xFF
-                                and raw[p + 1] == 0xD0 + rst
-                            ):
-                                raise ValueError(
-                                    f"JPEG expected restart marker RST{rst} "
-                                    f"at a lossless restart boundary"
-                                )
-                            adec.pos = p + 2
-                            adec.restart()
+                            _arith_restart(adec, raw, rst)
                             for bank in banks.values():
                                 bank[:] = bytes(LL_STAT_BINS)
                             rst = (rst + 1) % 8
@@ -2846,334 +2896,34 @@ def jpeg_frame(
                         )
                     # output = reduced sample << Pt (H.2.2's inverse)
                     ll_planes[ci] = [v << al for v in samples] if al else samples
-                p = adec.marker_start() if arith else r.pos
-                while p + 1 < len(raw) and not (
-                    raw[p] == 0xFF
-                    and raw[p + 1] != 0x00
-                    and not (0xD0 <= raw[p + 1] <= 0xD7)
-                ):
-                    p += 1
-                pos = p
+                pos = _next_marker(raw, adec.marker_start() if arith else r.pos)
                 continue
-            if progressive:
-                if prog_coefs is None:
-                    hmax = max(hs for _, hs, _, _ in comps)
-                    vmax = max(vs for _, _, vs, _ in comps)
-                    mcus_x = (w + 8 * hmax - 1) // (8 * hmax)
-                    mcus_y = (h + 8 * vmax - 1) // (8 * vmax)
-                    prog_grid = (hmax, vmax, mcus_x, mcus_y)
-                    prog_coefs = [
-                        [[0] * 64 for _ in range(mcus_x * hs * mcus_y * vs)]
-                        for _, hs, vs, _ in comps
-                    ]
-                if arith:
-                    pos = _decode_progressive_arith_scan(
-                        raw, pos, seglen, body, w, h, comps, arith_cond,
-                        restart_interval, prog_grid, prog_coefs, prec,
-                    )
-                else:
-                    pos = _decode_progressive_scan(
-                        raw, pos, seglen, body, w, h, comps, dcs, acs,
-                        restart_interval, prog_grid, prog_coefs,
-                    )
-                continue
-            if ns != len(comps):
-                # SUBSET scan (1 <= ns < ncomp): pixels accumulate per
-                # component until EOI. ns == 1 is the non-interleaved
-                # layout over the component's ceil(comp_size/8) grid
-                # (T.81 A.2.2); 1 < ns < ncomp is the PARTIALLY
-                # interleaved layout — the scan's components interleave
-                # by their sampling factors inside the FRAME MCU grid
-                # (A.2.3; the grid dims come from the frame's hmax/vmax,
-                # same as progressive interleaved DC scans).
-                if len(body) < 1 + 2 * ns + 3:
-                    raise ValueError("JPEG SOS truncated (component specs short)")
-                if seq_state is None:
-                    hmax = max(hs for _, hs, _, _ in comps)
-                    vmax = max(vs for _, _, vs, _ in comps)
-                    mcus_x = (w + 8 * hmax - 1) // (8 * hmax)
-                    mcus_y = (h + 8 * vmax - 1) // (8 * vmax)
-                    seq_state = (
-                        hmax,
-                        vmax,
-                        [
-                            [[0] * (mcus_x * hs * 8) for _ in range(mcus_y * vs * 8)]
-                            for _, hs, vs, _ in comps
-                        ],
-                        set(),
-                    )
-                hmax, vmax, seq_planes, seq_seen = seq_state
-                mcus_x = (w + 8 * hmax - 1) // (8 * hmax)
-                mcus_y = (h + 8 * vmax - 1) // (8 * vmax)
-                sscan: list[tuple[int, int]] = []  # (comp index, td<<4|ta)
-                for si in range(ns):
-                    cs = body[1 + 2 * si]
-                    tdta = body[2 + 2 * si]
-                    match = [i for i, c in enumerate(comps) if c[0] == cs]
-                    if not match:
-                        raise ValueError("JPEG SOS references unknown component id")
-                    ci = match[0]
-                    td, ta = tdta >> 4, tdta & 0xF
-                    if comps[ci][3] not in qts:
-                        raise ValueError(
-                            "JPEG SOS references undefined quant/Huffman table"
-                        )
-                    if arith:
-                        if td > 3 or ta > 3:
-                            raise ValueError(
-                                f"JPEG arithmetic SOS table ids ({td},{ta}) "
-                                f"outside the 0-3 statistics-bank range"
-                            )
-                    elif td not in dcs or ta not in acs:
-                        raise ValueError(
-                            "JPEG SOS references undefined quant/Huffman table"
-                        )
-                    # T.81 B.2.3: the Csj in one scan must be distinct, and
-                    # in sequential DCT each component belongs to exactly
-                    # one scan — a duplicate would decode the same plane
-                    # twice with independent DC predictors; reject loudly
-                    if any(ci == prev_ci for prev_ci, _ in sscan):
-                        raise ValueError(
-                            f"JPEG SOS lists component id {cs} twice in one "
-                            f"scan (T.81 B.2.3 requires distinct Csj)"
-                        )
-                    if ci in seq_seen:
-                        raise ValueError(
-                            f"JPEG SOS re-scans component id {cs} already "
-                            f"decoded by an earlier sequential scan"
-                        )
-                    seq_seen.add(ci)
-                    sscan.append((ci, tdta))
-                if ns > 1 and sum(
-                    comps[ci][1] * comps[ci][2] for ci, _ in sscan
-                ) > 10:
-                    raise ValueError(
-                        f"interleaved JPEG scan exceeds the T.81 limit of 10 "
-                        f"blocks per MCU: "
-                        f"{[(comps[ci][1], comps[ci][2]) for ci, _ in sscan]}"
-                    )
-                adec = astats = None
-                if arith:
-                    from financedatabase_spark.operators.jpeg_arith import (
-                        ArithDecoder,
-                        ArithStats,
-                        decode_block_arith,
-                    )
-
-                    adec = ArithDecoder(raw, pos + 2 + seglen)
-                    astats = ArithStats(ns)
-                else:
-                    r = _BitReader(raw, pos + 2 + seglen)
-                rst = 0
-
-                def _sub_restart(rst: int) -> None:
-                    # arithmetic restart: verify the cycling RSTn at the
-                    # marker the decoder stopped at, re-init registers
-                    # AND statistics (F.1.4.4)
-                    p = adec.marker_start()
-                    if not (
-                        p + 1 < len(raw)
-                        and raw[p] == 0xFF
-                        and raw[p + 1] == 0xD0 + rst
-                    ):
-                        raise ValueError(
-                            f"JPEG expected restart marker RST{rst} at a "
-                            f"restart boundary (corrupt stream or "
-                            f"interleave mismatch)"
-                        )
-                    adec.pos = p + 2
-                    adec.restart()
-                    astats.reset()
-
-                def _sub_block(si: int, ci: int, td: int, ta: int, tq: int):
-                    zz = decode_block_arith(
-                        adec, astats, si, td, ta, arith_cond, prec
-                    )
-                    qt = qts[tq]
-                    coef = [zz[zi] * qt[zi] for zi in _UNZIGZAG]
-                    return _idct_block(coef, prec, not differential)
-
-                if ns == 1:
-                    ci, tdta = sscan[0]
-                    td, ta = tdta >> 4, tdta & 0xF
-                    _, hs, vs, tq = comps[ci]
-                    bw_n, bh_n = _nonint_grid(w, h, hs, vs, hmax, vmax)
-                    plane = seq_planes[ci]
-                    pred = 0
-                    idx = 0
-                    for by in range(bh_n):
-                        for bx in range(bw_n):
-                            if restart_interval and idx and idx % restart_interval == 0:
-                                if arith:
-                                    _sub_restart(rst)
-                                else:
-                                    r.restart(rst)
-                                    pred = 0
-                                rst = (rst + 1) % 8
-                            idx += 1
-                            if arith:
-                                px = _sub_block(0, ci, td, ta, tq)
-                            else:
-                                px, pred = _decode_block(
-                                    r, dcs[td], acs[ta], qts[tq], pred, prec,
-                                    not differential,
-                                )
-                            py0, px0 = by * 8, bx * 8
-                            for y in range(8):
-                                row = plane[py0 + y]
-                                row[px0:px0 + 8] = px[y * 8:y * 8 + 8]
-                else:
-                    preds = [0] * ns
-                    mcu_idx = 0
-                    for my in range(mcus_y):
-                        for mx in range(mcus_x):
-                            if restart_interval and mcu_idx and (
-                                mcu_idx % restart_interval == 0
-                            ):
-                                if arith:
-                                    _sub_restart(rst)
-                                else:
-                                    r.restart(rst)
-                                    preds = [0] * ns
-                                rst = (rst + 1) % 8
-                            mcu_idx += 1
-                            for si, (ci, tdta) in enumerate(sscan):
-                                td, ta = tdta >> 4, tdta & 0xF
-                                _, hs, vs, tq = comps[ci]
-                                plane = seq_planes[ci]
-                                for byy in range(vs):
-                                    for bxx in range(hs):
-                                        if arith:
-                                            px = _sub_block(si, ci, td, ta, tq)
-                                        else:
-                                            px, preds[si] = _decode_block(
-                                                r, dcs[td], acs[ta], qts[tq],
-                                                preds[si], prec,
-                                                not differential,
-                                            )
-                                        py0 = (my * vs + byy) * 8
-                                        px0 = (mx * hs + bxx) * 8
-                                        for y in range(8):
-                                            row = plane[py0 + y]
-                                            row[px0:px0 + 8] = px[y * 8:y * 8 + 8]
-                p = adec.marker_start() if arith else r.pos
-                while p + 1 < len(raw) and not (
-                    raw[p] == 0xFF
-                    and raw[p + 1] != 0x00
-                    and not (0xD0 <= raw[p + 1] <= 0xD7)
-                ):
-                    p += 1
-                pos = p
-                continue
-            if len(body) < 1 + 2 * ns + 3:
-                raise ValueError("JPEG SOS truncated (component specs short)")
-            scan: list[tuple[int, int, int, list[int]]] = []
-            for si in range(ns):
-                cs = body[1 + 2 * si]
-                td, ta = body[2 + 2 * si] >> 4, body[2 + 2 * si] & 0xF
-                match = [c for c in comps if c[0] == cs]
-                if not match:
-                    raise ValueError("JPEG SOS references unknown component id")
-                _, hs, vs, tq = match[0]
-                if tq not in qts:
-                    raise ValueError(
-                        "JPEG SOS references undefined quant/Huffman table"
-                    )
-                if arith:
-                    # arithmetic scans carry statistics-bank ids (0-3),
-                    # not DHT ids; banks start at the uniform state so
-                    # no DAC/DHT prerequisite exists (defaults apply)
-                    if td > 3 or ta > 3:
-                        raise ValueError(
-                            f"JPEG arithmetic SOS table ids ({td},{ta}) "
-                            f"outside the 0-3 statistics-bank range"
-                        )
-                elif td not in dcs or ta not in acs:
-                    raise ValueError(
-                        "JPEG SOS references undefined quant/Huffman table"
-                    )
-                scan.append((hs, vs, tq, [td, ta]))
-            # B.2.3: an INTERLEAVED scan's MCU holds at most 10 data
-            # units — a scan-level limit (frames summing past 10 are
-            # legal when delivered as non-interleaved scans)
-            if sum(hs * vs for hs, vs, _, _ in scan) > 10:
-                raise ValueError(
-                    f"interleaved JPEG scan exceeds the T.81 limit of 10 "
-                    f"blocks per MCU: {[(hs, vs) for hs, vs, _, _ in scan]}"
-                )
-            hmax = max(hs for hs, _, _, _ in scan)
-            vmax = max(vs for _, vs, _, _ in scan)
-            mcus_x = (w + 8 * hmax - 1) // (8 * hmax)
-            mcus_y = (h + 8 * vmax - 1) // (8 * vmax)
-            planes_raw = [
-                [[0] * (mcus_x * hs * 8) for _ in range(mcus_y * vs * 8)]
-                for hs, vs, _, _ in scan
-            ]
-            preds = [0] * ns
-            adec = astats = None
+            if store is None:
+                store = JpegCoefficients(w, h, prec, comps)
+            scan, tds, tas, ss, se, ah, al = _parse_dct_sos(
+                body, comps, store.quant, qts, dcs, acs, progressive, arith
+            )
+            for ci in scan:
+                if store.quant[ci] is None:
+                    store.quant[ci] = qts[comps[ci][3]]
             if arith:
-                from financedatabase_spark.operators.jpeg_arith import (
-                    ArithDecoder,
-                    ArithStats,
-                    decode_block_arith,
+                coder = _ArithScan(
+                    raw, pos + 2 + seglen, tds, tas, arith_cond, prec, ss, se, al
                 )
-
-                adec = ArithDecoder(raw, pos + 2 + seglen)
-                astats = ArithStats(ns)
             else:
-                r = _BitReader(raw, pos + 2 + seglen)
-            mcu_idx = 0
-            rst = 0
-            for my in range(mcus_y):
-                for mx in range(mcus_x):
-                    if restart_interval and mcu_idx and mcu_idx % restart_interval == 0:
-                        if arith:
-                            # E.2.4 boundary: the decoder stops at the
-                            # marker; verify the cycling RSTn index, then
-                            # re-init registers AND statistics (F.1.4.4)
-                            p = adec.marker_start()
-                            if not (
-                                p + 1 < len(raw)
-                                and raw[p] == 0xFF
-                                and raw[p + 1] == 0xD0 + rst
-                            ):
-                                raise ValueError(
-                                    f"JPEG expected restart marker RST{rst} at "
-                                    f"a restart boundary (corrupt stream or "
-                                    f"interleave mismatch)"
-                                )
-                            adec.pos = p + 2
-                            adec.restart()
-                            astats.reset()
-                        else:
-                            r.restart(rst)
-                            preds = [0] * ns
-                        rst = (rst + 1) % 8
-                    mcu_idx += 1
-                    for ci, (hs, vs, tq, (td, ta)) in enumerate(scan):
-                        for byy in range(vs):
-                            for bxx in range(hs):
-                                if arith:
-                                    zz = decode_block_arith(
-                                        adec, astats, ci, td, ta, arith_cond, prec
-                                    )
-                                    qt = qts[tq]
-                                    coef = [zz[zi] * qt[zi] for zi in _UNZIGZAG]
-                                    px = _idct_block(coef, prec, not differential)
-                                else:
-                                    px, preds[ci] = _decode_block(
-                                        r, dcs[td], acs[ta], qts[tq], preds[ci],
-                                        prec, not differential,
-                                    )
-                                plane = planes_raw[ci]
-                                py0 = (my * vs + byy) * 8
-                                px0 = (mx * hs + bxx) * 8
-                                for y in range(8):
-                                    row = plane[py0 + y]
-                                    row[px0:px0 + 8] = px[y * 8:y * 8 + 8]
-            return w, h, _crop_planes(
-                planes_raw, [(hs, vs) for hs, vs, _, _ in scan], w, h, hmax, vmax
-            ), prec
+                coder = _HuffScan(
+                    raw, pos + 2 + seglen, [dcs.get(t) for t in tds],
+                    [acs.get(t) for t in tas], ss, se, al,
+                )
+            if not progressive:
+                step = coder.sequential
+            elif ss == 0:
+                step = coder.dc_refine if ah else coder.dc_first
+            else:
+                step = coder.ac_refine if ah else coder.ac_first
+            store.walk(scan, coder, step, restart_interval)
+            pos = _next_marker(raw, coder.end())
+            continue
         pos += 2 + seglen
     if ll_planes is not None:
         # EOI after lossless scans: every component must have been
@@ -3186,46 +2936,17 @@ def jpeg_frame(
                 f"index(es) {missing}"
             )
         return w, h, ll_planes, prec
-    if seq_state is not None:
-        # EOI after non-interleaved sequential scans: every component
-        # must have been scanned (T.81 — a missing scan is a truncated/
-        # malformed stream, not an all-zero plane)
-        hmax, vmax, seq_planes, seq_seen = seq_state
-        if seq_seen != set(range(len(comps))):
-            missing = sorted(set(range(len(comps))) - seq_seen)
-            raise ValueError(
-                f"JPEG non-interleaved stream is missing scans for "
-                f"component index(es) {missing}"
-            )
-        return w, h, _crop_planes(
-            seq_planes, [(hs, vs) for _, hs, vs, _ in comps], w, h, hmax, vmax
-        ), prec
-    if progressive and prog_coefs is not None:
-        # EOI: dequantize the accumulated coefficients, IDCT every block,
-        # then the same crop/upsample as the sequential path
-        hmax, vmax, mcus_x, mcus_y = prog_grid
-        planes_raw = [
-            [[0] * (mcus_x * hs * 8) for _ in range(mcus_y * vs * 8)]
-            for _, hs, vs, _ in comps
-        ]
-        for ci, (_cid, hs, vs, tq) in enumerate(comps):
-            if tq not in qts:
-                raise ValueError("JPEG SOF references undefined quant table")
-            qt = qts[tq]
-            stride = mcus_x * hs
-            plane = planes_raw[ci]
-            for bi, zzblk in enumerate(prog_coefs[ci]):
-                by, bx = divmod(bi, stride)
-                coef = [zzblk[zi] * qt[zi] for zi in _UNZIGZAG]
-                px = _idct_block(coef, shift=not differential)
-                py0, px0 = by * 8, bx * 8
-                for y in range(8):
-                    row = plane[py0 + y]
-                    row[px0:px0 + 8] = px[y * 8:y * 8 + 8]
-        return w, h, _crop_planes(
-            planes_raw, [(hs, vs) for _, hs, vs, _ in comps], w, h, hmax, vmax
-        ), prec
-    raise ValueError("JPEG has no scan (missing SOS)")
+    if store is None:
+        raise ValueError("JPEG has no scan (missing SOS)")
+    missing = [ci for ci, qt in enumerate(store.quant) if qt is None]
+    if missing and not progressive:
+        # a missing sequential scan is a truncated/malformed stream, not
+        # an all-zero plane
+        raise ValueError(
+            f"JPEG sequential stream is missing scans for component "
+            f"index(es) {missing}"
+        )
+    return store
 
 
 #: hierarchical (Annex J) marker sets: every SOF, the differential six,
@@ -3390,13 +3111,7 @@ def _decode_hierarchical(raw: bytes) -> tuple[int, int, list[list[int]], int]:
                     f"unexpected marker 0xFF{m2:02X} inside a hierarchical frame"
                 )
             saw_scan = True
-            p += 2 + l2
-            while p + 1 < len(raw) and not (
-                raw[p] == 0xFF
-                and raw[p + 1] != 0x00
-                and not (0xD0 <= raw[p + 1] <= 0xD7)
-            ):
-                p += 1
+            p = _next_marker(raw, p + 2 + l2)
         if not saw_scan:
             raise ValueError("JPEG hierarchical frame has no scan (missing SOS)")
         sub = (

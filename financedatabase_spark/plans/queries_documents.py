@@ -1119,7 +1119,7 @@ def multimodal_jpeg_lossless_features(spark: SparkSession, sf_dir: str) -> DataF
 def multimodal_jpeg12_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deep-image features through the 12-BIT extended-sequential JPEG
     path (SOF1 at precision 12 — operators/jpeg.synth_jpeg12 /
-    jpeg_decode_deep): DC-only constant blocks whose dequantized IDCT
+    jpeg_decode): DC-only constant blocks whose dequantized IDCT
     is exactly dc + 2048 (quantizer 8 at DC, level shift 2^11), pixels
     spanning [548, 4047] of the 12-bit range, histogram binned by
     v*8 // 4096. The decoder must honor the SOF precision in the level
@@ -1132,7 +1132,7 @@ def multimodal_jpeg12_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallelizes — payloads themselves never shuffle."""
     import pandas as _pd
 
-    from financedatabase_spark.operators.jpeg import jpeg_decode_deep, synth_jpeg12
+    from financedatabase_spark.operators.jpeg import jpeg_decode, synth_jpeg12
 
     docs = spread_ids(load_table(spark, sf_dir, "documents").select("doc_id"))
 
@@ -1146,7 +1146,7 @@ def multimodal_jpeg12_features(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
     jpgs = docs.mapInPandas(gen, "doc_id long, payload binary")
-    feats = decode_features(jpgs, decode_fn=jpeg_decode_deep)
+    feats = decode_features(jpgs, decode_fn=jpeg_decode)
     return feats.select(
         "doc_id",
         (F.col("doc_id") % 3 * 8 + 16).cast("long").alias("width"),

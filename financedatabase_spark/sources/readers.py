@@ -48,7 +48,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
     The conf is set at runtime here (it is a runtime-settable SQL conf) so the
     read works under ANY caller-provided SparkSession, not just the one built
-    by `session.get_session()`.
+    by `session.get_spark()`.
 
     The inferred schema is memoized per (live session, path, mtime):
     schema inference opens the file footer JVM-side on every

@@ -772,7 +772,7 @@ def test_jpeg_duplicate_scan_component_rejected():
     DCT assigns each component to exactly one scan — a malformed stream
     that lists a component twice (or re-scans an already-decoded one)
     must raise, not decode the same plane twice with independent DC
-    predictors."""
+    predictors. So must a second frame header after the scans."""
     from financedatabase_spark.operators.jpeg import jpeg_planes, synth_jpeg_color
 
     # partially interleaved layout: the Cb+Cr scan header is
@@ -796,6 +796,17 @@ def test_jpeg_duplicate_scan_component_rejected():
     rescan[at + 5] = 1  # cid 2 -> 1, already decoded by scan 1
     with pytest.raises(ValueError, match="re-scans component"):
         jpeg_planes(bytes(rescan))
+
+    # interleaved layout: a scan covering every component, then that
+    # scan again before EOI
+    good = synth_jpeg_color(2, (2, 2))
+    sos = good.index(b"\xff\xda")
+    with pytest.raises(ValueError, match="re-scans component"):
+        jpeg_planes(good[:-2] + good[sos:])
+    # one frame per non-hierarchical stream: a SOF after the scans
+    sof = good.index(b"\xff\xc0")
+    with pytest.raises(ValueError, match="second SOF"):
+        jpeg_planes(good[:-2] + good[sof:sos] + good[sos:])
 
 
 def test_jpeg_arith_fixtures_match_huffman_twins():
@@ -990,81 +1001,25 @@ def libjpeg_tools(tmp_path_factory):
 
 
 def _decode_arith_stream_coeffs(jpg: bytes):
-    """Test-local parse of an arithmetic JPEG into per-component
-    {(by, bx): 64 natural-order coefficients} via the public codec —
-    the entropy-layer view, no IDCT (so it compares exactly against
-    libjpeg's jpeg_read_coefficients dump regardless of IDCT flavor)."""
-    import struct as _struct
+    """Per-component {(by, bx): 64 natural-order quantized coefficients}
+    from the decoder's own coefficient phase (`jpeg_coefficients`, the
+    store `jpeg_frame` reconstructs from) — the entropy-layer view, no
+    IDCT, so it compares exactly against libjpeg's
+    jpeg_read_coefficients dump regardless of IDCT flavor. Sequential
+    and progressive streams fill the same store."""
+    from financedatabase_spark.operators.jpeg import ZIGZAG, jpeg_coefficients
 
-    from financedatabase_spark.operators.jpeg import ZIGZAG
-    from financedatabase_spark.operators.jpeg_arith import (
-        ArithDecoder,
-        ArithStats,
-        decode_block_arith,
-    )
-
-    pos, comps, cond, ri = 2, [], {}, 0
-    fw = fh = 0
-    while pos < len(jpg):
-        m = jpg[pos + 1]
-        if m == 0xD9:
-            break
-        (ln,) = _struct.unpack_from(">H", jpg, pos + 2)
-        body = jpg[pos + 4:pos + 2 + ln]
-        if m == 0xC9:
-            _, fh, fw, ncomp = _struct.unpack_from(">BHHB", body, 0)
-            for i in range(ncomp):
-                cid, hv, tq = body[6 + 3 * i:9 + 3 * i]
-                comps.append((cid, hv >> 4, hv & 0xF, tq))
-        elif m == 0xCC:
-            i = 0
-            while i < len(body):
-                tc, tb = body[i] >> 4, body[i] & 0xF
-                cs = body[i + 1]
-                cond[("dc", tb) if tc == 0 else ("ac", tb)] = (
-                    (cs & 0xF, cs >> 4) if tc == 0 else cs
-                )
-                i += 2
-        elif m == 0xDD:
-            (ri,) = _struct.unpack_from(">H", body, 0)
-        elif m == 0xDA:
-            ns = body[0]
-            scan = []
-            for si in range(ns):
-                cid, tdta = body[1 + 2 * si], body[2 + 2 * si]
-                ci = [i for i, c in enumerate(comps) if c[0] == cid][0]
-                scan.append((ci, tdta >> 4, tdta & 0xF))
-            hmax = max(c[1] for c in comps)
-            vmax = max(c[2] for c in comps)
-            mcus_x = (fw + 8 * hmax - 1) // (8 * hmax)
-            mcus_y = (fh + 8 * vmax - 1) // (8 * vmax)
-            dec = ArithDecoder(jpg, pos + 2 + ln)
-            stats = ArithStats(len(comps))
-            got = {ci: {} for ci, _, _ in scan}
-            mcu_idx = 0
-            for my in range(mcus_y):
-                for mx in range(mcus_x):
-                    if ri and mcu_idx and mcu_idx % ri == 0:
-                        p = dec.marker_start()
-                        assert jpg[p] == 0xFF and 0xD0 <= jpg[p + 1] <= 0xD7
-                        dec.pos = p + 2
-                        dec.restart()
-                        stats.reset()
-                    mcu_idx += 1
-                    for ci, td, ta in scan:
-                        _, hs, vs, _tq = comps[ci]
-                        for byy in range(vs):
-                            for bxx in range(hs):
-                                zz = decode_block_arith(
-                                    dec, stats, ci, td, ta, cond, 8
-                                )
-                                nat = [0] * 64
-                                for zi, rix in enumerate(ZIGZAG):
-                                    nat[rix] = zz[zi]
-                                got[ci][(my * vs + byy, mx * hs + bxx)] = nat
-            return got
-        pos += 2 + ln
-    raise AssertionError("no SOS found")
+    c = jpeg_coefficients(jpg)
+    mcus_x = c.grid[2]
+    got = {}
+    for ci, ((_cid, hs, _vs, _tq), blocks) in enumerate(zip(c.comps, c.blocks)):
+        got[ci] = {}
+        for bi, zz in enumerate(blocks):
+            nat = [0] * 64
+            for zi, rix in enumerate(ZIGZAG):
+                nat[rix] = zz[zi]
+            got[ci][divmod(bi, mcus_x * hs)] = nat
+    return got
 
 
 def _coef_dump(tools, jpg: bytes):
@@ -1195,72 +1150,6 @@ def test_jpeg_arith_decoder_validated_by_libjpeg(libjpeg_tools):
                 assert mine[ci][(by, bx)] == wv, (w, h, nc, rst, q, mode, ci, by, bx)
 
 
-def _decode_prog_arith_stream_coeffs(jpg: bytes):
-    """Test-local parse of a PROGRESSIVE arithmetic JPEG (SOF10) into
-    per-component natural-order coefficient grids via the public scan
-    decoder — the entropy-layer view, no IDCT."""
-    import struct as _struct
-
-    from financedatabase_spark.operators.jpeg import (
-        ZIGZAG,
-        _decode_progressive_arith_scan,
-    )
-
-    pos, comps, cond, ri = 2, [], {}, 0
-    fw = fh = 0
-    prog_coefs = prog_grid = None
-    while pos < len(jpg):
-        m = jpg[pos + 1]
-        if m == 0xD9:
-            break
-        (ln,) = _struct.unpack_from(">H", jpg, pos + 2)
-        body = jpg[pos + 4:pos + 2 + ln]
-        if m == 0xCA:
-            _, fh, fw, ncomp = _struct.unpack_from(">BHHB", body, 0)
-            for i in range(ncomp):
-                cid, hv, tq = body[6 + 3 * i:9 + 3 * i]
-                comps.append((cid, hv >> 4, hv & 0xF, tq))
-        elif m == 0xCC:
-            i = 0
-            while i < len(body):
-                tc, tb = body[i] >> 4, body[i] & 0xF
-                cs = body[i + 1]
-                cond[("dc", tb) if tc == 0 else ("ac", tb)] = (
-                    (cs & 0xF, cs >> 4) if tc == 0 else cs
-                )
-                i += 2
-        elif m == 0xDD:
-            (ri,) = _struct.unpack_from(">H", body, 0)
-        elif m == 0xDA:
-            if prog_coefs is None:
-                hmax = max(c[1] for c in comps)
-                vmax = max(c[2] for c in comps)
-                mx = (fw + 8 * hmax - 1) // (8 * hmax)
-                my = (fh + 8 * vmax - 1) // (8 * vmax)
-                prog_grid = (hmax, vmax, mx, my)
-                prog_coefs = [
-                    [[0] * 64 for _ in range(mx * c[1] * my * c[2])] for c in comps
-                ]
-            pos = _decode_progressive_arith_scan(
-                jpg, pos, ln, body, fw, fh, comps, cond, ri,
-                prog_grid, prog_coefs, 8,
-            )
-            continue
-        pos += 2 + ln
-    got = {}
-    hmax, vmax, mx, _my = prog_grid
-    for ci, (_cid, hs, _vs, _tq) in enumerate(comps):
-        stride = mx * hs
-        got[ci] = {}
-        for bi, zz in enumerate(prog_coefs[ci]):
-            by, bx = divmod(bi, stride)
-            nat = [0] * 64
-            for zi, rix in enumerate(ZIGZAG):
-                nat[rix] = zz[zi]
-            got[ci][(by, bx)] = nat
-    return got
-
-
 def test_jpeg_arith_progressive_validated_by_libjpeg(libjpeg_tools):
     """CONFORMANCE for the PROGRESSIVE arithmetic process (SOF10):
     direction 1 — this encoder's full Annex G scan scripts (incl. the
@@ -1307,7 +1196,7 @@ def test_jpeg_arith_progressive_validated_by_libjpeg(libjpeg_tools):
         jpg = _sp.run([str(libjpeg_tools / "jenc"), str(w), str(h), str(nc),
                        str(q), "0", "1"],
                       input=raw, capture_output=True, timeout=120).stdout
-        mine = _decode_prog_arith_stream_coeffs(jpg)
+        mine = _decode_arith_stream_coeffs(jpg)
         theirs = _coef_dump(libjpeg_tools, jpg)
         for ci, dump in theirs.items():
             bw = dump["bw"]
@@ -1403,6 +1292,10 @@ def test_jpeg_progressive_round_trip():
     # DRI rebinding: the restart variant emits DRI twice (Ri, then 0)
     ri_doc = synth_jpeg_progressive(6)
     assert ri_doc.count(b"\xff\xdd") == 2 and b"\xff\xd0" in ri_doc
+
+    # 0xFF fill bytes may precede any marker (T.81 B.1.1.2), EOI included
+    for p in (synth_jpeg_progressive(3), synth_jpeg_420(3)):
+        assert jpeg_planes(p[:-2] + b"\xff\xff\xff\xd9") == jpeg_planes(p)
 
 
 def test_avi_mjpeg_codec_round_trip():
@@ -1518,6 +1411,28 @@ def test_jpeg_noninterleaved_multiscan_round_trip():
     second_sos = p.find(b"\xff\xda", p.find(b"\xff\xda") + 2)
     with pytest.raises(ValueError, match="missing scans"):
         jpeg_planes(p[:second_sos] + b"\xff\xd9")
+
+
+def test_quant_table_latched_at_first_scan():
+    """Each component dequantizes with the table its slot held at the
+    component's first scan (libjpeg's latch_quant_tables): a DQT that
+    redefines the slot after that scan changes no pixel — for a
+    progressive grayscale stream, whose later scans refine the same
+    component, and for a sequential one-scan-per-component color stream."""
+    import struct
+
+    from financedatabase_spark.operators.jpeg import (
+        jpeg_frame,
+        synth_jpeg,
+        synth_jpeg_color,
+    )
+
+    flat_qt = b"\xff\xdb" + struct.pack(">H", 67) + bytes([0]) + bytes([1] * 64)
+    for payload in (synth_jpeg(2), synth_jpeg_color(7, (1, 1), multiscan=True)):
+        first = payload.index(b"\xff\xda")
+        second = payload.index(b"\xff\xda", first + 2)
+        redefined = payload[:second] + flat_qt + payload[second:]
+        assert jpeg_frame(redefined) == jpeg_frame(payload)
 
 
 def test_grid_resize_hand_example():
@@ -2160,12 +2075,16 @@ def test_jpeg_lossless_seams_and_validation():
 def test_jpeg_12bit_extended_sequential():
     """SOF1 at precision 12: level shift 2048 and clamp 4095 must follow
     the SOF precision — the DC-only fixtures decode to dc + 2048 exactly
-    — while baseline (SOF0) and progressive (SOF2) stay 8-bit-only."""
-    import struct
-
+    — while baseline (SOF0) and progressive (SOF2) stay 8-bit-only. The
+    arithmetic progressive process (SOF10) rebuilds a 12-bit frame like
+    its sequential twin SOF9 over the same coefficients."""
     from financedatabase_spark.operators.jpeg import (
+        _FIXTURE_QT,
         assemble_jpeg,
-        jpeg_decode_deep,
+        assemble_jpeg_arith,
+        assemble_jpeg_progressive,
+        jpeg_decode,
+        jpeg_frame,
         jpeg_planes,
         synth_jpeg12,
     )
@@ -2177,8 +2096,23 @@ def test_jpeg_12bit_extended_sequential():
             dc = (d * 29) % 3000 - 1500 + (b * 37 + d) % 500
             by, bxx = divmod(b, bx)
             assert planes[0][(by * 8) * w + bxx * 8] == dc + 2048
-        feats = jpeg_decode_deep(synth_jpeg12(d))
+        feats = jpeg_decode(synth_jpeg12(d))
         assert abs(sum(feats) - 1.0) < 1e-12 and len(feats) == 8
+
+    # the same 12-bit coefficients as SOF9 and as SOF10 (the progressive
+    # arithmetic container with its SOF precision byte set to 12)
+    blocks = []
+    for b in range(6):
+        bz = [0] * 64
+        bz[0] = (b * 611) % 3000 - 1500
+        bz[14] = b % 5 - 2
+        blocks.append(bz)
+    seq = jpeg_frame(assemble_jpeg_arith(24, 16, _FIXTURE_QT, blocks, prec=12))
+    prog = bytearray(assemble_jpeg_progressive(24, 16, _FIXTURE_QT, blocks, arith=True))
+    sof10 = prog.index(b"\xff\xca")
+    prog[sof10 + 4] = 12
+    assert seq[3] == 12 and max(seq[2][0]) > 255  # no 8-bit clamp
+    assert jpeg_frame(bytes(prog)) == seq
 
     # 12-bit under the BASELINE marker is rejected (T.81 Table B.2)
     qt = [8] * 64
@@ -2236,6 +2170,7 @@ def test_jpeg_exotic_sampling_round_trip():
         _U4_SIGN,
         jpeg_planes,
         synth_jpeg_color,
+        synth_jpeg_progressive,
     )
 
     def lum(d, x, y):
@@ -2302,6 +2237,14 @@ def test_jpeg_exotic_sampling_round_trip():
             assert planes[0][y * pw + x] == lum(3, x, y)
     with pytest.raises(ValueError, match="10 .*blocks per MCU|blocks per MCU"):
         jpeg_planes(synth_jpeg_color(3, (4, 4), multiscan=False))
+    # its SOF2 twin: the 4:2:0 progressive fixture with Y sampling 4x4,
+    # whose interleaved DC scans hold 18 blocks per MCU
+    prog = bytearray(synth_jpeg_progressive(3))
+    y_hv = prog.index(b"\xff\xc2") + 11
+    assert prog[y_hv] == 0x22
+    prog[y_hv] = 0x44
+    with pytest.raises(ValueError, match="blocks per MCU"):
+        jpeg_planes(bytes(prog))
 
 
 def _idct_block_reference(coef, prec=8, shift=True):

@@ -82,3 +82,30 @@ def test_registry_order_independent_of_import_order():
     ]
     assert outs[0] == outs[1] == outs[2]
     assert int(outs[0].split()[0]) >= 165
+
+
+def test_idct_runs_from_one_place():
+    """Every DCT scan decodes into one coefficient store and one pass at
+    EOI runs the IDCT, so `_idct_block` has exactly one call site in the
+    package, in `operators/jpeg.py`."""
+    sites = []
+
+    def visit(node, path, func):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                visit(child, path, child.name)
+                continue
+            if isinstance(child, ast.Call):
+                f = child.func
+                name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+                if name == "_idct_block":
+                    sites.append((path, func, child.lineno))
+            visit(child, path, func)
+
+    for root, _, files in os.walk(PKG):
+        for f in files:
+            if f.endswith(".py"):
+                path = os.path.join(root, f)
+                with open(path) as fh:
+                    visit(ast.parse(fh.read(), path), os.path.relpath(path, PKG), None)
+    assert len(sites) == 1 and sites[0][0] == os.path.join("operators", "jpeg.py"), sites
