@@ -1,17 +1,34 @@
-"""Pure-stdlib baseline JPEG codec for the multimodal decode seam.
+"""Pure-stdlib JPEG codec (ITU-T T.81) for the multimodal decode seam.
 
 The container has no Pillow, so non-PNG images were a documented
-NotImplementedError seam. This module closes the dominant real-world
-format: a spec-valid baseline-DCT JPEG (ITU-T T.81) encoder for
-deterministic fixtures and a full decoder — marker parse (SOI/APP/DQT/
-DHT/SOF0/SOS/EOI), canonical Huffman decode with 0xFF00 byte
-un-stuffing, per-position dequantization, de-zigzag, separable 8x8
-IDCT, level shift and clamp. Supported layouts: grayscale (1x1) and
-3-component YCbCr 4:2:0 (Y 2x2 / Cb,Cr 1x1 — the dominant camera/web
-layout) with interleaved-MCU scan decode, per-component DC predictors,
-separate luma/chroma quant tables, and 2x2 replication chroma
-upsampling, plus restart intervals (DRI/RSTn — byte-aligned predictor
-resets, the segmentation every hardware encoder emits).
+NotImplementedError seam. This module decodes every T.81 process —
+sequential and progressive DCT, lossless and hierarchical, each under
+Huffman or arithmetic coding — for grayscale and 3-component YCbCr
+frames at any legal sampling, and encodes the deterministic fixtures
+(`synth_jpeg*`) that the registered image queries decode. The
+baseline decode path: marker parse, canonical Huffman decode with
+0xFF00 byte un-stuffing, per-position dequantization, de-zigzag,
+separable 8x8 IDCT, level shift and clamp, chroma upsampling, and
+restart intervals (DRI/RSTn — byte-aligned predictor resets, the
+segmentation every hardware encoder emits). 0xFF fill bytes may
+precede any marker (T.81 B.1.1.2), between segments as after a scan.
+
+Encode structure: the fixture encoder mirrors the decoder in four
+parts. Every assembler (`assemble_jpeg`, `assemble_jpeg_color`,
+`assemble_jpeg_progressive`, `assemble_jpeg_lossless`,
+`assemble_jpeg_hierarchical`) lists its header segments, in one fixed
+order, through one segment writer (`_segments`); ``arith=True`` swaps
+the Huffman tables for a DAC segment and the QM-coder. One MCU-order
+rule (`_scan_order`, which the decoder's block walker uses too) lays
+out interleaved, non-interleaved (A.2.2) and partial subset scans at
+any sampling, for the sequential scans and the progressive DC scans
+alike. One scan loop (`_scan`) alone cuts a scan into restart
+intervals: flush, cycling RSTn, coder restart. A coder, `_HuffCoder`
+or `_ArithCoder` (the twins of `_HuffScan` / `_ArithScan`), supplies
+one step per scan kind: sequential block, DC first / refinement, AC
+first / refinement, lossless difference. Hierarchical frames go
+through the same sequential and lossless scan writers.
+`_BitWriter.put` packs a whole code (and its appended bits) per call.
 
 Progressive DCT (SOF2) decodes for real too — a large share of web
 JPEGs are progressive, so a crawl-facing multimodal stage cannot stop
@@ -29,21 +46,22 @@ sequential or progressive, Huffman or arithmetic, interleaved,
 partially interleaved or one-component — into ONE per-component store
 of quantized zigzag coefficients over the frame's MCU block grid. One
 SOS-header parser (`_parse_dct_sos`) validates every DCT scan, one
-block walker (`JpegCoefficients.walk`) visits its blocks in T.81 A.2 order and
-calls the coder's restart step every Ri MCUs, and the coder
+block walker (`JpegCoefficients.walk`) visits its blocks in T.81 A.2 order
+(`_scan_order`, shared with the encoder) and calls the coder's restart
+step every Ri MCUs, and the coder
 (`_HuffScan` / `_ArithScan`) supplies the one entropy step the scan
 kind needs. Each component latches its quant table at its first scan,
 as libjpeg does, so a DQT that later redefines the slot does not
 change it. Phase two (`_reconstruct`) runs once at EOI: dequantize,
 IDCT at the frame precision, crop and upsample.
 
-Color layouts: every T.81-legal YCbCr sampling grid with integer
-replication ratios decodes — the standard 4:4:4 / 4:2:2 / 4:4:0 /
-4:2:0 AND the exotic factors (3x1, 4x1, 1x3, 4x2 / 4:1:1; factors 1-4,
-MCU <= 10 blocks, each component's factor dividing the max — the MCU
-walk, plane allocation, and replication upsampler are
-sampling-generic). Quant tables parse in both DQT precisions (8-bit
-Pq=0 and 16-bit big-endian Pq=1).
+Color layouts: every T.81-legal YCbCr sampling grid decodes — the
+standard 4:4:4 / 4:2:2 / 4:4:0 / 4:2:0, the exotic factors (3x1, 4x1,
+1x3, 4x2 / 4:1:1; factors 1-4, at most 10 blocks per interleaved MCU)
+and non-integer replication ratios such as 3x1 Y against 2x1 chroma:
+the MCU walk, plane allocation and upsampler (the A.1.1 map
+x -> x*hs//hmax) are sampling-generic. Quant tables parse in both DQT
+precisions (8-bit Pq=0 and 16-bit big-endian Pq=1).
 
 Non-interleaved SEQUENTIAL multi-scan streams decode too (one
 full-band scan per component over its ceil(comp_size/8) grid, a
@@ -286,8 +304,50 @@ def _lossless_predict(
     return (a + b) >> 1  # predictor 7
 
 
-# -- encoder (fixture synthesis) ---------------------------------------------
+def _scan_order(
+    w: int, h: int, samplings: list[tuple[int, ...]], blocks: list[list], scan: list[int],
+) -> tuple[list[tuple[int, list[int]]], int]:
+    """The codec's one MCU-order rule, for the decoder's block walker and
+    the encoder's scan loop alike: (the scan's (scan component index,
+    block) pairs in T.81 A.2 order, blocks per MCU). ``samplings[c]``
+    starts with frame component c's (hs, vs); ``blocks[c]`` is its flat
+    block list over the frame's padded MCU grid, mcus_x * hs blocks per
+    row; ``scan`` names the scan's components by frame index. An
+    interleaved scan (ns > 1, full or partial) walks the frame MCU grid,
+    each MCU holding hs x vs blocks per scan component (A.2.3); a
+    one-component scan's MCU is one block over the component's
+    ceil(ceil(dim * sampling / max sampling) / 8) grid (A.2.2), smaller
+    than the padded MCU grid when the geometry pads an MCU."""
+    hmax = max(s[0] for s in samplings)
+    vmax = max(s[1] for s in samplings)
+    mcus_x = (w + 8 * hmax - 1) // (8 * hmax)
+    mcus_y = (h + 8 * vmax - 1) // (8 * vmax)
+    if len(scan) > 1:
+        n_x, n_y = mcus_x, mcus_y
+        members = []  # (scan index, blocks, offset in MCU, hs, MCU row stride)
+        for si, ci in enumerate(scan):
+            hs, vs = samplings[ci][:2]
+            stride = mcus_x * hs
+            members += [
+                (si, blocks[ci], byy * stride + bxx, hs, vs * stride)
+                for byy in range(vs)
+                for bxx in range(hs)
+            ]
+    else:
+        hs, vs = samplings[scan[0]][:2]
+        n_x = ((w * hs + hmax - 1) // hmax + 7) // 8
+        n_y = ((h * vs + vmax - 1) // vmax + 7) // 8
+        members = [(0, blocks[scan[0]], 0, 1, mcus_x * hs)]
+    order = [
+        (si, comp_blocks[my * row_stride + mx * hs + off])
+        for my in range(n_y)
+        for mx in range(n_x)
+        for si, comp_blocks, off, hs, row_stride in members
+    ]
+    return order, len(members)
 
+
+# -- encoder (fixture synthesis; see "Encode structure" above) ---------------
 
 class _BitWriter:
     """MSB-first bit packer with 0xFF byte stuffing (T.81 F.1.2.3)."""
@@ -298,24 +358,27 @@ class _BitWriter:
         self._n = 0
 
     def put(self, value: int, nbits: int) -> None:
-        for i in range(nbits - 1, -1, -1):
-            self._acc = (self._acc << 1) | ((value >> i) & 1)
-            self._n += 1
-            if self._n == 8:
-                self.out.append(self._acc)
-                if self._acc == 0xFF:
-                    self.out.append(0x00)
-                self._acc, self._n = 0, 0
+        """Append the low ``nbits`` bits of ``value``, a whole code (or a
+        code and its appended bits) at a time."""
+        acc = (self._acc << nbits) | (value & ((1 << nbits) - 1))
+        n = self._n + nbits
+        out = self.out
+        while n >= 8:
+            n -= 8
+            b = (acc >> n) & 0xFF
+            out.append(b)
+            if b == 0xFF:
+                out.append(0x00)
+        self._acc = acc & ((1 << n) - 1)
+        self._n = n
 
     def flush(self) -> bytes:
+        """Pad the last byte with 1-bits and hand over (and clear) the
+        bytes written so far."""
         if self._n:
-            pad = 8 - self._n
-            self._acc = (self._acc << pad) | ((1 << pad) - 1)
-            self.out.append(self._acc)
-            if self._acc == 0xFF:
-                self.out.append(0x00)
-            self._acc, self._n = 0, 0
-        return bytes(self.out)
+            self.put((1 << (8 - self._n)) - 1, 8 - self._n)
+        out, self.out = bytes(self.out), bytearray()
+        return out
 
 
 def _mag_bits(v: int) -> tuple[int, int]:
@@ -326,219 +389,438 @@ def _mag_bits(v: int) -> tuple[int, int]:
     return size, v if v > 0 else v + (1 << size) - 1
 
 
-def _encode_block(w: _BitWriter, bz: list[int], pred: int) -> int:
-    """Entropy-encode one quantized block (DC diff + AC run-lengths with
-    ZRL/EOB) into ``w``; returns the new DC predictor."""
-    size, bits = _mag_bits(bz[0] - pred)
-    code, length = _DC_ENC[size]
-    w.put(code, length)
-    if size:
-        w.put(bits, size)
-    last_nz = 0
-    for i in range(63, 0, -1):
-        if bz[i]:
-            last_nz = i
-            break
-    run = 0
-    for i in range(1, last_nz + 1):
-        if bz[i] == 0:
-            run += 1
-            continue
-        while run >= 16:
-            code, length = _AC_ENC[0xF0]
-            w.put(code, length)
-            run -= 16
-        size, bits = _mag_bits(bz[i])
-        code, length = _AC_ENC[(run << 4) | size]
-        w.put(code, length)
-        w.put(bits, size)
-        run = 0
-    if last_nz != 63:
-        code, length = _AC_ENC[0x00]
-        w.put(code, length)
-    return bz[0]
+#: JFIF APP0 payload: version 1.1, aspect-ratio units, 1:1 density
+_APP0 = b"JFIF\x00" + bytes([1, 1, 0, 0, 1, 0, 1, 0, 0])
 
 
-def _encode_scan_mcus(
-    mcus: list[list[tuple[int, list[int]]]], restart_interval: int = 0
-) -> bytes:
-    """Entropy-encode a scan MCU by MCU: each MCU is its component-order
-    list of (component index, zigzag quantized block). DC prediction is
-    per component (T.81 F.1.1.5.1); all components use the Annex K
-    luminance Huffman tables (the SOS declares exactly that). With
-    ``restart_interval`` = Ri > 0, an RSTn marker (n cycling 0-7) is
-    emitted after every Ri MCUs (byte-aligned, predictors reset —
-    T.81 F.1.2.3 / E.2.4), matching an emitted DRI segment."""
+def _segments(*segs: tuple[int, bytes] | None) -> bytes:
+    """The encoder's one segment writer: each (marker, payload) pair as
+    0xFF marker, 2-byte length, payload, in the order listed. A falsy
+    entry (an optional segment left out) writes nothing."""
+    out = b""
+    for seg in segs:
+        if seg:
+            marker, payload = seg
+            out += struct.pack(">BBH", 0xFF, marker, len(payload) + 2) + payload
+    return out
+
+
+def _sof(prec: int, w: int, h: int, comps: list[tuple]) -> bytes:
+    """Frame header payload (SOFn and DHP, T.81 B.2.2 / B.3.2); component
+    i gets id i + 1 and its (hs, vs, quant table) from ``comps``."""
+    return struct.pack(">BHHB", prec, h, w, len(comps)) + b"".join(
+        bytes([i + 1, (hs << 4) | vs, tq]) for i, (hs, vs, tq, *_) in enumerate(comps)
+    )
+
+
+def _dqt(tables: list[list[int]], wide: bool = False) -> bytes:
+    """DQT payload: table i in slot i, 8-bit entries or, ``wide``, 16-bit
+    big-endian ones (Pq=1, T.81 B.2.4.1)."""
+    if wide:
+        return b"".join(
+            bytes([0x10 | i]) + struct.pack(">64H", *qt) for i, qt in enumerate(tables)
+        )
+    return b"".join(bytes([i]) + bytes(qt) for i, qt in enumerate(tables))
+
+
+def _dht(tc_th: int, bits: list[int], vals: list[int]) -> bytes:
+    return bytes([tc_th]) + bytes(bits) + bytes(vals)
+
+
+#: the DAC conditioning of the DCT fixtures — DC (L, U) = (0, 1), AC
+#: Kx = 5, the T.81 defaults — on statistics bank 0, and on banks 0 and 1
+#: (luma, chroma) in the sequential color frames
+_DCT_COND = {("dc", 0): (0, 1), ("ac", 0): 5}
+_DCT_COND_COLOR = {("dc", 0): (0, 1), ("dc", 1): (0, 1), ("ac", 0): 5, ("ac", 1): 5}
+
+
+def _dac(cond: dict) -> bytes:
+    """DAC payload (T.81 B.2.4.3) declaring ``cond`` — ("dc", id) ->
+    (L, U), ("ac", id) -> Kx, the mapping the decoder builds and
+    `_ArithCoder` codes under."""
     out = bytearray()
-    w = _BitWriter()
-    preds: dict[int, int] = {}
-    rst = 0
-    for idx, mcu in enumerate(mcus):
-        if restart_interval and idx and idx % restart_interval == 0:
-            out += w.flush()
-            out += bytes([0xFF, 0xD0 + rst])
-            rst = (rst + 1) % 8
-            w = _BitWriter()
-            preds = {}
-        for comp, bz in mcu:
-            preds[comp] = _encode_block(w, bz, preds.get(comp, 0))
-    out += w.flush()
+    for (kind, tbl), v in cond.items():
+        out += bytes([tbl, (v[1] << 4) | v[0]] if kind == "dc" else [0x10 | tbl, v])
     return bytes(out)
 
 
-def _seg(marker: int, payload: bytes) -> bytes:
-    return struct.pack(">HH", marker, len(payload) + 2) + payload
+def _sos(comps: list[tuple[int, int, int]], ss: int, se: int, ah: int, al: int) -> bytes:
+    """SOS payload: (component id, DC table, AC table) per scan
+    component, then Ss, Se, Ah/Al."""
+    body = [len(comps)]
+    for cs, td, ta in comps:
+        body += (cs, (td << 4) | ta)
+    return bytes(body + [ss, se, (ah << 4) | al])
 
 
-def _encode_arith_scan_mcus(
-    mcus: list[list[tuple[int, int, int, list[int]]]],
-    restart_interval: int,
-    ncomp: int,
+def _scan(
+    coder: _HuffCoder | _ArithCoder, step: Callable[[list], None], units: list,
+    span: int,
 ) -> bytes:
-    """Arithmetic twin of `_encode_scan_mcus`: each MCU is its
-    component-order list of (component index, DC bank id, AC bank id,
-    zigzag quantized block), entropy-coded with the Annex D QM-coder at
-    the DEFAULT conditioning (L=0, U=1, Kx=5 — exactly what the DAC
-    segment the assemblers emit declares). A restart boundary flushes
-    the coder (D.1.8), emits the cycling RSTn marker, and restarts with
-    fresh registers and statistics (F.1.4.4)."""
-    chunks: list[bytes] = []
-    enc, stats = ArithEncoder(), ArithStats(ncomp)
-    rst = 0
-    for idx, mcu in enumerate(mcus):
-        if restart_interval and idx and idx % restart_interval == 0:
-            chunks.append(enc.finish())
-            chunks.append(bytes([0xFF, 0xD0 + rst]))
-            rst = (rst + 1) % 8
-            enc, stats = ArithEncoder(), ArithStats(ncomp)
-        for ci, td, ta, bz in mcu:
-            encode_block_arith(enc, stats, ci, td, ta, {}, bz)
-    chunks.append(enc.finish())
-    return b"".join(chunks)
+    """The one restart loop of the encoder: hand ``step`` the scan's
+    units — (scan component index, block) pairs, or sample rows for a
+    lossless scan — ``span`` units (one restart interval) at a time;
+    between intervals flush the coder, write RSTn (n cycling 0-7) and
+    restart the coder (T.81 E.2.4, F.1.2.3, F.1.4.4). ``span`` 0 codes
+    the scan as one interval."""
+    out = b""
+    span = span or len(units) or 1
+    for start in range(0, len(units), span):
+        if start:
+            out += coder.flush() + bytes([0xFF, 0xD0 + (start // span - 1) % 8])
+            coder.restart()
+        step(units[start:start + span])
+    return out + coder.flush()
 
 
-def assemble_jpeg_arith(
-    w: int,
-    h: int,
-    qt_zz: list[int],
-    blocks_zz: list[list[int]],
-    restart_interval: int = 0,
-    prec: int = 8,
-) -> bytes:
-    """Assemble a spec-valid grayscale ARITHMETIC-coded JPEG (SOF9,
-    extended sequential DCT — T.81 Annex D/F) from the same zigzag
-    quant table + quantized blocks `assemble_jpeg` takes: identical
-    pixels, arithmetic entropy layer. Emits the DAC segment with the
-    default conditioning (DC L=0/U=1, AC Kx=5). Cross-validated against
-    libjpeg in tests/test_multimodal.py."""
-    if prec not in (8, 12):
-        raise ValueError(f"DCT sample precision must be 8 or 12, got {prec}")
-    app0 = b"JFIF\x00" + bytes([1, 1, 0, 0, 1, 0, 1, 0, 0])
-    dqt = bytes([0x00]) + bytes(qt_zz)
-    sof9 = struct.pack(">BHHB", prec, h, w, 1) + bytes([1, 0x11, 0])
-    dac = bytes([0x00, 0x10, 0x10, 5])  # DC0: (U=1)<<4|(L=0); AC0: Kx=5
-    sos = bytes([1, 1, 0x00, 0, 63, 0])
-    dri = _seg(0xFFDD, struct.pack(">H", restart_interval)) if restart_interval else b""
-    return (
-        b"\xff\xd8"
-        + _seg(0xFFE0, app0)
-        + _seg(0xFFDB, dqt)
-        + dri
-        + _seg(0xFFC9, sof9)
-        + _seg(0xFFCC, dac)
-        + _seg(0xFFDA, sos)
-        + _encode_arith_scan_mcus(
-            [[(0, 0, 0, bz)] for bz in blocks_zz], restart_interval, 1
+class _HuffCoder:
+    """Huffman entropy state of one scan (T.81 Annex F/G/H), twin of the
+    decoder's `_HuffScan`: the bit writer, one DC predictor per scan
+    component, and the progressive EOB run with the correction bits
+    owed by the refinement blocks inside it (G.1.2.3). ``dc`` / ``ac``
+    map a symbol to its (code, length); every scan component codes
+    with that pair. Each step codes one restart interval's units."""
+
+    def __init__(
+        self, ncomp: int, dc: dict, ac: dict | None = None, ss: int = 0,
+        se: int = 63, al: int = 0,
+    ) -> None:
+        self.w = _BitWriter()
+        self.dc, self.ac = dc, ac
+        self.ss, self.se, self.al = ss, se, al
+        self.preds = [0] * ncomp
+        self.eobrun = 0
+        self.owed: list[int] = []
+
+    def restart(self) -> None:
+        self.preds = [0] * len(self.preds)
+
+    def flush(self) -> bytes:
+        if self.eobrun or self.owed:
+            self._end_eobrun()
+        return self.w.flush()
+
+    def _end_eobrun(self) -> None:
+        """Emit the pending EOB run as one EOBn symbol, then the
+        correction bits owed by its blocks."""
+        put = self.w.put
+        if self.eobrun:
+            r = self.eobrun.bit_length() - 1
+            code, length = self.ac[r << 4]
+            put((code << r) | (self.eobrun - (1 << r)), length + r)
+            self.eobrun = 0
+        for b in self.owed:
+            put(b, 1)
+        self.owed = []
+
+    def _count_eob(self) -> None:
+        self.eobrun += 1
+        if self.eobrun == 0x7FFF:
+            self._end_eobrun()
+
+    def sequential(self, run: list[tuple[int, list[int]]]) -> None:
+        """Whole blocks: DC difference, then AC run-lengths with ZRL
+        and EOB (F.1.2)."""
+        put, dc, ac, preds = self.w.put, self.dc, self.ac, self.preds
+        zrl = ac[0xF0]
+        for si, bz in run:
+            size, bits = _mag_bits(bz[0] - preds[si])
+            preds[si] = bz[0]
+            code, length = dc[size]
+            put((code << size) | bits, length + size)
+            last_nz = 0
+            for i in range(63, 0, -1):
+                if bz[i]:
+                    last_nz = i
+                    break
+            run_len = 0
+            for i in range(1, last_nz + 1):
+                if bz[i] == 0:
+                    run_len += 1
+                    continue
+                while run_len >= 16:
+                    put(*zrl)
+                    run_len -= 16
+                size, bits = _mag_bits(bz[i])
+                code, length = ac[(run_len << 4) | size]
+                put((code << size) | bits, length + size)
+                run_len = 0
+            if last_nz != 63:
+                put(*ac[0x00])
+
+    def dc_first(self, run: list[tuple[int, list[int]]]) -> None:
+        """Progressive DC first: the point-transformed DC (arithmetic
+        shift right by Al) coded against its predictor (G.1.2.1)."""
+        put, dc, preds, al = self.w.put, self.dc, self.preds, self.al
+        for si, bz in run:
+            v = bz[0] >> al
+            size, bits = _mag_bits(v - preds[si])
+            preds[si] = v
+            code, length = dc[size]
+            put((code << size) | bits, length + size)
+
+    def dc_refine(self, run: list[tuple[int, list[int]]]) -> None:
+        """Progressive DC refinement: bit Al of each DC, raw (G.1.2.1)."""
+        put, al = self.w.put, self.al
+        for _si, bz in run:
+            put((bz[0] >> al) & 1, 1)
+
+    def ac_first(self, run: list[tuple[int, list[int]]]) -> None:
+        """Progressive AC first (G.1.2.2): sign * (|coef| >> Al) over
+        the band with run-length and cross-block EOBn coding."""
+        put, ac, ss, se, al = self.w.put, self.ac, self.ss, self.se, self.al
+        for _si, bz in run:
+            vals = []
+            last = -1
+            for k in range(ss, se + 1):
+                v = bz[k]
+                mag = (v if v >= 0 else -v) >> al
+                vals.append(0 if mag == 0 else (mag if v > 0 else -mag))
+                if mag:
+                    last = k - ss
+            if last < 0:
+                self._count_eob()
+                continue
+            self._end_eobrun()
+            run_len = 0
+            for i in range(last + 1):
+                v = vals[i]
+                if v == 0:
+                    run_len += 1
+                    continue
+                while run_len >= 16:
+                    put(*ac[0xF0])
+                    run_len -= 16
+                size, bits = _mag_bits(v)
+                code, length = ac[(run_len << 4) | size]
+                put((code << size) | bits, length + size)
+                run_len = 0
+            if last < se - ss:
+                self._count_eob()
+
+    def ac_refine(self, run: list[tuple[int, list[int]]]) -> None:
+        """Progressive AC refinement (G.1.2.3): a newly nonzero
+        coefficient (|coef| >> Al == 1) gets a run symbol and sign bit;
+        a previously nonzero one gets a correction bit, written after
+        the next symbol or after the EOBn that covers its block."""
+        put, ac, ss, se, al = self.w.put, self.ac, self.ss, self.se, self.al
+        for _si, bz in run:
+            absvals = []
+            eobpos = -1
+            for k in range(ss, se + 1):
+                t = bz[k]
+                t = (t if t >= 0 else -t) >> al
+                absvals.append(t)
+                if t == 1:
+                    eobpos = k - ss
+            run_len = 0
+            br: list[int] = []
+            for i, t in enumerate(absvals):
+                if t == 0:
+                    run_len += 1
+                    continue
+                while run_len > 15 and i <= eobpos:
+                    self._end_eobrun()
+                    put(*ac[0xF0])
+                    run_len -= 16
+                    for b in br:
+                        put(b, 1)
+                    br = []
+                if t > 1:
+                    br.append(t & 1)
+                    continue
+                self._end_eobrun()
+                code, length = ac[(run_len << 4) | 1]
+                put((code << 1) | (1 if bz[ss + i] >= 0 else 0), length + 1)
+                for b in br:
+                    put(b, 1)
+                br = []
+                run_len = 0
+            if run_len > 0 or br:
+                self.owed.extend(br)
+                self._count_eob()
+
+    def lossless(self, rows: list[list[tuple[int, ...]]]) -> None:
+        """Lossless differences (H.1.2): each mod-2^16 difference mapped
+        into [-32767, 32768] and category-coded like a DC difference;
+        +32768 is category 16 with no appended bits, the only form that
+        stays within 16 categories when 16-bit predictions overshoot."""
+        put, table = self.w.put, self.dc
+        for row in rows:
+            for mcu in row:
+                for d in mcu:
+                    if d > 32768:
+                        d -= 65536
+                    if d == 32768:
+                        put(*table[16])
+                        continue
+                    size, bits = _mag_bits(d)
+                    code, length = table[size]
+                    put((code << size) | bits, length + size)
+
+
+class _ArithCoder:
+    """Arithmetic twin of `_HuffCoder` (the T.81 Annex D QM-coder under
+    the Annex F/G/H models), twin of the decoder's `_ArithScan`: a fresh
+    encoder and statistics area per scan and per restart interval.
+    ``tds`` / ``tas`` name each scan component's DC / AC statistics
+    bank; ``cond`` is the conditioning the stream's DAC declares."""
+
+    def __init__(
+        self, tds: list[int], tas: list[int], cond: dict, ss: int = 0,
+        se: int = 63, ah: int = 0, al: int = 0,
+    ) -> None:
+        self.tds, self.tas, self.cond = tds, tas, cond
+        self.ss, self.se, self.ah, self.al = ss, se, ah, al
+        self.restart()
+
+    def restart(self) -> None:
+        self.enc = ArithEncoder()
+        self.stats = ArithStats(len(self.tds))
+        self.ll_bank = bytearray(LL_STAT_BINS)
+
+    def flush(self) -> bytes:
+        return self.enc.finish()  # D.1.8; `restart` makes a new encoder
+
+    def sequential(self, run: list[tuple[int, list[int]]]) -> None:
+        enc, stats, tds, tas, cond = self.enc, self.stats, self.tds, self.tas, self.cond
+        for si, bz in run:
+            encode_block_arith(enc, stats, si, tds[si], tas[si], cond, bz)
+
+    def dc_first(self, run: list[tuple[int, list[int]]]) -> None:
+        enc, stats, tds, cond, al = self.enc, self.stats, self.tds, self.cond, self.al
+        for si, bz in run:
+            encode_dc_arith(enc, stats, si, tds[si], cond, bz[0] >> al)
+
+    def dc_refine(self, run: list[tuple[int, list[int]]]) -> None:
+        enc, fixed, al = self.enc, self.stats.fixed, self.al
+        for _si, bz in run:
+            enc.encode(fixed, 0, (bz[0] >> al) & 1)
+
+    def ac_first(self, run: list[tuple[int, list[int]]]) -> None:
+        enc, stats, ta, ss, se, al = (
+            self.enc, self.stats, self.tas[0], self.ss, self.se, self.al
         )
-        + b"\xff\xd9"
-    )
+        for _si, bz in run:
+            encode_ac_first_arith(enc, stats, ta, self.cond, bz, ss, se, al)
 
-
-def assemble_jpeg_arith_color(
-    w: int,
-    h: int,
-    qt_y_zz: list[int],
-    qt_c_zz: list[int],
-    y_blocks: list[list[list[int]]],
-    cb_blocks: list[list[list[int]]],
-    cr_blocks: list[list[list[int]]],
-    sampling: tuple[int, int] = (2, 2),
-    restart_interval: int = 0,
-    multiscan: bool = False,
-    partial: bool = False,
-) -> bytes:
-    """Arithmetic twin of `assemble_jpeg_color`: SOF9 + DAC (default
-    conditioning for bank 0 = luma and bank 1 = chroma), QM-coded
-    entropy, in any of the three sequential layouts — fully interleaved
-    MCUs (T.81 A.2.3), ``multiscan`` non-interleaved (one full-band
-    scan per component over its A.2.2 grid), or ``partial`` (a Y-only
-    scan then one Cb+Cr subset scan). Per-scan coder and statistics."""
-    if multiscan and partial:
-        raise ValueError("multiscan and partial are mutually exclusive")
-    hs, vs = sampling
-    mcu_w, mcu_h = len(cb_blocks[0]), len(cb_blocks)
-    app0 = b"JFIF\x00" + bytes([1, 1, 0, 0, 1, 0, 1, 0, 0])
-    dqt = bytes([0x00]) + bytes(qt_y_zz) + bytes([0x01]) + bytes(qt_c_zz)
-    sof9 = struct.pack(">BHHB", 8, h, w, 3) + bytes(
-        [1, (hs << 4) | vs, 0, 2, 0x11, 1, 3, 0x11, 1]
-    )
-    dac = bytes([0x00, 0x10, 0x01, 0x10, 0x10, 5, 0x11, 5])
-    dri = _seg(0xFFDD, struct.pack(">H", restart_interval)) if restart_interval else b""
-    head = (
-        b"\xff\xd8"
-        + _seg(0xFFE0, app0)
-        + _seg(0xFFDB, dqt)
-        + dri
-        + _seg(0xFFC9, sof9)
-        + _seg(0xFFCC, dac)
-    )
-    if multiscan:
-        ybw, ybh = (w + 7) // 8, (h + 7) // 8
-        cbw = ((w + hs - 1) // hs + 7) // 8
-        cbh = ((h + vs - 1) // vs + 7) // 8
-        scans = b""
-        for cid, tbl, grid in (
-            (1, 0, [y_blocks[by][bx] for by in range(ybh) for bx in range(ybw)]),
-            (2, 1, [cb_blocks[by][bx] for by in range(cbh) for bx in range(cbw)]),
-            (3, 1, [cr_blocks[by][bx] for by in range(cbh) for bx in range(cbw)]),
-        ):
-            scans += _seg(0xFFDA, bytes([1, cid, (tbl << 4) | tbl, 0, 63, 0]))
-            scans += _encode_arith_scan_mcus(
-                [[(0, tbl, tbl, bz)] for bz in grid], restart_interval, 1
-            )
-        return head + scans + b"\xff\xd9"
-    if partial:
-        ybw, ybh = (w + 7) // 8, (h + 7) // 8
-        y_grid = [y_blocks[by][bx] for by in range(ybh) for bx in range(ybw)]
-        scans = _seg(0xFFDA, bytes([1, 1, 0x00, 0, 63, 0]))
-        scans += _encode_arith_scan_mcus(
-            [[(0, 0, 0, bz)] for bz in y_grid], restart_interval, 1
+    def ac_refine(self, run: list[tuple[int, list[int]]]) -> None:
+        enc, stats, ta, ss, se, ah, al = (
+            self.enc, self.stats, self.tas[0], self.ss, self.se, self.ah, self.al
         )
-        cc_mcus = [
-            [(0, 1, 1, cb_blocks[my][mx]), (1, 1, 1, cr_blocks[my][mx])]
-            for my in range(mcu_h)
-            for mx in range(mcu_w)
-        ]
-        scans += _seg(0xFFDA, bytes([2, 2, 0x11, 3, 0x11, 0, 63, 0]))
-        scans += _encode_arith_scan_mcus(cc_mcus, restart_interval, 2)
-        return head + scans + b"\xff\xd9"
-    sos = bytes([3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0])
-    mcus: list[list[tuple[int, int, int, list[int]]]] = []
-    for my in range(mcu_h):
-        for mx in range(mcu_w):
-            mcu: list[tuple[int, int, int, list[int]]] = []
-            for byy in range(vs):
-                for bxx in range(hs):
-                    mcu.append((0, 0, 0, y_blocks[my * vs + byy][mx * hs + bxx]))
-            mcu.append((1, 1, 1, cb_blocks[my][mx]))
-            mcu.append((2, 1, 1, cr_blocks[my][mx]))
-            mcus.append(mcu)
-    return (
-        head
-        + _seg(0xFFDA, sos)
-        + _encode_arith_scan_mcus(mcus, restart_interval, 3)
-        + b"\xff\xd9"
+        for _si, bz in run:
+            encode_ac_refine_arith(enc, stats, ta, bz, ss, se, ah, al)
+
+    def lossless(self, rows: list[list[tuple[int, ...]]]) -> None:
+        """Lossless differences (H.1.2 over the F.1.4.1 DC tree), mapped
+        into [-32768, 32767] and conditioned on the differences coded to
+        the left (Da) and above (Db, 0 on an interval's first row); all
+        scan components share statistics table ``tds[0]``'s one bank."""
+        enc, bank, ns = self.enc, self.ll_bank, len(self.tds)
+        low, up = self.cond.get(("dc", self.tds[0]), (0, 1))
+        above = None
+        for row in rows:
+            left = [0] * ns
+            coded = []
+            for x, mcu in enumerate(row):
+                mapped = []
+                for si, d in enumerate(mcu):
+                    if d > 32767:
+                        d -= 65536
+                    db = above[x][si] if above else 0
+                    encode_lossless_diff_arith(
+                        enc, bank, ll_classify(left[si], low, up),
+                        ll_classify(db, low, up), d,
+                    )
+                    left[si] = d
+                    mapped.append(d)
+                coded.append(mapped)
+            above = coded
+
+
+def _sequential_scans(
+    w: int, h: int, comps: list[tuple], scans: list[list[int]],
+    tbls: list[int], restart_interval: int, cond: dict | None,
+) -> bytes:
+    """Every sequential DCT scan of a frame whose ``comps`` are (hs, vs,
+    quant table, `_scan_order` block list): per entry of ``scans`` (frame
+    component indices), its SOS segment and entropy-coded data, each
+    component coding with table / statistics bank ``tbls[c]`` — the
+    Annex K Huffman pair, or the QM-coder under ``cond`` when that is
+    given. ``restart_interval`` MCUs per RSTn interval in every scan."""
+    out = bytearray()
+    for scan in scans:
+        t = [tbls[c] for c in scan]
+        if cond is None:
+            coder = _HuffCoder(len(scan), _DC_ENC, _AC_ENC)
+        else:
+            coder = _ArithCoder(t, t, cond)
+        order, per_mcu = _scan_order(w, h, comps, [c[3] for c in comps], scan)
+        sos = _sos([(c + 1, tbl, tbl) for c, tbl in zip(scan, t)], 0, 63, 0, 0)
+        out += _segments((0xDA, sos))
+        out += _scan(coder, coder.sequential, order, restart_interval * per_mcu)
+    return bytes(out)
+
+
+def _lossless_scans(
+    w: int, h: int, planes: list[list[int]], predictor: int, prec: int,
+    al: int, interleaved: bool, restart_rows: int, cond: dict | None,
+    tbl: int,
+) -> bytes:
+    """Every scan of a lossless frame (T.81 Annex H) over ``planes`` of
+    ``prec``-bit samples (already reduced by the point transform
+    ``al``): one interleaved scan whose MCU is one sample per component
+    (A.2.3), or one scan per plane. ``predictor`` 1-7 selects the
+    Annex H predictor; 0 codes the samples themselves, the differential
+    frame of a hierarchical sequence. Whole-row restart intervals
+    (``restart_rows``) restart prediction at each interval's first line
+    (H.1.1). Coded with the `LL_BITS` Huffman table as DC table ``tbl``,
+    or with the QM-coder under ``cond`` when that is given."""
+    diffs = []
+    for plane in planes:
+        rows = []
+        for y in range(h):
+            row0 = y - y % restart_rows if restart_rows else 0
+            rows.append([
+                (plane[y * w + x] - (
+                    _lossless_predict(plane, w, x, y, predictor, prec, row0)
+                    if predictor else 0
+                )) & 0xFFFF
+                for x in range(w)
+            ])
+        diffs.append(rows)
+    groups = [list(range(len(planes)))] if interleaved else [[i] for i in range(len(planes))]
+    out = bytearray()
+    for g in groups:
+        if cond is None:
+            coder = _HuffCoder(len(g), _LL_ENC)
+        else:
+            coder = _ArithCoder([tbl] * len(g), [0] * len(g), cond)
+        rows = [list(zip(*(diffs[i][y] for i in g))) for y in range(h)]
+        out += _segments((0xDA, _sos([(i + 1, tbl, 0) for i in g], predictor, 0, 0, al)))
+        out += _scan(coder, coder.lossless, rows, restart_rows)
+    return bytes(out)
+
+
+def _dct_header(
+    sof: int, prec: int, w: int, h: int, comps: list[tuple],
+    qts: list[list[int]], restart_interval: int, tables: list[tuple[int, bytes]],
+    qt_16bit: bool = False,
+) -> bytes:
+    """SOI and the header segments of every DCT assembler, in one order:
+    APP0, DQT, DRI (when ``restart_interval``), the ``sof`` frame
+    header, then the entropy ``tables`` (DHT or DAC segments)."""
+    return b"\xff\xd8" + _segments(
+        (0xE0, _APP0),
+        (0xDB, _dqt(qts, qt_16bit)),
+        restart_interval and (0xDD, struct.pack(">H", restart_interval)),
+        (sof, _sof(prec, w, h, comps)),
+        *tables,
     )
+
+
+#: the Annex K luminance Huffman pair as DC and AC table 0
+_ANNEX_K_DHT = [(0xC4, _dht(0x00, DC_BITS, DC_VALS)), (0xC4, _dht(0x10, AC_BITS, AC_VALS))]
 
 
 def assemble_jpeg(
@@ -550,11 +832,12 @@ def assemble_jpeg(
     qt_16bit: bool = False,
     sof1: bool = False,
     prec: int = 8,
+    arith: bool = False,
 ) -> bytes:
-    """Assemble a complete spec-valid grayscale baseline JPEG from a
+    """Assemble a complete spec-valid grayscale sequential JPEG from a
     zigzag quant table and per-block quantized coefficients (blocks in
-    raster MCU order, ceil(w/8)*ceil(h/8) of them — each block is its
-    own MCU in a non-subsampled single-component scan).
+    raster order, ceil(w/8)*ceil(h/8) of them — each block is its own
+    MCU in a single-component scan).
     ``restart_interval`` > 0 additionally emits a DRI segment and RSTn
     markers every that-many MCUs. ``qt_16bit`` stores the quant table
     with 16-bit big-endian entries (DQT Pq=1 — T.81 B.2.4.1): the same
@@ -564,33 +847,27 @@ def assemble_jpeg(
     at 8-bit precision the stream is otherwise identical, but a decoder
     that rejects the marker outright drops real crawl files.
     ``prec`` = 12 writes a deep extended-sequential frame (requires
-    ``sof1`` — T.81 Table B.2 limits baseline to 8-bit); the caller
-    must keep DC values/diffs within the Annex K table's categories
-    (|v| <= 2047), which the 12-bit fixtures do by construction."""
-    if prec == 12 and not sof1:
+    ``sof1`` or ``arith`` — T.81 Table B.2 limits baseline to 8-bit);
+    a Huffman caller must keep DC values/diffs within the Annex K
+    table's categories (|v| <= 2047), which the 12-bit fixtures do by
+    construction. ``arith=True`` emits the ARITHMETIC extended
+    sequential process instead (SOF9 + DAC with the default
+    conditioning, T.81 Annex D/F): the same pixels, QM-coded —
+    cross-validated against libjpeg in tests/test_multimodal.py."""
+    if sof1 and arith:
+        raise ValueError("sof1 and arith name two frame markers (SOF1, SOF9)")
+    if prec == 12 and not (sof1 or arith):
         raise ValueError("12-bit precision requires the SOF1 marker")
     if prec not in (8, 12):
         raise ValueError(f"DCT sample precision must be 8 or 12, got {prec}")
-    app0 = b"JFIF\x00" + bytes([1, 1, 0, 0, 1, 0, 1, 0, 0])
-    if qt_16bit:
-        dqt = bytes([0x10]) + b"".join(struct.pack(">H", v) for v in qt_zz)
+    comps = [(1, 1, 0, blocks_zz)]
+    if arith:
+        sof, cond, tables = 0xC9, _DCT_COND, [(0xCC, _dac(_DCT_COND))]
     else:
-        dqt = bytes([0x00]) + bytes(qt_zz)  # Pq=0 (8-bit), Tq=0
-    sof0 = struct.pack(">BHHB", prec, h, w, 1) + bytes([1, 0x11, 0])
-    dht_dc = bytes([0x00]) + bytes(DC_BITS) + bytes(DC_VALS)
-    dht_ac = bytes([0x10]) + bytes(AC_BITS) + bytes(AC_VALS)
-    sos = bytes([1, 1, 0x00, 0, 63, 0])
-    dri = _seg(0xFFDD, struct.pack(">H", restart_interval)) if restart_interval else b""
+        sof, cond, tables = 0xC1 if sof1 else 0xC0, None, _ANNEX_K_DHT
     return (
-        b"\xff\xd8"
-        + _seg(0xFFE0, app0)
-        + _seg(0xFFDB, dqt)
-        + dri
-        + _seg(0xFFC1 if sof1 else 0xFFC0, sof0)
-        + _seg(0xFFC4, dht_dc)
-        + _seg(0xFFC4, dht_ac)
-        + _seg(0xFFDA, sos)
-        + _encode_scan_mcus([[(0, bz)] for bz in blocks_zz], restart_interval)
+        _dct_header(sof, prec, w, h, comps, [qt_zz], restart_interval, tables, qt_16bit)
+        + _sequential_scans(w, h, comps, [[0]], [0], restart_interval, cond)
         + b"\xff\xd9"
     )
 
@@ -639,115 +916,25 @@ def assemble_jpeg_lossless(
     planes = samples if samples and isinstance(samples[0], list) else [samples]
     if len(planes) not in (1, 3):
         raise ValueError(f"lossless encoder takes 1 or 3 planes, got {len(planes)}")
-    prec_r = prec - point_transform
-
-    def _put_diff(bw: _BitWriter, plane: list[int], x: int, y: int, row0: int) -> None:
-        # differences are modulo-2^16 (T.81 H.1.2.1): map into
-        # [-32767, 32768], where +32768 is category 16 with no
-        # appended bits — the only representation that stays in
-        # 16 categories when prec = 16 predictors overshoot
-        diff = (
-            plane[y * w + x]
-            - _lossless_predict(plane, w, x, y, predictor, prec_r, row0)
-        ) & 0xFFFF
-        if diff > 32768:
-            diff -= 65536
-        if diff == 32768:
-            code, length = _LL_ENC[16]
-            bw.put(code, length)
-            return
-        size, bits = _mag_bits(diff)
-        code, length = _LL_ENC[size]
-        bw.put(code, length)
-        if size:
-            bw.put(bits, size)
-
-    def _encode_scan(scan_planes: list[list[int]]) -> bytes:
-        out = bytearray()
-        bw = _BitWriter()
-        row0 = 0
-        rst = 0
-        for y in range(h):
-            if restart_rows and y and y % restart_rows == 0:
-                out += bw.flush()
-                out += bytes([0xFF, 0xD0 + rst])
-                rst = (rst + 1) % 8
-                bw = _BitWriter()
-                row0 = y
-            for x in range(w):
-                for plane in scan_planes:
-                    _put_diff(bw, plane, x, y, row0)
-        out += bw.flush()
-        return bytes(out)
-
-    def _encode_scan_arith(scan_planes: list[list[int]]) -> bytes:
-        low, up = cond
-        out = bytearray()
-        enc = ArithEncoder()
-        bank = bytearray(LL_STAT_BINS)
-        prev_d = [[0] * w for _ in scan_planes]
-        cur_d = [[0] * w for _ in scan_planes]
-        row0 = 0
-        rst = 0
-        for y in range(h):
-            if restart_rows and y and y % restart_rows == 0:
-                out += enc.finish()
-                out += bytes([0xFF, 0xD0 + rst])
-                rst = (rst + 1) % 8
-                enc = ArithEncoder()
-                bank = bytearray(LL_STAT_BINS)
-                row0 = y
-            for x in range(w):
-                for pi, plane in enumerate(scan_planes):
-                    diff = (
-                        plane[y * w + x]
-                        - _lossless_predict(plane, w, x, y, predictor, prec_r, row0)
-                    ) & 0xFFFF
-                    if diff > 32767:
-                        diff -= 65536  # arithmetic path: [-32768, 32767]
-                    da = cur_d[pi][x - 1] if x else 0
-                    db = prev_d[pi][x] if y > row0 else 0
-                    encode_lossless_diff_arith(
-                        enc,
-                        bank,
-                        ll_classify(da, low, up),
-                        ll_classify(db, low, up),
-                        diff,
-                    )
-                    cur_d[pi][x] = diff
-            for pi in range(len(scan_planes)):
-                prev_d[pi], cur_d[pi] = cur_d[pi], prev_d[pi]
-        out += enc.finish()
-        return bytes(out)
-
-    encode_scan = _encode_scan_arith if arith else _encode_scan
-    sof3 = struct.pack(">BHHB", prec, h, w, len(planes)) + b"".join(
-        bytes([ci + 1, 0x11, 0]) for ci in range(len(planes))
-    )
-    out = bytearray(b"\xff\xd8")
+    comps = [(1, 1, 0)] * len(planes)
     if arith:
         low, up = cond
         if not 0 <= low <= up <= 15:
             raise ValueError(f"DAC DC conditioning L={low} U={up} invalid")
-        out += _seg(0xFFCC, bytes([0x00, (up << 4) | low]))
-        out += _seg(0xFFCB, sof3)
+        dac = {("dc", 0): cond}
+        head = [(0xCC, _dac(dac)), (0xCB, _sof(prec, w, h, comps))]
     else:
-        dht = bytes([0x00]) + bytes(LL_BITS) + bytes(LL_VALS)
-        out += _seg(0xFFC4, dht) + _seg(0xFFC3, sof3)
-    if restart_rows:
-        out += _seg(0xFFDD, struct.pack(">H", restart_rows * w))
-    if interleaved:
-        sos = bytes([len(planes)])
-        for ci in range(len(planes)):
-            sos += bytes([ci + 1, 0x00])
-        sos += bytes([predictor, 0, point_transform])
-        out += _seg(0xFFDA, sos) + encode_scan(planes)
-    else:
-        for ci, plane in enumerate(planes):
-            # Ss=predictor, Se=0, Ah=0, Al=point transform
-            sos = bytes([1, ci + 1, 0x00, predictor, 0, point_transform])
-            out += _seg(0xFFDA, sos) + encode_scan([plane])
-    return bytes(out + b"\xff\xd9")
+        dac = None
+        head = [(0xC4, _dht(0x00, LL_BITS, LL_VALS)), (0xC3, _sof(prec, w, h, comps))]
+    return (
+        b"\xff\xd8"
+        + _segments(*head, restart_rows and (0xDD, struct.pack(">H", restart_rows * w)))
+        + _lossless_scans(
+            w, h, planes, predictor, prec - point_transform, point_transform,
+            interleaved, restart_rows, dac, 0,
+        )
+        + b"\xff\xd9"
+    )
 
 
 def assemble_jpeg_hierarchical(
@@ -771,111 +958,60 @@ def assemble_jpeg_hierarchical(
     mod 2^16, so the reconstruction IS the target. The expansion filter
     is `_exp2x` (the decoder's own J.1.1.2 reading; the DCT-over-
     lossless-base fixture pins it against an independent oracle).
-    Huffman lossless scans use DC-class table id 1 so they coexist with
-    the Annex K DC table at id 0."""
+    Every frame goes through the shared sequential and lossless scan
+    writers. Huffman lossless scans use DC-class table id 1 so they
+    coexist with the Annex K DC table at id 0."""
     if w % 2 or h % 2:
         raise ValueError("hierarchical fixture geometry must be even")
     wb, hb = w // 2, h // 2
-    out = bytearray(b"\xff\xd8")
-    out += _seg(0xFFDE, struct.pack(">BHHB", 8, h, w, 1) + bytes([1, 0x11, 0]))
-    out += _seg(0xFFDB, bytes([0x00]) + bytes([8] * 64))
-    out += _seg(0xFFC4, bytes([0x00]) + bytes(DC_BITS) + bytes(DC_VALS))
-    out += _seg(0xFFC4, bytes([0x10]) + bytes(AC_BITS) + bytes(AC_VALS))
-    out += _seg(0xFFC4, bytes([0x01]) + bytes(LL_BITS) + bytes(LL_VALS))
-    out += _seg(0xFFCC, bytes([0x00, 0x10, 0x10, 5]))  # DC0 L0/U1, AC0 Kx5
+    gray = [(1, 1, 0)]
+    ll_cond = {("dc", 0): (0, 1)}
 
-    def _dct_frame(marker: int, fw: int, fh: int, dcs_: list[int], ar: bool) -> bytes:
-        sof = struct.pack(">BHHB", 8, fh, fw, 1) + bytes([1, 0x11, 0])
-        blocks = [[dc] + [0] * 63 for dc in dcs_]
-        if ar:
-            sos = bytes([1, 1, 0x00, 0, 63, 0])
-            scan = _encode_arith_scan_mcus([[(0, 0, 0, bz)] for bz in blocks], 0, 1)
-        else:
-            sos = bytes([1, 1, 0x00, 0, 63, 0])
-            scan = _encode_scan_mcus([[(0, bz)] for bz in blocks])
-        return _seg(0xFF00 | marker, sof) + _seg(0xFFDA, sos) + scan
+    def dct_frame(sof: int, fw: int, fh: int, dcs: list[int], arith: bool) -> bytes:
+        blocks = [[dc] + [0] * 63 for dc in dcs]
+        comps = [(1, 1, 0, blocks)]
+        return _segments((sof, _sof(8, fw, fh, comps))) + _sequential_scans(
+            fw, fh, comps, [[0]], [0], 0, _DCT_COND if arith else None,
+        )
 
-    def _ll_put(bw: _BitWriter, diff: int) -> None:
-        if diff > 32768:
-            diff -= 65536
-        if diff == 32768:
-            code, length = _LL_ENC[16]
-            bw.put(code, length)
-            return
-        size, bits = _mag_bits(diff)
-        code, length = _LL_ENC[size]
-        bw.put(code, length)
-        if size:
-            bw.put(bits, size)
-
-    def _ll_frame(
-        marker: int, fw: int, fh: int, diffs: list[int], predictor: int,
-        ar: bool, ref: list[int] | None,
+    def lossless_frame(
+        sof: int, fw: int, fh: int, samples: list[int], predictor: int, arith: bool,
     ) -> bytes:
-        # diffs: mod-2^16 values to code. predictor 0 = differential
-        # (raw diffs); predictor 1-7 = a normal lossless frame whose
-        # SAMPLES are ``diffs`` (then coded against the predictor).
-        sof = struct.pack(">BHHB", 8, fh, fw, 1) + bytes([1, 0x11, 0])
-        if ar:
-            enc = ArithEncoder()
-            bank = bytearray(LL_STAT_BINS)
-            prev_d = [0] * fw
-            cur_d = [0] * fw
-            for y in range(fh):
-                for x in range(fw):
-                    if predictor:
-                        pred = _lossless_predict(diffs, fw, x, y, predictor, 8, 0)
-                    else:
-                        pred = 0
-                    d = (diffs[y * fw + x] - pred) & 0xFFFF
-                    if d > 32767:
-                        d -= 65536
-                    da = cur_d[x - 1] if x else 0
-                    db = prev_d[x] if y else 0
-                    encode_lossless_diff_arith(
-                        enc, bank, ll_classify(da, 0, 1), ll_classify(db, 0, 1), d,
-                    )
-                    cur_d[x] = d
-                prev_d, cur_d = cur_d, prev_d
-            sos = bytes([1, 1, 0x00, predictor, 0, 0])
-            return _seg(0xFF00 | marker, sof) + _seg(0xFFDA, sos) + enc.finish()
-        bw = _BitWriter()
-        for y in range(fh):
-            for x in range(fw):
-                if predictor:
-                    pred = _lossless_predict(diffs, fw, x, y, predictor, 8, 0)
-                else:
-                    pred = 0
-                _ll_put(bw, (diffs[y * fw + x] - pred) & 0xFFFF)
-        sos = bytes([1, 1, 0x10, predictor, 0, 0])  # DC-class table id 1
-        return _seg(0xFF00 | marker, sof) + _seg(0xFFDA, sos) + bw.flush()
+        return _segments((sof, _sof(8, fw, fh, gray))) + _lossless_scans(
+            fw, fh, [samples], predictor, 8, 0, False, 0,
+            ll_cond if arith else None, 0 if arith else 1,
+        )
 
+    out = bytearray(b"\xff\xd8")
+    out += _segments(
+        (0xDE, _sof(8, w, h, gray)),
+        (0xDB, _dqt([[8] * 64])),
+        *_ANNEX_K_DHT,
+        (0xC4, _dht(0x01, LL_BITS, LL_VALS)),
+        (0xCC, _dac(_DCT_COND)),
+    )
     if isinstance(base, int):
         nb = ((wb + 7) // 8) * ((hb + 7) // 8)
-        out += _dct_frame(
-            0xC9 if arith_base else 0xC0, wb, hb, [base - 128] * nb, arith_base
-        )
+        out += dct_frame(0xC9 if arith_base else 0xC0, wb, hb, [base - 128] * nb, arith_base)
         dec_base = [base] * (wb * hb)
     else:
         if len(base) != wb * hb:
             raise ValueError(f"lossless base plane must be {wb}x{hb}")
-        out += _ll_frame(0xC3, wb, hb, list(base), 1, False, None)
+        out += lossless_frame(0xC3, wb, hb, list(base), 1, False)
         dec_base = list(base)
-    out += _seg(0xFFDF, bytes([0x11]))  # EXP: Eh=1, Ev=1
-    up, uw, uh = _exp2x(dec_base, wb, hb, 1, 1)
+    out += _segments((0xDF, bytes([0x11])))  # EXP: Eh=1, Ev=1
+    up, _, _ = _exp2x(dec_base, wb, hb, 1, 1)
     kind, payload = final
     if kind == "dct":
         nb = ((w + 7) // 8) * ((h + 7) // 8)
         if len(payload) != nb:
             raise ValueError(f"differential DCT frame needs {nb} block diffs")
-        out += _dct_frame(0xCD if arith_final else 0xC5, w, h, list(payload),
-                          arith_final)
+        out += dct_frame(0xCD if arith_final else 0xC5, w, h, list(payload), arith_final)
     elif kind == "lossless":
         if len(payload) != w * h:
             raise ValueError(f"lossless target plane must be {w}x{h}")
         diffs = [(payload[i] - up[i]) & 0xFFFF for i in range(w * h)]
-        out += _ll_frame(0xCF if arith_final else 0xC7, w, h, diffs, 0,
-                         arith_final, up)
+        out += lossless_frame(0xCF if arith_final else 0xC7, w, h, diffs, 0, arith_final)
     else:
         raise ValueError(f"unknown final frame kind {kind!r}")
     return bytes(out + b"\xff\xd9")
@@ -1062,35 +1198,6 @@ _U4_SIGN = [1, -1, -1, 1, 1, -1, -1, 1]
 JPEG_H = 16
 
 
-def assemble_jpeg_420(
-    w: int,
-    h: int,
-    qt_y_zz: list[int],
-    qt_c_zz: list[int],
-    y_blocks: list[list[list[int]]],
-    cb_blocks: list[list[list[int]]],
-    cr_blocks: list[list[list[int]]],
-    restart_interval: int = 0,
-) -> bytes:
-    """Assemble a spec-valid 4:2:0 YCbCr baseline JPEG: 3-component SOF0
-    (Y sampling 2x2 against Cb/Cr 1x1 — the dominant real-world layout),
-    two quant tables (0 = luma, 1 = chroma), the Annex K luminance
-    Huffman pair shared by every component, and one interleaved scan
-    whose MCUs carry 4 Y blocks (2x2, left-to-right then top-to-bottom)
-    followed by 1 Cb and 1 Cr block (T.81 A.2.3 interleave order).
-
-    ``y_blocks`` is indexed [block_row][block_col] over the PADDED
-    16-aligned grid (2*mcu rows x 2*mcu cols); ``cb_blocks``/``cr_blocks``
-    are [mcu_row][mcu_col]. All blocks are zigzag quantized coefficients.
-    ``restart_interval`` > 0 additionally emits a DRI segment and RSTn
-    markers every that-many MCUs (predictors of ALL components reset).
-    """
-    return assemble_jpeg_color(
-        w, h, qt_y_zz, qt_c_zz, y_blocks, cb_blocks, cr_blocks,
-        sampling=(2, 2), restart_interval=restart_interval,
-    )
-
-
 def assemble_jpeg_color(
     w: int,
     h: int,
@@ -1104,108 +1211,59 @@ def assemble_jpeg_color(
     multiscan: bool = False,
     partial: bool = False,
     chroma_sampling: tuple[int, int] = (1, 1),
+    arith: bool = False,
 ) -> bytes:
-    """Assemble a spec-valid 3-component YCbCr baseline JPEG for ANY of
+    """Assemble a spec-valid 3-component YCbCr sequential JPEG for ANY of
     the standard chroma layouts — ``sampling`` is Y's (hs, vs) against
     ``chroma_sampling`` (default 1x1): (2,2)/(1,1) = 4:2:0, (2,1) =
     4:2:2, (1,2) = 4:4:0, (1,1) = 4:4:4; a chroma factor that does NOT
     divide Y's (e.g. Y 3x1 against chroma 2x1) produces the
-    NON-INTEGER-ratio layout. The MCU is hs*vs Y blocks (left-to-right
-    then top-to-bottom) followed by the Cb then Cr blocks at their own
-    factors (T.81 A.2.3 interleave order).
+    NON-INTEGER-ratio layout. Two quant tables (0 = luma, 1 = chroma).
+    The MCU is hs*vs Y blocks (left-to-right then top-to-bottom)
+    followed by the Cb then Cr blocks at their own factors (T.81 A.2.3
+    interleave order).
     ``y_blocks`` is [block_row][block_col] over the PADDED
     (8*vs)-/(8*hs)-aligned grid; ``cb_blocks``/``cr_blocks`` are
-    [mcu_row * ch_vs][mcu_col * ch_hs].
+    [mcu_row * ch_vs][mcu_col * ch_hs]. ``restart_interval`` > 0 emits
+    a DRI segment and RSTn markers every that-many MCUs in every scan
+    (all predictors reset; the RSTn index restarts at 0 per scan).
 
     ``multiscan=True`` emits the NON-interleaved layout instead: three
     sequential scans, one full-band scan per component, each over the
     component's ceil(comp_size/8) grid (T.81 A.2.2 — for a padded-MCU
     geometry this grid is SMALLER than the interleaved one, so a decoder
-    iterating the wrong grid desyncs). Per-scan DC predictors; the same
-    ``restart_interval`` applies within each scan (RSTn index restarts
-    at 0 per scan).
+    iterating the wrong grid desyncs).
 
     ``partial=True`` emits the PARTIALLY interleaved layout: a Y-only
     scan (non-interleaved grid) followed by ONE two-component Cb+Cr
-    scan whose MCUs interleave one Cb and one Cr block over the frame
-    MCU grid (T.81 A.2.3 subset-scan interleave)."""
+    scan whose MCUs interleave the Cb and Cr blocks over the frame
+    MCU grid (T.81 A.2.3 subset-scan interleave).
+
+    Huffman streams (SOF0) code every component with the Annex K
+    luminance pair; ``arith=True`` emits SOF9 + DAC instead, luma on
+    statistics bank 0 and chroma on bank 1, with a fresh coder and
+    statistics per scan."""
     if multiscan and partial:
         raise ValueError("multiscan and partial are mutually exclusive")
     hs, vs = sampling
     ch_hs, ch_vs = chroma_sampling
     if ch_hs > hs or ch_vs > vs:
         raise ValueError("Y must carry the max sampling factor in this fixture")
-    mcu_w, mcu_h = len(cb_blocks[0]) // ch_hs, len(cb_blocks) // ch_vs
-    app0 = b"JFIF\x00" + bytes([1, 1, 0, 0, 1, 0, 1, 0, 0])
-    dqt = bytes([0x00]) + bytes(qt_y_zz) + bytes([0x01]) + bytes(qt_c_zz)
-    chv = (ch_hs << 4) | ch_vs
-    sof0 = struct.pack(">BHHB", 8, h, w, 3) + bytes(
-        [1, (hs << 4) | vs, 0, 2, chv, 1, 3, chv, 1]
-    )
-    dht_dc = bytes([0x00]) + bytes(DC_BITS) + bytes(DC_VALS)
-    dht_ac = bytes([0x10]) + bytes(AC_BITS) + bytes(AC_VALS)
-    head = (
-        b"\xff\xd8"
-        + _seg(0xFFE0, app0)
-        + _seg(0xFFDB, dqt)
-        + (_seg(0xFFDD, struct.pack(">H", restart_interval)) if restart_interval else b"")
-        + _seg(0xFFC0, sof0)
-        + _seg(0xFFC4, dht_dc)
-        + _seg(0xFFC4, dht_ac)
-    )
-    if multiscan:
-        ybw, ybh = (w + 7) // 8, (h + 7) // 8
-        # chroma non-interleaved grid: ceil(ceil(dim*ch/hmax)/8), with Y
-        # carrying the max factor (T.81 A.2.2) — handles fractional
-        # ratios like 2x1 chroma against 3x1 Y
-        cbw = ((w * ch_hs + hs - 1) // hs + 7) // 8
-        cbh = ((h * ch_vs + vs - 1) // vs + 7) // 8
-        scans = b""
-        for cid, grid in (
-            (1, [y_blocks[by][bx] for by in range(ybh) for bx in range(ybw)]),
-            (2, [cb_blocks[by][bx] for by in range(cbh) for bx in range(cbw)]),
-            (3, [cr_blocks[by][bx] for by in range(cbh) for bx in range(cbw)]),
-        ):
-            scans += _seg(0xFFDA, bytes([1, cid, 0x00, 0, 63, 0]))
-            scans += _encode_scan_mcus([[(0, bz)] for bz in grid], restart_interval)
-        return head + scans + b"\xff\xd9"
-    if partial:
-        # Y alone over its non-interleaved grid, then Cb+Cr interleaved
-        # one block each per frame-grid MCU
-        ybw, ybh = (w + 7) // 8, (h + 7) // 8
-        y_grid = [y_blocks[by][bx] for by in range(ybh) for bx in range(ybw)]
-        scans = _seg(0xFFDA, bytes([1, 1, 0x00, 0, 63, 0]))
-        scans += _encode_scan_mcus([[(0, bz)] for bz in y_grid], restart_interval)
-        cc_mcus = [
-            [(0, cb_blocks[my * ch_vs + byy][mx * ch_hs + bxx])
-             for byy in range(ch_vs) for bxx in range(ch_hs)]
-            + [(1, cr_blocks[my * ch_vs + byy][mx * ch_hs + bxx])
-               for byy in range(ch_vs) for bxx in range(ch_hs)]
-            for my in range(mcu_h)
-            for mx in range(mcu_w)
-        ]
-        scans += _seg(0xFFDA, bytes([2, 2, 0x00, 3, 0x00, 0, 63, 0]))
-        scans += _encode_scan_mcus(cc_mcus, restart_interval)
-        return head + scans + b"\xff\xd9"
-    sos = bytes([3, 1, 0x00, 2, 0x00, 3, 0x00, 0, 63, 0])
-    mcus: list[list[tuple[int, list[int]]]] = []
-    for my in range(mcu_h):
-        for mx in range(mcu_w):
-            mcu: list[tuple[int, list[int]]] = []
-            for byy in range(vs):
-                for bxx in range(hs):
-                    mcu.append((0, y_blocks[my * vs + byy][mx * hs + bxx]))
-            for byy in range(ch_vs):
-                for bxx in range(ch_hs):
-                    mcu.append((1, cb_blocks[my * ch_vs + byy][mx * ch_hs + bxx]))
-            for byy in range(ch_vs):
-                for bxx in range(ch_hs):
-                    mcu.append((2, cr_blocks[my * ch_vs + byy][mx * ch_hs + bxx]))
-            mcus.append(mcu)
+    comps = [
+        (hs, vs, tq, [b for row in grid for b in row])
+        for hs, vs, tq, grid in (
+            (hs, vs, 0, y_blocks), (ch_hs, ch_vs, 1, cb_blocks), (ch_hs, ch_vs, 1, cr_blocks),
+        )
+    ]
+    scans = [[0], [1], [2]] if multiscan else [[0], [1, 2]] if partial else [[0, 1, 2]]
+    if arith:
+        sof, cond, tbls = 0xC9, _DCT_COND_COLOR, [0, 1, 1]
+        tables = [(0xCC, _dac(cond))]
+    else:
+        sof, cond, tbls, tables = 0xC0, None, [0, 0, 0], _ANNEX_K_DHT
     return (
-        head
-        + _seg(0xFFDA, sos)
-        + _encode_scan_mcus(mcus, restart_interval)
+        _dct_header(sof, 8, w, h, comps, [qt_y_zz, qt_c_zz], restart_interval, tables)
+        + _sequential_scans(w, h, comps, scans, tbls, restart_interval, cond)
         + b"\xff\xd9"
     )
 
@@ -1434,7 +1492,7 @@ def synth_jpeg_420(doc_id: int) -> bytes:
     # every MCU (the tightest legal DRI): all six per-MCU predictors
     # reset at the boundary
     ri = 1 if doc_id % 6 == 5 else 0
-    return assemble_jpeg_420(
+    return assemble_jpeg_color(
         w, h, _FIXTURE_QT, _FIXTURE_QT_C, y_blocks, cb, cr, restart_interval=ri
     )
 
@@ -1476,8 +1534,9 @@ def synth_jpeg_arith(doc_id: int) -> bytes:
                 w, h, _FIXTURE_QT, blocks,
                 dc_restart_interval=3 if doc_id % 16 == 4 else 0, arith=True,
             )
-        return assemble_jpeg_arith(
-            w, h, _FIXTURE_QT, blocks, restart_interval=3 if variant == 2 else 0
+        return assemble_jpeg(
+            w, h, _FIXTURE_QT, blocks, restart_interval=3 if variant == 2 else 0,
+            arith=True,
         )
     hs, vs = (1, 1) if variant == 3 else (2, 2)
     mcu_w = (w + 8 * hs - 1) // (8 * hs)
@@ -1492,10 +1551,10 @@ def synth_jpeg_arith(doc_id: int) -> bytes:
             w, h, _FIXTURE_QT, y_blocks, _FIXTURE_QT_C, cb, cr, arith=True
         )
     ri = 1 if doc_id % 16 in (1, 7) else 0
-    return assemble_jpeg_arith_color(
+    return assemble_jpeg_color(
         w, h, _FIXTURE_QT, _FIXTURE_QT_C, y_blocks, cb, cr,
         sampling=(hs, vs), restart_interval=ri,
-        multiscan=variant == 6, partial=variant == 7,
+        multiscan=variant == 6, partial=variant == 7, arith=True,
     )
 
 
@@ -1514,222 +1573,6 @@ PROG_AC_BITS = [0, 0, 0, 0, 0, len(PROG_AC_VALS), 0, 0, 0, 0, 0, 0, 0, 0, 0, 0]
 _PROG_AC_ENC = _canonical_codes(PROG_AC_BITS, PROG_AC_VALS)
 
 
-class _ProgACState:
-    """Cross-block EOBRUN + buffered-correction-bit state for one
-    progressive AC scan (T.81 G.1.2.2-3; the EOBRUN/BE discipline every
-    progressive encoder implements): an end-of-band run accumulates over
-    blocks and is emitted as one EOBn symbol, with the correction bits
-    owed by refinement blocks inside the run appended right after it."""
-
-    def __init__(self, w: _BitWriter) -> None:
-        self.w = w
-        self.eobrun = 0
-        self.pending: list[int] = []
-
-    def emit_sym(self, rs: int) -> None:
-        code, length = _PROG_AC_ENC[rs]
-        self.w.put(code, length)
-
-    def flush_eobrun(self) -> None:
-        if self.eobrun:
-            r = self.eobrun.bit_length() - 1
-            self.emit_sym(r << 4)
-            if r:
-                self.w.put(self.eobrun - (1 << r), r)
-            self.eobrun = 0
-        for b in self.pending:
-            self.w.put(b, 1)
-        self.pending = []
-
-
-def _prog_ac_first_block(st: _ProgACState, bz: list[int], ss: int, se: int, al: int) -> None:
-    """AC first scan for one block (T.81 G.1.2.2): code sign * (|coef|
-    >> Al) over the spectral band with run-length + EOBn coding."""
-    vals = []
-    last = -1
-    for k in range(ss, se + 1):
-        v = bz[k]
-        mag = (v if v >= 0 else -v) >> al
-        vals.append(0 if mag == 0 else (mag if v > 0 else -mag))
-        if mag:
-            last = k - ss
-    if last < 0:
-        st.eobrun += 1
-        if st.eobrun == 0x7FFF:
-            st.flush_eobrun()
-        return
-    st.flush_eobrun()
-    run = 0
-    for i in range(last + 1):
-        v = vals[i]
-        if v == 0:
-            run += 1
-            continue
-        while run >= 16:
-            st.emit_sym(0xF0)
-            run -= 16
-        size, bits = _mag_bits(v)
-        st.emit_sym((run << 4) | size)
-        st.w.put(bits, size)
-        run = 0
-    if last < se - ss:
-        st.eobrun += 1
-        if st.eobrun == 0x7FFF:
-            st.flush_eobrun()
-
-
-def _prog_ac_refine_block(st: _ProgACState, bz: list[int], ss: int, se: int, al: int) -> None:
-    """AC refinement scan for one block (T.81 G.1.2.3): newly-nonzero
-    coefficients (|coef| >> Al == 1) get a run symbol + sign bit;
-    previously-nonzero ones get one buffered correction bit, emitted
-    after the next symbol (or after the EOBn covering their block)."""
-    absvals = []
-    eobpos = -1
-    for k in range(ss, se + 1):
-        t = bz[k]
-        t = (t if t >= 0 else -t) >> al
-        absvals.append(t)
-        if t == 1:
-            eobpos = k - ss
-    run = 0
-    br: list[int] = []
-    for i, t in enumerate(absvals):
-        if t == 0:
-            run += 1
-            continue
-        while run > 15 and i <= eobpos:
-            st.flush_eobrun()
-            st.emit_sym(0xF0)
-            run -= 16
-            for b in br:
-                st.w.put(b, 1)
-            br = []
-        if t > 1:
-            br.append(t & 1)
-            continue
-        st.flush_eobrun()
-        st.emit_sym((run << 4) | 1)
-        st.w.put(1 if bz[ss + i] >= 0 else 0, 1)
-        for b in br:
-            st.w.put(b, 1)
-        br = []
-        run = 0
-    if run > 0 or br:
-        st.eobrun += 1
-        st.pending.extend(br)
-        if st.eobrun == 0x7FFF:
-            st.flush_eobrun()
-
-
-def _encode_dc_first_scan(
-    mcus: list[list[tuple[int, int]]], al: int, restart_interval: int = 0
-) -> bytes:
-    """Progressive DC first scan: per-component predictive coding of the
-    point-transformed DC (arithmetic shift right by Al — T.81 G.1.2.1),
-    MCU-interleaved, with optional RSTn restarts."""
-    out = bytearray()
-    w = _BitWriter()
-    preds: dict[int, int] = {}
-    rst = 0
-    for idx, mcu in enumerate(mcus):
-        if restart_interval and idx and idx % restart_interval == 0:
-            out += w.flush()
-            out += bytes([0xFF, 0xD0 + rst])
-            rst = (rst + 1) % 8
-            w = _BitWriter()
-            preds = {}
-        for comp, dc in mcu:
-            v = dc >> al
-            size, bits = _mag_bits(v - preds.get(comp, 0))
-            code, length = _DC_ENC[size]
-            w.put(code, length)
-            if size:
-                w.put(bits, size)
-            preds[comp] = v
-    out += w.flush()
-    return bytes(out)
-
-
-def _encode_dc_refine_scan(mcus: list[list[tuple[int, int]]], al: int) -> bytes:
-    """Progressive DC refinement scan: one raw bit per block — bit Al of
-    the DC coefficient (no Huffman coding — T.81 G.1.2.1)."""
-    w = _BitWriter()
-    for mcu in mcus:
-        for _comp, dc in mcu:
-            w.put((dc >> al) & 1, 1)
-    return w.flush()
-
-
-def _encode_ac_scan(
-    blocks: list[list[int]], ss: int, se: int, al: int, refine: bool
-) -> bytes:
-    w = _BitWriter()
-    st = _ProgACState(w)
-    for bz in blocks:
-        if refine:
-            _prog_ac_refine_block(st, bz, ss, se, al)
-        else:
-            _prog_ac_first_block(st, bz, ss, se, al)
-    st.flush_eobrun()
-    return w.flush()
-
-
-def _sos_seg(comps_spec: list[tuple[int, int, int]], ss: int, se: int, ah: int, al: int) -> bytes:
-    body = bytes([len(comps_spec)])
-    for cs, td, ta in comps_spec:
-        body += bytes([cs, (td << 4) | ta])
-    body += bytes([ss, se, (ah << 4) | al])
-    return _seg(0xFFDA, body)
-
-
-def _encode_dc_first_scan_arith(
-    mcus: list[list[tuple[int, int]]], al: int, restart_interval: int,
-    ncomp: int,
-) -> bytes:
-    """Arithmetic twin of `_encode_dc_first_scan`: the sequential DC
-    model (statistics bank 0) over point-transformed values, restart
-    boundaries flushing the coder and resetting statistics."""
-    chunks: list[bytes] = []
-    enc, stats = ArithEncoder(), ArithStats(ncomp)
-    rst = 0
-    for idx, mcu in enumerate(mcus):
-        if restart_interval and idx and idx % restart_interval == 0:
-            chunks.append(enc.finish())
-            chunks.append(bytes([0xFF, 0xD0 + rst]))
-            rst = (rst + 1) % 8
-            enc, stats = ArithEncoder(), ArithStats(ncomp)
-        for comp, dc in mcu:
-            encode_dc_arith(enc, stats, comp, 0, {}, dc >> al)
-    chunks.append(enc.finish())
-    return b"".join(chunks)
-
-
-def _encode_dc_refine_scan_arith(
-    mcus: list[list[tuple[int, int]]], al: int, ncomp: int
-) -> bytes:
-    """Arithmetic DC refinement: one FIXED-state bit per block — bit Al
-    of the DC coefficient (G.1.2.1 / the decoder's fixed-bin read)."""
-    enc, stats = ArithEncoder(), ArithStats(ncomp)
-    for mcu in mcus:
-        for _comp, dc in mcu:
-            enc.encode(stats.fixed, 0, (dc >> al) & 1)
-    return enc.finish()
-
-
-def _encode_ac_scan_arith(
-    blocks: list[list[int]], ss: int, se: int, ah: int, al: int, refine: bool
-) -> bytes:
-    """Arithmetic AC band scan (first or refinement), statistics bank 0,
-    fresh coder + statistics per scan (F.1.4.4)."""
-    enc, stats = ArithEncoder(), ArithStats(1)
-    for bz in blocks:
-        if refine:
-            encode_ac_refine_arith(enc, stats, 0, bz, ss, se, ah, al)
-        else:
-            encode_ac_first_arith(enc, stats, 0, {}, bz, ss, se, al)
-    return enc.finish()
-
-
 def assemble_jpeg_progressive(
     w: int,
     h: int,
@@ -1742,10 +1585,10 @@ def assemble_jpeg_progressive(
     arith: bool = False,
 ) -> bytes:
     """Assemble a spec-valid PROGRESSIVE JPEG carrying the same
-    quantized coefficients as the baseline assemblers — grayscale when
+    quantized coefficients as the sequential assemblers — grayscale when
     ``cb_blocks`` is None (``y_blocks`` a flat raster list, like
     `assemble_jpeg`), 4:2:0 YCbCr otherwise (``y_blocks`` the padded
-    [block_row][block_col] grid, like `assemble_jpeg_420`).
+    [block_row][block_col] grid, like `assemble_jpeg_color`).
     ``arith=True`` emits the ARITHMETIC progressive process (SOF10 +
     DAC, T.81 Annex G over the Annex D QM-coder) with the SAME scan
     script — per-scan coder and statistics, fixed-state DC refinement
@@ -1769,97 +1612,62 @@ def assemble_jpeg_progressive(
     geometry is SMALLER than the interleaved grid, so a decoder that
     iterates the wrong grid desyncs. DC scans use the Annex K DC table;
     AC scans use the module's compact progressive table (id 1) whose
-    EOBn symbols the baseline table lacks."""
-    color = cb_blocks is not None
-    mcu_w = len(cb_blocks[0]) if color else None
-    mcu_h = len(cb_blocks) if color else None
-    app0 = b"JFIF\x00" + bytes([1, 1, 0, 0, 1, 0, 1, 0, 0])
-    if color:
-        dqt = bytes([0x00]) + bytes(qt_y_zz) + bytes([0x01]) + bytes(qt_c_zz)
-        sof2 = struct.pack(">BHHB", 8, h, w, 3) + bytes(
-            [1, 0x22, 0, 2, 0x11, 1, 3, 0x11, 1]
-        )
+    EOBn symbols the baseline table lacks. Arithmetic scans all use
+    statistics bank 0."""
+    if cb_blocks is None:
+        comps = [(1, 1, 0, y_blocks)]
+        qts = [qt_y_zz]
     else:
-        dqt = bytes([0x00]) + bytes(qt_y_zz)
-        sof2 = struct.pack(">BHHB", 8, h, w, 1) + bytes([1, 0x11, 0])
-    dht_dc = bytes([0x00]) + bytes(DC_BITS) + bytes(DC_VALS)
-    dht_ac_prog = bytes([0x11]) + bytes(PROG_AC_BITS) + bytes(PROG_AC_VALS)
-    ac_tbl = 0 if arith else 1  # arithmetic scans use statistics bank 0
+        comps = [
+            (hs, vs, tq, [b for row in grid for b in row])
+            for hs, vs, tq, grid in (
+                (2, 2, 0, y_blocks), (1, 1, 1, cb_blocks), (1, 1, 1, cr_blocks),
+            )
+        ]
+        qts = [qt_y_zz, qt_c_zz]
+    if arith:
+        sof, ac_tbl, tables = 0xCA, 0, [(0xCC, _dac(_DCT_COND))]
+    else:
+        sof, ac_tbl = 0xC2, 1
+        tables = [
+            (0xC4, _dht(0x00, DC_BITS, DC_VALS)),
+            (0xC4, _dht(0x11, PROG_AC_BITS, PROG_AC_VALS)),
+        ]
 
-    # interleaved MCU list of (component, DC value) for the DC scans, and
-    # per-component NON-interleaved block lists for the AC scans
-    if color:
-        dc_mcus: list[list[tuple[int, int]]] = []
-        for my in range(mcu_h):
-            for mx in range(mcu_w):
-                mcu = [
-                    (0, y_blocks[my * 2 + byy][mx * 2 + bxx][0])
-                    for byy in range(2)
-                    for bxx in range(2)
-                ]
-                mcu.append((1, cb_blocks[my][mx][0]))
-                mcu.append((2, cr_blocks[my][mx][0]))
-                dc_mcus.append(mcu)
-        ybw, ybh = (w + 7) // 8, (h + 7) // 8
-        y_list = [y_blocks[by][bx] for by in range(ybh) for bx in range(ybw)]
-        cbw, cbh = ((w + 1) // 2 + 7) // 8, ((h + 1) // 2 + 7) // 8
-        cb_list = [cb_blocks[by][bx] for by in range(cbh) for bx in range(cbw)]
-        cr_list = [cr_blocks[by][bx] for by in range(cbh) for bx in range(cbw)]
-        comp_blocks = [y_list, cb_list, cr_list]
-        comp_ids = [1, 2, 3]
-        dc_sos_comps = [(1, 0, 0), (2, 0, 0), (3, 0, 0)]
-    else:
-        dc_mcus = [[(0, bz[0])] for bz in y_blocks]
-        comp_blocks = [list(y_blocks)]
-        comp_ids = [1]
-        dc_sos_comps = [(1, 0, 0)]
+    orders: dict[tuple[int, ...], tuple[list, int]] = {}
 
-    out = bytearray()
-    out += b"\xff\xd8"
-    out += _seg(0xFFE0, app0)
-    out += _seg(0xFFDB, dqt)
+    def scan(sel: list[int], ss: int, se: int, ah: int, al: int, ri: int = 0) -> bytes:
+        if arith:
+            coder = _ArithCoder([0] * len(sel), [0] * len(sel), _DCT_COND, ss, se, ah, al)
+        else:
+            coder = _HuffCoder(len(sel), _DC_ENC, _PROG_AC_ENC, ss, se, al)
+        if ss == 0:
+            step = coder.dc_refine if ah else coder.dc_first
+        else:
+            step = coder.ac_refine if ah else coder.ac_first
+        key = tuple(sel)
+        if key not in orders:
+            orders[key] = _scan_order(w, h, comps, [c[3] for c in comps], sel)
+        order, per_mcu = orders[key]
+        sos = _sos([(c + 1, 0, ac_tbl if ss else 0) for c in sel], ss, se, ah, al)
+        return _segments((0xDA, sos)) + _scan(coder, step, order, ri * per_mcu)
+
+    every = list(range(len(comps)))
+    bands = ((1, 5), (6, 63))
+    out = bytearray(
+        _dct_header(sof, 8, w, h, comps, qts, dc_restart_interval, tables)
+    )
+    out += scan(every, 0, 0, 0, 1, dc_restart_interval)
     if dc_restart_interval:
-        out += _seg(0xFFDD, struct.pack(">H", dc_restart_interval))
-    if arith:
-        out += _seg(0xFFCA, sof2)
-        out += _seg(0xFFCC, bytes([0x00, 0x10, 0x10, 5]))  # DC L0/U1, AC Kx5
-    else:
-        out += _seg(0xFFC2, sof2)
-        out += _seg(0xFFC4, dht_dc)
-        out += _seg(0xFFC4, dht_ac_prog)
-    ncomp = 3 if color else 1
-    # 1. DC first (Al=1), interleaved, optionally restart-segmented
-    out += _sos_seg(dc_sos_comps, 0, 0, 0, 1)
-    if arith:
-        out += _encode_dc_first_scan_arith(dc_mcus, 1, dc_restart_interval, ncomp)
-    else:
-        out += _encode_dc_first_scan(dc_mcus, 1, dc_restart_interval)
-    if dc_restart_interval:
-        out += _seg(0xFFDD, struct.pack(">H", 0))  # later scans restart-free
-    # 2./3. AC first scans (Al=1) per component, split spectral bands
-    for ss, se in ((1, 5), (6, 63)):
-        for ci, blocks in enumerate(comp_blocks):
-            out += _sos_seg([(comp_ids[ci], 0, ac_tbl)], ss, se, 0, 1)
-            if arith:
-                out += _encode_ac_scan_arith(blocks, ss, se, 0, 1, refine=False)
-            else:
-                out += _encode_ac_scan(blocks, ss, se, 1, refine=False)
-    # 4. DC refinement (raw bits / fixed-state bits), interleaved
-    out += _sos_seg(dc_sos_comps, 0, 0, 1, 0)
-    if arith:
-        out += _encode_dc_refine_scan_arith(dc_mcus, 0, ncomp)
-    else:
-        out += _encode_dc_refine_scan(dc_mcus, 0)
-    # 5./6. AC refinement scans (Ah=1 → Al=0) per component
-    for ss, se in ((1, 5), (6, 63)):
-        for ci, blocks in enumerate(comp_blocks):
-            out += _sos_seg([(comp_ids[ci], 0, ac_tbl)], ss, se, 1, 0)
-            if arith:
-                out += _encode_ac_scan_arith(blocks, ss, se, 1, 0, refine=True)
-            else:
-                out += _encode_ac_scan(blocks, ss, se, 0, refine=True)
-    out += b"\xff\xd9"
-    return bytes(out)
+        out += _segments((0xDD, struct.pack(">H", 0)))  # later scans restart-free
+    for ss, se in bands:
+        for c in every:
+            out += scan([c], ss, se, 0, 1)
+    out += scan(every, 0, 0, 1, 0)
+    for ss, se in bands:
+        for c in every:
+            out += scan([c], ss, se, 1, 0)
+    return bytes(out + b"\xff\xd9")
 
 
 # -- decoder -----------------------------------------------------------------
@@ -2416,46 +2224,15 @@ class JpegCoefficients:
         coder consuming the next RSTn between intervals."""
         key = tuple(scan)
         if key not in self._orders:
-            self._orders[key] = self._scan_order(scan)
+            self._orders[key] = _scan_order(
+                self.width, self.height, [c[1:3] for c in self.comps], self.blocks, scan,
+            )
         order, per_mcu = self._orders[key]
         span = restart_interval * per_mcu or len(order)
         for n, start in enumerate(range(0, len(order), span)):
             if n:
                 coder.restart((n - 1) % 8)
             step(order[start:start + span])
-
-    def _scan_order(self, scan: list[int]) -> tuple[list, int]:
-        """(blocks in scan order, blocks per MCU). An interleaved scan
-        (ns > 1, full or partial) walks the frame MCU grid, each MCU
-        holding hs x vs blocks per scan component (A.2.3); a
-        one-component scan's MCU is one block over the component's
-        ceil(ceil(dim * sampling / max sampling) / 8) grid (A.2.2),
-        smaller than the padded MCU grid when the geometry pads an
-        MCU."""
-        hmax, vmax, mcus_x, mcus_y = self.grid
-        if len(scan) > 1:
-            n_x, n_y = mcus_x, mcus_y
-            members = []  # (scan index, blocks, offset in MCU, hs, MCU row stride)
-            for si, ci in enumerate(scan):
-                _, hs, vs, _ = self.comps[ci]
-                stride = mcus_x * hs
-                members += [
-                    (si, self.blocks[ci], byy * stride + bxx, hs, vs * stride)
-                    for byy in range(vs)
-                    for bxx in range(hs)
-                ]
-        else:
-            _, hs, vs, _ = self.comps[scan[0]]
-            n_x = ((self.width * hs + hmax - 1) // hmax + 7) // 8
-            n_y = ((self.height * vs + vmax - 1) // vmax + 7) // 8
-            members = [(0, self.blocks[scan[0]], 0, 1, mcus_x * hs)]
-        order = [
-            (si, comp_blocks[my * row_stride + mx * hs + off])
-            for my in range(n_y)
-            for mx in range(n_x)
-            for si, comp_blocks, off, hs, row_stride in members
-        ]
-        return order, len(members)
 
 
 def _reconstruct(
@@ -2566,6 +2343,9 @@ def _read_frame(
     while pos + 2 <= len(raw):
         if raw[pos] != 0xFF:
             raise ValueError("JPEG marker desync")
+        if raw[pos + 1] == 0xFF:  # fill byte before a marker (T.81 B.1.1.2)
+            pos += 1
+            continue
         marker = raw[pos + 1]
         if marker == 0xD9:  # EOI
             break
@@ -3036,6 +2816,9 @@ def _decode_hierarchical(raw: bytes) -> tuple[int, int, list[list[int]], int]:
     while pos + 2 <= len(raw):
         if raw[pos] != 0xFF:
             raise ValueError("JPEG marker desync")
+        if raw[pos + 1] == 0xFF:  # fill byte before a marker (T.81 B.1.1.2)
+            pos += 1
+            continue
         marker = raw[pos + 1]
         if marker == 0xD9:  # EOI
             break
@@ -3090,6 +2873,9 @@ def _decode_hierarchical(raw: bytes) -> tuple[int, int, list[list[int]], int]:
         while p + 2 <= len(raw):
             if raw[p] != 0xFF:
                 raise ValueError("JPEG marker desync")
+            if raw[p + 1] == 0xFF:  # fill byte
+                p += 1
+                continue
             m2 = raw[p + 1]
             if m2 in _SOF_ALL or m2 in (0xDF, 0xDE, 0xD9):
                 break

@@ -379,6 +379,28 @@ def values_dim(spark: SparkSession, rows, columns_sql: str) -> DataFrame:
     return df
 
 
+#: Settings the source layer reads through, constants of every session:
+#: the driver testdata stores events.ts as TIMESTAMP(NANOS), read as a
+#: long and converted in `readers.load_table`; Python data sources get
+#: filter pushdown (default-off in 4.1), with which the REST catalog
+#: source (`sources/restds.py`) prunes pages.
+SOURCE_CONFS = {
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    "spark.sql.python.filterPushdown.enabled": "true",
+}
+
+
+def ensure_source_confs(spark: SparkSession) -> None:
+    """Bring a session to `SOURCE_CONFS` before a source reads through
+    it. A `get_spark` session already holds every value, so nothing is
+    written; a session built elsewhere (a caller's own, or a cluster
+    session) gets the missing ones, each set to its one value, so no
+    build ever changes a source setting back for another."""
+    for key, value in SOURCE_CONFS.items():
+        if spark.conf.get(key, None) != value:
+            spark.conf.set(key, value)
+
+
 def get_spark(app_name: str = "financedatabase_spark", cpus: int | None = None) -> SparkSession:
     """Build (or return) the engine SparkSession.
 
@@ -414,6 +436,12 @@ def get_spark(app_name: str = "financedatabase_spark", cpus: int | None = None) 
     AQE may hash-build a shuffled join side of up to 64 MB per
     partition. They were tuned for these ``local[N]`` sessions; a
     cluster session tunes its own from spark-submit.
+
+    So are the source settings, `SOURCE_CONFS`: TIMESTAMP(NANOS)
+    parquet columns read as longs (``readers.load_table`` converts them)
+    and Python data sources get filter pushdown (``restds``). They are
+    set here when the session is built; `ensure_source_confs` brings a
+    session built elsewhere up to them.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
@@ -444,9 +472,7 @@ def get_spark(app_name: str = "financedatabase_spark", cpus: int | None = None) 
         # small files per task.
         .config("spark.sql.files.minPartitionNum", str(cpus))
         .config("spark.sql.files.openCostInBytes", "65536")
-        # driver testdata stores events.ts as TIMESTAMP(NANOS); read as long
-        # and convert in the source layer (readers.load_table)
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config(map=SOURCE_CONFS)
         # r15: let the planner pick shuffled-hash over sort-merge when the
         # build side fits (guide §3.1/§9) — drops the per-partition sorts
         # on the composite pipelines' doc-id equi-joins (measured -6..-10%

@@ -22,6 +22,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from financedatabase_spark.session import ensure_source_confs
+
 #: Driver-supplied synthetic tables (TESTDATA.md).
 TABLES = (
     "region",
@@ -46,9 +48,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     (truncation — the same thing DuckDB's micro-precision TIMESTAMP does,
     so oracle comparisons agree).
 
-    The conf is set at runtime here (it is a runtime-settable SQL conf) so the
-    read works under ANY caller-provided SparkSession, not just the one built
-    by `session.get_spark()`.
+    `session.get_spark` sets that conf when it builds the session; on a
+    session built elsewhere the first scan of each table sets it, where
+    missing, through `session.ensure_source_confs`, so the read works
+    under any caller-provided SparkSession.
 
     The inferred schema is memoized per (live session, path, mtime):
     schema inference opens the file footer JVM-side on every
@@ -60,9 +63,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     attribute ids.
     """
     cache = spark.__dict__.setdefault("_fdspark_scan_memo", {})
-    if "nanos_conf" not in cache:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        cache["nanos_conf"] = True
     path = os.path.join(sf_dir, f"{name}.parquet")
     try:
         key = (path, os.path.getmtime(path))
@@ -73,6 +73,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         schema, ts_is_nanos = hit
         df = spark.read.schema(schema).parquet(path)
     else:
+        ensure_source_confs(spark)
         df = spark.read.parquet(path)
         schema = df.schema
         ts_is_nanos = any(

@@ -29,6 +29,7 @@ from __future__ import annotations
 
 from typing import Iterator
 
+from pyspark.errors import AnalysisException
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
@@ -42,6 +43,8 @@ from pyspark.sql.datasource import (
     LessThanOrEqual,
 )
 from pyspark.sql.types import StructType
+
+from financedatabase_spark.session import ensure_source_confs
 
 FORMAT_NAME = "rest_catalog"
 
@@ -154,9 +157,17 @@ class RestCatalogDataSource(DataSource):
 
 
 def register_rest_catalog(spark) -> None:
-    """Idempotently register the format with a session (and switch on
-    Python-source filter pushdown, which ships default-off in 4.1)."""
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+    """Idempotently register the format with a session. Its filter
+    pushdown needs Python-source pushdown, default-off in 4.1, which
+    `session.get_spark` switches on for every session it builds and
+    `session.ensure_source_confs` for a session built elsewhere.
+    Sessions of one SparkContext share the source registry, so the
+    format may already be there from another session."""
     if not getattr(spark, "_rest_catalog_registered", False):
-        spark.dataSource.register(RestCatalogDataSource)
+        ensure_source_confs(spark)
+        try:
+            spark.dataSource.register(RestCatalogDataSource)
+        except AnalysisException as e:
+            if e.getCondition() != "DATA_SOURCE_ALREADY_EXISTS":
+                raise
         spark._rest_catalog_registered = True

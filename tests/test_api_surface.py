@@ -146,3 +146,38 @@ def test_pipeline_facade_exports_resolve(spark, sf_dir):
     )
     out = shards.collect()
     assert out and all(r.n_docs > 0 for r in out)
+
+
+def test_sources_work_under_a_session_get_spark_did_not_build(spark, tmp_path):
+    """The package's sources read through any caller-provided session,
+    not only one from `get_spark`: on a session with both source
+    settings off (a new session over the same context stands in for a
+    caller's own), scanning an `events` table stored as
+    TIMESTAMP(NANOS) still yields its `ts` truncated to microseconds,
+    and registering the REST catalog switches on Python-source filter
+    pushdown, whether or not another session of the same context
+    registered the format first. Only that session's conf changes."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from financedatabase_spark.session import SOURCE_CONFS
+    from financedatabase_spark.sources.readers import load_table
+    from financedatabase_spark.sources.restds import register_rest_catalog
+
+    nanos = [1_700_000_000_123_456_789, 1_700_000_001_000_000_999]
+    pq.write_table(
+        pa.table({"event_id": [1, 2], "ts": pa.array(nanos, pa.timestamp("ns"))}),
+        str(tmp_path / "events.parquet"),
+    )
+    other = spark.newSession()
+    for key in SOURCE_CONFS:
+        other.conf.set(key, "false")
+    rows = load_table(other, str(tmp_path), "events").orderBy("event_id").collect()
+    epoch = dt.datetime(1970, 1, 1)
+    assert [r.ts for r in rows] == [
+        epoch + dt.timedelta(microseconds=n // 1000) for n in nanos
+    ]
+    assert other.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
+    register_rest_catalog(other)
+    assert other.conf.get("spark.sql.python.filterPushdown.enabled") == "true"
+    assert all(spark.conf.get(k) == v for k, v in SOURCE_CONFS.items())

@@ -2011,7 +2011,7 @@ def test_jpeg_lossless_seams_and_validation():
     from financedatabase_spark.operators.jpeg import (
         LL_BITS,
         LL_VALS,
-        _seg,
+        _segments,
         assemble_jpeg_lossless,
         jpeg_planes,
         synth_jpeg_lossless,
@@ -2028,8 +2028,8 @@ def test_jpeg_lossless_seams_and_validation():
         sof = sof_payload or (struct.pack(">BHHB", 8, 4, 4, 1) + bytes([1, 0x11, 0]))
         dht = bytes([0x00]) + bytes(LL_BITS) + bytes(LL_VALS)
         return (
-            b"\xff\xd8" + _seg(0xFFC4, dht) + _seg(0xFFC3, sof)
-            + _seg(0xFFDA, sos_payload) + b"\x00" * 8 + b"\xff\xd9"
+            b"\xff\xd8" + _segments((0xC4, dht), (0xC3, sof), (0xDA, sos_payload))
+            + b"\x00" * 8 + b"\xff\xd9"
         )
 
     # point transform at/above the precision is malformed (Al=9, prec=8)
@@ -2052,7 +2052,7 @@ def test_jpeg_lossless_seams_and_validation():
         jpeg_planes(rebuild(sosdup, sof3c))
     # a restart interval that is NOT a whole number of sample rows has
     # no well-defined "first line of the interval" (H.1.1) — refused
-    dri = _seg(0xFFDD, struct.pack(">H", 3))  # w=4: 3 MCUs is mid-row
+    dri = _segments((0xDD, struct.pack(">H", 3)))  # w=4: 3 MCUs is mid-row
     soi_end = raw.index(b"\xff\xc3")
     with pytest.raises(NotImplementedError, match="sample rows"):
         jpeg_planes(raw[:soi_end] + dri + raw[soi_end:])
@@ -2081,7 +2081,6 @@ def test_jpeg_12bit_extended_sequential():
     from financedatabase_spark.operators.jpeg import (
         _FIXTURE_QT,
         assemble_jpeg,
-        assemble_jpeg_arith,
         assemble_jpeg_progressive,
         jpeg_decode,
         jpeg_frame,
@@ -2107,7 +2106,7 @@ def test_jpeg_12bit_extended_sequential():
         bz[0] = (b * 611) % 3000 - 1500
         bz[14] = b % 5 - 2
         blocks.append(bz)
-    seq = jpeg_frame(assemble_jpeg_arith(24, 16, _FIXTURE_QT, blocks, prec=12))
+    seq = jpeg_frame(assemble_jpeg(24, 16, _FIXTURE_QT, blocks, prec=12, arith=True))
     prog = bytearray(assemble_jpeg_progressive(24, 16, _FIXTURE_QT, blocks, arith=True))
     sof10 = prog.index(b"\xff\xca")
     prog[sof10 + 4] = 12
@@ -2118,6 +2117,9 @@ def test_jpeg_12bit_extended_sequential():
     qt = [8] * 64
     with pytest.raises(ValueError, match="SOF1"):
         assemble_jpeg(8, 8, qt, [[100] + [0] * 63], prec=12)
+    # one frame marker per stream: extended Huffman or arithmetic
+    with pytest.raises(ValueError, match="sof1 and arith"):
+        assemble_jpeg(8, 8, qt, [[100] + [0] * 63], sof1=True, arith=True)
     good12 = synth_jpeg12(3)
     sof_at = good12.index(b"\xff\xc1")
     base_flip = good12[:sof_at + 1] + b"\xc0" + good12[sof_at + 2:]
@@ -2833,29 +2835,34 @@ def test_jpeg_hierarchical_progressive_differential():
         AC_VALS,
         DC_BITS,
         DC_VALS,
-        _encode_dc_first_scan,
-        _encode_scan_mcus,
-        _seg,
-        _sos_seg,
+        _DC_ENC,
+        _AC_ENC,
+        _HuffCoder,
+        _scan,
+        _segments,
+        _sos,
         jpeg_frame,
     )
 
     w = h = 16
     base_val, diffs = 100, [-9, 5, 30, -17]  # 2x2 full-res blocks
     out = bytearray(b"\xff\xd8")
-    out += _seg(0xFFDE, struct.pack(">BHHB", 8, h, w, 1) + bytes([1, 0x11, 0]))
-    out += _seg(0xFFDB, bytes([0x00]) + bytes([8] * 64))
-    out += _seg(0xFFC4, bytes([0x00]) + bytes(DC_BITS) + bytes(DC_VALS))
-    out += _seg(0xFFC4, bytes([0x10]) + bytes(AC_BITS) + bytes(AC_VALS))
+    out += _segments(
+        (0xDE, struct.pack(">BHHB", 8, h, w, 1) + bytes([1, 0x11, 0])),
+        (0xDB, bytes([0x00]) + bytes([8] * 64)),
+        (0xC4, bytes([0x00]) + bytes(DC_BITS) + bytes(DC_VALS)),
+        (0xC4, bytes([0x10]) + bytes(AC_BITS) + bytes(AC_VALS)),
+    )
     sof = struct.pack(">BHHB", 8, 8, 8, 1) + bytes([1, 0x11, 0])
-    out += _seg(0xFFC0, sof)
-    out += _sos_seg([(1, 0, 0)], 0, 63, 0, 0)
-    out += _encode_scan_mcus([[(0, [base_val - 128] + [0] * 63)]])
-    out += _seg(0xFFDF, bytes([0x11]))  # EXP 2x2
+    out += _segments((0xC0, sof), (0xDA, _sos([(1, 0, 0)], 0, 63, 0, 0)))
+    coder = _HuffCoder(1, _DC_ENC, _AC_ENC)
+    out += _scan(coder, coder.sequential, [(0, [base_val - 128] + [0] * 63)], 0)
+    out += _segments((0xDF, bytes([0x11])))  # EXP 2x2
     sof6 = struct.pack(">BHHB", 8, h, w, 1) + bytes([1, 0x11, 0])
-    out += _seg(0xFFC6, sof6)
-    out += _sos_seg([(1, 0, 0)], 0, 0, 0, 0)  # DC-first progressive scan
-    out += _encode_dc_first_scan([[(0, d)] for d in diffs], 0)  # qt0=8 scales
+    # DC-first progressive scan; qt0=8 scales
+    out += _segments((0xC6, sof6), (0xDA, _sos([(1, 0, 0)], 0, 0, 0, 0)))
+    coder = _HuffCoder(1, _DC_ENC)
+    out += _scan(coder, coder.dc_first, [(0, [d] + [0] * 63) for d in diffs], 0)
     out += b"\xff\xd9"
     W, H, planes, prec = jpeg_frame(bytes(out))
     assert (W, H, prec) == (w, h, 8)
@@ -2912,6 +2919,186 @@ def test_jpeg_hierarchical_validation():
     stub = bytes(good[:exp_at]) + b"\xff\xd9"
     with pytest.raises(ValueError, match="DHP declares"):
         jpeg_frame(stub)
+
+
+def test_jpeg_fill_bytes_before_every_marker():
+    """T.81 B.1.1.2: any marker may be preceded by 0xFF fill bytes. One
+    or two of them before every marker of one fixture per family —
+    table, frame, scan, DRI, EXP and EOI markers alike — leave the
+    decoded planes unchanged."""
+    from financedatabase_spark.operators import jpeg
+
+    def marker_positions(raw):
+        pos, out = 2, []
+        while True:
+            out.append(pos)
+            marker = raw[pos + 1]
+            if marker == 0xD9:
+                return out
+            pos += 2 + int.from_bytes(raw[pos + 2:pos + 4], "big")
+            if marker == 0xDA:  # skip entropy data: stuffing and RSTn
+                while raw[pos] != 0xFF or raw[pos + 1] == 0 or 0xD0 <= raw[pos + 1] <= 0xD7:
+                    pos += 1
+
+    fixtures = [
+        jpeg.synth_jpeg(0),  # gray baseline with DRI/RSTn
+        jpeg.synth_jpeg(5),  # 4:2:2 with a restart every MCU
+        jpeg.synth_jpeg_progressive(5),  # color SOF2, DRI set then cleared
+        jpeg.synth_jpeg_arith(1),  # SOF9 color with restarts
+        jpeg.synth_jpeg_arith(4),  # SOF10 gray
+        jpeg.synth_jpeg_lossless(0),
+        jpeg.synth_jpeg_lossless_rgb(1),  # three scans with restarts
+        jpeg.synth_jpeg_lossless_arith(5),  # SOF11 with restarts
+    ] + [jpeg.synth_jpeg_hier(d) for d in range(4)]
+    for i, raw in enumerate(fixtures):
+        want = jpeg.jpeg_frame(raw)
+        positions = marker_positions(raw)
+        assert len(positions) >= 4, i
+        for at in positions:
+            for fill in (b"\xff", b"\xff\xff"):
+                assert jpeg.jpeg_frame(raw[:at] + fill + raw[at:]) == want, (i, at, fill)
+
+
+def _jpeg_fixture_families():
+    """name -> zero-argument producers of every encoder output the
+    registered queries and the codec tests consume: each fixture family
+    over a doc-id range, plus the direct assembler calls of this module
+    (16-bit DQT, SOF1, 12-bit, lossless at 2-16 bits, point transform,
+    interleaved lossless with restarts, arithmetic lossless under both
+    DAC conditionings)."""
+    import itertools
+
+    import numpy as np
+
+    from financedatabase_spark.operators import jpeg
+    from financedatabase_spark.operators.multimodal import synth_avi_mjpeg
+
+    def gray_blocks(d, w):
+        return [
+            jpeg._y_block_zz(d, bx, by) for by in range(2) for bx in range(w // 8)
+        ]
+
+    color_layouts = [
+        ((2, 2), {}), ((2, 1), {}), ((1, 2), {}), ((1, 1), {}),
+        ((1, 1), {"multiscan": True}), ((2, 2), {"multiscan": True}),
+        ((2, 2), {"partial": True}), ((2, 1), {"partial": True}),
+        ((3, 1), {"chroma_sampling": (2, 1)}),
+        ((3, 1), {"chroma_sampling": (2, 1), "multiscan": True}),
+        ((3, 1), {"chroma_sampling": (2, 1), "partial": True}),
+        ((4, 2), {}), ((4, 4), {"multiscan": True}),
+    ]
+    fam = {
+        "synth_jpeg": [lambda d=d: jpeg.synth_jpeg(d) for d in range(5000)],
+        "synth_avi_mjpeg": [lambda d=d: synth_avi_mjpeg(d) for d in range(64)],
+        "synth_jpeg_color": [
+            lambda d=d, s=s, kw=kw: jpeg.synth_jpeg_color(d, s, **kw)
+            for d in range(200) for s, kw in color_layouts
+        ],
+        "synth_jpeg_lossless": [
+            lambda d=d, p=p: jpeg.synth_jpeg_lossless(d, p)
+            for d in range(200) for p in (2, 8, 12, 16)
+        ],
+    }
+    for name in (
+        "synth_jpeg_420", "synth_jpeg_progressive", "synth_jpeg_exotic",
+        "synth_jpeg_arith", "synth_jpeg12", "synth_jpeg_hier",
+        "synth_jpeg_lossless_arith", "synth_jpeg_lossless_rgb",
+    ):
+        fn = getattr(jpeg, name)
+        fam[name] = [lambda d=d, fn=fn: fn(d) for d in range(200)]
+
+    direct = []
+    rng = np.random.RandomState(7)
+    rnd = [list(map(int, rng.randint(-40, 41, 64))) for _ in range(3)]
+    zrl = [0] * 64
+    zrl[0], zrl[40], zrl[63] = 5, -3, 9
+    direct.append(lambda: jpeg.assemble_jpeg(32, 8, [1] * 64, rnd + [zrl]))
+    for d in range(48):
+        w = 16 + (d % 3) * 8
+        for ri, q16, sof1 in itertools.product((0, 3), (False, True), (False, True)):
+            direct.append(lambda d=d, w=w, ri=ri, q16=q16, sof1=sof1: jpeg.assemble_jpeg(
+                w, 16, jpeg._FIXTURE_QT, gray_blocks(d, w), restart_interval=ri,
+                qt_16bit=q16, sof1=sof1,
+            ))
+        for ri in (0, 2, 3):
+            direct.append(lambda d=d, w=w, ri=ri: jpeg.assemble_jpeg_progressive(
+                w, 16, jpeg._FIXTURE_QT, gray_blocks(d, w), dc_restart_interval=ri,
+                arith=True,
+            ))
+    deep = []
+    for b in range(6):
+        bz = [0] * 64
+        bz[0] = (b * 611) % 3000 - 1500
+        bz[14] = b % 5 - 2
+        deep.append(bz)
+    direct.append(lambda: jpeg.assemble_jpeg_progressive(24, 16, jpeg._FIXTURE_QT, deep, arith=True))
+    direct.append(lambda: jpeg.assemble_jpeg_lossless(4, 4, [0] * 16, predictor=1, prec=16))
+    rgb = [[v % 256 for v in range(16)]] * 3
+    for il, rst in ((False, 0), (True, 0), (True, 2)):
+        direct.append(lambda il=il, rst=rst: jpeg.assemble_jpeg_lossless(
+            4, 4, rgb, predictor=1, interleaved=il, restart_rows=rst,
+        ))
+    for pred, prec, al, il, rst, npl, cond, ar in itertools.product(
+        range(1, 8), (2, 8, 16), (0, 1), (False, True), (0, 4), (1, 3),
+        ((0, 1), (1, 3)), (False, True),
+    ):
+        if (prec <= al) or (cond != (0, 1) and not ar):
+            continue
+        planes = [
+            [(31 * p + 17 * y + 7 * x + 13 * x * y) % (1 << (prec - al))
+             for y in range(12) for x in range(9)]
+            for p in range(npl)
+        ]
+        direct.append(lambda pred=pred, prec=prec, al=al, il=il, rst=rst, planes=planes,
+                      cond=cond, ar=ar: jpeg.assemble_jpeg_lossless(
+            9, 12, planes if len(planes) == 3 else planes[0], pred, prec, al,
+            interleaved=il, restart_rows=rst, arith=ar, cond=cond,
+        ))
+    vals = [0, 65535, 32768, 1, 65534, 32767, 2, 40000]
+    extreme = [vals[(x + y) % 8] for y in range(8) for x in range(8)]
+    for pred in range(1, 8):
+        for ar in (False, True):
+            direct.append(lambda pred=pred, ar=ar: jpeg.assemble_jpeg_lossless(
+                8, 8, extreme, pred, 16, 0, arith=ar,
+            ))
+    fam["direct_assembler_calls"] = direct
+    return fam
+
+
+#: sha256 over each family's payloads, each prefixed by its 4-byte
+#: big-endian length, in producer order
+_JPEG_FIXTURE_DIGESTS = {
+    "synth_jpeg": "aa948473b7310b45a68506bfaf379ab06e44ad6c509c602ade834218f8170938",
+    "synth_avi_mjpeg": "4e5543cb9bee1419ef365b1f48f90f59b64ed0fc8fd6ff91c831b626b02a1625",
+    "synth_jpeg_color": "2cc6f7f8e2c1ebf2cb85331c2971a0135390f7bf2d475f53f0c12684c5f8570f",
+    "synth_jpeg_lossless": "c04340570fde3101771992b1913c01581718d8d8475d305d6316815cae0ef2d5",
+    "synth_jpeg_420": "97632e54fc4d4277003a3eda4603c647e832c2bfdd84437a8fc35babdbc9b70e",
+    "synth_jpeg_progressive": "f1a0685c5ef6abfdf3c2d8552d1b4eda05fcb62397b09c4c49cc91e77cdced1c",
+    "synth_jpeg_exotic": "a37f3c0f51b95c44256fcb01c2a9eb3f0796d00b31b4fab07ec7210301d595a4",
+    "synth_jpeg_arith": "3aad00fb721bd567329027e6108a68b7827e1252ac92c9fb185ba4c1ab3d9a06",
+    "synth_jpeg12": "f3733eab64a42bd1c472ccc11fc13e8104f90f2b136324527115e19e15984109",
+    "synth_jpeg_hier": "ddedffb67cd07912f00c5d0c7c190a2db0dc2e82807e37e3baad22c27f1f2fbe",
+    "synth_jpeg_lossless_arith": "b8d5e83761794e5a138bbad5a934a35a2135b31bb082f031bfca879dc5b5bfec",
+    "synth_jpeg_lossless_rgb": "3d18326b861d7a2a8daf09a82dfcb58109ff79a641ba33f00f1102aaee64c1fe",
+    "direct_assembler_calls": "6b3139964af2a926fa52ad6af8fb54c1bcf83786056f1fc9962b618e4e1b119a",
+}
+
+
+def test_jpeg_fixture_bytes_pinned():
+    """Every fixture the encoder writes is pinned byte for byte: the
+    DuckDB oracles, the ORACLE_HASHES fingerprints and the perfbench
+    digests of the image queries hold only while these bytes do."""
+    import hashlib
+    import struct
+
+    got = {}
+    for name, producers in _jpeg_fixture_families().items():
+        h = hashlib.sha256()
+        for make in producers:
+            p = make()
+            h.update(struct.pack(">I", len(p)) + p)
+        got[name] = h.hexdigest()
+    assert got == _JPEG_FIXTURE_DIGESTS
 
 
 def test_gif_codec_round_trip():

@@ -109,3 +109,91 @@ def test_idct_runs_from_one_place():
                 with open(path) as fh:
                     visit(ast.parse(fh.read(), path), os.path.relpath(path, PKG), None)
     assert len(sites) == 1 and sites[0][0] == os.path.join("operators", "jpeg.py"), sites
+
+
+def test_jpeg_encoder_restarts_from_one_place():
+    """The JPEG fixture encoder runs every scan's restart intervals
+    through one loop, `jpeg._scan`, over a Huffman or an arithmetic
+    coder: the package builds an RSTn marker (`bytes([0xFF, 0xD0 + n])`)
+    at exactly one site, and `operators/jpeg.py` defines no `*_arith`
+    twin of an encoder step (the `synth_*` fixtures name the coding
+    they produce)."""
+    sites = []
+    arith_defs = []
+    for root, _, files in os.walk(PKG):
+        for f in files:
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(root, f)
+            rel = os.path.relpath(path, PKG)
+            with open(path) as fh:
+                tree = ast.parse(fh.read(), path)
+            for node in ast.walk(tree):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Name)
+                    and node.func.id == "bytes"
+                    and len(node.args) == 1
+                    and isinstance(node.args[0], (ast.List, ast.Tuple))
+                    and len(node.args[0].elts) == 2
+                ):
+                    first, second = node.args[0].elts
+                    if (
+                        isinstance(first, ast.Constant) and first.value == 0xFF
+                        and isinstance(second, ast.BinOp)
+                        and isinstance(second.op, ast.Add)
+                        and isinstance(second.left, ast.Constant)
+                        and second.left.value == 0xD0
+                    ):
+                        sites.append(f"{rel}:{node.lineno}")
+                if (
+                    rel == os.path.join("operators", "jpeg.py")
+                    and isinstance(node, (ast.FunctionDef, ast.ClassDef))
+                    and node.name.endswith("_arith")
+                    and not node.name.startswith("synth_")
+                ):
+                    arith_defs.append(f"{rel}:{node.lineno} {node.name}")
+    assert len(sites) == 1, sites
+    assert not arith_defs, arith_defs
+
+
+def test_session_conf_written_only_in_scoped_flips():
+    """`spark.conf.set` runs only in the three scoped flips that still
+    write the shared session conf while a query builds: the AQE flip of
+    `session.barrier`, and the shuffle-partition flips of
+    `queries_streaming._run` and `curation.run_admission_with_refresh`.
+    Besides them, `session.ensure_source_confs` alone writes the source
+    settings (TIMESTAMP(NANOS) as long, Python-source filter pushdown),
+    and only on a session that lacks them: they are constants of
+    `get_spark`, so on its sessions registering a source or scanning a
+    table leaves the conf as it found it."""
+    allowed = {
+        ("session.py", "barrier"),
+        ("session.py", "ensure_source_confs"),
+        (os.path.join("plans", "queries_streaming.py"), "_run"),
+        (os.path.join("streaming", "curation.py"), "run_admission_with_refresh"),
+    }
+    found = set()
+
+    def visit(node, rel, func):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                visit(child, rel, child.name)
+                continue
+            if (
+                isinstance(child, ast.Call)
+                and isinstance(child.func, ast.Attribute)
+                and child.func.attr == "set"
+                and isinstance(child.func.value, ast.Attribute)
+                and child.func.value.attr == "conf"
+            ):
+                found.add((rel, func))
+            visit(child, rel, func)
+
+    for root, _, files in os.walk(PKG):
+        for f in files:
+            if f.endswith(".py"):
+                path = os.path.join(root, f)
+                with open(path) as fh:
+                    visit(ast.parse(fh.read(), path), os.path.relpath(path, PKG), None)
+    assert found == allowed, found ^ allowed
