@@ -247,7 +247,22 @@ _C = [1 / math.sqrt(2)] + [1.0] * 7
 assert _COS[0] == [1.0] * 8  # the row-0-only shortcut in _idct_block
 
 
-def _canonical_codes(bits: list[int], vals: list[int]) -> dict[int, tuple[int, int]]:
+class _CodeTable(dict):
+    """symbol -> (code, length) of one encoder Huffman table. A symbol
+    without a code is a value outside the table: the lookup raises a
+    ValueError naming the table and the category instead of a bare
+    KeyError."""
+
+    def __init__(self, name: str, ac: bool, codes: dict[int, tuple[int, int]]) -> None:
+        super().__init__(codes)
+        self.name, self.ac = name, ac
+
+    def __missing__(self, sym: int):
+        what = f"run {sym >> 4}, category {sym & 15}" if self.ac else f"category {sym}"
+        raise ValueError(f"value outside the {self.name} Huffman table: no code for {what}")
+
+
+def _canonical_codes(bits: list[int], vals: list[int], name: str, ac: bool) -> _CodeTable:
     """symbol -> (code, length), canonical Huffman per T.81 C.2."""
     codes: dict[int, tuple[int, int]] = {}
     code, k = 0, 0
@@ -257,12 +272,12 @@ def _canonical_codes(bits: list[int], vals: list[int]) -> dict[int, tuple[int, i
             code += 1
             k += 1
         code <<= 1
-    return codes
+    return _CodeTable(name, ac, codes)
 
 
-_DC_ENC = _canonical_codes(DC_BITS, DC_VALS)
-_AC_ENC = _canonical_codes(AC_BITS, AC_VALS)
-_LL_ENC = _canonical_codes(LL_BITS, LL_VALS)
+_DC_ENC = _canonical_codes(DC_BITS, DC_VALS, "Annex K DC", ac=False)
+_AC_ENC = _canonical_codes(AC_BITS, AC_VALS, "Annex K AC", ac=True)
+_LL_ENC = _canonical_codes(LL_BITS, LL_VALS, "lossless", ac=False)
 
 
 def _lossless_predict(
@@ -1570,7 +1585,7 @@ PROG_AC_VALS = [0x00, 0x10, 0x20, 0x30, 0x40, 0xF0] + [
     (r << 4) | s for r in range(16) for s in range(1, 4)
 ]
 PROG_AC_BITS = [0, 0, 0, 0, 0, len(PROG_AC_VALS), 0, 0, 0, 0, 0, 0, 0, 0, 0, 0]
-_PROG_AC_ENC = _canonical_codes(PROG_AC_BITS, PROG_AC_VALS)
+_PROG_AC_ENC = _canonical_codes(PROG_AC_BITS, PROG_AC_VALS, "progressive AC", ac=True)
 
 
 def assemble_jpeg_progressive(

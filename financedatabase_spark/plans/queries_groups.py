@@ -316,12 +316,13 @@ def ewma_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def tick_imbalance_bars_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tick-imbalance bars (operators/smoothing.tick_imbalance_bars,
-    threshold 50): tick-rule signs + exact integer signed-size prefix
-    sum per key, then the sequential boundary recursion as a Catalyst
-    higher-order fold. The oracle expresses the same recursion as a
-    boundary-to-boundary recursive CTE (one step per bar) over the same
-    exact prefix sums — integer state on both engines, so there is no
-    float ambiguity at the threshold."""
+    threshold 50): one Catalyst higher-order fold per key carries the
+    tick-rule sign and the exact integer signed size since the last
+    close, and closes a bar when its magnitude reaches the threshold.
+    The oracle expresses the same recursion as a boundary-to-boundary
+    recursive CTE (one step per bar) over exact prefix sums — integer
+    state on both engines, so there is no float ambiguity at the
+    threshold."""
     from financedatabase_spark.operators.smoothing import tick_imbalance_bars
 
     ev = load_table(spark, sf_dir, "events").select(

@@ -177,16 +177,19 @@ def scaled_partitions(
     return max(at_least, math.ceil(size / target_bytes), parallel_floor)
 
 
+#: Upper bound on the state partitions of a bounded streaming drain.
+STREAM_STATE_PARTITIONS = 8
+
+
 def stream_state_partitions(spark: SparkSession) -> int:
     """Shuffle-partition count for a bounded streaming drain (stateful
     operators pin it into the query's checkpoint at the first batch).
     Every state partition pays a state-store commit, its state files and,
     on the local filesystem, a ``chmod`` fork per file per batch, so a
-    count above the task slots only adds a wave of near-empty tasks.
-    ``$SPARK_GRAFT_STREAM_STATE_PARTITIONS`` (default 8) is an upper
-    bound; the count is capped at ``defaultParallelism``."""
-    cap = int(os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8"))
-    return max(1, min(cap, spark.sparkContext.defaultParallelism))
+    count above the task slots only adds a wave of near-empty tasks:
+    the count is `STREAM_STATE_PARTITIONS`, capped at
+    ``defaultParallelism``."""
+    return max(1, min(STREAM_STATE_PARTITIONS, spark.sparkContext.defaultParallelism))
 
 
 def _local_input_bytes(df: DataFrame) -> int:

@@ -2130,6 +2130,33 @@ def test_jpeg_12bit_extended_sequential():
         jpeg_planes(prog_flip)
 
 
+def test_jpeg_encoder_value_outside_code_table_names_it():
+    """A value the fixture encoder's Huffman tables cannot code raises a
+    ValueError naming the table and the category instead of a bare
+    KeyError: a 12-bit DC difference past the Annex K DC table's
+    categories 0-11 under SOF1, and a progressive AC magnitude past the
+    compact table's sizes 1-3 after the point transform."""
+    from financedatabase_spark.operators.jpeg import (
+        _FIXTURE_QT,
+        assemble_jpeg,
+        assemble_jpeg_progressive,
+    )
+
+    blocks = []
+    for b in range(6):
+        bz = [0] * 64
+        bz[0] = (b * 611) % 3000 - 1500
+        bz[14] = b % 5 - 2
+        blocks.append(bz)
+    with pytest.raises(ValueError, match="Annex K DC Huffman table: no code for category 12$"):
+        assemble_jpeg(24, 16, _FIXTURE_QT, blocks, prec=12, sof1=True)
+    bz = [100, 0, 0, 40] + [0] * 60
+    with pytest.raises(
+        ValueError, match="progressive AC Huffman table: no code for run 2, category 5$"
+    ):
+        assemble_jpeg_progressive(8, 8, _FIXTURE_QT, [bz])
+
+
 def test_jpeg_decode_precision_aware_through_dispatch():
     """Deep frames route through the MAIN histogram entry point: 12-bit
     SOF1 and 16-bit lossless payloads must bin by the frame precision

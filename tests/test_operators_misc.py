@@ -522,6 +522,86 @@ def test_tick_run_bars_chunked_bit_equals_whole_series(spark):
     assert got == want
 
 
+def _tick_bars_reference(ticks, run, t0, alpha=None):
+    """A plain loop over one key's (i, price, size) ticks in order: the
+    tick rule with the carried sign, a NULL size counted as 0, a bar
+    closed when the imbalance (or either side's run) since the last
+    close reaches the threshold, EWMA-updated when ``alpha`` is set."""
+    sg, pp, b, n, imb, rb, rs, thr, out = 0, None, 0, 0, 0, 0, 0, t0, []
+    for i, price, size in ticks:
+        if pp is not None and price is not None and price != pp:
+            sg = 1 if price > pp else -1
+        pp, size, n = price, size or 0, n + 1
+        imb, rb, rs = imb + sg * size, rb + size * (sg > 0), rs + size * (sg < 0)
+        mag = max(rb, rs) if run else abs(imb)
+        if mag >= thr:
+            row = (b, i, n, rb, rs) if run else (b, i, n, imb)
+            out.append(row + ((thr,) if alpha is not None else ()))
+            if alpha is not None:
+                thr = alpha * mag + (1 - alpha) * thr
+            b, n, imb, rb, rs = b + 1, 0, 0, 0, 0
+    return out
+
+
+def test_tick_bars_whole_series_equal_chunked_on_edge_fixture(spark):
+    """Every tick-bar operator on one fixture with the edges the chunked
+    walk must carry: a NULL size (counted as 0 on every path), a key
+    absent from the middle epochs, a NULL key, a NULL chunk id (the
+    earliest epoch) and a flat-price run across a chunk boundary (the
+    carried sign crosses it). The whole-series forms match a plain
+    reference loop and the chunked forms match the whole-series ones
+    exactly."""
+    import numpy as np
+
+    from financedatabase_spark.operators.smoothing import (
+        tick_imbalance_bars,
+        tick_imbalance_bars_adaptive,
+        tick_imbalance_bars_chunked,
+        tick_run_bars,
+        tick_run_bars_adaptive,
+        tick_run_bars_chunked,
+    )
+
+    rng = np.random.default_rng(41)
+    rows = []
+    for k, ids in (("a", range(60)), ("b", [*range(0, 12), *range(41, 60)]), (None, range(5, 35))):
+        price = 100.0
+        for i in ids:
+            if not 17 <= i <= 24:  # flat across the chunk boundary at 20
+                price += float(rng.choice([-0.5, 0.0, 0.5]))
+            size = None if (k, i) in (("a", 21), ("b", 7)) else int(rng.integers(1, 6))
+            rows.append((k, i, price, size))
+    df = spark.createDataFrame(rows, "k string, i long, price double, volume long").repartition(3)
+    chunk = F.when(F.col("i") >= 5, F.floor(F.col("i") / 10))  # i < 5: NULL chunk
+
+    def key_of(r):
+        return (r[0] is None, r[0] or "")
+
+    def ticks(k):
+        return sorted((i, p, s) for kk, i, p, s in rows if kk == k)
+
+    def got(frame):
+        return sorted((tuple(r) for r in frame.collect()), key=lambda r: (key_of(r), r[1:]))
+
+    def want(run, t0, alpha=None):
+        bars = [
+            (k, *bar) for k in ("a", "b", None)
+            for bar in _tick_bars_reference(ticks(k), run, t0, alpha)
+        ]
+        return sorted(bars, key=lambda r: (key_of(r), r[1:]))
+
+    for run, whole, chunked, t in (
+        (False, tick_imbalance_bars, tick_imbalance_bars_chunked, 6),
+        (True, tick_run_bars, tick_run_bars_chunked, 8),
+    ):
+        w = got(whole(df, t, ["k"], "i"))
+        assert len(w) > 10 and w == want(run, t)
+        for every in (1, 3):
+            assert got(chunked(df, t, ["k"], "i", chunk_expr=chunk, checkpoint_every=every)) == w
+    assert got(tick_imbalance_bars_adaptive(df, 6.0, 0.3, ["k"], "i")) == want(False, 6.0, 0.3)
+    assert got(tick_run_bars_adaptive(df, 8.0, 0.3, ["k"], "i")) == want(True, 8.0, 0.3)
+
+
 def test_tick_imbalance_bars_hand_example(spark):
     """Tick rule + fixed-threshold boundary recursion on a worked
     example: signs (0,+1,carry +1,-1,+1), sizes (5,3,4,2,6) -> signed

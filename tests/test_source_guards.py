@@ -197,3 +197,57 @@ def test_session_conf_written_only_in_scoped_flips():
                 with open(path) as fh:
                     visit(ast.parse(fh.read(), path), os.path.relpath(path, PKG), None)
     assert found == allowed, found ^ allowed
+
+
+def test_smoothing_has_one_epoch_walk_and_one_tick_rule():
+    """`operators/smoothing.py` runs every chunked recursion through one
+    epoch loop (a `for` over the chunk epochs), builds the tick rule at
+    one top-level definition (the only place that compares a price with
+    the last price ``acc.pp`` or takes a ``sign``/``signum`` or ``lag``
+    of it), and no `tick_*` operator reaches a ``Window`` through the
+    module's own helpers: whole-series and chunked bars fold one step."""
+    import re
+
+    path = os.path.join(PKG, "operators", "smoothing.py")
+    with open(path) as fh:
+        tree = ast.parse(fh.read(), path)
+
+    def names(node):
+        for n in ast.walk(node):
+            if isinstance(n, ast.Name):
+                yield n.id
+            elif isinstance(n, ast.Attribute):
+                yield n.attr
+
+    loops = [
+        n.lineno for n in ast.walk(tree) if isinstance(n, ast.For) and "epochs" in set(names(n.iter))
+    ]
+    assert len(loops) == 1, f"epoch loops at lines {loops}"
+
+    tick_re = re.compile(r"\bacc\.pp\b|\bsign\(")
+    defs = {
+        getattr(n, "name", None) or ast.unparse(n.targets[0]): n
+        for n in tree.body
+        if isinstance(n, (ast.FunctionDef, ast.Assign))
+    }
+    rule_sites = sorted(
+        name for name, node in defs.items()
+        if any(
+            isinstance(n, ast.Constant) and isinstance(n.value, str) and tick_re.search(n.value)
+            for n in ast.walk(node)
+        )
+        or {"signum", "lag"} & set(names(node))
+    )
+    assert len(rule_sites) == 1, f"tick-rule expressions in {rule_sites}"
+
+    funcs = {name: node for name, node in defs.items() if isinstance(node, ast.FunctionDef)}
+    for op in (name for name in funcs if name.startswith("tick_")):
+        seen, todo = set(), [op]
+        while todo:
+            name = todo.pop()
+            if name in seen:
+                continue
+            seen.add(name)
+            used = set(names(funcs[name]))
+            assert "Window" not in used and "over" not in used, f"{op} reaches a Window via {name}"
+            todo.extend(used & set(funcs))

@@ -785,12 +785,16 @@ def test_run_raises_on_timed_out_drain(spark, sf_dir, monkeypatch):
 
 
 def test_stream_state_partitions_capped_at_task_slots(spark, monkeypatch):
-    from financedatabase_spark.session import stream_state_partitions
+    """The state partition count is the constant bound capped at the
+    task slots, whichever is smaller."""
+    from financedatabase_spark import session
+    from financedatabase_spark.session import STREAM_STATE_PARTITIONS, stream_state_partitions
 
     slots = spark.sparkContext.defaultParallelism
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", str(slots + 5))
+    assert stream_state_partitions(spark) == min(STREAM_STATE_PARTITIONS, slots) == min(8, slots)
+    monkeypatch.setattr(session, "STREAM_STATE_PARTITIONS", slots + 5)
     assert stream_state_partitions(spark) == slots
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "1")
+    monkeypatch.setattr(session, "STREAM_STATE_PARTITIONS", 1)
     assert stream_state_partitions(spark) == 1
 
 
@@ -946,7 +950,6 @@ def test_streaming_build_spawns_no_readlink(sf_dir, tmp_path):
         """
     )
     env = dict(os.environ, PATH=f"{bin_dir}{os.pathsep}{os.environ['PATH']}")
-    env.pop("SPARK_GRAFT_STREAM_STATE_PARTITIONS", None)
     proc = subprocess.run(
         [sys.executable, "-c", script], cwd=tmp_path, env=env,
         capture_output=True, text=True, timeout=600,
